@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.StateOps
 import graft.pipeline.BucketedStateTable
+import graft.streaming.ForeachBatch
 
 /** Inverted scale probes for the state-table platform — the two legs
   * `SCALE_PROBE_CDC.json` (corpus 100×, change volume fixed) cannot
@@ -274,16 +276,13 @@ object StateScaleProbe {
         val reader = cap.fold(reader0)(m =>
           reader0.option("maxCommitsPerTrigger", m.toString))
         val (_, sec, _) = timed {
-          val q = reader.load(root).writeStream
-            .option("checkpointLocation", s"$root-ck-${cap.getOrElse(0)}")
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          val q = ForeachBatch.start(reader.load(root),
+              s"$root-ck-${cap.getOrElse(0)}", Trigger.ProcessingTime(0L)) {
+            (df, _) =>
               val n = df.count()
               if (n > 0) batches.incrementAndGet()
               maxRows.getAndAccumulate(n, math.max(_, _))
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-            .start()
+          }
           try q.processAllAvailable() finally q.stop()
         }
         (sec, batches.get, maxRows.get)
@@ -350,23 +349,19 @@ object StateScaleProbe {
         var before = -1
         while (batchRows.size != before) {
           before = batchRows.size
-          val q = spark.readStream.format("graft-state-changes")
+          val feed = spark.readStream.format("graft-state-changes")
             .option("startingCommit", base)
             .option("maxChangeRowsPerTrigger", capRows.toString)
             .load(root)
-            .writeStream
-            .option("checkpointLocation", s"$root-ck")
-            .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          val q = ForeachBatch.start(feed, s"$root-ck", Trigger.Once()) {
+            (df, _) =>
               // rows are tagged with the batch's range-END commit
               val agg = df.groupBy("_commit_id").count().collect()
               if (agg.nonEmpty) {
                 batchRows += agg.map(_.getLong(1)).sum
                 batchEnds += agg.map(_.getLong(0)).max
               }
-              ()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.Once())
-            .start()
+          }
           q.awaitTermination(120_000)
           ()
         }

@@ -570,6 +570,14 @@ object Similarity {
     * embedding moves list only if its assignment changes (stale row
     * remains under the old centroid — delete first for true updates).
     *
+    * Streaming ingest: run it as a [[graft.streaming.ForeachBatch]]
+    * body. `foreachBatch` is at-least-once; the merge keyed on
+    * `(centroid_id, vec_id)` makes a replayed micro-batch a no-op, so
+    * the stream converges without a batch marker, and a vector is
+    * searchable by [[probeIvf]] as soon as its batch commits. Centroids
+    * stay fixed for the stream's life (re-centroiding is
+    * [[reclusterIvf]]).
+    *
     * 100 TB: ingest cost is batch-proportional (narrow assignment map +
     * a merge that rewrites only the buckets the batch's centroids hash
     * into); the accumulated index never rescans. */

@@ -340,6 +340,17 @@ object TextAnalysis {
     * [[bm25TopK]] (whitespace split, empties dropped, null → empty),
     * which is what makes incremental == batch exact.
     *
+    * Streaming ingest: run it as a [[graft.streaming.ForeachBatch]]
+    * body. `foreachBatch` is at-least-once; a replayed micro-batch
+    * recomputes identical rows and every merge is a no-op, and N and
+    * avgdl derive from the keyed length table, so there is nothing to
+    * double-count. The optional `stats` row (n_docs, sum_dl) is
+    * anchored to the docLengths commit it reflects and maintained from
+    * that table's change feed, so it needs no extra guard either: a
+    * replayed batch diffs to zero, and a crash between an ingest's
+    * lengths and stats commits heals on the next ingest (or in memory
+    * at query time) by folding the missed window from the feed.
+    *
     * APPEND-ONLY ids, the whole family's contract ([[NearDupStream]]
     * et al.: "ids unique across index ∪ stream"): re-ingesting an id
     * with the SAME text replays harmlessly, but re-ingesting an id

@@ -908,7 +908,8 @@ class GraftStateSinkProvider
   * streaming source outside `start()` — the only PUBLIC-api bridge is
   * through rows. State-table streams are batch-sized by contract;
   * corpus-scale micro-batches belong on the library's `foreachBatch`
-  * twins ([[graft.streaming.NearDupStream]] et al.), where the batch
+  * adapter ([[graft.streaming.ForeachBatch]], with a body such as
+  * [[graft.streaming.NearDupStream.processBatch]]), where the batch
   * frame is a plain DataFrame and nothing crosses the driver. */
 class GraftStateStreamSink(
     rootPath: String,

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Dedup
 import graft.pipeline.BucketedStateTable
@@ -10,9 +9,10 @@ import graft.pipeline.BucketedStateTable
   * [[graft.ops.Dedup.incrementalEmbeddingNearDups]] — completing the
   * symmetry that every incremental state operator ships a streaming
   * face (exact dedup, text near-dup [[NearDupStream]], IVF ingest
-  * [[IvfIngestStream]]): per micro-batch the embedding stream probes
-  * the persistent LSH index bucket-pruned, verified cosine pairs merge
-  * into a keyed pairs table, and the batch joins the index. Vectors
+  * [[graft.ops.Similarity.indexIvf]]): per micro-batch the embedding
+  * stream probes the persistent LSH index bucket-pruned, verified
+  * cosine pairs merge into a keyed pairs table, and the batch joins
+  * the index. Vectors
   * ride in the index rows, so — unlike the text twin — no co-maintained
   * doc store is needed.
   *
@@ -27,29 +27,22 @@ import graft.pipeline.BucketedStateTable
   * batch-proportional while the index grows to corpus scale. */
 object EmbedNearDupStream {
 
-  /** Start the stream over `batches` (a streaming DataFrame carrying
-    * `idCol` + `vecCol`; ids unique across index ∪ stream). Seed
-    * `index` with [[graft.ops.Dedup.indexEmbeddings]]; `planes` must
-    * match that build. */
-  def start(
-      batches: DataFrame,
+  /** The micro-batch body: run it through [[ForeachBatch.start]] over a
+    * streaming DataFrame carrying `idCol` + `vecCol` (ids unique across
+    * index ∪ stream). Seed `index` with
+    * [[graft.ops.Dedup.indexEmbeddings]]; `planes` must match that
+    * build. Returns the batch's verified pairs (pinned), as merged. */
+  def processBatch(
+      batch: DataFrame,
       index: BucketedStateTable,
       pairs: BucketedStateTable,
-      checkpointDir: String,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       threshold: Double = 0.95,
-      planes: Int = 12,
-      trigger: Trigger = Trigger.AvailableNow(),
-      afterBatch: Long => Unit = _ => ()): StreamingQuery =
-    batches.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val p = Dedup.incrementalEmbeddingNearDups(index, batch,
-          idCol, vecCol, threshold, planes)
-        pairs.merge(p, keys = Seq("a_id", "b_id"))
-        afterBatch(batchId)
-      }
-      .start()
+      planes: Int = 12): DataFrame = {
+    val p = Dedup.incrementalEmbeddingNearDups(index, batch,
+      idCol, vecCol, threshold, planes)
+    pairs.merge(p, keys = Seq("a_id", "b_id"))
+    p
+  }
 }

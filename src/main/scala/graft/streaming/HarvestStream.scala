@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Tables
 import graft.pipeline.StateTable
@@ -22,54 +21,52 @@ import graft.xml.XmlProjections
   * the engine-level equivalent of the reference's
   * "headers before run-result" ordering (`OaiHarvester.java:150-165`).
   *
-  * ST6 graceful stop = `StreamingQuery.stop()`.
+  * ST6 graceful stop = `StreamingQuery.stop()` on the query
+  * [[ForeachBatch.start]] returns.
   */
 object HarvestStream {
 
-  /** Start the stream. `trigger` defaults to AvailableNow (drain all
-    * pending pages, then stop — the reference's backlog fast-drain); use
-    * `Trigger.ProcessingTime("360 seconds")` for the reference's steady
-    * 6-minute poll (ST1). */
-  /** @param afterBatch invoked after each micro-batch's merge commits
-    *        but BEFORE the engine commits the batch — a metrics seam,
-    *        and the crash-injection point the recovery spec uses to
-    *        prove that a failure in exactly that window replays as an
-    *        idempotent no-op merge (ST4). */
-  def start(
-      spark: SparkSession,
-      pagesDir: String,
-      checkpointDir: String,
-      headersTable: StateTable,
-      headerFilter: DataFrame => DataFrame = identity,
-      trigger: Trigger = Trigger.AvailableNow(),
-      afterBatch: Long => Unit = _ => ()): StreamingQuery = {
+  /** The page stream: one OAI page document per file under `pagesDir`,
+    * as a single `xml` column. */
+  def pages(spark: SparkSession, pagesDir: String): DataFrame = {
     Tables.configure(spark)
-    val pages = spark.readStream
+    spark.readStream
       .format("text")
       .option("wholetext", "true")
       .load(pagesDir)
       .withColumnRenamed("value", "xml")
+  }
 
-    pages.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val headers = headerFilter(
-          XmlProjections.projectOaiHeaders(batch, col("xml"))
-            .select("record_identifier", "datestamp", "set_spec",
-              "status_is_deleted"))
-        // batch-id marker (scoped to this checkpoint) upgrades
-        // foreachBatch's at-least-once replay to effective exactly-once;
-        // the merge runs as an atomic read-modify-write. versionCols:
-        // AvailableNow drains MANY page files into one batch, so a
-        // record re-harvested across pages appears twice with no page
-        // order to break the tie — the newest datestamp must win, the
-        // same row the batch pipeline's sequential page-by-page merges
-        // land on
-        headersTable.mergeOnceForBatch(batchId, checkpointDir, headers,
-          keys = Seq("record_identifier"), versionCols = Seq("datestamp"))
-        afterBatch(batchId)
-      }
-      .start()
+  /** The micro-batch body: run it through [[ForeachBatch.start]] over
+    * [[pages]], with `streamScope` = that checkpoint dir. The adapter's
+    * default AvailableNow trigger drains all pending pages, then stops
+    * (the reference's backlog fast-drain); pass
+    * `Trigger.ProcessingTime("360 seconds")` for the reference's steady
+    * 6-minute poll (ST1).
+    *
+    * The window between this merge's commit and the engine's batch
+    * commit is where a crash replays the batch (ST4); the recovery
+    * specs inject their crash there by wrapping this body. Returns
+    * true when the merge ran (false = a marker-skipped replay). */
+  def processBatch(
+      batch: DataFrame,
+      batchId: Long,
+      headersTable: StateTable,
+      streamScope: String,
+      headerFilter: DataFrame => DataFrame = identity): Boolean = {
+    val headers = headerFilter(
+      XmlProjections.projectOaiHeaders(batch, col("xml"))
+        .select("record_identifier", "datestamp", "set_spec",
+          "status_is_deleted"))
+    // batch-id marker (scoped to this checkpoint) upgrades
+    // foreachBatch's at-least-once replay to effective exactly-once;
+    // the merge runs as an atomic read-modify-write. versionCols:
+    // AvailableNow drains MANY page files into one batch, so a
+    // record re-harvested across pages appears twice with no page
+    // order to break the tie — the newest datestamp must win, the
+    // same row the batch pipeline's sequential page-by-page merges
+    // land on
+    headersTable.mergeOnceForBatch(batchId, streamScope, headers,
+      keys = Seq("record_identifier"), versionCols = Seq("datestamp"))
   }
 }

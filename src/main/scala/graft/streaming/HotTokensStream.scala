@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Sketches
 import graft.pipeline.MgSummaryStore
@@ -28,40 +27,35 @@ import graft.pipeline.MgSummaryStore
   * at-least-once replay a no-op. */
 object HotTokensStream {
 
-  /** Start the monitor over `batches` (a streaming DataFrame); `textCol`
+  /** The micro-batch body: run it through [[ForeachBatch.start]] with
+    * `streamScope` = that checkpoint dir (the marker's scope). `textCol`
     * is whitespace-tokenized, matching the batch heavy-hitter
-    * tokenization. */
-  def start(
-      batches: DataFrame,
+    * tokenization. Returns true when the summary advanced (false = a
+    * marker-skipped replay). */
+  def processBatch(
+      batch: DataFrame,
+      batchId: Long,
       store: MgSummaryStore,
-      checkpointDir: String,
       textCol: Column,
-      k: Int = 1000,
-      trigger: Trigger = Trigger.AvailableNow(),
-      afterBatch: Long => Unit = _ => ()): StreamingQuery =
-    batches.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val toks = batch.filter(textCol.isNotNull)
-          .select(explode(split(trim(textCol), "\\s+")).as("token"))
-          // empty/whitespace-only text splits to [""] — without this an
-          // "" pseudo-token occupies one of the k counters
-          .filter(col("token") =!= "")
-        // the sketch runs INSIDE the marker guard: a marker-skipped
-        // replay (crash after the marker write) must not re-pay the
-        // full tokenize+sketch pass just to discard it
-        store.updateOnceForBatch(batchId, checkpointDir) {
-          case Some(prev) =>
-            Sketches.mergeSummaries(prev, Sketches.misraGries(toks, "token", k), k)
-          case None => Sketches.misraGries(toks, "token", k)
-        }
-        afterBatch(batchId)
-      }
-      .start()
+      streamScope: String,
+      k: Int = 1000): Boolean = {
+    val toks = batch.filter(textCol.isNotNull)
+      .select(explode(split(trim(textCol), "\\s+")).as("token"))
+      // empty/whitespace-only text splits to [""] — without this an
+      // "" pseudo-token occupies one of the k counters
+      .filter(col("token") =!= "")
+    // the sketch runs INSIDE the marker guard: a marker-skipped
+    // replay (crash after the marker write) must not re-pay the
+    // full tokenize+sketch pass just to discard it
+    store.updateOnceForBatch(batchId, streamScope) {
+      case Some(prev) =>
+        Sketches.mergeSummaries(prev, Sketches.misraGries(toks, "token", k), k)
+      case None => Sketches.misraGries(toks, "token", k)
+    }
+  }
 
   /** TRENDING tokens per event-time window — the windowed face of the
-    * monitor ([[start]] accumulates one global summary; this answers
+    * monitor ([[processBatch]] accumulates one global summary; this answers
     * "what was hot BETWEEN 9 and 10"): the Misra-Gries Aggregator runs
     * as a native windowed streaming aggregate, so per-window state is k
     * counters (not the window's vocabulary), partials combine map-side,

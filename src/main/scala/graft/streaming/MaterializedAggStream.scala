@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.StateOps
 import graft.pipeline.BucketedStateTable
@@ -34,10 +33,16 @@ import graft.pipeline.BucketedStateTable
   * the postimage increments the new one. */
 object MaterializedAggStream {
 
-  /** One micro-batch fold, exposed for direct replay testing. `changes`
-    * is a CDC frame (`change_type` + base row columns; a `_commit_id`
-    * column is tolerated and ignored). Returns true when the view
-    * advanced (false = marker-skipped replay). */
+  /** One micro-batch fold — the body to run through
+    * [[ForeachBatch.start]] over the base table's change feed
+    * (`spark.readStream.format("graft-state-changes")`, with
+    * `startingCommit` to seed the view from retained history; without
+    * it only changes from now on are maintained, so bootstrap the view
+    * with [[graft.operators.StateOps.aggregateShape]] + a merge first),
+    * with `streamScope` = that checkpoint dir. `changes` is a CDC frame
+    * (`change_type` + base row columns; a `_commit_id` column is
+    * tolerated and ignored). Returns true when the view advanced
+    * (false = marker-skipped replay). */
   def processBatch(
       changes: DataFrame,
       batchId: Long,
@@ -63,33 +68,5 @@ object MaterializedAggStream {
       "left_anti")
     view.applyDeltaOnceForBatch(batchId, streamScope,
       upserts = updated, deleteKeys = drained, keys = groupCols)
-  }
-
-  /** Wire the full pipeline: base table's change feed → maintained
-    * view at `viewPath` (keyed on `groupCols`). `startingCommit`
-    * seeds the view from retained history's first batch; omit it to
-    * maintain only changes from now on (bootstrap the view with
-    * [[graft.operators.StateOps.aggregateShape]] + a merge first). */
-  def start(
-      spark: SparkSession,
-      baseTablePath: String,
-      view: BucketedStateTable,
-      groupCols: Seq[String],
-      valueCol: String,
-      checkpointDir: String,
-      startingCommit: Option[Long] = None,
-      trigger: Trigger = Trigger.ProcessingTime(0L)): StreamingQuery = {
-    val reader = spark.readStream.format("graft-state-changes")
-    startingCommit.foreach(c => reader.option("startingCommit", c))
-    reader.load(baseTablePath)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        processBatch(df, id, view, groupCols, valueCol,
-          streamScope = checkpointDir)
-        ()
-      }
-      .trigger(trigger)
-      .start()
   }
 }

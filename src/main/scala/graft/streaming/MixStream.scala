@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.{Corpus, TextAnalysis}
 import graft.pipeline.BucketedStateTable
@@ -37,21 +36,23 @@ import graft.pipeline.BucketedStateTable
   */
 object MixStream {
 
-  /** One micro-batch step, exposed for direct replay testing: counts
-    * the batch's per-source tokens, folds them into `totals` (marker-
-    * guarded), and returns the batch's kept rows under the post-update
-    * rates. `totals` must be keyed on a single `source` string column
-    * (`keyCols = Seq("source")`). */
+  /** One micro-batch step — the body to run through
+    * [[ForeachBatch.start]] with `streamScope` = that checkpoint dir:
+    * counts the batch's per-source tokens, folds them into `totals`
+    * (marker-guarded), and returns the batch's kept rows under the
+    * post-update rates for the caller's sink (e.g. an append to the
+    * curated corpus). `totals` must be keyed on a single `source`
+    * string column (`keyCols = Seq("source")`). */
   def processBatch(
       batch: DataFrame,
       batchId: Long,
       totals: BucketedStateTable,
       tau: Double,
       streamScope: String,
-      idCol: String,
-      sourceCol: String,
-      textCol: String,
-      seed: String): DataFrame = {
+      idCol: String = "doc_id",
+      sourceCol: String = "source",
+      textCol: String = "text",
+      seed: String = "mix"): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
     val withTokens = batch.withColumn("n_tokens",
@@ -81,26 +82,4 @@ object MixStream {
     Corpus.keepBySourceRates(withTokens, idCol, sourceCol,
       Corpus.temperatureRates(decisionTotals, tau), seed)
   }
-
-  /** Start the stream: kept rows of each batch go to
-    * `sink(kept, batchId)` (e.g. an append to the curated corpus). */
-  def start(
-      batches: DataFrame,
-      totals: BucketedStateTable,
-      tau: Double,
-      checkpointDir: String,
-      sink: (DataFrame, Long) => Unit,
-      idCol: String = "doc_id",
-      sourceCol: String = "source",
-      textCol: String = "text",
-      seed: String = "mix",
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    batches.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(processBatch(batch, batchId, totals, tau, checkpointDir,
-          idCol, sourceCol, textCol, seed), batchId)
-      }
-      .start()
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Dedup
 import graft.pipeline.BucketedStateTable
@@ -44,40 +43,33 @@ import graft.pipeline.BucketedStateTable
   */
 object NearDupStream {
 
-  /** Start the stream over `batches` (a streaming DataFrame carrying at
-    * least `idCol` and `textCol`; ids must be unique across the doc
-    * store ∪ stream). Seed `docs` with the pre-existing corpus and
-    * build `index` over it with [[graft.ops.Dedup.indexNearDups]]
-    * before starting; banding parameters here must match that build. */
-  def start(
-      batches: DataFrame,
+  /** The micro-batch body: run it through [[ForeachBatch.start]] over a
+    * streaming DataFrame carrying at least `idCol` and `textCol` (ids
+    * unique across the doc store ∪ stream). Seed `docs` with the
+    * pre-existing corpus and build `index` over it with
+    * [[graft.ops.Dedup.indexNearDups]] before starting; banding
+    * parameters here must match that build. Returns the batch's
+    * verified pairs (pinned), as merged. */
+  def processBatch(
+      batch: DataFrame,
       docs: BucketedStateTable,
       index: BucketedStateTable,
       pairs: BucketedStateTable,
-      checkpointDir: String,
       idCol: String = "doc_id",
       textCol: String = "text",
       minJaccard: Double = 0.8,
       shingleLen: Int = 3,
       bands: Int = 16,
-      rowsPerBand: Int = 4,
-      trigger: Trigger = Trigger.AvailableNow(),
-      afterBatch: Long => Unit = _ => ()): StreamingQuery =
-    batches.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ingested = docs
-          .readOrEmpty(like = batch.select(col(idCol), col(textCol)))
-          .select(col(idCol), col(textCol))
-        // `ingested` shapes the lookup; the STORE handle makes the text
-        // read bucket-pruned to the candidate ids (see incrementalNearDups)
-        val p = Dedup.incrementalNearDups(index, ingested, batch,
-          idCol, textCol, minJaccard, shingleLen, bands, rowsPerBand,
-          docStore = Some(docs))
-        pairs.merge(p, keys = Seq("a_id", "b_id"))
-        docs.merge(batch.select(col(idCol), col(textCol)), keys = Seq(idCol))
-        afterBatch(batchId)
-      }
-      .start()
+      rowsPerBand: Int = 4): DataFrame = {
+    val rows = batch.select(col(idCol), col(textCol))
+    val ingested = docs.readOrEmpty(like = rows).select(col(idCol), col(textCol))
+    // `ingested` shapes the lookup; the STORE handle makes the text
+    // read bucket-pruned to the candidate ids (see incrementalNearDups)
+    val p = Dedup.incrementalNearDups(index, ingested, batch,
+      idCol, textCol, minJaccard, shingleLen, bands, rowsPerBand,
+      docStore = Some(docs))
+    pairs.merge(p, keys = Seq("a_id", "b_id"))
+    docs.merge(rows, keys = Seq(idCol))
+    p
+  }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Multimodal
 import graft.pipeline.BucketedStateTable
@@ -10,8 +9,8 @@ import graft.pipeline.BucketedStateTable
   * [[graft.ops.Multimodal.incrementalPairNearDups]] — the cross-modal
   * member of the one-streaming-face-per-incremental-op family (exact
   * dedup in `IncrementalDedupSpec`, text [[NearDupStream]], embeddings
-  * [[EmbedNearDupStream]], IVF [[IvfIngestStream]]): per micro-batch
-  * the image–text pair stream dHashes its payloads, probes the
+  * [[EmbedNearDupStream]], IVF [[graft.ops.Similarity.indexIvf]]): per
+  * micro-batch the image–text pair stream dHashes its payloads, probes the
   * persistent band index bucket-pruned, verifies the surviving
   * candidates on BOTH modalities (image Hamming AND caption cosine —
   * the conjunction, never either alone), merges the verified pairs into
@@ -35,16 +34,16 @@ import graft.pipeline.BucketedStateTable
   * band buckets go through the bounded bipartite decomposition. */
 object PairNearDupStream {
 
-  /** Start the stream over `batches` (a streaming DataFrame carrying
-    * `idCol` + `payloadCol` (encoded image bytes) + `embCol` (caption
-    * embedding); ids unique across index ∪ stream). Seed `index` with
-    * [[graft.ops.Multimodal.indexPairs]]; `bands` must match that
-    * build. */
-  def start(
-      batches: DataFrame,
+  /** The micro-batch body: run it through [[ForeachBatch.start]] over a
+    * streaming DataFrame carrying `idCol` + `payloadCol` (encoded image
+    * bytes) + `embCol` (caption embedding); ids unique across index ∪
+    * stream. Seed `index` with [[graft.ops.Multimodal.indexPairs]];
+    * `bands` must match that build. Returns the batch's verified pairs
+    * (pinned), as merged. */
+  def processBatch(
+      batch: DataFrame,
       index: BucketedStateTable,
       pairs: BucketedStateTable,
-      checkpointDir: String,
       idCol: String = "pair_id",
       payloadCol: String = "payload",
       embCol: String = "embedding",
@@ -52,18 +51,11 @@ object PairNearDupStream {
       bands: Int = 4,
       cosThreshold: Double = 0.95,
       batchSize: Int = 64,
-      maxBucketSize: Int = 4096,
-      trigger: Trigger = Trigger.AvailableNow(),
-      afterBatch: Long => Unit = _ => ()): StreamingQuery =
-    batches.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val p = Multimodal.incrementalPairNearDups(index, batch,
-          idCol, payloadCol, embCol, maxHamming, bands, cosThreshold,
-          batchSize, maxBucketSize)
-        pairs.merge(p, keys = Seq("a_id", "b_id"))
-        afterBatch(batchId)
-      }
-      .start()
+      maxBucketSize: Int = 4096): DataFrame = {
+    val p = Multimodal.incrementalPairNearDups(index, batch,
+      idCol, payloadCol, embCol, maxHamming, bands, cosThreshold,
+      batchSize, maxBucketSize)
+    pairs.merge(p, keys = Seq("a_id", "b_id"))
+    p
+  }
 }

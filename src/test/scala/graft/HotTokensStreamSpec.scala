@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Sketches
 import graft.pipeline.MgSummaryStore
-import graft.streaming.HotTokensStream
+import graft.streaming.{ForeachBatch, HotTokensStream}
 
 /** Streaming vocabulary monitor: totals accumulate across micro-batches,
   * a planted hot token survives the merged summary (the union-stream
@@ -21,9 +21,10 @@ class HotTokensStreamSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft-hot").toString
     val store = new MgSummaryStore(spark, s"$root/summary")
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = HotTokensStream.start(
-      in.toDF().toDF("doc_id", "text"), store, s"$root/ck", col("text"),
-      k = 8, trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    val q = ForeachBatch.start(in.toDF().toDF("doc_id", "text"), s"$root/ck",
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)) { (b, id) =>
+      HotTokensStream.processBatch(b, id, store, col("text"), s"$root/ck", k = 8)
+    }
     try {
       // batch 1: 30 "hot" among 20 tail tokens; batch 2: 30 more hot
       in.addData(1L -> (Seq.fill(30)("hot") ++ (0 until 20).map(i => s"t$i"))
@@ -49,6 +50,10 @@ class HotTokensStreamSpec extends SparkSpec {
         Sketches.MgSummary(999L, Array("bogus"), Array(999L)), 8)
     }
     assert(!ran, "replayed batch must not run the update")
+    // and the stream's own body, replaying batch id 1, is skipped too
+    assert(!HotTokensStream.processBatch(Seq(1L -> "bogus bogus").toDF("doc_id", "text"),
+      1L, store, col("text"), s"$root/ck", k = 8),
+      "replayed batch must not run the body's update")
     val after = store.read().get
     assert(after.total == before.total &&
       after.items.sameElements(before.items))

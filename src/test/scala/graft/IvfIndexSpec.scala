@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
 import graft.pipeline.BucketedStateTable
+import graft.streaming.ForeachBatch
 
 /** Persistent IVF index: probe must read only the probed centroids'
   * buckets, results must match the in-memory ivfTopK on identical
@@ -126,10 +128,10 @@ class IvfIndexSpec extends SparkSpec {
     val v0 = c.filter(col("c_id") === 0L).select("c_vec")
       .collect().head.getSeq[Float](0)
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.IvfIngestStream.start(
-      in.toDF().toDF("vec_id", "embedding"), index, cents,
-      checkpointDir = s"$root/ck",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    val ingest: (DataFrame, Long) => Unit = (b, _) =>
+      Similarity.indexIvf(index, b, "vec_id", "embedding", cents)
+    val q = ForeachBatch.start(in.toDF().toDF("vec_id", "embedding"), s"$root/ck",
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))(ingest)
     try {
       in.addData(910000L -> v0) // exact twin of vec 0, streamed in
       q.processAllAvailable()
@@ -141,10 +143,10 @@ class IvfIndexSpec extends SparkSpec {
         s"streamed twin not searchable: ${top.mkString(";")}")
     } finally q.stop()
 
-    // replay the same ingest by hand: keyed merge, count unchanged
+    // replay the same batch through the stream's body: keyed merge,
+    // count unchanged
     val n = index.read().get.count()
-    val batch = Seq(910000L -> v0).toDF("vec_id", "embedding")
-    Similarity.indexIvf(index, batch, "vec_id", "embedding", cents)
+    ingest(Seq(910000L -> v0).toDF("vec_id", "embedding"), 0L)
     assert(index.read().get.count() == n)
   }
 

@@ -240,18 +240,26 @@ class JdbcStateTableSpec extends SparkSpec {
       _.filter(graft.functions.GraftFunctions.isQucosaId(
         org.apache.spark.sql.functions.col("record_identifier")))
 
+    // one harvest run on the shared checkpoint; with `crash` it fails
+    // after the body's merge commits, before the engine commits the batch
+    def harvest(crash: Boolean = false) =
+      graft.streaming.ForeachBatch.start(
+          graft.streaming.HarvestStream.pages(spark, pages), s"$dir/ckpt") {
+        (b, id) =>
+          graft.streaming.HarvestStream.processBatch(b, id, headers,
+            s"$dir/ckpt", qucosaFilter)
+          if (crash) throw new RuntimeException("injected crash")
+      }
+
     // run 1: drains page 1 into the DATABASE-backed state
-    graft.streaming.HarvestStream.start(spark, pages, s"$dir/ckpt", headers,
-      headerFilter = qucosaFilter).awaitTermination()
+    harvest().awaitTermination()
     assert(headers.read().get.count() == 1L)
 
     // page 2 arrives; the stream CRASHES in the worst window — the
     // merge + marker transaction committed, the engine batch did not
     Files.writeString(java.nio.file.Paths.get(pages, "p2.xml"),
       fixture("/oai/listIdentifiers.xml"))
-    val q2 = graft.streaming.HarvestStream.start(spark, pages, s"$dir/ckpt", headers,
-      headerFilter = qucosaFilter,
-      afterBatch = _ => throw new RuntimeException("injected crash"))
+    val q2 = harvest(crash = true)
     intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       q2.awaitTermination()
     }
@@ -272,8 +280,7 @@ class JdbcStateTableSpec extends SparkSpec {
 
     // healthy restart on the same checkpoint: the engine replays the
     // uncommitted batch; the database marker suppresses the merge
-    graft.streaming.HarvestStream.start(spark, pages, s"$dir/ckpt", headers,
-      headerFilter = qucosaFilter).awaitTermination()
+    harvest().awaitTermination()
     val after = headers.read().get.collect()
     assert(after.length == 2)
     assert(after.forall(_.getAs[Timestamp]("datestamp") == sentinel),

@@ -3,10 +3,11 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.StateOps
 import graft.pipeline.BucketedStateTable
-import graft.streaming.MaterializedAggStream
+import graft.streaming.{ForeachBatch, MaterializedAggStream}
 
 /** MaterializedAggStream: a persistent count/sum view maintained from a
   * base state table's change feed must equal a from-scratch aggregate
@@ -16,6 +17,18 @@ class MaterializedAggStreamSpec extends SparkSpec {
 
   private def tmp(): String =
     Files.createTempDirectory("graft-matagg").toString
+
+  /** The view over `root/base`'s change feed from `startingCommit`,
+    * checkpointed at `root/ck`. */
+  private def startView(root: String, view: BucketedStateTable,
+      startingCommit: Long): StreamingQuery = {
+    val feed = spark.readStream.format("graft-state-changes")
+      .option("startingCommit", startingCommit).load(s"$root/base")
+    ForeachBatch.start(feed, s"$root/ck", Trigger.ProcessingTime(0L)) { (df, id) =>
+      MaterializedAggStream.processBatch(df, id, view, Seq("g"), "v",
+        streamScope = s"$root/ck")
+    }
+  }
 
   test("view tracks the base table through inserts, group-moving updates, drains, and restart") {
     val s = spark
@@ -40,9 +53,7 @@ class MaterializedAggStreamSpec extends SparkSpec {
       StateOps.aggregateShape(base.read().get, Seq("g"), "v")
         .as[(String, Long, Long)].collect().toSet
 
-    def startQ() = MaterializedAggStream.start(spark, s"$root/base", view,
-      groupCols = Seq("g"), valueCol = "v",
-      checkpointDir = s"$root/ck", startingCommit = Some(c1))
+    def startQ() = startView(root, view, c1)
 
     val q = startQ()
     try {
@@ -101,9 +112,7 @@ class MaterializedAggStreamSpec extends SparkSpec {
       view.read().map(_.select("g", "n_rows", "sum_v")
         .as[(Option[String], Long, Long)].collect().toSet).getOrElse(Set.empty)
 
-    val q = MaterializedAggStream.start(spark, s"$root/base", view,
-      groupCols = Seq("g"), valueCol = "v",
-      checkpointDir = s"$root/ck", startingCommit = Some(c1))
+    val q = startView(root, view, c1)
     try {
       q.processAllAvailable()
       assert(viewRows() == Set((None, 2L, 12L), (Some("a"), 1L, 1L)))

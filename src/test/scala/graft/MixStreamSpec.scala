@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.pipeline.BucketedStateTable
-import graft.streaming.MixStream
+import graft.streaming.{ForeachBatch, MixStream}
 
 /** Streaming temperature mixture: running totals accumulate exactly
   * once per batch, the smallest source is never downsampled, and an
@@ -24,12 +24,12 @@ class MixStreamSpec extends SparkSpec {
       keyCols = Seq("source"), numBuckets = 4, retentionFloorMillis = 0L)
     val in = MemoryStream[(Long, String, String)]
     val kept = scala.collection.mutable.Map.empty[Long, Set[Long]]
-    val q = MixStream.start(
-      in.toDF().toDF("doc_id", "source", "text"), totals, tau = 0.5,
-      checkpointDir = s"$root/ck",
-      sink = (df, id) =>
-        kept(id) = df.select("doc_id").collect().map(_.getLong(0)).toSet,
-      trigger = Trigger.ProcessingTime(0L))
+    val q = ForeachBatch.start(in.toDF().toDF("doc_id", "source", "text"),
+        s"$root/ck", Trigger.ProcessingTime(0L)) { (b, id) =>
+      kept(id) = MixStream.processBatch(b, id, totals, tau = 0.5,
+          streamScope = s"$root/ck")
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    }
     try {
       // batch 0: A is 1000 tokens across 20 docs, B is 15 across 3
       val heavy = (1L to 20L).map(i => (i, "A", Seq.fill(50)("w").mkString(" ")))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Dedup
 import graft.pipeline.BucketedStateTable
-import graft.streaming.NearDupStream
+import graft.streaming.{EmbedNearDupStream, ForeachBatch, NearDupStream}
 
 /** Streaming twin of incremental near-dup: pairs must surface across
   * micro-batches through the persistent LSH index + doc store, and a
@@ -44,10 +44,10 @@ class NearDupStreamSpec extends SparkSpec {
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
     // continuous trigger: the default AvailableNow would drain batch 1
     // and STOP before batch 2 arrives
-    val q = NearDupStream.start(
-      in.toDF().toDF("doc_id", "text"), docs, index, pairs,
-      checkpointDir = s"$root/ck", minJaccard = 0.8,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    val q = ForeachBatch.start(in.toDF().toDF("doc_id", "text"), s"$root/ck",
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)) { (b, _) =>
+      NearDupStream.processBatch(b, docs, index, pairs, minJaccard = 0.8)
+    }
     try {
       // batch 1: a near-dup of corpus doc 0, plus a fresh document
       in.addData(100000L -> (d0 + " zz yy xx"), 100001L -> freshTxt)
@@ -69,20 +69,17 @@ class NearDupStreamSpec extends SparkSpec {
         s"cross-batch near-dup not found: $after2")
     } finally q.stop()
 
-    // replay: re-running batch 2's body by hand (the at-least-once
-    // path) must re-emit the same pairs and change no state
+    // replay: re-running batch 2 through the stream's own body (the
+    // at-least-once path) must re-emit the same pairs and change no state
     val idxCount = index.read().get.count()
     val pairCount = pairs.read().get.count()
     val docCount = docs.read().get.count()
     val batch2 = Seq(100002L -> (freshTxt + " qq")).toDF("doc_id", "text")
-    val replayed = Dedup.incrementalNearDups(index,
-      docs.read().get.select("doc_id", "text"), batch2, "doc_id", "text",
+    val replayed = NearDupStream.processBatch(batch2, docs, index, pairs,
       minJaccard = 0.8)
     val got = replayed.select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.contains((100001L, 100002L)), s"replay lost the pair: $got")
-    pairs.merge(replayed, keys = Seq("a_id", "b_id"))
-    docs.merge(batch2, keys = Seq("doc_id"))
     assert(index.read().get.count() == idxCount)
     assert(pairs.read().get.count() == pairCount)
     assert(docs.read().get.count() == docCount)
@@ -105,10 +102,10 @@ class NearDupStreamSpec extends SparkSpec {
       .collect().head.getSeq[Float](0)
 
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.EmbedNearDupStream.start(
-      in.toDF().toDF("vec_id", "embedding"), index, pairs,
-      checkpointDir = s"$root/ck",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    val q = ForeachBatch.start(in.toDF().toDF("vec_id", "embedding"), s"$root/ck",
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)) { (b, _) =>
+      EmbedNearDupStream.processBatch(b, index, pairs)
+    }
     def pairSet(): Set[(Long, Long)] = pairs.read()
       .map(_.select("a_id", "b_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet)
@@ -124,11 +121,10 @@ class NearDupStreamSpec extends SparkSpec {
         s"cross-batch pair missing: ${pairSet()}")
     } finally q.stop()
 
-    // replay batch 2 by hand: same pairs, no state growth
+    // replay batch 2 through the stream's body: same pairs, no state growth
     val (ni, np) = (index.read().get.count(), pairs.read().get.count())
-    val replayed = Dedup.incrementalEmbeddingNearDups(index,
-      Seq(700001L -> v0).toDF("vec_id", "embedding"), "vec_id", "embedding", 0.95)
-    pairs.merge(replayed, keys = Seq("a_id", "b_id"))
+    EmbedNearDupStream.processBatch(
+      Seq(700001L -> v0).toDF("vec_id", "embedding"), index, pairs)
     assert(index.read().get.count() == ni)
     assert(pairs.read().get.count() == np)
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Multimodal
 import graft.pipeline.BucketedStateTable
-import graft.streaming.PairNearDupStream
+import graft.streaming.{ForeachBatch, PairNearDupStream}
 
 /** Incremental cross-modal pair dedup against a persistent banded
   * index ([[graft.ops.Multimodal.indexPairs]] /
@@ -145,10 +145,10 @@ class PairNearDupSpec extends SparkSpec {
 
     val in = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Array[Byte], Seq[Float])]
-    val q = PairNearDupStream.start(
-      in.toDF().toDF("pair_id", "payload", "embedding"), index, pairs,
-      checkpointDir = s"$root/ck",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    val q = ForeachBatch.start(in.toDF().toDF("pair_id", "payload", "embedding"),
+        s"$root/ck", org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)) {
+      (b, _) => PairNearDupStream.processBatch(b, index, pairs)
+    }
     def stored(): Set[(Long, Long)] = pairs.read()
       .map(_.select("a_id", "b_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet)
@@ -170,15 +170,14 @@ class PairNearDupSpec extends SparkSpec {
         s"cross-batch pair missing: $after2")
     } finally q.stop()
 
-    // replay batch 2 by hand (the at-least-once path): same pairs
-    // re-derived, no state growth anywhere
+    // replay batch 2 through the stream's body (the at-least-once
+    // path): same pairs re-derived, no state growth anywhere
     val (ni, np) = (index.read().get.count(), pairs.read().get.count())
-    val replayed = Multimodal.incrementalPairNearDups(index,
-      pairsDF((100001L, corpusV(3), 3)))
+    val replayed = PairNearDupStream.processBatch(
+      pairsDF((100001L, corpusV(3), 3)), index, pairs)
     val got = replayed.select("a_id", "b_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.contains((100000L, 100001L)), s"replay lost the pair: $got")
-    pairs.merge(replayed, keys = Seq("a_id", "b_id"))
     assert(index.read().get.count() == ni)
     assert(pairs.read().get.count() == np)
   }

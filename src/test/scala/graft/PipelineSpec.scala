@@ -411,16 +411,18 @@ class PipelineSpec extends SparkSpec {
     Files.writeString(Paths.get(pages, "p1.xml"), fixture("/oai/resumptionToken.xml"))
 
     val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val q1 = graft.streaming.HarvestStream.start(
-      spark, pages, s"$dir/ckpt", headers)
+    def harvest() = graft.streaming.ForeachBatch.start(
+        graft.streaming.HarvestStream.pages(spark, pages), s"$dir/ckpt") {
+      (b, id) => graft.streaming.HarvestStream.processBatch(b, id, headers, s"$dir/ckpt")
+    }
+    val q1 = harvest()
     q1.awaitTermination()
     assert(headers.read().get.count() == 1L) // qucosa:1044
 
     // New page arrives; a restarted stream picks up ONLY the new file
     // (checkpointed source offsets) and merges idempotently.
     Files.writeString(Paths.get(pages, "p2.xml"), fixture("/oai/listIdentifiers.xml"))
-    val q2 = graft.streaming.HarvestStream.start(
-      spark, pages, s"$dir/ckpt", headers)
+    val q2 = harvest()
     q2.awaitTermination()
     val hs = headers.read().get.orderBy("record_identifier").collect()
     assert(hs.length == 2) // 1044 merged from both pages, 1234 added

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.TextAnalysis
 import graft.pipeline.BucketedStateTable
-import graft.streaming.PostingsStream
+import graft.streaming.ForeachBatch
 
 /** Incremental BM25 over a persistent term-bucketed postings index:
   * incremental scores must equal the batch operator's exactly
@@ -98,10 +98,10 @@ class PostingsIndexSpec extends SparkSpec {
     val rows = corpus.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
 
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = PostingsStream.start(
-      in.toDF().toDF("doc_id", "text"), postings, docLengths,
-      checkpointDir = s"$root/ck",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
+    val q = ForeachBatch.start(in.toDF().toDF("doc_id", "text"), s"$root/ck",
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)) { (b, _) =>
+      TextAnalysis.indexPostings(postings, docLengths, b, "doc_id", "text")
+    }
     try {
       val (h1, h2) = rows.splitAt(rows.size / 2)
       in.addData(h1); q.processAllAvailable()
@@ -218,11 +218,10 @@ class PostingsIndexSpec extends SparkSpec {
     val rows = corpus.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
 
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = PostingsStream.start(
-      in.toDF().toDF("doc_id", "text"), postings, docLengths,
-      checkpointDir = s"$root/ck",
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L),
-      stats = stats)
+    val q = ForeachBatch.start(in.toDF().toDF("doc_id", "text"), s"$root/ck",
+        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)) { (b, _) =>
+      TextAnalysis.indexPostings(postings, docLengths, b, "doc_id", "text", stats)
+    }
     try {
       val (h1, h2) = rows.splitAt(rows.size / 2)
       in.addData(h1); q.processAllAvailable()
