@@ -149,7 +149,7 @@ class BucketedStateTable(
   /** Stats of the most recent commit through this instance. */
   def lastCommit: Option[CommitStats] = last
 
-  private val BucketCol = "__bucket"
+  private val BucketCol = BucketedStateTable.BucketCol
   private def root = new Path(path)
   private def fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def commitsDir = new Path(root, "_commits")
@@ -157,8 +157,10 @@ class BucketedStateTable(
   private lazy val lockKey =
     "bucketed:" + fs.makeQualified(root).toUri.toString
 
-  private def bucketOf =
-    pmod(xxhash64(effBucketCols.map(col): _*), lit(numBuckets.toLong)).cast("int")
+  private def bucketOf = bucketIn(numBuckets)
+
+  private def bucketIn(layout: Int) =
+    pmod(xxhash64(effBucketCols.map(col): _*), lit(layout.toLong)).cast("int")
 
   // ---- writer lease (cross-process single-writer discipline) --------
 
@@ -432,9 +434,16 @@ class BucketedStateTable(
   private def bucketPath(bucket: Int, commit: Long): Path =
     new Path(dataDir, f"c$commit%08d/$BucketCol=$bucket")
 
-  private def readFrom(m: Manifest, buckets: Seq[Int]): Option[DataFrame] = {
-    val paths = buckets.sorted.flatMap(b => m.buckets.get(b).map(c => bucketPath(b, c).toString))
-    if (paths.isEmpty) None
+  private def readFrom(m: Manifest, buckets: Seq[Int]): Option[DataFrame] =
+    readSized(m, buckets)._1
+
+  /** [[readFrom]] plus the on-disk bytes of the buckets it read, which
+    * the driver listing returns for free and [[writeBuckets]] sizes its
+    * task count by. */
+  private def readSized(m: Manifest,
+      buckets: Seq[Int]): (Option[DataFrame], Long) = {
+    val listed = BucketedStateTable.listBuckets(fs,
+      buckets.sorted.flatMap(b => m.buckets.get(b).map(c => b -> bucketPath(b, c))))
     // Read under the manifest's RECORDED schema when it carries one:
     // after a widening merge or [[widenTo]], clean buckets still hold
     // files written under the narrower pre-widening shape, and the
@@ -443,10 +452,10 @@ class BucketedStateTable(
     // result shape depend on which file the reader samples).
     // [[readAt]] passes the OLD manifest, so time travel keeps the
     // snapshot's contemporary schema.
-    else m.schemaJson match {
-      case Some(j) => Some(spark.read.schema(schemaOf(j)).parquet(paths: _*))
-      case None => Some(spark.read.parquet(paths: _*))
-    }
+    (if (listed.isEmpty) None
+     else Some(BucketedStateTable.scanBuckets(spark, listed,
+       m.schemaJson.map(schemaOf))),
+      listed.map(_.bytes).sum)
   }
 
   private def schemaOf(json: String): org.apache.spark.sql.types.StructType =
@@ -740,10 +749,8 @@ class BucketedStateTable(
     // this filter each would surface as a phantom delete
     val oldScoped =
       if (!walked) oldRaw
-      else oldRaw.filter(
-        pmod(xxhash64(effBucketCols.map(col): _*),
-            lit(mTo.manifestNumBuckets.toLong)).cast("int")
-          .isin(changed.map(Integer.valueOf): _*))
+      else oldRaw.filter(bucketIn(mTo.manifestNumBuckets)
+        .isin(changed.map(Integer.valueOf): _*))
     val oldDf = alignTo(oldScoped, rowSchema, "changesBetween")
       .withColumn("__in_old", lit(true))
     val newDf = readFrom(mTo, changed).getOrElse(empty)
@@ -806,9 +813,9 @@ class BucketedStateTable(
     * (overlapping), never silently overwritten with rows merged
     * against its predecessor's content. */
   private def readBucketsWithBase(buckets: Seq[Int],
-      like: DataFrame): (DataFrame, Option[Manifest]) =
+      like: DataFrame): (DataFrame, Option[Manifest], Long) =
     currentManifest() match {
-      case None => (like.limit(0), None)
+      case None => (like.limit(0), None, 0L)
       case Some(m) =>
         // an empty slice of an EXISTING table shapes from the
         // manifest's RECORDED schema, not from `like`: a post-widenTo
@@ -817,14 +824,15 @@ class BucketedStateTable(
         // and the commit would record the narrow schema — silently
         // dropping the freshly widened column from every later read.
         // `like` only shapes a pre-schema-line manifest's fallback.
-        val df = readFrom(m, buckets).getOrElse {
+        val (read, bytes) = readSized(m, buckets)
+        val df = read.getOrElse {
           m.schemaJson
             .map(j => spark.createDataFrame(
               java.util.Collections.emptyList[org.apache.spark.sql.Row](),
               schemaOf(j)))
             .getOrElse(like.limit(0))
         }
-        (df, Some(m))
+        (df, Some(m), bytes)
     }
 
   /** Current rows of ONLY the buckets that `probe`'s bucket-column
@@ -955,35 +963,33 @@ class BucketedStateTable(
 
   // ---- commit -------------------------------------------------------
 
-  /** Per-bucket zone-map payloads for the dirty buckets just written
-    * under `out` — row count, bytes, and min/max/null-count for every
+  /** Per-bucket zone-map payloads for the `written` buckets of data
+    * commit `next` — row count, bytes, and min/max/null-count for every
     * `statsCols` column present in `rowSchema` with a
     * [[ZoneMaps.supported]] type. ONE column-pruned aggregation job
     * over the freshly-written files (count-star and min/max ride the
     * parquet footers — no full data-page scan of wide rows) plus one
-    * recursive listing of the commit dir for bytes; both are bounded
+    * driver listing per written bucket for bytes; both are bounded
     * by the DIRTY set, never the table. The collect is ≤ one row per
     * dirty bucket — the same bounded-driver-read shape as [[stats]]. */
-  private def collectBucketStats(out: Path,
+  private def collectBucketStats(next: Long, written: Seq[Int],
+      rowSchema: org.apache.spark.sql.types.StructType): Map[Int, String] =
+    bucketStatsOf(written.map(b => b -> bucketPath(b, next)),
+      statsEligible(statsCols, rowSchema), rowSchema)
+
+  /** The listing + scan half both stats producers share: lists `dirs`,
+    * scans them under the KNOWN `rowSchema` (footer-driven schema
+    * inference — a whole extra Spark job, measured in
+    * SCALE_PROBE_STATSCOST.json — has nothing to add) with each row's
+    * bucket as the index's partition value, and aggregates. */
+  private def bucketStatsOf(dirs: Seq[(Int, Path)],
+      eligible: Seq[org.apache.spark.sql.types.StructField],
       rowSchema: org.apache.spark.sql.types.StructType): Map[Int, String] = {
-    val eligible = statsEligible(statsCols, rowSchema)
-    val bytes: Map[Int, Long] = {
-      val it = fs.listFiles(out, true)
-      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-        .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-        .groupBy(_.getPath.getParent.getName
-          .stripPrefix(s"$BucketCol=").toInt)
-        .map { case (b, fsz) => b -> fsz.map(_.getLen).sum }
-    }
-    // explicit schema (row fields + the bucket partition column): the
-    // freshly-written shape is KNOWN, so footer-driven schema inference
-    // — a whole extra Spark job per commit (measured in
-    // SCALE_PROBE_STATSCOST.json) — has nothing to add
-    val readSchema = org.apache.spark.sql.types.StructType(
-      rowSchema.fields :+ org.apache.spark.sql.types.StructField(
-        BucketCol, org.apache.spark.sql.types.IntegerType))
-    statsAggRows(spark.read.schema(readSchema).parquet(out.toString),
-      eligible, bytes)
+    val listed = BucketedStateTable.listBuckets(fs, dirs)
+    statsAggRows(
+      BucketedStateTable.scanBuckets(spark, listed, Some(rowSchema),
+        withBucket = true),
+      eligible, listed.map(l => l.bucket -> l.bytes).toMap)
   }
 
   private def statsEligible(cols: Seq[String],
@@ -1064,26 +1070,9 @@ class BucketedStateTable(
         s"analyzeStats: none of [${cols.mkString(",")}] is a " +
           s"supported stats column of ${rec.fieldNames.mkString(",")}")
       if (m0.buckets.isEmpty) return 0
-      val bytes: Map[Int, Long] = {
-        val byCommit = m0.buckets.values.toSeq.distinct.map { commit =>
-          val commitDir = new Path(dataDir, f"c$commit%08d")
-          val it = fs.listFiles(commitDir, true)
-          commit -> Iterator.continually(it).takeWhile(_.hasNext)
-            .map(_.next())
-            .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-            .groupBy(_.getPath.getParent.getName
-              .stripPrefix(s"$BucketCol=").toInt)
-            .map { case (b, fsz) => b -> fsz.map(_.getLen).sum }
-        }.toMap
-        m0.buckets.map { case (b, c) =>
-          b -> byCommit(c).getOrElse(b, 0L) }
-      }
-      val paths = m0.buckets.toSeq.sorted
-        .map { case (b, c) => bucketPath(b, c).toString }
-      val df = spark.read.schema(rec).parquet(paths: _*)
-        .withColumn(BucketCol, regexp_extract(input_file_name(),
-          s"/$BucketCol=(\\d+)/", 1).cast("int"))
-      val fresh = statsAggRows(df, eligible, bytes)
+      val fresh = bucketStatsOf(
+        m0.buckets.toSeq.sorted.map { case (b, c) => b -> bucketPath(b, c) },
+        eligible, rec)
       var attempts = 0
       while (true) {
         // A RELAYOUT (split/coalesce/rebucket) landing mid-analyze
@@ -1141,6 +1130,56 @@ class BucketedStateTable(
     * far above anything a sane writer population produces. */
   private val maxRebases = 5
 
+  /** THE bucket-file write every data commit and relayout shares, so
+    * their write options, task rule and listing can never drift: hash
+    * `rows` into `layout` buckets, write each bucket's rows as ONE
+    * key-sorted file under data commit `next`, and return the bucket
+    * ids written (the listing is the truth — a bucket receiving no rows
+    * materializes no directory). Rows are SORTED by key within each
+    * bucket file, so parquet row-group min/max stats prune a point or
+    * range probe INSIDE a multi-GB bucket — readForKeys narrows to the
+    * bucket directory, the footer stats narrow further to the row
+    * groups holding the keys (free at write time: the sort is per
+    * already-shuffled partition, no extra exchange).
+    *
+    * Task count: `min(buckets, max(defaultParallelism, ceil(bytes /
+    * advisoryPartitionSizeInBytes)))` for `buckets` dirty buckets
+    * holding `bytes` on disk. Hash-partitioning on the bucket column
+    * keeps each bucket in exactly one task however many tasks there
+    * are, so the file count still tracks the dirty set. A small write
+    * runs one task per core: each task pays ~30 ms of deserialization
+    * (measured on an 80-bucket write: 2.4–2.8 s of
+    * `executorDeserializeTime` over 84 tasks), so one task per dirty
+    * bucket made that write take 1.5 s against 0.78 s with 4 tasks on
+    * a 4-core host. Never fewer tasks than cores: a size-adaptive count
+    * below the core count serializes the per-file cost (writer init +
+    * footer) onto fewer cores than the host has. Never more than one
+    * task per bucket: multi-GB buckets at 100 TB keep one task each. */
+  private def writeBuckets(rows: DataFrame, layout: Int, buckets: Int,
+      bytes: BigInt, next: Long): Seq[Int] = {
+    val out = new Path(dataDir, f"c$next%08d")
+    val advisory = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val bySize = (bytes + advisory - 1) / advisory
+    val tasks = math.min(buckets,
+      bySize.max(spark.sparkContext.defaultParallelism).min(Int.MaxValue).toInt)
+    rows.withColumn(BucketCol, bucketIn(layout))
+      .repartition(math.max(tasks, 1), col(BucketCol))
+      .sortWithinPartitions(BucketCol, keyCols: _*)
+      .write.partitionBy(BucketCol).mode("errorifexists").parquet(out.toString)
+    fs.listStatus(out).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$BucketCol="))
+      .map(_.getPath.getName.stripPrefix(s"$BucketCol=").toInt)
+      .sorted
+  }
+
+  /** Catalyst's size estimate of `rows`, for the full rewrites
+    * ([[replaceAll]], [[importFrom]]) that read no buckets to list: a
+    * file scan reports its file bytes, an opaque source the default
+    * maximum (one task per bucket, the scale-safe fallback). */
+  private def estimatedBytes(rows: DataFrame): BigInt =
+    rows.queryExecution.optimizedPlan.stats.sizeInBytes
+
   /** Write `rows` as the new contents of exactly the `dirty` buckets and
     * publish. Buckets in `dirty` that end up with zero rows drop out of
     * the manifest (partitioned writes materialize no empty directories —
@@ -1163,33 +1202,11 @@ class BucketedStateTable(
     * same bucket. The reference's two pipeline stages write disjoint
     * tables concurrently by design (`ReportingManager.java:93-95`);
     * this is the bucket-granular version of the same guarantee. */
-  private def commit(rows: DataFrame, dirty: Seq[Int],
+  private def commit(rows: DataFrame, dirty: Seq[Int], dirtyBytes: BigInt,
       planBase: Option[Manifest] = None,
       publishGate: Option[PublishGate] = None): CommitStats = {
     val next = nextCommitId()
-    val out = new Path(dataDir, f"c$next%08d")
-    // one task per dirty bucket: the write's file count tracks the dirty
-    // set, not (tasks × buckets). Rows are SORTED by key within each
-    // bucket file, so parquet row-group min/max stats prune a point or
-    // range probe INSIDE a multi-GB bucket — readForKeys narrows to the
-    // bucket directory, the footer stats narrow further to the row
-    // groups holding the keys (free at write time: the sort is per
-    // already-shuffled bucket partition, no extra exchange).
-    // (r20 measured the alternative: size-adaptive task counts below
-    // dirty.size serialize the per-FILE cost — parquet writer init +
-    // footer, ~30 ms each — into fewer tasks and LOSE to the per-task
-    // overhead they save; one task per bucket keeps the file writes
-    // parallel and is already scale-correct, since task count tracks
-    // the dirty set, never the cluster.)
-    rows.withColumn(BucketCol, bucketOf)
-      .repartition(math.max(dirty.size, 1), col(BucketCol))
-      .sortWithinPartitions(BucketCol, keyCols: _*)
-      .write.partitionBy(BucketCol).mode("errorifexists").parquet(out.toString)
-    val written =
-      fs.listStatus(out).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$BucketCol="))
-        .map(_.getPath.getName.stripPrefix(s"$BucketCol=").toInt)
-        .sorted
+    val written = writeBuckets(rows, numBuckets, dirty.size, dirtyBytes, next)
     // A bucket written OUTSIDE the dirty set means `rows` re-evaluated
     // differently between the dirty-bucket probe and this write (a
     // non-deterministic expression in the update lineage — rand() salt,
@@ -1211,7 +1228,7 @@ class BucketedStateTable(
     // loop: a rebase republishes the same data, so the same stats hold
     val zstats: Map[Int, String] =
       if (statsCols.isEmpty || written.isEmpty) Map.empty
-      else collectBucketStats(out, rows.schema)
+      else collectBucketStats(next, written, rows.schema)
     // gated publish (see [[PublishGate]]): everything above — the
     // expensive bucket-file write and its stats — ran concurrently
     // with the gate owner's foreground work; nothing is observable
@@ -1508,10 +1525,10 @@ class BucketedStateTable(
         // schema), and post-widenTo narrow writers preserve the
         // columns they don't know (see alignPair). Renames/type
         // changes are refused inside alignTo.
-        val (cur0, base) = readBucketsWithBase(dirty, like = updates)
+        val (cur0, base, bytes) = readBucketsWithBase(dirty, like = updates)
         val (cur, up) = alignPair(cur0, updates, keys, "merge")
-        commit(StateOps.mergeByKey(cur, up, keys, versionCols), dirty, base,
-          publishGate)
+        commit(StateOps.mergeByKey(cur, up, keys, versionCols), dirty, bytes,
+          base, publishGate)
       } else publishGate.foreach(_.awaitPublish()) // no-op merges honor an abort too
       }
     } }
@@ -1632,7 +1649,7 @@ class BucketedStateTable(
         // and drifts in either direction the same way (see alignPair) —
         // wider upserts widen the commit, narrower (pre-widenTo writer)
         // upserts preserve the columns they don't know
-        val (cur0, base) = readBucketsWithBase(dirty, like = upserts)
+        val (cur0, base, bytes) = readBucketsWithBase(dirty, like = upserts)
         val (cur, up) = alignPair(cur0, upserts, keys, "applyDelta")
         // NULL-SAFE anti-join: mergeByKey documents null keys as equal
         // (the table can legitimately hold a null-keyed row), so a
@@ -1643,7 +1660,7 @@ class BucketedStateTable(
           keys.map(c => StateOps.aliasedCol("__cur", c) <=>
             StateOps.aliasedCol("__del", c)).reduce(_ && _),
           "left_anti")
-        commit(StateOps.mergeByKey(kept, up, keys), dirty, base)
+        commit(StateOps.mergeByKey(kept, up, keys), dirty, bytes, base)
       }
       }
     } }
@@ -1655,10 +1672,10 @@ class BucketedStateTable(
       val dirty = dirtyBucketsOf(processed)
       if (dirty.isEmpty) 0L
       else {
-        val (cur, base) = readBucketsWithBase(dirty, like = processed)
+        val (cur, base, bytes) = readBucketsWithBase(dirty, like = processed)
         val res = StateOps.deleteIfUnmodified(cur, processed)
         val notRemoved = res.notRemoved.count()
-        commit(res.newState, dirty, base)
+        commit(res.newState, dirty, bytes, base)
         notRemoved
       }
       }
@@ -1708,7 +1725,7 @@ class BucketedStateTable(
             StateOps.qcol(seqCol) =!= lit(maxSeq))
           .select(bucketOf.as("b")).distinct().as[Int].collect().toSeq.sorted
         if (dirty.nonEmpty) {
-          val (cur, base) = readBucketsWithBase(dirty, like = df)
+          val (cur, base, bytes) = readBucketsWithBase(dirty, like = df)
           // NULL-ts rows survive the bucket rewrite too (the reference
           // DELETE form keeps them) — without the isNull arm a NULL-ts
           // row sharing a bucket with an expired one would vanish
@@ -1717,7 +1734,7 @@ class BucketedStateTable(
             cur.filter(StateOps.qcol(tsCol) > cutoff ||
               StateOps.qcol(tsCol).isNull ||
               StateOps.qcol(seqCol) === lit(maxSeq)),
-            dirty, base)
+            dirty, bytes, base)
         }
       }
     } }
@@ -1727,9 +1744,10 @@ class BucketedStateTable(
     * the two operational questions a bucketed table raises at scale:
     * is a bucket skewed (rebucket / salt upstream), and is the table
     * over- or under-bucketed for its volume (`numBuckets ≈ bytes /
-    * 1–16 GB`, §10). File counts and byte sizes come from filesystem
-    * metadata; row counts from parquet footers (a metadata-only
-    * `count()` — no data pages are read). Empty table → empty frame.
+    * 1–16 GB`, §10). File counts and byte sizes come from the driver
+    * listing of each bucket directory; row counts from parquet footers
+    * (a metadata-only `count()` — no data pages are read). Empty table
+    * → empty frame.
     *
     * FAST PATH: when EVERY bucket of the current manifest carries a
     * zone-map payload (a stats-recording handle, or after
@@ -1740,7 +1758,8 @@ class BucketedStateTable(
     * are never mixed in one frame. */
   def stats(): DataFrame = {
     import spark.implicits._
-    currentManifest().foreach { m =>
+    val cur = currentManifest()
+    cur.foreach { m =>
       if (m.buckets.nonEmpty &&
           m.buckets.keySet.forall(m.bucketStats.contains)) {
         val decoded = m.buckets.keySet.toSeq.sorted.flatMap { b =>
@@ -1752,49 +1771,25 @@ class BucketedStateTable(
             "total_bytes", "n_rows")
       }
     }
-    import spark.implicits._
-    // ONE recursive listing per COMMIT directory, not one listStatus per
-    // bucket: a 16k-bucket table on an object store would otherwise pay
-    // 16k sequential LIST round-trips through the driver — the same
-    // per-bucket-round-trip pattern the row-count job below avoids. The
-    // manifest groups buckets by the commit that wrote them, so the
-    // listing cost is O(retained commits).
-    val meta = currentManifest().toSeq.flatMap { m =>
-      val byCommit: Map[Long, Map[Int, Seq[org.apache.hadoop.fs.FileStatus]]] =
-        m.buckets.values.toSeq.distinct.map { commit =>
-          val commitDir = new Path(dataDir, f"c$commit%08d")
-          val it = fs.listFiles(commitDir, true)
-          val files = Iterator.continually(it)
-            .takeWhile(_.hasNext).map(_.next()).toSeq
-            .filter(_.getPath.getName.endsWith(".parquet"))
-          commit -> files.groupBy { st =>
-            val parent = st.getPath.getParent.getName
-            parent.stripPrefix(s"$BucketCol=").toInt
-          }
-        }.toMap
-      m.buckets.toSeq.sorted.map { case (bucket, commit) =>
-        val files = byCommit(commit).getOrElse(bucket, Nil)
-        (bucket, commit, bucketPath(bucket, commit).toString,
-          files.length.toLong, files.map(_.getLen).sum)
-      }
+    val listed = cur.toSeq.flatMap { m =>
+      BucketedStateTable.listBuckets(fs,
+        m.buckets.toSeq.sorted.map { case (b, c) => b -> bucketPath(b, c) })
+        .map(l => m.buckets(l.bucket) -> l)
     }
-    if (meta.isEmpty)
-      Seq.empty[(Int, Long, Long, Long, Long)]
-        .toDF("bucket", "commit", "n_files", "total_bytes", "n_rows")
-    else {
-      // row counts in ONE job over every bucket dir (count-star reads
-      // parquet row-group metadata, no data pages) — a per-bucket
-      // count() loop would serialize numBuckets scheduler round-trips
-      // through the driver for a view a 16k-bucket table wants cheap
-      val counts = spark.read.parquet(meta.map(_._3): _*)
-        .select(regexp_extract(input_file_name(),
-          s"/$BucketCol=(\\d+)/", 1).cast("int").as("bucket"))
-        .groupBy("bucket").count()
+    // row counts in ONE job over every bucket dir (count-star over an
+    // empty data schema reads parquet row-group metadata, no data
+    // pages) — a per-bucket count() loop would serialize numBuckets
+    // scheduler round-trips through the driver for a view a 16k-bucket
+    // table wants cheap
+    val counts =
+      if (listed.isEmpty) Map.empty[Int, Long]
+      else BucketedStateTable.scanBuckets(spark, listed.map(_._2),
+          Some(new org.apache.spark.sql.types.StructType()), withBucket = true)
+        .groupBy(BucketCol).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      meta.map { case (b, c, _, nf, bytes) =>
-        (b, c, nf, bytes, counts.getOrElse(b, 0L))
-      }.toDF("bucket", "commit", "n_files", "total_bytes", "n_rows")
-    }
+    listed.map { case (c, l) =>
+      (l.bucket, c, l.files.size.toLong, l.bytes, counts.getOrElse(l.bucket, 0L))
+    }.toDF("bucket", "commit", "n_files", "total_bytes", "n_rows")
   }
 
   /** Replace the ENTIRE table contents with `rows` in one commit — the
@@ -1806,7 +1801,7 @@ class BucketedStateTable(
     * history stays time-travelable via [[readAt]]. */
   def replaceAll(rows: DataFrame): Unit =
     BucketedStateTable.lockFor(lockKey).synchronized { withLease {
-      commit(rows, (0 until numBuckets).toSeq)
+      commit(rows, (0 until numBuckets).toSeq, estimatedBytes(rows))
       ()
     } }
 
@@ -1845,6 +1840,20 @@ class BucketedStateTable(
       read().foreach(cur => replaceAll(f(cur)))
     } }
 
+  /** Zone maps for a relayout's freshly-rewritten snapshot: a layout
+    * change rewrites EVERY bucket, so the new manifest's stats are
+    * rebuilt whole-table here (one bounded stats job over data the
+    * rewrite just produced) instead of silently dropping — a 100-TB
+    * table splitting its layout must not lose bucket pruning until the
+    * next incidental rewrite of each bucket. */
+  private def relayoutStats(snapshot: Option[DataFrame], written: Seq[Int],
+      next: Long): Map[Int, String] =
+    snapshot match {
+      case Some(df) if statsCols.nonEmpty && written.nonEmpty =>
+        collectBucketStats(next, written, df.schema)
+      case _ => Map.empty
+    }
+
   /** Re-shard the table into `newNumBuckets` buckets IN PLACE — the
     * maintenance op a table that grew 100× needs once [[stats]] shows
     * 100-GB buckets. A lease-guarded full rewrite (the heartbeat keeps
@@ -1862,43 +1871,6 @@ class BucketedStateTable(
     * Returns the NEW handle; this instance refuses further reads and
     * writes (its layout check no longer matches the manifest — by
     * design, so a stale handle cannot hash keys into wrong buckets). */
-  /** The relayout data rewrite shared by [[rebucket]] /
-    * [[splitBuckets]] / [[coalesceBuckets]]: re-hash the snapshot into
-    * `newNumBuckets` buckets under data commit `next`, returning the
-    * bucket ids actually written (empty snapshot → Nil). One body so
-    * the three verbs can never drift in write options or listing. */
-  private def rewriteSnapshot(snapshot: Option[DataFrame],
-      newNumBuckets: Int, next: Long): Seq[Int] = snapshot match {
-    case None => Nil
-    case Some(df) =>
-      val out = new Path(dataDir, f"c$next%08d")
-      val newBucketOf = pmod(xxhash64(effBucketCols.map(col): _*),
-        lit(newNumBuckets.toLong)).cast("int")
-      df.withColumn(BucketCol, newBucketOf)
-        .repartition(newNumBuckets, col(BucketCol))
-        .sortWithinPartitions(BucketCol, keyCols: _*)
-        .write.partitionBy(BucketCol).mode("errorifexists")
-        .parquet(out.toString)
-      fs.listStatus(out).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$BucketCol="))
-        .map(_.getPath.getName.stripPrefix(s"$BucketCol=").toInt)
-        .sorted
-  }
-
-  /** Zone maps for a relayout's freshly-rewritten snapshot: a layout
-    * change rewrites EVERY bucket, so the new manifest's stats are
-    * rebuilt whole-table here (one bounded stats job over data the
-    * rewrite just produced) instead of silently dropping — a 100-TB
-    * table splitting its layout must not lose bucket pruning until the
-    * next incidental rewrite of each bucket. */
-  private def relayoutStats(snapshot: Option[DataFrame], written: Seq[Int],
-      next: Long): Map[Int, String] =
-    snapshot match {
-      case Some(df) if statsCols.nonEmpty && written.nonEmpty =>
-        collectBucketStats(new Path(dataDir, f"c$next%08d"), df.schema)
-      case _ => Map.empty
-    }
-
   def rebucket(newNumBuckets: Int): BucketedStateTable =
     BucketedStateTable.lockFor(lockKey).synchronized { withLease {
       require(newNumBuckets > 0, "newNumBuckets must be positive")
@@ -1909,9 +1881,11 @@ class BucketedStateTable(
       // interloper as basedOn and publish a snapshot missing its rows
       val cur = currentManifest()
       val basedOn = cur.map(_.commitId).getOrElse(0L)
-      val snapshot = cur.flatMap(m => readFrom(m, m.buckets.keys.toSeq))
+      val (snapshot, bytes) = cur.map(m => readSized(m, m.buckets.keys.toSeq))
+        .getOrElse((None, 0L))
       val next = nextCommitId()
-      val written = rewriteSnapshot(snapshot, newNumBuckets, next)
+      val written = snapshot.fold(Seq.empty[Int])(
+        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next))
       beforePublish()
       writeManifest(Manifest(next, written.map(_ -> next).toMap,
           snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
@@ -1961,9 +1935,11 @@ class BucketedStateTable(
       val newNumBuckets = math.multiplyExact(numBuckets, factor)
       val cur = currentManifest()
       val basedOn = cur.map(_.commitId).getOrElse(0L)
-      val snapshot = cur.flatMap(m => readFrom(m, m.buckets.keys.toSeq))
+      val (snapshot, bytes) = cur.map(m => readSized(m, m.buckets.keys.toSeq))
+        .getOrElse((None, 0L))
       val next = nextCommitId()
-      val written = rewriteSnapshot(snapshot, newNumBuckets, next)
+      val written = snapshot.fold(Seq.empty[Int])(
+        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next))
       // same publish-window seam as commit(): a relayout must detect a
       // commit landing between its snapshot rewrite and its manifest
       // publish — the rewrite is stale against it and must WITHDRAW
@@ -2008,9 +1984,11 @@ class BucketedStateTable(
       val newNumBuckets = numBuckets / factor
       val cur = currentManifest()
       val basedOn = cur.map(_.commitId).getOrElse(0L)
-      val snapshot = cur.flatMap(m => readFrom(m, m.buckets.keys.toSeq))
+      val (snapshot, bytes) = cur.map(m => readSized(m, m.buckets.keys.toSeq))
+        .getOrElse((None, 0L))
       val next = nextCommitId()
-      val written = rewriteSnapshot(snapshot, newNumBuckets, next)
+      val written = snapshot.fold(Seq.empty[Int])(
+        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next))
       // same publish-window discipline as splitBuckets: any interleaved
       // commit withdraws the relayout (its rewrite is stale against it)
       beforePublish()
@@ -2126,7 +2104,7 @@ class BucketedStateTable(
           "zone-map-supported type — the analyzeAfter pass would refuse " +
           "AFTER the creating commit; import with analyzeAfter = false " +
           "or export an eligible column")
-      commit(rows, (0 until numBuckets).toSeq)
+      commit(rows, (0 until numBuckets).toSeq, estimatedBytes(rows))
       if (analyzeAfter) analyzeStats()
       read().map(_.count()).getOrElse(0L)
     } }
@@ -2140,6 +2118,100 @@ object BucketedStateTable {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def lockFor(path: String): Object =
     locks.computeIfAbsent(path, _ => new Object)
+
+  /** The partition column bucket directories are named by. */
+  private val BucketCol = "__bucket"
+
+  /** One bucket directory's data files, as the driver listed them. */
+  private[graft] final case class BucketFiles(bucket: Int,
+      files: Seq[org.apache.hadoop.fs.FileStatus]) {
+    def bytes: Long = files.map(_.getLen).sum
+  }
+
+  /** Lists each `(bucket, dir)` with ONE `listStatus` on the driver,
+    * keeping the data files and skipping `_`/`.`-prefixed names
+    * (`_SUCCESS`, `.crc` checksums, `_temporary/`) the way Spark's own
+    * file index does. A missing directory throws
+    * `FileNotFoundException`: the snapshot was pruned under the reader.
+    * Past [[ListingThreshold]] directories the calls run on a small
+    * driver pool, so a wide read on an object store (one LIST round
+    * trip per bucket) does not serialize thousands of them. */
+  private[graft] def listBuckets(fs: org.apache.hadoop.fs.FileSystem,
+      dirs: Seq[(Int, Path)]): Seq[BucketFiles] = {
+    def one(b: Int, dir: Path) =
+      BucketFiles(b, fs.listStatus(dir).toSeq.filter { s =>
+        val n = s.getPath.getName
+        s.isFile && !n.startsWith("_") && !n.startsWith(".")
+      })
+    if (dirs.size <= ListingThreshold) dirs.map { case (b, d) => one(b, d) }
+    else dirs.map { case (b, d) => listingPool.submit(
+        new java.util.concurrent.Callable[BucketFiles] { def call() = one(b, d) }) }
+      .map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+  }
+
+  /** Spark's own `parallelPartitionDiscovery.threshold` default. */
+  private val ListingThreshold = 32
+
+  private lazy val listingPool = java.util.concurrent.Executors
+    .newFixedThreadPool(8, { (r: Runnable) =>
+      val t = new Thread(r, "graft-bucket-listing")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Scans already-listed bucket files as one parquet relation over a
+    * [[ListedFileIndex]], under `schema` (None = inferred from the
+    * listed files' footers, for manifests that predate the `schema=`
+    * line). With `withBucket` the rows also carry their bucket id as
+    * the `__bucket` partition column. Building the frame launches no
+    * Spark job: `spark.read.parquet` over more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    * directories runs a listing job with one task per directory, which
+    * dominated the state layer's reads at ~30 ms per task. */
+  private[graft] def scanBuckets(spark: SparkSession, listed: Seq[BucketFiles],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      withBucket: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val format = new ParquetFileFormat
+    val dataSchema = schema
+      .orElse(format.inferSchema(spark, Map.empty, listed.flatMap(_.files)))
+      .getOrElse(throw new IllegalStateException(
+        "unable to infer a parquet schema: the manifest records none and " +
+          s"the ${listed.size} listed bucket directories hold no data files"))
+    val partitionSchema =
+      if (withBucket) StructType(Seq(StructField(BucketCol, IntegerType)))
+      else new StructType()
+    val parts = listed.map { l =>
+      org.apache.spark.sql.execution.datasources.PartitionDirectory(
+        if (withBucket) org.apache.spark.sql.catalyst.InternalRow(l.bucket)
+        else org.apache.spark.sql.catalyst.InternalRow.empty,
+        l.files.toArray)
+    }
+    // file sources read every column as nullable, whatever the files or
+    // the recorded schema say (DataSource.resolveRelation does the same)
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      ListedFileIndex(partitionSchema, parts),
+      partitionSchema, asNullable(dataSchema).asInstanceOf[StructType],
+      None, format, Map.empty)(spark))
+  }
+
+  private def asNullable(
+      dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = asNullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(asNullable(m.keyType),
+        asNullable(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+  }
 
   /** The ONE place the `_commits/c<id>.txt` naming convention is
     * parsed: `(commitId, FileStatus)` of every published manifest under
@@ -2406,4 +2478,44 @@ object BucketedStateTable {
     Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close())
   }
+}
+
+/** A file index over bucket files the driver has ALREADY listed
+  * ([[BucketedStateTable.listBuckets]]): `listFiles` hands the listing
+  * back, pruned by any partition (`__bucket`) filter, so a scan of any
+  * number of bucket directories plans without Spark's listing job.
+  * Equality is by the listed files, so two reads of the same snapshot
+  * compare equal for plan reuse and caching, as Spark's own
+  * path-keyed indexes do. */
+private[graft] final case class ListedFileIndex(
+    partitionSchema: org.apache.spark.sql.types.StructType,
+    parts: Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory])
+    extends org.apache.spark.sql.execution.datasources.FileIndex {
+  import org.apache.spark.sql.catalyst.expressions._
+  import org.apache.spark.sql.execution.datasources.PartitionDirectory
+
+  private def statuses = parts.flatMap(_.files).map(_.fileStatus)
+
+  override def rootPaths: Seq[Path] =
+    parts.flatMap(_.files.headOption).map(_.fileStatus.getPath.getParent)
+
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    partitionFilters.reduceOption(And) match {
+      case None => parts
+      case Some(f) =>
+        val keep = Predicate.createInterpreted(f.transform {
+          case a: AttributeReference =>
+            val i = partitionSchema.fieldIndex(a.name)
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+        })
+        parts.filter(p => keep.eval(p.values))
+    }
+
+  override def inputFiles: Array[String] =
+    statuses.map(_.getPath.toString).toArray
+
+  override def refresh(): Unit = ()
+
+  override def sizeInBytes: Long = statuses.map(_.getLen).sum
 }

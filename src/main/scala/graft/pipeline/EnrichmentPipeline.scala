@@ -239,17 +239,18 @@ class EnrichmentPipeline(
     var last: Throwable = null
     var i = 0
     while (i < attempts) {
-      headersTable.read() match {
+      // the read() resolves AND lists the snapshot, so it sits inside the
+      // retry too: files pruned between the manifest read and the
+      // listing surface here as FileNotFoundException
+      try headersTable.read() match {
         case None => return None
         case Some(queue) =>
-          try {
-            val rows = StateOps.limitBatch(
-              queue.orderBy(col("record_identifier")), batchSize)
-              .as[QueuedHeader].collect().toSeq
-            return Some(rows)
-          } catch {
-            case e: Throwable => last = e // snapshot pruned mid-read; re-list
-          }
+          return Some(StateOps.limitBatch(
+            queue.orderBy(col("record_identifier")), batchSize)
+            .as[QueuedHeader].collect().toSeq)
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          last = e // snapshot pruned mid-read; re-list
       }
       i += 1
     }

@@ -614,11 +614,14 @@ private[sources] class GraftStateChangesSource(
         if (lo >= hi) None
         else {
           val dirs = ((lo - bootstrapStart) until (hi - bootstrapStart))
-            .flatMap(i => snapshotChunks(i.toInt)._2)
-          val raw = bootstrapMeta._2 match {
-            case Some(rs) => spark.read.schema(rs).parquet(dirs: _*)
-            case None => spark.read.parquet(dirs: _*)
-          }
+            .flatMap { i =>
+              val (buckets, paths) = snapshotChunks(i.toInt)
+              buckets.zip(paths.map(new Path(_)))
+            }
+          val raw = BucketedStateTable.scanBuckets(spark,
+            BucketedStateTable.listBuckets(
+              new Path(path).getFileSystem(conf), dirs),
+            bootstrapMeta._2)
           Some(pinned(raw
             .withColumn("change_type", lit("insert"))
             .withColumn("_commit_id", lit(base))))

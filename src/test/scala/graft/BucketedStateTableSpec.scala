@@ -144,6 +144,151 @@ class BucketedStateTableSpec extends SparkSpec {
     }
   }
 
+  // ── the per-task floor: reads list on the driver, writes size by bytes ─
+
+  private def seeded(path: String, buckets: Int, rows: Int): BucketedStateTable = {
+    val t = new BucketedStateTable(spark, path,
+      keyCols = Seq("k"), numBuckets = buckets, retentionFloorMillis = 0L)
+    t.merge(spark.range(rows)
+      .select(concat(lit("k"), format_string("%06d", col("id"))).as("k"),
+        col("id").as("v")), keys = Seq("k"))
+    t
+  }
+
+  /** Runs `body` with a listener attached and returns what it saw. */
+  private def listening[T](l: org.apache.spark.scheduler.SparkListener)(
+      body: => T): T = {
+    spark.sparkContext.addSparkListener(l)
+    try { val r = body; BenchMetrics.drainListenerBus(spark.sparkContext); r }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** Task counts of the bucket-write stages `body` runs: every stage
+    * that wrote output files (shuffle map stages write none). */
+  private def writeStageTasks(body: => Unit): Seq[Int] = {
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    listening(new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        if (si.taskMetrics != null &&
+            si.taskMetrics.outputMetrics.recordsWritten > 0)
+          tasks.add(si.numTasks)
+      }
+    })(body)
+    scala.jdk.CollectionConverters.IterableHasAsScala(tasks).asScala.toSeq
+  }
+
+  /** Every bucket directory of data commit `commit` holds exactly ONE
+    * parquet file, written key-sorted; returns the bucket count. */
+  private def oneSortedFilePerBucket(root: String, commit: Long): Int = {
+    val commitDir = new java.io.File(f"$root/data/c$commit%08d")
+    val bucketDirs = commitDir.listFiles().filter(_.getName.startsWith("__bucket="))
+    bucketDirs.foreach { d =>
+      val files = parquetFiles(d)
+      assert(files.size == 1, s"${d.getName} must hold one file: $files")
+      val keys = spark.read.parquet(files.head.getPath).select("k")
+        .collect().map(_.getString(0)).toSeq
+      assert(keys == keys.sorted, s"${d.getName} must be written key-sorted")
+    }
+    bucketDirs.length
+  }
+
+  test("a read over more than 32 buckets starts no Spark job before an action") {
+    val dir = tmp()
+    val t = seeded(s"$dir/state", buckets = 64, rows = 3000)
+    val commit = t.lastCommit.get.commitId
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val (full, old, pruned) = listening(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }) {
+      (t.read().get, t.readAt(commit).get, t.readWhere(Nil).get)
+    }
+    // Spark's own file index runs a listing job past 32 directories
+    assert(full.inputFiles.length == 64)
+    assert(jobs.get == 0, s"building the reads started ${jobs.get} jobs")
+    Seq(full, old, pruned).foreach(df => assert(df.count() == 3000L))
+    // a bucket directory pruned under the reader surfaces from the
+    // driver listing itself, as the file system's own error
+    val victim = new java.io.File(f"$dir/state/data/c$commit%08d")
+      .listFiles().filter(_.getName.startsWith("__bucket=")).head
+    org.apache.commons.io.FileUtils.deleteDirectory(victim)
+    intercept[java.io.FileNotFoundException](t.read())
+  }
+
+  test("a merge dirtying more small buckets than cores writes with one task per core, one sorted file per bucket") {
+    val dir = tmp()
+    val t = seeded(s"$dir/state", buckets = 64, rows = 3000)
+    val cores = spark.sparkContext.defaultParallelism
+    val upd = spark.range(0, 3000, 7)
+      .select(concat(lit("k"), format_string("%06d", col("id"))).as("k"),
+        (-col("id") - 1).as("v"))
+    val tasks = writeStageTasks(t.merge(upd, keys = Seq("k")))
+    val stats = t.lastCommit.get
+    assert(stats.bucketsRead.size > cores)
+    assert(tasks == Seq(cores), s"write stages ran $tasks tasks")
+    assert(oneSortedFilePerBucket(s"$dir/state", stats.commitId) ==
+      stats.bucketsWritten.size)
+    assert(t.read().get.filter(col("v") < 0).count() == upd.count())
+  }
+
+  test("a lowered advisory partition size writes the same merge with one task per bucket") {
+    val dir = tmp()
+    val t = seeded(s"$dir/state", buckets = 64, rows = 3000)
+    val upd = spark.range(0, 3000, 7)
+      .select(concat(lit("k"), format_string("%06d", col("id"))).as("k"),
+        (-col("id")).as("v"))
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val tasks =
+      try writeStageTasks(t.merge(upd, keys = Seq("k")))
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val stats = t.lastCommit.get
+    assert(tasks == Seq(stats.bucketsRead.size), s"write stages ran $tasks tasks")
+    assert(oneSortedFilePerBucket(s"$dir/state", stats.commitId) ==
+      stats.bucketsWritten.size)
+  }
+
+  test("stray _SUCCESS, .crc and _temporary entries in a bucket directory are ignored by reads") {
+    val dir = tmp()
+    val t = seeded(s"$dir/state", buckets = 4, rows = 400)
+    val bucketDir = new java.io.File(
+      f"$dir/state/data/c${t.lastCommit.get.commitId}%08d")
+      .listFiles().filter(_.getName.startsWith("__bucket=")).head
+    val junk = "not parquet".getBytes("UTF-8")
+    Files.write(new java.io.File(bucketDir, "_SUCCESS").toPath, Array.emptyByteArray)
+    Files.write(new java.io.File(bucketDir, ".x.crc").toPath, junk)
+    val temp = new java.io.File(bucketDir, "_temporary/0")
+    temp.mkdirs()
+    Files.write(new java.io.File(temp, "part-00000.parquet").toPath, junk)
+    val df = t.read().get
+    assert(df.inputFiles.forall(f =>
+      !f.contains("_SUCCESS") && !f.contains(".crc") && !f.contains("_temporary")))
+    assert(df.count() == 400L)
+  }
+
+  test("a manifest without a schema= line still reads, its schema inferred from the files") {
+    val dir = tmp()
+    val t = seeded(s"$dir/state", buckets = 40, rows = 1000)
+    val id = t.lastCommit.get.commitId
+    val manifest = new java.io.File(f"$dir/state/_commits/c$id%08d.txt").toPath
+    val legacy = new String(Files.readAllBytes(manifest), "UTF-8")
+      .linesIterator.filterNot(_.startsWith("schema=")).mkString("", "\n", "\n")
+    Files.write(manifest, legacy.getBytes("UTF-8"))
+    // the local filesystem keeps a checksum beside each file it wrote
+    Files.deleteIfExists(manifest.resolveSibling(f".c$id%08d.txt.crc"))
+    val fresh = new BucketedStateTable(spark, s"$dir/state",
+      keyCols = Seq("k"), numBuckets = 40, retentionFloorMillis = 0L)
+    val df = fresh.read().get
+    assert(df.columns.toSeq == Seq("k", "v"))
+    assert(df.count() == 1000L)
+    assert(df.agg(sum("v")).head().getLong(0) == (0L until 1000L).sum)
+  }
+
   // ── semantics parity with StateOps over plain frames ──────────────────
 
   test("merge parity: updates beat state, greatest version wins within a batch") {

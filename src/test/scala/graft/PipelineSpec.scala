@@ -253,6 +253,41 @@ class PipelineSpec extends SparkSpec {
         ts("2016-05-24 10:33:56"), ts("2024-01-01 01:00:00"))))
   }
 
+  test("enrichment: a queue read that fails is retried on a fresh snapshot, and gives up after three") {
+    val s = spark
+    import s.implicits._
+    val mets = Map(
+      "qucosa:7455" -> fixture("/mets/qucosa7455-mets.xml"),
+      "qucosa:13" -> fixture("/mets/qucosa13-mets.xml"))
+    val fetch = new DocumentFetcher {
+      def apply(localId: String): Option[String] = mets.get(localId)
+    }
+    def queued(failures: Int): (FlakyReadTable, ParquetStateTable) = {
+      val dir = tmp()
+      val headers = new ParquetStateTable(spark, s"$dir/headers")
+      headers.write(Seq(
+        QueuedHeader("oai:example.org:qucosa:7455", ts("2024-01-01 01:00:00"), Nil, false),
+        QueuedHeader("oai:example.org:qucosa:13", ts("2024-01-01 02:00:00"), Nil, false)
+      ).toDF())
+      (new FlakyReadTable(headers, failures),
+        new ParquetStateTable(spark, s"$dir/reporting"))
+    }
+
+    // one failed read: the batch drains on the second attempt
+    val (flaky, reporting) = queued(failures = 1)
+    val summary = new EnrichmentPipeline(spark, flaky, reporting).runOnce(fetch)
+    assert(summary.processed == 2L)
+    assert(reporting.read().get.count() == 2L)
+    assert(flaky.read().get.count() == 0L)
+
+    // every attempt fails: the pipeline gives up loudly, with the cause
+    val (dead, deadReporting) = queued(failures = 3)
+    val e = intercept[IllegalStateException](
+      new EnrichmentPipeline(spark, dead, deadReporting).runOnce(fetch))
+    assert(e.getCause.isInstanceOf[java.io.FileNotFoundException])
+    assert(dead.reads.get == 3)
+  }
+
   test("enrichment: ST5 late-update guard — a mid-flight re-harvest survives the delete") {
     val dir = tmp()
     val headers = new ParquetStateTable(spark, s"$dir/headers")
