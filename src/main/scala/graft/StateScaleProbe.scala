@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.StateOps
-import graft.pipeline.BucketedStateTable
+import graft.pipeline.{BucketedStateTable, StateManifest}
 import graft.streaming.ForeachBatch
 
 /** Inverted scale probes for the state-table platform — the two legs
@@ -39,18 +39,10 @@ object StateScaleProbe {
   private def num(v: Double, digits: Int = 3): String =
     String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
 
-  /** Bucket pointers of a manifest file (the plain-text `b=c` lines) —
-    * read directly so the probe can diff layouts the way the feed
-    * does, without private access. */
-  private def manifestBuckets(path: java.io.File): Map[Int, Long] =
-    scala.io.Source.fromFile(path, "UTF-8").getLines()
-      .filter(l => l.nonEmpty && l.head.isDigit)
-      .map { l => val Array(b, c) = l.split("=", 2); b.toInt -> c.toLong }
-      .toMap
-
-  private def manifests(root: String): Seq[java.io.File] =
-    Option(new java.io.File(s"$root/_commits").listFiles()).toSeq.flatten
-      .filter(_.getName.matches("c\\d+\\.txt")).sortBy(_.getName)
+  /** Bucket pointers of the newest manifest at `root`. */
+  private def headBuckets(spark: SparkSession, root: String): Map[Int, Long] =
+    StateManifest.snapshot(spark.sparkContext.hadoopConfiguration, root)
+      .map(_.buckets).getOrElse(Map.empty)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -144,7 +136,7 @@ object StateScaleProbe {
         keepCommits = 10, retentionFloorMillis = 0L)
       t.merge(d, keys = Seq("doc_id"))
       val rows = t.read().get.count()
-      val preManifests = manifests(root).length
+      val before = headBuckets(spark, root)
       val cat = "gprobe_" + tag
       spark.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.GraftStateCatalog].getName)
@@ -165,9 +157,7 @@ object StateScaleProbe {
       // rewrite evidence: pointers changed between the pre-DML manifest
       // and the final one — the union of the three statements' dirty
       // buckets, out of 256
-      val ms = manifests(root)
-      val before = manifestBuckets(ms(preManifests - 1))
-      val after = manifestBuckets(ms.last)
+      val after = headBuckets(spark, root)
       val rewritten = (before.keySet ++ after.keySet)
         .count(b => before.get(b) != after.get(b))
       s""""$tag":{"table_rows":$rows,"dml_sec":${num(dmlSec)},""" +
@@ -411,8 +401,7 @@ object StateScaleProbe {
       import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual}
       val fresh = Seq(GreaterThanOrEqual("updated_at", 1L))
       val freshBuckets = t.readWhere(fresh).get.inputFiles.toSeq
-        .map(_.replaceAll(".*__bucket=", "").replaceAll("/.*", ""))
-        .distinct.length
+        .flatMap(StateManifest.bucketOf).distinct.length
       val (fullRows, fullSec, fullSnap) = timed {
         t.read().get.filter(col("updated_at") >= 1L).count()
       }

@@ -16,13 +16,10 @@ import graft.operators.StateOps
   * whole-snapshot rewrite is the small-table fallback.
   *
   * Layout (a minimal transactional-table commit log, the same shape a
-  * format like Delta provides):
-  * {{{
-  *   root/
-  *     _commits/c00000003.txt     # manifest: bucket -> commit holding its data
-  *     data/c00000001/__bucket=17/part-*.parquet
-  *     data/c00000003/__bucket=42/part-*.parquet
-  * }}}
+  * format like Delta provides): `_commits/` holds one manifest per
+  * commit — bucket -> the data commit holding its rows — and
+  * `data/c<N>/` one directory per bucket a commit wrote;
+  * [[StateManifest]] owns the manifest format and the path convention.
   * A commit writes its dirty buckets' new contents under one
   * `data/c<N>` directory, then publishes atomically by renaming a
   * temp manifest into `_commits/` — readers resolve the newest manifest
@@ -149,11 +146,9 @@ class BucketedStateTable(
   /** Stats of the most recent commit through this instance. */
   def lastCommit: Option[CommitStats] = last
 
-  private val BucketCol = BucketedStateTable.BucketCol
+  private val BucketCol = StateManifest.BucketCol
   private def root = new Path(path)
   private def fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def commitsDir = new Path(root, "_commits")
-  private def dataDir = new Path(root, "data")
   private lazy val lockKey =
     "bucketed:" + fs.makeQualified(root).toUri.toString
 
@@ -255,45 +250,38 @@ class BucketedStateTable(
     }
 
   // ---- manifest -----------------------------------------------------
-  // Plain-text manifest (`commit=<id>` header then `<bucket>=<commit>`
-  // lines) — no JSON parser needed, diffable, and the rename that
-  // publishes it is the atomic commit point.
+  // The format, the path convention and the cached read live in
+  // [[StateManifest]]; this handle adds its layout check and the
+  // conflict-checked publish.
 
-  private case class Manifest(commitId: Long, buckets: Map[Int, Long],
-      schemaJson: Option[String] = None,
-      // layout metadata the cross-split change feed needs: the
-      // manifest's OWN bucket count (old manifests stay readable after
-      // a split), and — on a split commit only — the factor and the
-      // pre-split base manifest it snapshotted
-      manifestNumBuckets: Int = -1,
-      splitFactor: Option[Int] = None,
-      splitBasedOn: Option[Long] = None,
-      // per-bucket zone-map stats as OPAQUE one-line JSON payloads
-      // (decoded on demand by [[ZoneMaps.decode]]); a bucket absent
-      // here is simply un-statted — pruning must keep it
-      bucketStats: Map[Int, String] = Map.empty)
+  /** A manifest carrying this handle's layout and retention lines. */
+  private def manifest(id: Long, buckets: Map[Int, Long],
+      schemaJson: Option[String], bucketStats: Map[Int, String] = Map.empty,
+      layout: Int = numBuckets, splitFactor: Option[Int] = None,
+      splitBasedOn: Option[Long] = None): StateManifest =
+    StateManifest(id, Some(layout), Some(effBucketCols), Some(keyCols),
+      Some(keepCommits), Some(retentionFloorMillis), splitFactor,
+      splitBasedOn, statsCols, schemaJson, bucketStats, buckets)
 
-  private def manifestFiles(): Seq[(Long, Path)] =
-    BucketedStateTable.listManifests(fs, root)
-      .map { case (id, s) => id -> s.getPath }
+  /** The bucket count `m` was written under (a manifest predating the
+    * `numBuckets=` line: this handle's). */
+  private def layoutOf(m: StateManifest): Int = m.numBuckets.getOrElse(numBuckets)
+
+  private def manifestFiles(): Seq[(Long, org.apache.hadoop.fs.FileStatus)] =
+    StateManifest.list(fs, root)
 
   /** `checkLayout = false` is for liveness bookkeeping only ([[prune]]
     * needs the commit ids an old-layout manifest still references, e.g.
     * right after a [[rebucket]], without resolving its data) — every
     * data-reading path keeps the check. */
-  private def readManifest(p: Path, checkLayout: Boolean = true): Manifest = {
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-    val kv = lines.map { l =>
-      val Array(k, v) = l.split("=", 2); (k, v)
-    }.toMap
+  private def readManifest(listed: (Long, org.apache.hadoop.fs.FileStatus),
+      checkLayout: Boolean = true): StateManifest = {
+    val m = StateManifest.load(fs, root, listed)
     // the bucket count DEFINES the layout: opening an existing table
     // with a different numBuckets would hash keys into the wrong
     // buckets and silently corrupt merges — refuse instead
-    if (checkLayout) kv.get("numBuckets").foreach { n =>
-      require(n.toInt == numBuckets,
+    if (checkLayout) m.numBuckets.foreach { n =>
+      require(n == numBuckets,
         s"table at $path is laid out with numBuckets=$n; this instance " +
           s"was constructed with numBuckets=$numBuckets — re-bucketing " +
           "requires a full rewrite into a new table")
@@ -305,39 +293,24 @@ class BucketedStateTable(
     // unconditionally: no legitimate history ever changes it, and a
     // relaxed read joining/hashing on the wrong columns would be
     // silently wrong rather than merely refused.
-    kv.get("bucketCols").foreach { bc =>
-      require(bc == effBucketCols.mkString(","),
-        s"table at $path is bucketed by [$bc]; this instance buckets by " +
-          s"[${effBucketCols.mkString(",")}] — re-bucketing requires a " +
-          "full rewrite into a new table")
+    m.bucketCols.foreach { bc =>
+      require(bc == effBucketCols,
+        s"table at $path is bucketed by [${bc.mkString(",")}]; this " +
+          s"instance buckets by [${effBucketCols.mkString(",")}] — " +
+          "re-bucketing requires a full rewrite into a new table")
     }
     // and the merge KEY: an instance keyed differently would merge with
     // the wrong uniqueness and silently duplicate or collapse rows
-    kv.get("keyCols").foreach { kc =>
-      require(kc == keyCols.mkString(","),
-        s"table at $path is keyed by [$kc]; this instance is keyed by " +
-          s"[${keyCols.mkString(",")}]")
+    m.keyCols.foreach { kc =>
+      require(kc == keyCols,
+        s"table at $path is keyed by [${kc.mkString(",")}]; this instance " +
+          s"is keyed by [${keyCols.mkString(",")}]")
     }
-    Manifest(
-      kv("commit").toLong,
-      lines.collect {
-        case l if l.nonEmpty && l.head.isDigit =>
-          val Array(b, c) = l.split("=", 2); b.toInt -> c.toLong
-      }.toMap,
-      kv.get("schema"),
-      manifestNumBuckets =
-        kv.get("numBuckets").map(_.toInt).getOrElse(numBuckets),
-      splitFactor = kv.get("splitFactor").map(_.toInt),
-      splitBasedOn = kv.get("splitBasedOn").map(_.toLong),
-      bucketStats = lines.collect {
-        case l if l.startsWith("zmap.") =>
-          val Array(k, j) = l.split("=", 2)
-          k.stripPrefix("zmap.").toInt -> j
-      }.toMap)
+    m
   }
 
-  private def currentManifest(): Option[Manifest] =
-    manifestFiles().lastOption.map { case (_, p) => readManifest(p) }
+  private def currentManifest(): Option[StateManifest] =
+    manifestFiles().lastOption.map(readManifest(_))
 
   /** Publish with optimistic cross-process conflict detection. The JVM
     * per-path lock serializes THIS process's writers; a second process
@@ -355,38 +328,11 @@ class BucketedStateTable(
     * is disjoint from every intervening commit's rewritten set rebases
     * onto the new head and republishes instead of failing — only true
     * overlaps (and layout/schema changes) reach the caller. */
-  private def writeManifest(m: Manifest, basedOn: Long,
-      forNumBuckets: Int = numBuckets): Unit = {
-    fs.mkdirs(commitsDir)
-    // schema= records the row schema as single-line JSON so a
-    // committed-but-EMPTY snapshot (e.g. a fully drained queue) still
-    // carries a readable shape — the DSv2 source returns an empty table
-    // instead of failing where tableExists says true. StructType.json
-    // never contains a newline, and the k=v split is first-'=' only, so
-    // the JSON body parses back verbatim.
-    // keyCols= records the table's merge key so a handle-less writer
-    // (the DSv2 SQL INSERT surface) can reconstruct the exact layout
-    // and route through merge() — the manifest is the one place the
-    // layout is authoritative. keepCommits=/retentionFloorMillis=
-    // record the owner's RETENTION policy for the same reason: a SQL
-    // write must not prune history the owning handle was configured to
-    // keep.
-    val body = (s"commit=${m.commitId}\nnumBuckets=$forNumBuckets\n" +
-      s"bucketCols=${effBucketCols.mkString(",")}\n" +
-      s"keyCols=${keyCols.mkString(",")}\n" +
-      s"keepCommits=$keepCommits\n" +
-      s"retentionFloorMillis=$retentionFloorMillis\n" +
-      m.splitFactor.map(f => s"splitFactor=$f\n").getOrElse("") +
-      m.splitBasedOn.map(b => s"splitBasedOn=$b\n").getOrElse("") +
-      (if (statsCols.nonEmpty) s"statsCols=${statsCols.mkString(",")}\n"
-       else "") +
-      m.schemaJson.map(j => s"schema=$j\n").getOrElse("") +
-      m.bucketStats.toSeq.sortBy(_._1)
-        .map { case (b, j) => s"zmap.$b=$j\n" }.mkString +
-      m.buckets.toSeq.sorted.map { case (b, c) => s"$b=$c\n" }.mkString)
-    val tmp = new Path(commitsDir, f".c${m.commitId}%08d.txt.tmp")
+  private def writeManifest(m: StateManifest, basedOn: Long): Unit = {
+    fs.mkdirs(StateManifest.commitsDir(root))
+    val tmp = StateManifest.tempManifestPath(root, m.commitId)
     val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    try out.write(m.render.getBytes("UTF-8")) finally out.close()
     def latestId: Long = manifestFiles().lastOption.map(_._1).getOrElse(0L)
     if (latestId != basedOn) {
       fs.delete(tmp, false)
@@ -394,7 +340,7 @@ class BucketedStateTable(
         s"commit ${m.commitId} was based on manifest $basedOn but $latestId " +
           "is now newest — a concurrent writer committed first; retry the mutation")
     }
-    val dest = new Path(commitsDir, f"c${m.commitId}%08d.txt")
+    val dest = StateManifest.manifestPath(root, m.commitId)
     if (!fs.rename(tmp, dest)) {
       // a concurrent writer published the SAME id first — a race like
       // any other: surface it as one so the caller's rebase/retry
@@ -418,32 +364,26 @@ class BucketedStateTable(
     * `errorifexists`. */
   private def nextCommitId(): Long = {
     val fromManifests = manifestFiles().lastOption.map(_._1).getOrElse(0L)
+    val dataDir = StateManifest.dataDir(root)
     val fromData =
       if (!fs.exists(dataDir)) 0L
-      else fs.listStatus(dataDir).toSeq.flatMap { s =>
-        val n = s.getPath.getName
-        if (n.startsWith("c") && n.drop(1).forall(_.isDigit))
-          Some(n.drop(1).toLong)
-        else None
-      }.maxOption.getOrElse(0L)
+      else fs.listStatus(dataDir).toSeq
+        .flatMap(s => StateManifest.dataCommitOf(s.getPath.getName))
+        .maxOption.getOrElse(0L)
     math.max(fromManifests, fromData) + 1
   }
 
   // ---- reads --------------------------------------------------------
 
-  private def bucketPath(bucket: Int, commit: Long): Path =
-    new Path(dataDir, f"c$commit%08d/$BucketCol=$bucket")
-
-  private def readFrom(m: Manifest, buckets: Seq[Int]): Option[DataFrame] =
+  private def readFrom(m: StateManifest, buckets: Seq[Int]): Option[DataFrame] =
     readSized(m, buckets)._1
 
   /** [[readFrom]] plus the on-disk bytes of the buckets it read, which
     * the driver listing returns for free and [[writeBuckets]] sizes its
     * task count by. */
-  private def readSized(m: Manifest,
+  private def readSized(m: StateManifest,
       buckets: Seq[Int]): (Option[DataFrame], Long) = {
-    val listed = BucketedStateTable.listBuckets(fs,
-      buckets.sorted.flatMap(b => m.buckets.get(b).map(c => b -> bucketPath(b, c))))
+    val listed = BucketedStateTable.listBuckets(fs, m.bucketDirs(root, buckets))
     // Read under the manifest's RECORDED schema when it carries one:
     // after a widening merge or [[widenTo]], clean buckets still hold
     // files written under the narrower pre-widening shape, and the
@@ -453,14 +393,9 @@ class BucketedStateTable(
     // [[readAt]] passes the OLD manifest, so time travel keeps the
     // snapshot's contemporary schema.
     (if (listed.isEmpty) None
-     else Some(BucketedStateTable.scanBuckets(spark, listed,
-       m.schemaJson.map(schemaOf))),
+     else Some(BucketedStateTable.scanBuckets(spark, listed, m.schema)),
       listed.map(_.bytes).sum)
   }
-
-  private def schemaOf(json: String): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
 
   // shared widening contract — one meaning of ADD COLUMN across all
   // StateTable implementations (StateOps owns the check + null-fill)
@@ -490,17 +425,20 @@ class BucketedStateTable(
       keys: Seq[String], what: String): (DataFrame, DataFrame) =
     StateOps.alignPairForMerge(cur0, updates, keys, s"$what at $path")
 
+  /** An empty frame under `m`'s recorded schema, if it records one. */
+  private def emptyUnder(m: StateManifest): Option[DataFrame] =
+    m.schema.map(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), _))
+
   override def read(): Option[DataFrame] =
     currentManifest().flatMap { m =>
       readFrom(m, m.buckets.keys.toSeq)
         // trait contract: a committed-but-EMPTY (drained) table reads as
         // Some(empty) under its recorded schema, uniformly with the
         // parquet/JDBC twins — None is reserved for never-created. Only
-        // manifests predating the schema= line (no shape to present)
+        // manifests predating the recorded-schema line (no shape to present)
         // still fall through to None.
-        .orElse(m.schemaJson.map(j => spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          schemaOf(j))))
+        .orElse(emptyUnder(m))
     }
 
   /** Ids of the currently-retained commits, oldest → newest — the
@@ -524,10 +462,10 @@ class BucketedStateTable(
     // pointers still resolve their data dirs — the layout only governs
     // where MUTATIONS hash); an arbitrary rebucket still truncates
     // history by design, matching the SQL VERSION AS OF face
-    if (m.manifestNumBuckets != numBuckets)
+    if (layoutOf(m) != numBuckets)
       require(layoutChains(m, currentCommitIdOrZero(), numBuckets),
         s"commit $commitId at $path predates a rebucket " +
-          s"(${m.manifestNumBuckets} -> $numBuckets buckets, not a " +
+          s"(${layoutOf(m)} -> $numBuckets buckets, not a " +
           "splitBuckets chain) — history truncates at an arbitrary " +
           "relayout; re-snapshot from a post-rebucket commit")
     readFrom(m, m.buckets.keys.toSeq)
@@ -536,39 +474,16 @@ class BucketedStateTable(
   private def currentCommitIdOrZero(): Long =
     manifestFiles().lastOption.map(_._1).getOrElse(0L)
 
-  /** `(id, length, mtime)` → parsed manifest. A manifest file is
-    * immutable once published; a WITHDRAWN id can be reused by a later
-    * publish, but never with the same length+mtime pair, so the key is
-    * re-read-safe. This keeps the relayout probe — which every
-    * [[changesBetween]] runs over its whole commit range — a pure
-    * lookup instead of O(range) manifest reads per diff on the feed's
-    * hot path (an object store pays a GET per read). Bounded by a
-    * clear-on-overflow: retained manifests are few, the cache only
-    * ever holds this table's. */
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Long, Long), Manifest]()
-
   /** The relayout (split/coalesce) manifests in `(fromId, toId]`,
-    * oldest first. */
-  private def splitsIn(fromId: Long, toId: Long): Seq[Manifest] = {
-    if (manifestCache.size > 256) manifestCache.clear()
-    val now = System.currentTimeMillis()
-    BucketedStateTable.listManifests(fs, root)
+    * oldest first. Every [[changesBetween]] runs this probe over its
+    * whole commit range; settled manifests come from the
+    * [[StateManifest]] cache, so it is a lookup, not a read per
+    * manifest (an object store pays a GET per read). */
+  private def splitsIn(fromId: Long, toId: Long): Seq[StateManifest] =
+    manifestFiles()
       .filter { case (id, _) => id > fromId && id <= toId }
-      .map { case (id, st) =>
-        // young files bypass the cache: withdraw-and-republish of the
-        // same id happens at the head within moments, and a filesystem
-        // with second-granularity mtimes could alias the two when byte
-        // lengths also match — a settled (old) manifest can't change
-        if (now - st.getModificationTime < 5000L)
-          readManifest(st.getPath, checkLayout = false)
-        else manifestCache.computeIfAbsent(
-          (id, st.getLen, st.getModificationTime),
-          _ => readManifest(st.getPath, checkLayout = false))
-      }
+      .map(readManifest(_, checkLayout = false))
       .filter(_.splitFactor.isDefined)
-      .sortBy(_.commitId)
-  }
 
   /** True iff `mOld`'s layout chains into `toBuckets` through the
     * recorded relayout factors between it and `toId` — a SIGNED factor
@@ -576,13 +491,13 @@ class BucketedStateTable(
     * `splitFactor = -f` divides ([[coalesceBuckets]], the recorded
     * inverse). Mixed chains (grow then shrink and back) verify
     * step-by-step. */
-  private def layoutChains(mOld: Manifest, toId: Long, toBuckets: Int): Boolean = {
+  private def layoutChains(mOld: StateManifest, toId: Long, toBuckets: Int): Boolean = {
     val chained = splitsIn(mOld.commitId, toId)
-      .foldLeft(Option(mOld.manifestNumBuckets)) {
+      .foldLeft(Option(layoutOf(mOld))) {
         case (Some(l), s) if s.splitFactor.exists(f =>
-            (f >= 2 && s.manifestNumBuckets == l * f) ||
-            (f <= -2 && l % -f == 0 && s.manifestNumBuckets == l / -f)) =>
-          Some(s.manifestNumBuckets)
+            (f >= 2 && layoutOf(s) == l * f) ||
+            (f <= -2 && l % -f == 0 && layoutOf(s) == l / -f)) =>
+          Some(layoutOf(s))
         case _ => None
       }
     chained.contains(toBuckets)
@@ -593,12 +508,12 @@ class BucketedStateTable(
     * through the current handle — [[changedAcrossSplits]] owns the
     * cross-layout mapping), with the key/bucket-column identity —
     * which no split ever changes — still enforced. */
-  private def manifestForDiff(commitId: Long): Manifest = {
-    val p = manifestFiles().find(_._1 == commitId).map(_._2)
+  private def manifestForDiff(commitId: Long): StateManifest = {
+    val listed = manifestFiles().find(_._1 == commitId)
       .getOrElse(throw new NoSuchElementException(
         s"commit $commitId is not retained at $path " +
           s"(retained: ${commits().mkString(", ")})"))
-    readManifest(p, checkLayout = false)
+    readManifest(listed, checkLayout = false)
   }
 
   /** Remap a touched-bucket set across one recorded layout change.
@@ -629,14 +544,14 @@ class BucketedStateTable(
     * arbitrary [[rebucket]] in the range (layouts that don't chain by
     * the recorded factors) refuses with the reseed recipe — that path
     * truncates feed history by design. */
-  private def changedAcrossSplits(mFrom: Manifest, mTo: Manifest): (Seq[Int], Seq[Int]) = {
+  private def changedAcrossSplits(mFrom: StateManifest, mTo: StateManifest): (Seq[Int], Seq[Int]) = {
     val splits = splitsIn(mFrom.commitId, mTo.commitId)
     if (splits.isEmpty ||
-        !layoutChains(mFrom, mTo.commitId, mTo.manifestNumBuckets))
+        !layoutChains(mFrom, mTo.commitId, layoutOf(mTo)))
       throw new IllegalStateException(
         s"changesBetween(${mFrom.commitId}, ${mTo.commitId}) at $path " +
-          s"crosses a layout change (${mFrom.manifestNumBuckets} -> " +
-          s"${mTo.manifestNumBuckets} buckets) that is not a " +
+          s"crosses a layout change (${layoutOf(mFrom)} -> " +
+          s"${layoutOf(mTo)} buckets) that is not a " +
           "splitBuckets/coalesceBuckets chain — an arbitrary rebucket " +
           "truncates feed history by design. Reseed the consumer: " +
           "restart the stream " +
@@ -651,18 +566,18 @@ class BucketedStateTable(
     // segment — relayout manifests snapshot their base, so a
     // relayout's own segment edge is exact)
     var cur = Set.empty[Int]
-    var curLayout = mFrom.manifestNumBuckets
+    var curLayout = layoutOf(mFrom)
     starts.zip(ends).foreach { case (a, b) =>
-      if (a.manifestNumBuckets != curLayout) {
-        cur = mapBuckets(cur, curLayout, a.manifestNumBuckets)
-        curLayout = a.manifestNumBuckets
+      if (layoutOf(a) != curLayout) {
+        cur = mapBuckets(cur, curLayout, layoutOf(a))
+        curLayout = layoutOf(a)
       }
       cur ++= (a.buckets.keySet ++ b.buckets.keySet)
         .filter(x => a.buckets.get(x) != b.buckets.get(x))
     }
     // backward pass: stepwise preimage of the changed set down to the
     // FROM layout — the buckets whose old rows the diff must read
-    val layouts = starts.map(_.manifestNumBuckets)
+    val layouts = starts.map(layoutOf)
     var pre: Set[Int] = cur
     layouts.indices.reverse.drop(1).foreach { i =>
       pre = mapBuckets(pre, layouts(i + 1), layouts(i))
@@ -712,16 +627,16 @@ class BucketedStateTable(
     // widen-then-drain range (empty to-snapshot) under the stale narrow
     // shape, dropping the widened column from the delete preimages
     val rowSchema: org.apache.spark.sql.types.StructType =
-      mTo.schemaJson.map(schemaOf)
+      mTo.schema
         .orElse(readFrom(mTo, mTo.buckets.keys.toSeq).map(_.schema))
-        .orElse(mFrom.schemaJson.map(schemaOf))
+        .orElse(mFrom.schema)
         .orElse(readFrom(mFrom, mFrom.buckets.keys.toSeq).map(_.schema))
         .getOrElse(throw new IllegalStateException(
           s"table at $path has neither data nor a recorded schema at " +
             s"commits $fromCommit/$toCommit"))
     val empty = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](), rowSchema)
-    val sameLayout = mFrom.manifestNumBuckets == mTo.manifestNumBuckets
+    val sameLayout = layoutOf(mFrom) == layoutOf(mTo)
     // The pointer-compare fast path gates on NO RELAYOUT IN THE RANGE,
     // not on endpoint layout equality: a split+coalesce round trip
     // (8→16→8) has equal endpoints but rewrote every bucket twice, so
@@ -749,7 +664,7 @@ class BucketedStateTable(
     // this filter each would surface as a phantom delete
     val oldScoped =
       if (!walked) oldRaw
-      else oldRaw.filter(bucketIn(mTo.manifestNumBuckets)
+      else oldRaw.filter(bucketIn(layoutOf(mTo))
         .isin(changed.map(Integer.valueOf): _*))
     val oldDf = alignTo(oldScoped, rowSchema, "changesBetween")
       .withColumn("__in_old", lit(true))
@@ -813,7 +728,7 @@ class BucketedStateTable(
     * (overlapping), never silently overwritten with rows merged
     * against its predecessor's content. */
   private def readBucketsWithBase(buckets: Seq[Int],
-      like: DataFrame): (DataFrame, Option[Manifest], Long) =
+      like: DataFrame): (DataFrame, Option[StateManifest], Long) =
     currentManifest() match {
       case None => (like.limit(0), None, 0L)
       case Some(m) =>
@@ -825,13 +740,7 @@ class BucketedStateTable(
         // dropping the freshly widened column from every later read.
         // `like` only shapes a pre-schema-line manifest's fallback.
         val (read, bytes) = readSized(m, buckets)
-        val df = read.getOrElse {
-          m.schemaJson
-            .map(j => spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              schemaOf(j)))
-            .getOrElse(like.limit(0))
-        }
+        val df = read.orElse(emptyUnder(m)).getOrElse(like.limit(0))
         (df, Some(m), bytes)
     }
 
@@ -878,22 +787,13 @@ class BucketedStateTable(
   def readWhere(
       filters: Seq[org.apache.spark.sql.sources.Filter]): Option[DataFrame] =
     currentManifest().flatMap { m =>
-      val surv = m.schemaJson match {
-        case Some(j) => ZoneMaps.surviving(filters, schemaOf(j),
-          effBucketCols, numBuckets,
-          m.bucketStats.flatMap { case (b, s) =>
-            ZoneMaps.decode(s).map(b -> _) },
-          m.buckets.keySet)
+      val surv = m.schema match {
+        case Some(s) => ZoneMaps.surviving(filters, s, effBucketCols,
+          numBuckets, m.zoneStats, m.buckets.keySet)
         case None => m.buckets.keySet
       }
-      if (surv.isEmpty && m.buckets.nonEmpty)
-        m.schemaJson.map(j => spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          schemaOf(j)))
-      else readFrom(m, surv.toSeq.sorted).orElse(
-        m.schemaJson.map(j => spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          schemaOf(j))))
+      if (surv.isEmpty && m.buckets.nonEmpty) emptyUnder(m)
+      else readFrom(m, surv.toSeq.sorted).orElse(emptyUnder(m))
     }
 
   /** Buckets a batch/probe touches — hashed under the table's RECORDED
@@ -916,7 +816,7 @@ class BucketedStateTable(
     *    for the same reason (and would refuse in align regardless). */
   private def dirtyBucketsOf(batch: DataFrame): Seq[Int] = {
     import spark.implicits._
-    val adjusted = currentManifest().flatMap(_.schemaJson).map(schemaOf)
+    val adjusted = currentManifest().flatMap(_.schema)
       .fold(batch) { rec =>
         effBucketCols.foldLeft(batch) { (df, c) =>
           (batch.schema.fields.find(_.name == c),
@@ -974,7 +874,7 @@ class BucketedStateTable(
     * dirty bucket — the same bounded-driver-read shape as [[stats]]. */
   private def collectBucketStats(next: Long, written: Seq[Int],
       rowSchema: org.apache.spark.sql.types.StructType): Map[Int, String] =
-    bucketStatsOf(written.map(b => b -> bucketPath(b, next)),
+    bucketStatsOf(written.map(b => b -> StateManifest.bucketDir(root, next, b)),
       statsEligible(statsCols, rowSchema), rowSchema)
 
   /** The listing + scan half both stats producers share: lists `dirs`,
@@ -1048,7 +948,7 @@ class BucketedStateTable(
     * column-pruned aggregation job over the resolved buckets (reads
     * only `cols` plus footers), one recursive listing per referenced
     * commit dir for bytes, then a METADATA-ONLY manifest publish
-    * carrying the same pointers plus the fresh `zmap.` lines. A commit
+    * carrying the same pointers plus the fresh zone-map lines. A commit
     * racing the publish retries like [[widenTo]]; stats survive the
     * retry only for buckets whose POINTER still matches the analyzed
     * manifest's (a moved bucket's bounds are stale — the interleaved
@@ -1060,7 +960,7 @@ class BucketedStateTable(
     BucketedStateTable.lockFor(lockKey).synchronized { withLease {
       val m0 = currentManifest().getOrElse(throw new IllegalStateException(
         s"analyzeStats: no committed state at $path"))
-      val rec = m0.schemaJson.map(schemaOf).getOrElse(
+      val rec = m0.schema.getOrElse(
         throw new IllegalStateException(
           s"analyzeStats: the manifest at $path records no schema " +
             "(pre-schema-line table) — commit once under this version " +
@@ -1070,9 +970,7 @@ class BucketedStateTable(
         s"analyzeStats: none of [${cols.mkString(",")}] is a " +
           s"supported stats column of ${rec.fieldNames.mkString(",")}")
       if (m0.buckets.isEmpty) return 0
-      val fresh = bucketStatsOf(
-        m0.buckets.toSeq.sorted.map { case (b, c) => b -> bucketPath(b, c) },
-        eligible, rec)
+      val fresh = bucketStatsOf(m0.bucketDirs(root), eligible, rec)
       var attempts = 0
       while (true) {
         // A RELAYOUT (split/coalesce/rebucket) landing mid-analyze
@@ -1099,15 +997,15 @@ class BucketedStateTable(
           // split metadata is NOT copied: it belongs to the split
           // commit alone (a republished factor would corrupt the
           // feed's boundary walk), exactly as widenTo publishes.
-          // forNumBuckets comes from the HEAD being based on, not this
+          // the layout comes from the HEAD being based on, not this
           // handle: a concurrent relayout's bucket count must survive
           // the metadata-only republish (the handle's own count
           // describes the layout it was constructed for, which may
           // just have died).
-          writeManifest(Manifest(next, head.buckets, head.schemaJson,
-              bucketStats = head.bucketStats ++ valid),
-            basedOn = head.commitId,
-            forNumBuckets = head.manifestNumBuckets)
+          writeManifest(manifest(next, head.buckets, head.schemaJson,
+              bucketStats = head.bucketStats ++ valid,
+              layout = layoutOf(head)),
+            basedOn = head.commitId)
           prune()
           last = Some(CommitStats(next, Nil, Nil))
           return valid.size
@@ -1157,7 +1055,7 @@ class BucketedStateTable(
     * task per bucket: multi-GB buckets at 100 TB keep one task each. */
   private def writeBuckets(rows: DataFrame, layout: Int, buckets: Int,
       bytes: BigInt, next: Long): Seq[Int] = {
-    val out = new Path(dataDir, f"c$next%08d")
+    val out = StateManifest.dataCommitDir(root, next)
     val advisory = spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val bySize = (bytes + advisory - 1) / advisory
@@ -1167,9 +1065,8 @@ class BucketedStateTable(
       .repartition(math.max(tasks, 1), col(BucketCol))
       .sortWithinPartitions(BucketCol, keyCols: _*)
       .write.partitionBy(BucketCol).mode("errorifexists").parquet(out.toString)
-    fs.listStatus(out).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$BucketCol="))
-      .map(_.getPath.getName.stripPrefix(s"$BucketCol=").toInt)
+    fs.listStatus(out).toSeq.filter(_.isDirectory)
+      .flatMap(s => StateManifest.bucketOf(s.getPath.getName))
       .sorted
   }
 
@@ -1203,7 +1100,7 @@ class BucketedStateTable(
     * tables concurrently by design (`ReportingManager.java:93-95`);
     * this is the bucket-granular version of the same guarantee. */
   private def commit(rows: DataFrame, dirty: Seq[Int], dirtyBytes: BigInt,
-      planBase: Option[Manifest] = None,
+      planBase: Option[StateManifest] = None,
       publishGate: Option[PublishGate] = None): CommitStats = {
     val next = nextCommitId()
     val written = writeBuckets(rows, numBuckets, dirty.size, dirtyBytes, next)
@@ -1249,7 +1146,7 @@ class BucketedStateTable(
       val manifestId = math.max(next, basedOn + 1)
       val prev = base.map(_.buckets).getOrElse(Map.empty)
       try {
-        writeManifest(Manifest(manifestId,
+        writeManifest(manifest(manifestId,
           prev -- dirty ++ written.map(_ -> next),
           Some(rows.schema.json),
           // clean buckets CARRY the base's stats; every dirty bucket's
@@ -1266,8 +1163,8 @@ class BucketedStateTable(
         // ZERO retention floor deletes instantly; a positive floor
         // closes this via condemn-then-reap + the un-condemn pass)
         if (rebases > 0 && written.nonEmpty &&
-            !fs.exists(new Path(dataDir, f"c$next%08d"))) {
-          fs.delete(new Path(commitsDir, f"c$manifestId%08d.txt"), false)
+            !fs.exists(StateManifest.dataCommitDir(root, next))) {
+          fs.delete(StateManifest.manifestPath(root, manifestId), false)
           throw new java.util.ConcurrentModificationException(
             s"commit $manifestId adopted data c$next that a concurrent " +
               "prune reaped mid-rebase and was withdrawn; retry the mutation")
@@ -1282,13 +1179,14 @@ class BucketedStateTable(
           // raced split/rebucket) — that must surface as an ineligible
           // rebase, not an assertion from inside this catch
           val head = manifestFiles().lastOption
-            .map { case (_, p) => readManifest(p, checkLayout = false) }
-          head.filter(_.manifestNumBuckets != numBuckets).foreach { h =>
+            .map(readManifest(_, checkLayout = false))
+          head.filter(layoutOf(_) != numBuckets).foreach { h =>
             throw new java.util.ConcurrentModificationException(
               s"commit raced a layout change at $path ($numBuckets -> " +
-                s"${h.manifestNumBuckets} buckets) — this handle is stale; " +
-                "reopen the table at the recorded layout (BucketedStateTable" +
-                ".snapshotLayout + fromLayout) and retry the mutation")
+                s"${layoutOf(h)} buckets) — this handle is stale; " +
+                "reopen the table at the recorded layout (StateManifest" +
+                ".snapshot(...).layout + BucketedStateTable.fromLayout) " +
+                "and retry the mutation")
           }
           val dirtySet = dirty.toSet
           val eligible = rebases < maxRebases && head.exists { h =>
@@ -1323,7 +1221,7 @@ class BucketedStateTable(
             // check-to-rename window is re-verified after the publish
             // above; fully closing it needs a positive floor, the
             // documented requirement for lease-blind concurrency.)
-            if (!fs.exists(new Path(dataDir, f"c$next%08d")))
+            if (!fs.exists(StateManifest.dataCommitDir(root, next)))
               throw e
           }
           rebases += 1
@@ -1371,23 +1269,20 @@ class BucketedStateTable(
 
   private def prune(): Unit = {
     val now = System.currentTimeMillis()
-    manifestFiles().dropRight(keepCommits).foreach { case (id, p) =>
-      condemnOrReap(s"m$id", p, recursive = false, now)
+    manifestFiles().dropRight(keepCommits).foreach { case (id, st) =>
+      condemnOrReap(s"m$id", st.getPath, recursive = false, now)
     }
     // live set from every manifest STILL on disk after the reap above —
     // a floor-protected old manifest keeps its data dirs alive too
     val surviving = manifestFiles()
     val live: Set[Long] =
-      surviving.flatMap { case (_, p) =>
-        readManifest(p, checkLayout = false).buckets.values
-      }.toSet ++
+      surviving.flatMap(readManifest(_, checkLayout = false).buckets.values)
+        .toSet ++
         surviving.map(_._1)
+    val dataDir = StateManifest.dataDir(root)
     if (fs.exists(dataDir))
       fs.listStatus(dataDir).foreach { s =>
-        val n = s.getPath.getName
-        val id = if (n.startsWith("c") && n.drop(1).forall(_.isDigit))
-          Some(n.drop(1).toLong) else None
-        id match {
+        StateManifest.dataCommitOf(s.getPath.getName) match {
           case Some(i) if !live.contains(i) =>
             condemnOrReap(s"d$i", s.getPath, recursive = true, now)
           case _ => ()
@@ -1498,7 +1393,7 @@ class BucketedStateTable(
       // whose updates frame is typed differently from the probe frame
       // fails fast instead of writing rows placed under the wrong hash.
       if (precomputedDirty.isDefined) {
-        currentManifest().flatMap(_.schemaJson).map(schemaOf).foreach { rec =>
+        currentManifest().flatMap(_.schema).foreach { rec =>
           effBucketCols.foreach { c =>
             (updates.schema.fields.find(_.name == c),
               rec.fields.find(_.name == c)) match {
@@ -1572,7 +1467,7 @@ class BucketedStateTable(
         throw new IllegalStateException(
           s"widenTo: no committed state at $path — create the table " +
             "first (replaceAll/merge under the initial schema)"))
-      val from = base.schemaJson.map(schemaOf)
+      val from = base.schema
         .orElse(readFrom(base, base.buckets.keys.toSeq).map(_.schema))
         .getOrElse(throw new IllegalStateException(
           s"widenTo: table at $path has neither data nor a recorded " +
@@ -1617,7 +1512,7 @@ class BucketedStateTable(
         // metadata-only: no bucket moved, so every recorded zone map
         // still bounds its bucket exactly (the added column simply has
         // no stats anywhere — conservative, never pruned on)
-        writeManifest(Manifest(next, base.buckets, Some(widened.json),
+        writeManifest(manifest(next, base.buckets, Some(widened.json),
             bucketStats = base.bucketStats),
           basedOn = base.commitId)
         prune()
@@ -1760,20 +1655,14 @@ class BucketedStateTable(
     import spark.implicits._
     val cur = currentManifest()
     cur.foreach { m =>
-      if (m.buckets.nonEmpty &&
-          m.buckets.keySet.forall(m.bucketStats.contains)) {
-        val decoded = m.buckets.keySet.toSeq.sorted.flatMap { b =>
-          ZoneMaps.decode(m.bucketStats(b)).map(s =>
-            (b, m.buckets(b), -1L, s.bytes, s.rows))
-        }
-        if (decoded.size == m.buckets.size)
-          return decoded.toDF("bucket", "commit", "n_files",
-            "total_bytes", "n_rows")
-      }
+      if (m.buckets.nonEmpty && m.buckets.keySet.forall(m.zoneStats.contains))
+        return m.buckets.toSeq.sorted.map { case (b, c) =>
+          val s = m.zoneStats(b)
+          (b, c, -1L, s.bytes, s.rows)
+        }.toDF("bucket", "commit", "n_files", "total_bytes", "n_rows")
     }
     val listed = cur.toSeq.flatMap { m =>
-      BucketedStateTable.listBuckets(fs,
-        m.buckets.toSeq.sorted.map { case (b, c) => b -> bucketPath(b, c) })
+      BucketedStateTable.listBuckets(fs, m.bucketDirs(root))
         .map(l => m.buckets(l.bucket) -> l)
     }
     // row counts in ONE job over every bucket dir (count-star over an
@@ -1821,7 +1710,7 @@ class BucketedStateTable(
             "createExclusive is the creating commit only")
       val next = nextCommitId()
       beforePublish()
-      writeManifest(Manifest(next, Map.empty, Some(rowSchema.json)),
+      writeManifest(manifest(next, Map.empty, Some(rowSchema.json)),
         basedOn = 0L)
       last = Some(CommitStats(next, Nil, Nil))
     } }
@@ -1887,10 +1776,11 @@ class BucketedStateTable(
       val written = snapshot.fold(Seq.empty[Int])(
         writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next))
       beforePublish()
-      writeManifest(Manifest(next, written.map(_ -> next).toMap,
+      writeManifest(manifest(next, written.map(_ -> next).toMap,
           snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
-          bucketStats = relayoutStats(snapshot, written, next)),
-        basedOn, forNumBuckets = newNumBuckets)
+          bucketStats = relayoutStats(snapshot, written, next),
+          layout = newNumBuckets),
+        basedOn)
       // Truncate pre-rebucket manifests — through the same
       // condemn-then-reap shield prune() uses: a reader that listed a
       // manifest moments ago must still be able to open it and scan its
@@ -1898,8 +1788,8 @@ class BucketedStateTable(
       // linger briefly; they cannot be resolved through any handle (the
       // layout check refuses) and later prunes collect them.
       val now = System.currentTimeMillis()
-      manifestFiles().filter(_._1 < next).foreach { case (id, p) =>
-        condemnOrReap(s"m$id", p, recursive = false, now)
+      manifestFiles().filter(_._1 < next).foreach { case (id, st) =>
+        condemnOrReap(s"m$id", st.getPath, recursive = false, now)
       }
       new BucketedStateTable(spark, path, keyCols, newNumBuckets,
         keepCommits, retentionFloorMillis, bucketCols, leaseStaleMillis,
@@ -1945,12 +1835,13 @@ class BucketedStateTable(
       // publish — the rewrite is stale against it and must WITHDRAW
       // (never rebase: a layout change conflicts with everything)
       beforePublish()
-      writeManifest(Manifest(next, written.map(_ -> next).toMap,
+      writeManifest(manifest(next, written.map(_ -> next).toMap,
           snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
           splitFactor = Some(factor),
           splitBasedOn = Some(basedOn),
-          bucketStats = relayoutStats(snapshot, written, next)),
-        basedOn, forNumBuckets = newNumBuckets)
+          bucketStats = relayoutStats(snapshot, written, next),
+          layout = newNumBuckets),
+        basedOn)
       prune()
       new BucketedStateTable(spark, path, keyCols, newNumBuckets,
         keepCommits, retentionFloorMillis, bucketCols, leaseStaleMillis,
@@ -1992,12 +1883,13 @@ class BucketedStateTable(
       // same publish-window discipline as splitBuckets: any interleaved
       // commit withdraws the relayout (its rewrite is stale against it)
       beforePublish()
-      writeManifest(Manifest(next, written.map(_ -> next).toMap,
+      writeManifest(manifest(next, written.map(_ -> next).toMap,
           snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
           splitFactor = Some(-factor),
           splitBasedOn = Some(basedOn),
-          bucketStats = relayoutStats(snapshot, written, next)),
-        basedOn, forNumBuckets = newNumBuckets)
+          bucketStats = relayoutStats(snapshot, written, next),
+          layout = newNumBuckets),
+        basedOn)
       prune()
       new BucketedStateTable(spark, path, keyCols, newNumBuckets,
         keepCommits, retentionFloorMillis, bucketCols, leaseStaleMillis,
@@ -2119,9 +2011,6 @@ object BucketedStateTable {
   private def lockFor(path: String): Object =
     locks.computeIfAbsent(path, _ => new Object)
 
-  /** The partition column bucket directories are named by. */
-  private val BucketCol = "__bucket"
-
   /** One bucket directory's data files, as the driver listed them. */
   private[graft] final case class BucketFiles(bucket: Int,
       files: Seq[org.apache.hadoop.fs.FileStatus]) {
@@ -2164,7 +2053,7 @@ object BucketedStateTable {
 
   /** Scans already-listed bucket files as one parquet relation over a
     * [[ListedFileIndex]], under `schema` (None = inferred from the
-    * listed files' footers, for manifests that predate the `schema=`
+    * listed files' footers, for manifests that predate the schema
     * line). With `withBucket` the rows also carry their bucket id as
     * the `__bucket` partition column. Building the frame launches no
     * Spark job: `spark.read.parquet` over more than
@@ -2184,7 +2073,7 @@ object BucketedStateTable {
         "unable to infer a parquet schema: the manifest records none and " +
           s"the ${listed.size} listed bucket directories hold no data files"))
     val partitionSchema =
-      if (withBucket) StructType(Seq(StructField(BucketCol, IntegerType)))
+      if (withBucket) StructType(Seq(StructField(StateManifest.BucketCol, IntegerType)))
       else new StructType()
     val parts = listed.map { l =>
       org.apache.spark.sql.execution.datasources.PartitionDirectory(
@@ -2213,25 +2102,6 @@ object BucketedStateTable {
     }
   }
 
-  /** The ONE place the `_commits/c<id>.txt` naming convention is
-    * parsed: `(commitId, FileStatus)` of every published manifest under
-    * `root`, oldest → newest. Every static listing path (ids, times,
-    * history, manifest choice) and the instance's own `manifestFiles`
-    * share it, so they can never disagree about which commits exist. */
-  private[pipeline] def listManifests(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: Path): Seq[(Long, org.apache.hadoop.fs.FileStatus)] = {
-    val commitsDir = new Path(root, "_commits")
-    if (!fs.exists(commitsDir)) Nil
-    else fs.listStatus(commitsDir).toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("c") && n.endsWith(".txt") &&
-          n.drop(1).dropRight(4).forall(_.isDigit))
-        Some(n.drop(1).dropRight(4).toLong -> s)
-      else None
-    }.sortBy(_._1)
-  }
-
   /** Static marker probe: was (batchId, streamScope) already committed
     * against the table at `path`? The cheap replay pre-check a sink
     * runs BEFORE ferrying a batch the guarded merge would discard
@@ -2247,22 +2117,7 @@ object BucketedStateTable {
     * readers that hold no table instance (the DSv2 source). */
   def snapshotCommits(hadoopConf: org.apache.hadoop.conf.Configuration,
       path: String): Seq[Long] =
-    snapshotCommitStats(hadoopConf, path).map(_._1)
-
-  /** `(commitId, fileLength, mtimeMillis)` per retained manifest,
-    * oldest → newest, from the directory listing alone. The length +
-    * mtime pair is the manifest's CACHE IDENTITY: a withdrawn id can be
-    * reused by a later publish, but never with the same length+mtime
-    * (the in-table [[manifestCache]] documents the same invariant) —
-    * so a consumer memoizing parsed manifests must key by the triple,
-    * not the id. */
-  def snapshotCommitStats(hadoopConf: org.apache.hadoop.conf.Configuration,
-      path: String): Seq[(Long, Long, Long)] = {
-    val root = new Path(path)
-    listManifests(root.getFileSystem(hadoopConf), root).map {
-      case (id, st) => (id, st.getLen, st.getModificationTime)
-    }
-  }
+    listed(hadoopConf, path).map(_._1)
 
   /** `(commitId, publishedAtMillis)` per retained manifest, oldest →
     * newest, from the directory listing ALONE (no file reads) — what
@@ -2270,7 +2125,7 @@ object BucketedStateTable {
     * LIST, never a GET per manifest. */
   def snapshotCommitTimes(hadoopConf: org.apache.hadoop.conf.Configuration,
       path: String): Seq[(Long, Long)] =
-    snapshotCommitStats(hadoopConf, path).map { case (id, _, mt) => (id, mt) }
+    listed(hadoopConf, path).map { case (id, s) => (id, s.getModificationTime) }
 
   /** `(commitId, publishedAtMillis, nBuckets)` for every retained
     * manifest, oldest → newest — the audit/history listing behind the
@@ -2283,63 +2138,40 @@ object BucketedStateTable {
       path: String): Seq[(Long, Long, Int)] = {
     val root = new Path(path)
     val fs = root.getFileSystem(hadoopConf)
-    listManifests(fs, root).map { case (id, s) =>
-      val in = fs.open(s.getPath)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val buckets = text.linesIterator.count(l => l.nonEmpty && l.head.isDigit)
-      (id, s.getModificationTime, buckets)
+    StateManifest.list(fs, root).map { case m @ (id, s) =>
+      (id, s.getModificationTime, StateManifest.load(fs, root, m).buckets.size)
     }
+  }
+
+  private def listed(hadoopConf: org.apache.hadoop.conf.Configuration,
+      path: String) = {
+    val root = new Path(path)
+    StateManifest.list(root.getFileSystem(hadoopConf), root)
   }
 
   /** Resolve ONE committed snapshot of the table at `path` — the newest
     * manifest, or the manifest of `commit` (time travel) — to its
-    * concrete bucket-parquet directories. This is the read-only seam the
-    * DSv2 `graft-state` source and the `GraftStateCatalog` stand on: a
-    * manifest is immutable once published and its rename was the atomic
-    * commit point, so the returned path list IS one consistent snapshot
-    * no matter what writers do afterwards (pruning retains `keepCommits`
+    * concrete bucket-parquet directories, by bucket. A manifest is
+    * immutable once published and its rename was the atomic commit
+    * point, so the returned path list IS one consistent snapshot no
+    * matter what writers do afterwards (pruning retains `keepCommits`
     * manifests plus a time floor, the same protection the instance
     * reader relies on). Nil when the table has no committed snapshot
     * (or the chosen commit published an empty table). No layout check:
-    * a pure reader does not care how keys were hashed into buckets. */
+    * a pure reader does not care how keys were hashed into buckets.
+    * [[StateManifest.snapshot]] gives every other field of the same
+    * manifest. */
   def snapshotPaths(hadoopConf: org.apache.hadoop.conf.Configuration,
       path: String, commit: Option[Long] = None): Seq[String] =
-    chosenManifestText(hadoopConf, path, commit) match {
-      case None => Nil
-      case Some(text) =>
-        val root = new Path(path)
-        text.linesIterator.filter(l => l.nonEmpty && l.head.isDigit).toSeq
-          .map { l => val Array(b, c) = l.split("=", 2); b.toInt -> c.toLong }
-          .sortBy(_._1)
-          .map { case (b, c) =>
-            new Path(root, f"data/c$c%08d/__bucket=$b").toString }
-    }
-
-  /** The row schema the chosen snapshot recorded (its manifest's
-    * `schema=` line) — what lets a committed-but-EMPTY table (e.g. a
-    * queue fully drained by `deleteWhereUnmodified`) still present a
-    * typed shape to the DSv2 source instead of erroring where
-    * `tableExists` answers true. None when the manifest predates the
-    * schema line or the table never committed. */
-  def snapshotSchema(hadoopConf: org.apache.hadoop.conf.Configuration,
-      path: String, commit: Option[Long] = None)
-      : Option[org.apache.spark.sql.types.StructType] =
-    chosenManifestText(hadoopConf, path, commit).flatMap { text =>
-      text.linesIterator.find(_.startsWith("schema=")).map { l =>
-        org.apache.spark.sql.types.DataType
-          .fromJson(l.stripPrefix("schema="))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
-    }
+    StateManifest.snapshot(hadoopConf, path, commit).toSeq
+      .flatMap(_.bucketDirs(new Path(path))).map(_._2.toString)
 
   /** The physical layout a writer must reproduce to mutate the table at
     * `path` — merge key, bucket columns, bucket count — as its newest
-    * manifest records them. This is what lets a handle-less writer (the
-    * DSv2 SQL INSERT surface) construct the exact
-    * [[BucketedStateTable]] instance and go through the real commit
-    * protocol. None when the table never committed or its manifests
-    * predate the `keyCols=` line. */
+    * manifest records them ([[StateManifest.layout]]). This is what
+    * lets a handle-less writer (the DSv2 SQL INSERT surface) construct
+    * the exact [[BucketedStateTable]] instance and go through the real
+    * commit protocol. */
   case class Layout(keyCols: Seq[String], bucketCols: Seq[String],
       numBuckets: Int,
       keepCommits: Option[Int] = None,
@@ -2364,120 +2196,6 @@ object BucketedStateTable {
       bucketCols =
         if (layout.bucketCols == layout.keyCols) Nil else layout.bucketCols,
       statsCols = layout.statsCols)
-
-  def snapshotLayout(hadoopConf: org.apache.hadoop.conf.Configuration,
-      path: String): Option[Layout] =
-    chosenManifestText(hadoopConf, path, None).flatMap { text =>
-      val kv = text.linesIterator.filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
-      for {
-        kc <- kv.get("keyCols")
-        nb <- kv.get("numBuckets")
-      } yield Layout(
-        kc.split(",").toSeq,
-        kv.get("bucketCols").map(_.split(",").toSeq)
-          .getOrElse(kc.split(",").toSeq),
-        nb.toInt,
-        kv.get("keepCommits").map(_.toInt),
-        kv.get("retentionFloorMillis").map(_.toLong),
-        kv.get("statsCols").map(_.split(",").toSeq).getOrElse(Nil))
-    }
-
-  /** Everything the DSv2 scan needs to bucket-prune a snapshot from
-    * pushed-down filters without a table handle: the chosen manifest's
-    * bucket→commit pointers (and their data paths), decoded zone maps,
-    * bucketing columns + count, and the recorded row schema. One
-    * manifest read, same immutable file as [[snapshotPaths]]. */
-  case class ZoneInfo(rootPath: String, buckets: Map[Int, Long],
-      stats: Map[Int, ZoneMaps.BucketStat],
-      bucketCols: Seq[String], numBuckets: Int,
-      schema: Option[org.apache.spark.sql.types.StructType]) {
-    def pathOf(b: Int): String = {
-      val c = buckets(b)
-      new Path(new Path(rootPath), f"data/c$c%08d/__bucket=$b").toString
-    }
-    /** The buckets a scan constrained by `filters` must read — always a
-      * superset of the matching set; None when the manifest records no
-      * schema (nothing to evaluate bounds against). */
-    def survivingBuckets(
-        filters: Seq[org.apache.spark.sql.sources.Filter])
-        : Option[Set[Int]] = schema.map(sch =>
-      ZoneMaps.surviving(
-        filters, sch, bucketCols, numBuckets, stats, buckets.keySet))
-  }
-
-  /** Bucket pointers + recorded per-bucket row counts of ONE manifest —
-    * the unit the change feed's row-based admission estimates batch
-    * cost from (a commit's diff reads the rewritten buckets on both
-    * sides). Counts are present only for buckets written by a
-    * stats-recording handle ([[ZoneMaps]]); a bucket without one maps
-    * to None and the consumer must treat its cost as unknown. The
-    * manifest FILE is immutable, but a withdrawn id can be reused by a
-    * later publish — memoize by the (id, length, mtime) triple from
-    * [[snapshotCommitStats]], never by id alone. */
-  def snapshotPointersAndCounts(
-      hadoopConf: org.apache.hadoop.conf.Configuration,
-      path: String, commit: Long)
-      : Option[(Map[Int, Long], Map[Int, Option[Long]])] =
-    (try chosenManifestText(hadoopConf, path, Some(commit))
-     catch { case _: NoSuchElementException => None } // pruned: unknown
-    ).map { text =>
-      val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-      val ptrs = lines.filter(_.head.isDigit).map { l =>
-        val Array(b, c) = l.split("=", 2); b.toInt -> c.toLong }.toMap
-      val counts = lines.filter(_.startsWith("zmap.")).flatMap { l =>
-        val Array(k, j) = l.split("=", 2)
-        ZoneMaps.decode(j).map(s =>
-          k.stripPrefix("zmap.").toInt -> s.rows)
-      }.toMap
-      (ptrs, ptrs.keySet.map(b => b -> counts.get(b)).toMap)
-    }
-
-  def snapshotZoneInfo(hadoopConf: org.apache.hadoop.conf.Configuration,
-      path: String, commit: Option[Long] = None): Option[ZoneInfo] =
-    chosenManifestText(hadoopConf, path, commit).flatMap { text =>
-      val lines = text.linesIterator.filter(_.nonEmpty).toSeq
-      val kv = lines.map { l =>
-        val Array(k, v) = l.split("=", 2); (k, v) }.toMap
-      kv.get("numBuckets").map(_.toInt).map { nb =>
-        val kc = kv.get("keyCols").map(_.split(",").toSeq).getOrElse(Nil)
-        ZoneInfo(path,
-          lines.filter(l => l.head.isDigit).map { l =>
-            val Array(b, c) = l.split("=", 2); b.toInt -> c.toLong }.toMap,
-          lines.filter(_.startsWith("zmap.")).flatMap { l =>
-            val Array(k, j) = l.split("=", 2)
-            ZoneMaps.decode(j).map(k.stripPrefix("zmap.").toInt -> _)
-          }.toMap,
-          kv.get("bucketCols").map(_.split(",").toSeq).getOrElse(kc), nb,
-          kv.get("schema").map(j => org.apache.spark.sql.types.DataType
-            .fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]))
-      }
-    }
-
-  /** Full text of the chosen manifest (newest, or `commit`'s) — one
-    * read shared by [[snapshotPaths]] and [[snapshotSchema]] so both
-    * views of a snapshot come from the SAME immutable file. */
-  private def chosenManifestText(
-      hadoopConf: org.apache.hadoop.conf.Configuration,
-      path: String, commit: Option[Long]): Option[String] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(hadoopConf)
-    val manifests = listManifests(fs, root).map { case (id, s) => id -> s.getPath }
-    val chosen = commit match {
-      case Some(c) => manifests.find(_._1 == c).map(_._2).getOrElse(
-        throw new NoSuchElementException(
-          s"commit $c is not retained at $path " +
-            s"(retained: ${manifests.map(_._1).mkString(", ")})"))
-      case None => manifests.lastOption match {
-        case Some((_, p)) => p
-        case None => return None
-      }
-    }
-    val in = fs.open(chosen)
-    Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close())
-  }
 }
 
 /** A file index over bucket files the driver has ALREADY listed

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.pipeline.BucketedStateTable
+import graft.pipeline.{BucketedStateTable, StateManifest}
 
 /** Streaming change-feed over a [[graft.pipeline.BucketedStateTable]] —
   * the streaming twin of
@@ -142,7 +142,7 @@ class GraftStateChangesProvider extends StreamSourceProvider
         "a user-specified schema is not supported")
     val path = tablePath(parameters)
     val conf = sqlContext.sparkSession.sessionState.newHadoopConf()
-    val rowSchema = BucketedStateTable.snapshotSchema(conf, path, None)
+    val rowSchema = StateManifest.snapshot(conf, path).flatMap(_.schema)
       .getOrElse(throw new IllegalArgumentException(
         s"graft-state-changes at $path: no committed snapshot with a " +
           "recorded schema to stream changes of"))
@@ -155,7 +155,7 @@ class GraftStateChangesProvider extends StreamSourceProvider
     val spark = sqlContext.sparkSession
     val path = tablePath(parameters)
     val conf = spark.sessionState.newHadoopConf()
-    val rowSchema = BucketedStateTable.snapshotSchema(conf, path, None)
+    val rowSchema = StateManifest.snapshot(conf, path).flatMap(_.schema)
       .getOrElse(throw new IllegalArgumentException(
         s"graft-state-changes at $path: no committed snapshot with a " +
           "recorded schema to stream changes of"))
@@ -273,18 +273,19 @@ private[sources] object GraftStateChangesSource {
     * (pruned) or an involved bucket carries no recorded count (written
     * by a stats-less handle) — the admission loop then stops after the
     * commit rather than guessing. */
-  private[sources] def commitCost(
-      prev: Option[(Map[Int, Long], Map[Int, Option[Long]])],
-      cur: Option[(Map[Int, Long], Map[Int, Option[Long]])]): Long =
+  private[sources] def commitCost(prev: Option[StateManifest],
+      cur: Option[StateManifest]): Long =
     (prev, cur) match {
-      case (Some((pPtr, pCnt)), Some((cPtr, cCnt))) =>
+      case (Some(pm), Some(cm)) =>
+        def rows(m: StateManifest, b: Int): Option[Long] =
+          if (m.buckets.contains(b)) m.zoneStats.get(b).map(_.rows) else Some(0L)
         var total = 0L
-        val it = (pPtr.keySet ++ cPtr.keySet).iterator
+        val it = (pm.buckets.keySet ++ cm.buckets.keySet).iterator
         while (it.hasNext) {
           val b = it.next()
-          if (pPtr.get(b) != cPtr.get(b)) {
-            val p = if (pPtr.contains(b)) pCnt.getOrElse(b, None) else Some(0L)
-            val c = if (cPtr.contains(b)) cCnt.getOrElse(b, None) else Some(0L)
+          if (pm.buckets.get(b) != cm.buckets.get(b)) {
+            val p = rows(pm, b)
+            val c = rows(cm, b)
             (p, c) match {
               case (Some(x), Some(y)) => total += x + y
               case _ => return -1L
@@ -359,22 +360,16 @@ private[sources] class GraftStateChangesSource(
     * chunk list never consulted) don't require the base commit to
     * still be retained. */
   private lazy val bootstrapMeta
-      : (Seq[(Seq[Int], Seq[String])], Option[StructType]) =
+      : (Seq[Seq[(Int, Path)]], Option[StructType]) =
     maxSnapshotBucketsPerTrigger match {
       case Some(m) if initialSnapshot =>
-        val chunks = BucketedStateTable.snapshotPaths(conf, path, Some(base))
-          .map { p =>
-            val b = p.substring(p.lastIndexOf("=") + 1).toInt
-            (b, p)
-          }
-          .sortBy(_._1)
-          .grouped(m).toSeq
-          .map(g => (g.map(_._1), g.map(_._2)))
-        (chunks, BucketedStateTable.snapshotSchema(conf, path, Some(base)))
+        val snap = StateManifest.snapshot(conf, path, Some(base))
+        (snap.toSeq.flatMap(_.bucketDirs(new Path(path))).grouped(m).toSeq,
+          snap.flatMap(_.schema))
       case _ => (Nil, None)
     }
 
-  private def snapshotChunks: Seq[(Seq[Int], Seq[String])] = bootstrapMeta._1
+  private def snapshotChunks: Seq[Seq[(Int, Path)]] = bootstrapMeta._1
 
   private def bootstrapStart: Long = base - snapshotChunks.size
 
@@ -473,10 +468,17 @@ private[sources] class GraftStateChangesSource(
     if (chunked && floor < base)
       // bootstrap phase: admit exactly ONE snapshot chunk per trigger
       return Some(LongOffset(floor + 1))
-    val commitStats = BucketedStateTable.snapshotCommitStats(conf, path)
-    val statOf = commitStats.map { case (id, len, mt) =>
-      id -> (len, mt) }.toMap
-    val commits = commitStats.map(_._1)
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val listed = StateManifest.list(fs, root)
+    val commits = listed.map(_._1)
+    // a settled manifest comes from the StateManifest cache, so a capped
+    // backlog drain reads each one once; one pruned since the listing
+    // has an UNKNOWN cost (None), never a guessed one
+    val statusOf = listed.toMap
+    def manifestOf(id: Long): Option[StateManifest] =
+      try Some(StateManifest.load(fs, root, id -> statusOf(id)))
+      catch { case _: java.io.FileNotFoundException => None }
     val latest = if (commits.isEmpty) base else math.max(base, commits.max)
     if (maxCommitsPerTrigger.isEmpty && maxChangeRowsPerTrigger.isEmpty)
       Some(LongOffset(latest))
@@ -501,14 +503,13 @@ private[sources] class GraftStateChangesSource(
             // table without zone-map stats degrades to one commit per
             // trigger, never an unbounded batch. The FIRST pending
             // commit is always admitted (progress guarantee).
-            var prev = commits.filter(_ <= floor).lastOption
-              .flatMap(id => pointersAndCounts(id, statOf.get(id)))
+            var prev = commits.filter(_ <= floor).lastOption.flatMap(manifestOf)
             var est = 0L
             var end = capped.head
             var i = 0
             var stop = false
             while (i < capped.size && !stop) {
-              val cur = pointersAndCounts(capped(i), statOf.get(capped(i)))
+              val cur = manifestOf(capped(i))
               val cost = GraftStateChangesSource.commitCost(prev, cur)
               val over = cost < 0 || est + cost > capR
               if (i == 0) { // progress guarantee: the first always lands
@@ -525,43 +526,10 @@ private[sources] class GraftStateChangesSource(
     }
   }
 
-  // a manifest FILE is immutable once published, but its commit ID is
-  // not a durable identity — a withdrawn id can be reused by a later
-  // publish — so the admission estimator memoizes by the same
-  // (id, length, mtime) triple the table's own manifestCache uses,
-  // with the same young-file bypass (second-granularity mtimes could
-  // alias a withdraw-and-republish at the head). A transiently
-  // unreadable manifest (None) is NEVER memoized: pinning None would
-  // permanently degrade admission to one commit per trigger. A capped
-  // backlog drain still hits the memo on every settled manifest.
-  private val manifestMemo = new java.util.LinkedHashMap[
-      (Long, Long, Long), (Map[Int, Long], Map[Int, Option[Long]])](
-      64, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (Long, Long, Long), (Map[Int, Long], Map[Int, Option[Long]])])
-        : Boolean = size() > 512
-  }
-
-  private def pointersAndCounts(commit: Long, stat: Option[(Long, Long)])
-      : Option[(Map[Int, Long], Map[Int, Option[Long]])] =
-    stat match {
-      case Some((len, mtime))
-          if System.currentTimeMillis() - mtime >= 5000L =>
-        val key = (commit, len, mtime)
-        Option(manifestMemo.get(key)).orElse {
-          val v =
-            BucketedStateTable.snapshotPointersAndCounts(conf, path, commit)
-          v.foreach(manifestMemo.put(key, _))
-          v
-        }
-      case _ => // unlisted or too young to have a stable identity
-        BucketedStateTable.snapshotPointersAndCounts(conf, path, commit)
-    }
-
   // the handle is read-only here: layout params beyond keyCols are
   // irrelevant to manifest-resolved reads
   private def table(): BucketedStateTable = {
-    val layout = BucketedStateTable.snapshotLayout(conf, path)
+    val layout = StateManifest.snapshot(conf, path).flatMap(_.layout)
       .getOrElse(throw new IllegalStateException(
         s"graft-state-changes at $path: manifest lost its layout lines"))
     // fromLayout (never-prune defaults for missing policy lines): this
@@ -614,10 +582,7 @@ private[sources] class GraftStateChangesSource(
         if (lo >= hi) None
         else {
           val dirs = ((lo - bootstrapStart) until (hi - bootstrapStart))
-            .flatMap { i =>
-              val (buckets, paths) = snapshotChunks(i.toInt)
-              buckets.zip(paths.map(new Path(_)))
-            }
+            .flatMap(i => snapshotChunks(i.toInt))
           val raw = BucketedStateTable.scanBuckets(spark,
             BucketedStateTable.listBuckets(
               new Path(path).getFileSystem(conf), dirs),

@@ -15,7 +15,7 @@ import org.apache.spark.sql.sources.{DataSourceRegister, Filter, InsertableRelat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.pipeline.BucketedStateTable
+import graft.pipeline.{BucketedStateTable, StateManifest}
 
 /** DSv2 batch source over a [[graft.pipeline.BucketedStateTable]]
   * snapshot — the SQL-addressable face of the engine's big-state layout,
@@ -85,18 +85,18 @@ object GraftStateSource {
       throw new IllegalArgumentException(
         "graft-state needs a path: spark.read.format(\"graft-state\").load(<table root>)"))
     val commit = Option(options.get("commit")).map(_.toLong)
-    val zi = BucketedStateTable.snapshotZoneInfo(
+    val snap = StateManifest.snapshot(
       SparkSession.active.sessionState.newHadoopConf(), path, commit)
-    sqlTable(path, commit, zi, options)
+    sqlTable(path, commit, snap, options)
   }
 
   /** The DSv2 table over ONE resolved manifest: data paths, recorded
-    * schema, and zone maps all come from the SAME [[ZoneInfo]] read —
+    * schema, and zone maps all come from the SAME [[StateManifest]] —
     * a commit landing between two separate manifest reads could
     * otherwise hand the scan a different snapshot than the pruning
     * metadata describes (the load-time pinning guarantee). */
   private[sources] def sqlTable(path: String, commit: Option[Long],
-      zi: Option[BucketedStateTable.ZoneInfo],
+      snap: Option[StateManifest],
       options: CaseInsensitiveStringMap): GraftStateSqlTable = {
     // The manifest's RECORDED schema (when present) is authoritative,
     // files or no files: a committed-but-EMPTY snapshot (a fully
@@ -107,7 +107,7 @@ object GraftStateSource {
     // schema null-fills the missing columns deterministically. The
     // error is reserved for the truly-never-committed (or
     // pre-schema-manifest, which falls back to footer inference) case.
-    val z = zi.getOrElse(
+    val z = snap.getOrElse(
       throw new IllegalArgumentException(
         s"graft-state table at $path has no committed snapshot" +
           commit.map(c => s" readable at commit $c").getOrElse("")))
@@ -115,12 +115,12 @@ object GraftStateSource {
       throw new IllegalArgumentException(
         s"graft-state table at $path has no committed snapshot" +
           commit.map(c => s" readable at commit $c").getOrElse(""))
-    val paths = z.buckets.keys.toSeq.sorted.map(z.pathOf)
+    val paths = z.bucketDirs(new Path(path)).map(_._2.toString)
     new GraftStateSqlTable(path,
       ParquetTable(s"graft-state `$path`", SparkSession.active, options,
         paths, userSpecifiedSchema = z.schema,
         fallbackFileFormat = classOf[ParquetFileFormat]),
-      Some(z))
+      z)
   }
 }
 
@@ -168,10 +168,11 @@ object GraftStateSource {
 class GraftStateSqlTable(
     private[sources] val rootPath: String,
     delegate: ParquetTable,
-    // the LOAD-TIME manifest's pruning metadata — pinned, so every scan
-    // of this table instance prunes against exactly the snapshot the
-    // delegate's paths came from, commits since load notwithstanding
-    private[sources] val zoneInfo: Option[BucketedStateTable.ZoneInfo] = None)
+    // the LOAD-TIME manifest — pinned, so every scan of this table
+    // instance prunes against, and its schema marks the key columns of,
+    // exactly the snapshot the delegate's paths came from, commits since
+    // load notwithstanding
+    private[sources] val snapshot: StateManifest)
     extends Table
     with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -185,10 +186,8 @@ class GraftStateSqlTable(
   // admits a null key. Tables whose manifests predate the layout lines
   // keep the delegate schema (and refuse row-level DML with the
   // no-recorded-layout message).
-  private lazy val layoutKeyCols: Set[String] = BucketedStateTable
-    .snapshotLayout(
-      SparkSession.active.sessionState.newHadoopConf(), rootPath)
-    .map(_.keyCols.toSet).getOrElse(Set.empty)
+  private lazy val layoutKeyCols: Set[String] =
+    snapshot.layout.map(_.keyCols.toSet).getOrElse(Set.empty)
 
   override def schema(): StructType =
     StructType(delegate.schema.fields.map(f =>
@@ -208,7 +207,7 @@ class GraftStateSqlTable(
     * post-scan, so results are identical; only the planned file set
     * shrinks. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftZonePrunedScanBuilder(rootPath, zoneInfo, options, delegate)
+    new GraftZonePrunedScanBuilder(rootPath, snapshot, options, delegate)
 
   /** The library-side table this SQL surface mutates through, laid out
     * exactly as the manifest records — ONE manifest read per statement.
@@ -221,7 +220,7 @@ class GraftStateSqlTable(
     * never drift in wording or contract). */
   private[sources] def layoutOrRefuse(
       conf: org.apache.hadoop.conf.Configuration): BucketedStateTable.Layout =
-    BucketedStateTable.snapshotLayout(conf, rootPath).getOrElse(
+    StateManifest.snapshot(conf, rootPath).flatMap(_.layout).getOrElse(
       throw new UnsupportedOperationException(
         s"graft-state table at $rootPath has no recorded layout " +
           "(keyCols manifest line) — its manifests predate the " +
@@ -302,7 +301,7 @@ class GraftStateSqlTable(
   * ([[org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters]]
   * — the same contract the file-source builders implement), translates
   * them to V1 source filters, and asks
-  * [[BucketedStateTable.snapshotZoneInfo]] which buckets can possibly
+  * [[StateManifest.survivingBuckets]] which buckets can possibly
   * match. When that is a proper subset, the inner builder is REBUILT
   * over only the surviving bucket directories (same snapshot manifest,
   * same recorded schema) before filters, required columns, and
@@ -319,7 +318,7 @@ class GraftStateSqlTable(
   * never prune — so a pushed aggregate always sees the whole table. */
 private[sources] class GraftZonePrunedScanBuilder(
     rootPath: String,
-    zoneInfo: Option[BucketedStateTable.ZoneInfo],
+    snapshot: StateManifest,
     options: CaseInsensitiveStringMap,
     full: ParquetTable) extends ScanBuilder
     with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -343,19 +342,17 @@ private[sources] class GraftZonePrunedScanBuilder(
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     val v1 = filters.flatMap(ZonePruneFilters.necessary)
     if (v1.nonEmpty) {
-      zoneInfo.foreach { z =>
-        z.survivingBuckets(v1).foreach { surv =>
-          survivors = Some(surv)
-          if (surv.size != z.buckets.size) {
-            val paths = surv.toSeq.sorted.map(z.pathOf)
-            inner = ParquetTable(
-              s"graft-state `$rootPath` (bucket-pruned ${paths.size}/" +
-                s"${z.buckets.size})",
-              SparkSession.active, options, paths,
-              userSpecifiedSchema = z.schema,
-              fallbackFileFormat = classOf[ParquetFileFormat])
-              .newScanBuilder(options)
-          }
+      snapshot.survivingBuckets(v1).foreach { surv =>
+        survivors = Some(surv)
+        if (surv.size != snapshot.buckets.size) {
+          val paths = snapshot.bucketDirs(new Path(rootPath), surv).map(_._2.toString)
+          inner = ParquetTable(
+            s"graft-state `$rootPath` (bucket-pruned ${paths.size}/" +
+              s"${snapshot.buckets.size})",
+            SparkSession.active, options, paths,
+            userSpecifiedSchema = snapshot.schema,
+            fallbackFileFormat = classOf[ParquetFileFormat])
+            .newScanBuilder(options)
         }
       }
     }
@@ -408,21 +405,20 @@ private[sources] class GraftZonePrunedScanBuilder(
     * file-listing estimate — never a guess. */
   override def build(): Scan = {
     val built = inner.build()
-    zoneInfo match {
-      case Some(z) if !aggPushed =>
-        val set = survivors.getOrElse(z.buckets.keySet)
-        val statted = set.toSeq.flatMap(z.stats.get)
-        val covered = statted.size == set.size
-        val rows = if (covered) Some(statted.map(_.rows).sum) else None
-        // a statted-but-zero-byte bucket holding rows means the byte
-        // accounting is unknown (pre-bytes manifest line): fall back
-        val bytes =
-          if (covered && statted.forall(s => s.rows == 0L || s.bytes > 0L))
-            Some(statted.map(_.bytes).sum)
-          else None
-        if (rows.isEmpty && bytes.isEmpty) built
-        else new ManifestStatsScan(built, rows, bytes)
-      case _ => built // no zone info, or an aggregate was pushed
+    if (aggPushed) built
+    else {
+      val set = survivors.getOrElse(snapshot.buckets.keySet)
+      val statted = set.toSeq.flatMap(snapshot.zoneStats.get)
+      val covered = statted.size == set.size
+      val rows = if (covered) Some(statted.map(_.rows).sum) else None
+      // a statted-but-zero-byte bucket holding rows means the byte
+      // accounting is unknown (pre-bytes manifest line): fall back
+      val bytes =
+        if (covered && statted.forall(s => s.rows == 0L || s.bytes > 0L))
+          Some(statted.map(_.bytes).sum)
+        else None
+      if (rows.isEmpty && bytes.isEmpty) built
+      else new ManifestStatsScan(built, rows, bytes)
     }
   }
 }
@@ -932,7 +928,7 @@ class GraftStateStreamSink(
     // one-SELECT pre-check, same rationale)
     if (graft.pipeline.BucketedStateTable.batchSeen(
         conf, rootPath, batchId, scope)) return
-    val layout = BucketedStateTable.snapshotLayout(conf, rootPath)
+    val layout = StateManifest.snapshot(conf, rootPath).flatMap(_.layout)
     val keyCols = layout.map(_.keyCols).orElse(bootstrapKeyCols).getOrElse(
       throw new IllegalArgumentException(
         s"graft-state sink at $rootPath: the table does not exist yet and " +
@@ -1144,7 +1140,7 @@ class GraftStateCatalog extends TableCatalog
       spark.sessionState.newHadoopConf(), dir.toString)
     if (commits.isEmpty) throw new NoSuchTableException(ident)
     GraftStateSource.sqlTable(dir.toString, None,
-      BucketedStateTable.snapshotZoneInfo(
+      StateManifest.snapshot(
         spark.sessionState.newHadoopConf(), dir.toString),
       CaseInsensitiveStringMap.empty())
   }
@@ -1171,7 +1167,7 @@ class GraftStateCatalog extends TableCatalog
       s"commit $commit is not retained at ${tableDir(ident)} " +
         s"(retained: ${commits.mkString(", ")})")
     GraftStateSource.sqlTable(dir.toString, Some(commit),
-      BucketedStateTable.snapshotZoneInfo(
+      StateManifest.snapshot(
         spark.sessionState.newHadoopConf(), dir.toString, Some(commit)),
       CaseInsensitiveStringMap.empty())
   }
@@ -1198,7 +1194,7 @@ class GraftStateCatalog extends TableCatalog
           s"(oldest: ${times.head._1} at " +
           s"${java.time.Instant.ofEpochMilli(times.head._2)})"))._1
     GraftStateSource.sqlTable(dir.toString, Some(at),
-      BucketedStateTable.snapshotZoneInfo(
+      StateManifest.snapshot(
         SparkSession.active.sessionState.newHadoopConf(),
         dir.toString, Some(at)),
       CaseInsensitiveStringMap.empty())
@@ -1415,8 +1411,8 @@ private[sources] object GraftStateProcedures {
         s"root (got '$table')")
     val dir = segs
       .foldLeft(new Path(rootPath))((p, seg) => new Path(p, seg)).toString
-    val layout = BucketedStateTable.snapshotLayout(
-      spark.sessionState.newHadoopConf(), dir)
+    val layout = StateManifest.snapshot(
+      spark.sessionState.newHadoopConf(), dir).flatMap(_.layout)
       .getOrElse(throw new NoSuchTableException(
         Identifier.of(Array.empty[String], table)))
     (dir, BucketedStateTable.fromLayout(spark, dir, layout), layout.numBuckets)

@@ -708,7 +708,7 @@ class BucketedStateTableSpec extends SparkSpec {
 
     // the loser reopens at the RECORDED layout and its retry lands
     val conf = spark.sparkContext.hadoopConfiguration
-    val layout = BucketedStateTable.snapshotLayout(conf, s"$dir/state").get
+    val layout = StateManifest.snapshot(conf, s"$dir/state").flatMap(_.layout).get
     assert(layout.numBuckets == 8)
     val t8 = BucketedStateTable.fromLayout(spark, s"$dir/state", layout)
     t8.merge(Seq(("c", 3L)).toDF("k", "v"), keys = Seq("k"))

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.BucketedStateTable
+import graft.pipeline.{BucketedStateTable, StateManifest}
 import graft.sources.GraftStateCatalog
 
 /** The SQL-addressable face of [[BucketedStateTable]]: the `graft-state`
@@ -620,8 +620,8 @@ class GraftStateSourceSpec extends SparkSpec {
       // post-split SQL write, then a cross-boundary library diff: the
       // SQL-driven split preserves change-feed continuity
       spark.sql("INSERT INTO graft_proc.docs VALUES ('k3', -3)")
-      val layout = BucketedStateTable.snapshotLayout(
-        spark.sessionState.newHadoopConf(), s"$dir/docs").get
+      val layout = StateManifest.snapshot(
+        spark.sessionState.newHadoopConf(), s"$dir/docs").flatMap(_.layout).get
       assert(layout.numBuckets == 16)
       val t16 = BucketedStateTable.fromLayout(spark, s"$dir/docs", layout)
       val feed = t16.changesBetween(c1, t16.commits().last).collect()
@@ -636,8 +636,8 @@ class GraftStateSourceSpec extends SparkSpec {
         .collect()
       assert(co.map(r => (r.getString(0), r.getInt(1), r.getInt(2)))
         .toSeq == Seq(("docs", 16, 8)))
-      val layout8 = BucketedStateTable.snapshotLayout(
-        spark.sessionState.newHadoopConf(), s"$dir/docs").get
+      val layout8 = StateManifest.snapshot(
+        spark.sessionState.newHadoopConf(), s"$dir/docs").flatMap(_.layout).get
       assert(layout8.numBuckets == 8)
       val t8 = BucketedStateTable.fromLayout(spark, s"$dir/docs", layout8)
       val feed2 = t8.changesBetween(c1, t8.commits().last).collect()

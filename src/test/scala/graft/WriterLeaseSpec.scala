@@ -198,76 +198,6 @@ class WriterLeaseSpec extends SparkSpec {
     assert(store.read().isEmpty)
   }
 
-  test("ObjectStoreLeaseStore: the contention matrix is fenced on the etag-CAS adapter (third store)") {
-    val http = new graft.pipeline.InMemoryHttpObjectStore
-    val store = new graft.pipeline.ObjectStoreLeaseStore(http, "tables/docs/_lease")
-    val clock = new java.util.concurrent.atomic.AtomicLong(0L)
-    val lease = new WriterLease(store, "spec", staleMillis = 1000L,
-      acquireTimeoutMillis = 60_000L, pollMillis = 1L,
-      clock = () => clock.get())
-
-    // forced stale takeover: zombie beat and release cannot clobber
-    val hA = lease.acquire("writerA")
-    clock.set(2000L)
-    val hB = lease.acquire("writerB")
-    assert(new String(store.read().get, "UTF-8").startsWith("writerB\n"))
-    val bBytes = store.read().get
-    assert(!hA.beat(), "a usurped holder's beat must report the loss")
-    assert(java.util.Arrays.equals(store.read().get, bBytes))
-    hA.release()
-    assert(store.read().isDefined &&
-      new String(store.read().get, "UTF-8").startsWith("writerB\n"),
-      "an old holder's release must leave the usurper's lease intact")
-    assert(hB.beat())
-    hB.release()
-    assert(store.read().isEmpty)
-
-    // N waiters judging the same stale value: the etag linearizes the
-    // election — exactly one CAS wins, no tombstone rename needed
-    assert(store.tryCreate("crashed\n0\n".getBytes("UTF-8")))
-    val stale = store.read().get
-    val wins = Seq(
-      store.takeOver(stale, "w1\n5000\n".getBytes("UTF-8")),
-      store.takeOver(stale, "w2\n5000\n".getBytes("UTF-8")))
-    assert(wins == Seq(true, false),
-      s"the first etag-CAS wins, the second must 412, got $wins")
-    assert(store.deleteIf(store.read().get))
-
-    // a live beat landing between judgment and break defeats the break
-    val hC = lease.acquire("writerC")
-    clock.set(4000L)
-    val judged = store.read().get
-    assert(hC.beat())
-    assert(!store.takeOver(judged, "writerD\n4000\n".getBytes("UTF-8")),
-      "a break conditioned on a refreshed-away value must 412")
-    hC.release()
-    assert(store.read().isEmpty)
-
-    // transport failures ride the error contract: a 503 propagates as
-    // IOException (the heartbeat retries next period), never as
-    // usurpation
-    val hE = lease.acquire("writerE")
-    http.failNextOps(1)
-    intercept[java.io.IOException] { hE.beat() }
-    assert(hE.beat(), "the next beat after the blip must refresh")
-    hE.release()
-    assert(store.read().isEmpty)
-  }
-
-  test("end-to-end: a BucketedStateTable commits through the object-store adapter") {
-    val s = spark
-    import s.implicits._
-    val dir = Files.createTempDirectory("graft-oslease-e2e").toString
-    val store = new graft.pipeline.ObjectStoreLeaseStore(
-      new graft.pipeline.InMemoryHttpObjectStore, "state/_lease")
-    val t = new BucketedStateTable(spark, s"$dir/state",
-      keyCols = Seq("k"), numBuckets = 4, retentionFloorMillis = 0L,
-      leaseStore = Some(store))
-    t.merge(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), keys = Seq("k"))
-    assert(t.read().get.count() == 2L)
-    assert(store.read().isEmpty, "the lease must release after the commit")
-  }
-
   test("HadoopLeaseStore: publication is ATOMIC — hammering readers never observe empty or partial bytes") {
     // the r17 full-suite flake in one picture: create-then-write let a
     // concurrent read land between the two and observe ZERO bytes — an
