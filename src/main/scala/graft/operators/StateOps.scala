@@ -240,8 +240,22 @@ object StateOps {
       keys: Seq[String],
       versionCols: Seq[String] = Nil): DataFrame = {
     require(keys.nonEmpty, "mergeByKey needs at least one key column")
-    val all = state.withColumn(SrcCol, lit(0))
+    latestPerKey(sourced(state, updates), keys, versionCols)
+  }
+
+  /** [[mergeByKey]]'s input: the state rows and the updates in one
+    * frame, each row tagged with the side it came from. */
+  private[graft] def sourced(state: DataFrame, updates: DataFrame): DataFrame =
+    state.withColumn(SrcCol, lit(0))
       .unionByName(updates.withColumn(SrcCol, lit(1)))
+
+  /** [[mergeByKey]]'s resolution of a [[sourced]] frame: per `keys`
+    * group, the update with the greatest `versionCols` tuple, else the
+    * state row. A caller may add to `keys` a column that is a function
+    * of them (a bucket id), which leaves the groups as they are but
+    * lets the window run on rows already partitioned by that column. */
+  private[graft] def latestPerKey(all: DataFrame, keys: Seq[String],
+      versionCols: Seq[String]): DataFrame = {
     val ordering = (col(SrcCol).desc +: versionCols.map(qcol(_).desc))
     val w = Window.partitionBy(keys.map(qcol): _*).orderBy(ordering: _*)
     all.withColumn(RnCol, row_number().over(w))

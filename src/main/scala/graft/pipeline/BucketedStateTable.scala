@@ -1052,22 +1052,32 @@ class BucketedStateTable(
     * a 4-core host. Never fewer tasks than cores: a size-adaptive count
     * below the core count serializes the per-file cost (writer init +
     * footer) onto fewer cores than the host has. Never more than one
-    * task per bucket: multi-GB buckets at 100 TB keep one task each. */
+    * task per bucket: multi-GB buckets at 100 TB keep one task each.
+    *
+    * `afterExchange` runs on the bucket-partitioned rows (which carry
+    * `__bucket`) in the write's result stage, after its one exchange:
+    * a per-bucket step placed there needs no shuffle of its own, and
+    * an observation placed there is applied once per task. Returns the
+    * written buckets and the schema of the written rows. */
   private def writeBuckets(rows: DataFrame, layout: Int, buckets: Int,
-      bytes: BigInt, next: Long): Seq[Int] = {
+      bytes: BigInt, next: Long,
+      afterExchange: DataFrame => DataFrame = identity)
+      : (Seq[Int], org.apache.spark.sql.types.StructType) = {
     val out = StateManifest.dataCommitDir(root, next)
     val advisory = spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val bySize = (bytes + advisory - 1) / advisory
     val tasks = math.min(buckets,
       bySize.max(spark.sparkContext.defaultParallelism).min(Int.MaxValue).toInt)
-    rows.withColumn(BucketCol, bucketIn(layout))
-      .repartition(math.max(tasks, 1), col(BucketCol))
-      .sortWithinPartitions(BucketCol, keyCols: _*)
+    val written = afterExchange(rows.withColumn(BucketCol, bucketIn(layout))
+      .repartition(math.max(tasks, 1), col(BucketCol)))
+    written.sortWithinPartitions(BucketCol, keyCols: _*)
       .write.partitionBy(BucketCol).mode("errorifexists").parquet(out.toString)
-    fs.listStatus(out).toSeq.filter(_.isDirectory)
+    (fs.listStatus(out).toSeq.filter(_.isDirectory)
       .flatMap(s => StateManifest.bucketOf(s.getPath.getName))
-      .sorted
+      .sorted,
+      org.apache.spark.sql.types.StructType(
+        written.schema.filterNot(_.name == BucketCol)))
   }
 
   /** Catalyst's size estimate of `rows`, for the full rewrites
@@ -1101,9 +1111,11 @@ class BucketedStateTable(
     * this is the bucket-granular version of the same guarantee. */
   private def commit(rows: DataFrame, dirty: Seq[Int], dirtyBytes: BigInt,
       planBase: Option[StateManifest] = None,
-      publishGate: Option[PublishGate] = None): CommitStats = {
+      publishGate: Option[PublishGate] = None,
+      afterExchange: DataFrame => DataFrame = identity): CommitStats = {
     val next = nextCommitId()
-    val written = writeBuckets(rows, numBuckets, dirty.size, dirtyBytes, next)
+    val (written, rowSchema) = writeBuckets(rows, numBuckets, dirty.size,
+      dirtyBytes, next, afterExchange)
     // A bucket written OUTSIDE the dirty set means `rows` re-evaluated
     // differently between the dirty-bucket probe and this write (a
     // non-deterministic expression in the update lineage — rand() salt,
@@ -1125,7 +1137,7 @@ class BucketedStateTable(
     // loop: a rebase republishes the same data, so the same stats hold
     val zstats: Map[Int, String] =
       if (statsCols.isEmpty || written.isEmpty) Map.empty
-      else collectBucketStats(next, written, rows.schema)
+      else collectBucketStats(next, written, rowSchema)
     // gated publish (see [[PublishGate]]): everything above — the
     // expensive bucket-file write and its stats — ran concurrently
     // with the gate owner's foreground work; nothing is observable
@@ -1148,7 +1160,7 @@ class BucketedStateTable(
       try {
         writeManifest(manifest(manifestId,
           prev -- dirty ++ written.map(_ -> next),
-          Some(rows.schema.json),
+          Some(rowSchema.json),
           // clean buckets CARRY the base's stats; every dirty bucket's
           // stale entry drops even when this handle records none — a
           // stats-less rewrite must never leave another handle's
@@ -1307,8 +1319,9 @@ class BucketedStateTable(
   // ---- mutations (all bucket-pruned, all under the write lock) ------
 
   /** Every mutation evaluates its input batch TWICE — the dirty-bucket
-    * probe and the commit's bucket write (deleteWhereUnmodified: three
-    * times). For a batch that is a plain scan/projection the probe is
+    * probe and the commit's bucket write — unless it is a driver-local
+    * frame, whose probe runs on the driver without evaluating the batch
+    * as a job. For a batch that is a plain scan/projection the probe is
     * column-pruned to the bucket columns and the double evaluation is
     * nearly free — but the incremental-index family feeds merges whose
     * lineage is a shuffle (tokenize→explode→aggregate postings, LSH
@@ -1422,8 +1435,11 @@ class BucketedStateTable(
         // changes are refused inside alignTo.
         val (cur0, base, bytes) = readBucketsWithBase(dirty, like = updates)
         val (cur, up) = alignPair(cur0, updates, keys, "merge")
-        commit(StateOps.mergeByKey(cur, up, keys, versionCols), dirty, bytes,
-          base, publishGate)
+        // StateOps.mergeByKey with its per-key window run after the
+        // bucket write's exchange, partitioned by (bucket, keys): the
+        // groups are the same, and the write's shuffle is the only one
+        commit(StateOps.sourced(cur, up), dirty, bytes, base, publishGate,
+          afterExchange = StateOps.latestPerKey(_, BucketCol +: keys, versionCols))
       } else publishGate.foreach(_.awaitPublish()) // no-op merges honor an abort too
       }
     } }
@@ -1561,6 +1577,25 @@ class BucketedStateTable(
     } }
   }
 
+  /** D1 with [[StateOps.deleteIfUnmodified]]'s meaning (a null-safe
+    * match on the full tuple; processed rows with no matching state row
+    * are counted with multiplicity), in ONE read of the dirty buckets.
+    *
+    * The current rows (tag 0) and the processed rows (tag 1) are
+    * unioned into the commit's bucket write. After its exchange, a
+    * window over (bucket, full tuple) — a finer key than the bucket the
+    * rows are already partitioned by, so it adds no shuffle — sees
+    * whether each tuple has rows of either tag: a state row with no
+    * processed twin is kept, everything else is dropped before the
+    * write, and the processed rows with no state twin are the not-
+    * removed count. A null-safe `<=>` and a window partition group
+    * nulls alike. The count is an [[org.apache.spark.sql.Observation]]
+    * placed after the exchange, so it runs in the write's result stage,
+    * whose accumulator updates Spark applies once per partition even
+    * when a task or the stage re-runs (a map stage's would be applied
+    * again on a re-run). A processed column that is neither the stored
+    * type nor a lossless widening into it (which the union would widen
+    * the stored column to) takes the two-plan form instead. */
   override def deleteWhereUnmodified(processed: DataFrame): Long =
     BucketedStateTable.lockFor(lockKey).synchronized { withLease {
       withPinned(processed) { processed =>
@@ -1568,10 +1603,38 @@ class BucketedStateTable(
       if (dirty.isEmpty) 0L
       else {
         val (cur, base, bytes) = readBucketsWithBase(dirty, like = processed)
-        val res = StateOps.deleteIfUnmodified(cur, processed)
-        val notRemoved = res.notRemoved.count()
-        commit(res.newState, dirty, bytes, base)
-        notRemoved
+        val cols = cur.columns.toSeq
+        val proc = processed.select(cols.map(StateOps.qcol): _*)
+        val aligned = cur.schema.fields.zip(proc.schema.fields).map {
+          case (s, p) if StateOps.sameShape(p.dataType, s.dataType) =>
+            Some(StateOps.qcol(s.name))
+          case (s, p) if StateOps.wideningPromotion(p.dataType, s.dataType) =>
+            Some(StateOps.qcol(s.name).cast(s.dataType).as(s.name))
+          case _ => None
+        }
+        if (aligned.contains(None)) {
+          val res = StateOps.deleteIfUnmodified(cur, processed)
+          val notRemoved = res.notRemoved.count()
+          commit(res.newState, dirty, bytes, base)
+          notRemoved
+        } else {
+          val Tag = "__graft_tag"
+          val seen = org.apache.spark.sql.expressions.Window
+            .partitionBy((BucketCol +: cols).map(StateOps.qcol): _*)
+          val observed = org.apache.spark.sql.Observation("notRemoved")
+          commit(
+            cur.withColumn(Tag, lit(0))
+              .unionByName(proc.select(aligned.flatten: _*).withColumn(Tag, lit(1))),
+            dirty, bytes, base,
+            afterExchange = _
+              .withColumn("__graft_min", min(Tag).over(seen))
+              .withColumn("__graft_max", max(Tag).over(seen))
+              .observe(observed,
+                count_if(col(Tag) === 1 && col("__graft_min") === 1).as("n"))
+              .filter(col("__graft_max") === 0)
+              .drop(Tag, "__graft_min", "__graft_max"))
+          observed.get("n").asInstanceOf[Long]
+        }
       }
       }
     } }
@@ -1774,7 +1837,7 @@ class BucketedStateTable(
         .getOrElse((None, 0L))
       val next = nextCommitId()
       val written = snapshot.fold(Seq.empty[Int])(
-        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next))
+        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next)._1)
       beforePublish()
       writeManifest(manifest(next, written.map(_ -> next).toMap,
           snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
@@ -1829,7 +1892,7 @@ class BucketedStateTable(
         .getOrElse((None, 0L))
       val next = nextCommitId()
       val written = snapshot.fold(Seq.empty[Int])(
-        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next))
+        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next)._1)
       // same publish-window seam as commit(): a relayout must detect a
       // commit landing between its snapshot rewrite and its manifest
       // publish — the rewrite is stale against it and must WITHDRAW
@@ -1879,7 +1942,7 @@ class BucketedStateTable(
         .getOrElse((None, 0L))
       val next = nextCommitId()
       val written = snapshot.fold(Seq.empty[Int])(
-        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next))
+        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next)._1)
       // same publish-window discipline as splitBuckets: any interleaved
       // commit withdraws the relayout (its rewrite is stale against it)
       beforePublish()

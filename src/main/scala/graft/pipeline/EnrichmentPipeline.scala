@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -267,23 +267,31 @@ class EnrichmentPipeline(
     * reference's DELETE runs against current DB state for the same
     * reason). */
   def commit(pb: ProcessedBatch): EnrichmentSummary = {
-    val fetched = spark.read.parquet(pb.inflightPath)
-
-    // P4 projection + F2 validation → reporting rows. Null XML (fetch
-    // miss) nulls every projected field, so F2 drops it. PERSISTED:
-    // the count and the merge (which evaluates its updates twice on a
-    // bucketed table) would otherwise each re-run the per-document
-    // namespace-aware METS DOM parse — the phase's dominant CPU cost.
-    val projected = XmlProjections.projectMets(fetched, col("mets_xml"))
-      .withColumn("header_last_modified", col("datestamp"))
-    val reportingRows = XmlProjections.validateReportingRow(projected)
-      .select("record_identifier", "mandator", "document_type",
-        "distribution_date", "header_last_modified")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // read under the writer's own schema: no footer-inference job
+    val fetched = spark.read.schema(Encoders.product[FetchedHeader].schema)
+      .parquet(pb.inflightPath)
 
     try {
-      val processed = fetched.count()
-      val reported = reportingRows.count()
+      // P4 projection, COLLECTED once: the per-document namespace-aware
+      // METS DOM parse (the phase's dominant CPU cost) runs in this one
+      // job, over at most `batchSize` rows — the bound under which
+      // readBatchWithRetry already collected the batch. Everything
+      // below works on driver-local frames: the counts are the rows'
+      // own, and the merge and the delete find their dirty buckets on
+      // the driver instead of in probe jobs.
+      val projected = XmlProjections.projectMets(fetched, col("mets_xml"))
+        .withColumn("header_last_modified", col("datestamp"))
+        .drop("mets_xml")
+      val rows = projected.collect()
+      val batch = spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), projected.schema)
+      // F2 validation → reporting rows. Null XML (fetch miss) nulls
+      // every projected field, so F2 drops it.
+      val reportingRows = XmlProjections.validateReportingRow(batch)
+        .select("record_identifier", "mandator", "document_type",
+          "distribution_date", "header_last_modified")
+      val processed = rows.length.toLong
+      val reported = reportingRows.collect().length.toLong
 
       reportingTable.merge(reportingRows, keys = Seq("record_identifier"))
 
@@ -292,7 +300,7 @@ class EnrichmentPipeline(
       // the shape at drain), and a live-column list captured from the
       // queue would crash every commit the moment the headers table is
       // widened (ADD COLUMN is supported) while the batch is in flight
-      val processedHeaders = fetched.select(
+      val processedHeaders = batch.select(
         col("record_identifier"), col("datestamp"), col("set_spec"),
         col("status_is_deleted"))
       // atomic read-modify-write: the latest queue snapshot is read and
@@ -305,7 +313,6 @@ class EnrichmentPipeline(
 
       EnrichmentSummary(processed, reported, processed - reported, notRemoved)
     } finally {
-      reportingRows.unpersist()
       // unpin in EVERY outcome: a commit that threw (e.g. a raced
       // mutation) abandons the batch — the caller drains a fresh one —
       // and a forever-pinned entry would shield the leftover parquet

@@ -133,24 +133,24 @@ class HarvestPipeline(
 
         val nHeaders =
           if (page.errors.isEmpty) {
-            // persisted: the count below AND the merge (which evaluates
-            // its updates twice on a bucketed table) would otherwise
-            // each re-run the header regex-explode projection over the
-            // page body — one parse per poll iteration, not three
-            val headers = headerFilter(
+            // the page's filtered headers, COLLECTED once: the page body
+            // is a driver string already and bounds them, so the header
+            // regex-explode projection runs in this one job, the count
+            // is the rows', and the merge gets a driver-local frame
+            // whose dirty buckets are found on the driver
+            val projected = headerFilter(
               XmlProjections.projectOaiHeaders(pageDf, col("xml"))
                 .select("record_identifier", "datestamp", "set_spec",
                   "status_is_deleted"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+            val rows = projected.collect()
             // ST4: headers commit BEFORE the checkpoint row; the merge is
             // an atomic read-modify-write so a concurrent enrichment
             // delete cannot be clobbered. Through the StateTable trait a
             // bucketed headers table rewrites only the page's buckets.
-            try {
-              val n = headers.count()
-              headersTable.merge(headers, keys = Seq("record_identifier"))
-              n
-            } finally headers.unpersist()
+            headersTable.merge(
+              spark.createDataFrame(java.util.Arrays.asList(rows: _*), projected.schema),
+              keys = Seq("record_identifier"))
+            rows.length.toLong
           } else 0L
 
         val next = OffsetStateMachine.advance(last, page, now, fc3CompatibilityMode)

@@ -371,26 +371,32 @@ class JdbcStateTable(
       table, keys, batchSize = 500, dialect = dialect)
   }
 
-  /** D1: per-row full-tuple conditional delete; the per-statement
+  /** D1: per-tuple full-tuple conditional delete; the per-statement
     * update counts from the driver ARE the survivor report (a row whose
     * stored tuple changed deletes 0 rows — ST5), so no second query.
     *
-    * `processed` must be tuple-unique (the queue contract — it is a
-    * drained keyed batch): a duplicated tuple would count its second
-    * copy as a survivor here, where the dataframe-side
-    * `StateOps.deleteIfUnmodified` anti-join would not. */
+    * One statement per DISTINCT processed tuple, and a tuple's copies
+    * share its outcome: duplicated processed tuples count with
+    * multiplicity exactly as `StateOps.deleteIfUnmodified`'s anti-join
+    * counts them (per-row statements would count a matched tuple's
+    * second copy as a survivor, its row being gone already). */
   override def deleteWhereUnmodified(processed: DataFrame): Long = {
-    val rows = collectBounded(processed, "deleteWhereUnmodified")
-    if (rows.isEmpty) 0L
+    // binary columns collect as arrays, which compare by reference
+    val tuples = collectBounded(processed, "deleteWhereUnmodified")
+      .groupBy(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }).values.toSeq
+    if (tuples.isEmpty) 0L
     else withConnection { conn =>
       val fields = schema.fields
       val ps = conn.prepareStatement(JdbcUpsertSink.deleteIfUnmodifiedSql(
         table, cols, JdbcUpsertSink.placeholders(fields, dialect)))
       try {
         val bind = JdbcUpsertSink.binder(conn, ps, fields, dialect)
-        rows.foreach { row =>
+        tuples.foreach { copies =>
           var i = 0
-          while (i < fields.length) { bind(row, i); i += 1 }
+          while (i < fields.length) { bind(copies.head, i); i += 1 }
           ps.addBatch()
         }
         val counts = ps.executeBatch()
@@ -401,7 +407,7 @@ class JdbcStateTable(
           s"JDBC driver returned SUCCESS_NO_INFO for batched deletes on " +
             s"$table; deleteWhereUnmodified needs real update counts")
         conn.commit()
-        counts.count(_ == 0).toLong
+        counts.zip(tuples).collect { case (0, copies) => copies.size.toLong }.sum
       } finally ps.close()
     }
   }

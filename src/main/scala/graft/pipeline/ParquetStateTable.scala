@@ -51,11 +51,31 @@ class ParquetStateTable(
 
   def latestVersion: Option[Long] = committedVersions().lastOption.map(_._1)
 
-  /** Newest committed snapshot, if any. */
+  /** Newest committed snapshot, if any. The version directory is listed
+    * on the driver and read under the schema Spark recorded in a data
+    * file's footer, so building the frame starts no Spark job (schema
+    * inference runs one); a directory whose files carry no such footer
+    * entry falls back to `spark.read.parquet`. */
   override def read(): Option[DataFrame] =
     committedVersions().lastOption.map { case (_, p) =>
-      spark.read.parquet(p.toString)
+      val listed = BucketedStateTable.listBuckets(fs, Seq(0 -> p))
+      listed.flatMap(_.files).headOption.flatMap(f => footerSchema(f.getPath)) match {
+        case Some(schema) => BucketedStateTable.scanBuckets(spark, listed, Some(schema))
+        case None         => spark.read.parquet(p.toString)
+      }
     }
+
+  /** The Catalyst schema Spark wrote into a parquet file's footer. */
+  private def footerSchema(file: Path): Option[org.apache.spark.sql.types.StructType] = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        file, spark.sparkContext.hadoopConfiguration))
+    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(
+        org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(json)).toOption)
+      .collect { case s: org.apache.spark.sql.types.StructType => s }
+    finally reader.close()
+  }
 
   /** Newest committed snapshot or an empty frame shaped like `like`. */
   override def readOrEmpty(like: DataFrame): DataFrame =

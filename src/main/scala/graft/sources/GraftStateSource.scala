@@ -285,9 +285,9 @@ class GraftStateSqlTable(
       // SQL DELETE removes rows where the condition IS TRUE; filter()
       // keeps exactly those (null condition rows survive), and the
       // full-tuple verb deletes them bucket-pruned under the protocol.
-      // PERSISTED: the verb evaluates its `processed` frame three times
-      // (dirty-bucket probe, survivor count, commit write) — without
-      // the cache each pass re-runs the filtered FULL-TABLE scan
+      // PERSISTED: the verb evaluates its `processed` frame twice
+      // (dirty-bucket probe, commit write) — without the cache each
+      // pass re-runs the filtered FULL-TABLE scan
       val matching = current.filter(cond)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       try t.deleteWhereUnmodified(matching)

@@ -481,6 +481,109 @@ class PipelineSpec extends SparkSpec {
       batchSize = EnrichmentPipeline.MaxDriverBatch)
   }
 
+  // ── Spark jobs per stage of one reporting cycle ───────────────────────
+
+  /** One `ListIdentifiers` page over `(number, datestamp)` headers:
+    * qucosa ids unless `foreign`, every third one in a set, every
+    * seventh one deleted. */
+  private def headerPage(hs: Seq[(Int, String)], token: Option[String],
+      foreign: Seq[Int] = Nil): String = {
+    def header(id: String, n: Int, d: String) = {
+      val status = if (n % 7 == 0) " status=\"deleted\"" else ""
+      val sets = if (n % 3 == 0) s"<setSpec>set:${n % 2}</setSpec>" else ""
+      s"<header$status><identifier>$id</identifier><datestamp>$d</datestamp>$sets</header>"
+    }
+    val body = hs.map { case (n, d) => header(s"oai:example.org:qucosa:$n", n, d) } ++
+      foreign.map(n => header(s"oai:example.org:other-$n", n, "2024-02-01T00:00:00Z"))
+    val tok = token.fold("<resumptionToken/>")(t =>
+      s"""<resumptionToken completeListSize="1000" cursor="0">$t</resumptionToken>""")
+    s"""<?xml version="1.0" encoding="UTF-8"?>
+       |<OAI-PMH xmlns="http://www.openarchives.org/OAI/2.0/">
+       |  <responseDate>2024-03-01T10:00:00Z</responseDate>
+       |  <request verb="ListIdentifiers" metadataPrefix="oai_dc">http://h/oai</request>
+       |  <ListIdentifiers>${body.mkString("\n")}$tok</ListIdentifiers>
+       |</OAI-PMH>""".stripMargin
+  }
+
+  /** Runs `body` and returns its result with the call sites of the Spark
+    * jobs it started. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        sites.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("callSite.short")))
+          .getOrElse(e.stageInfos.headOption.fold("?")(_.name)))
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      BenchMetrics.drainListenerBus(spark.sparkContext)
+      (r, sites.toArray.toSeq.map(_.toString))
+    }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("one reporting cycle over a 64-bucket state runs its pinned number of Spark jobs") {
+    val dir = tmp()
+    val headers = new BucketedStateTable(spark, s"$dir/headers",
+      Seq("record_identifier"), numBuckets = 64)
+    val reporting = new BucketedStateTable(spark, s"$dir/reporting",
+      Seq("record_identifier"), numBuckets = 64)
+    val runs = new ParquetStateTable(spark, s"$dir/runs")
+    val harvest = new HarvestPipeline(spark, headers, runs, "http://h/oai",
+      headerFilter = qucosaFilter)
+    val enrich = new EnrichmentPipeline(spark, headers, reporting, batchSize = 40)
+    val docs = Seq("7455", "13", "31789", "31790")
+      .map(n => fixture(s"/mets/qucosa$n-mets.xml"))
+    // every fifth document is missing, the rest cycle over the fixtures
+    // (31789 has no mandator, so it is rejected)
+    val fetchDoc = new DocumentFetcher {
+      def apply(localId: String): Option[String] = {
+        val n = localId.stripPrefix("qucosa:").toInt
+        if (n % 5 == 0) None else Some(docs(n % docs.size))
+      }
+    }
+    def day(d: Int) = f"2024-01-$d%02dT00:00:00Z"
+    // seed: a 60-header queue, 40 of them enriched
+    harvest.runOnce(fetcher(Map("metadataPrefix" ->
+      headerPage((100 until 160).map(_ -> day(1)), Some("t1")))), ts("2024-03-01 10:00:00"))
+    enrich.runOnce(fetchDoc)
+
+    val (pb, processJobs) = jobsOf(enrich.processBatch(fetchDoc).get)
+    // the page re-harvests three of the in-flight ids with a new
+    // datestamp, adds 20 new ids and 5 foreign ones the filter drops
+    val page = headerPage(Seq(141, 142, 143).map(_ -> day(2)) ++
+      (160 until 180).map(_ -> day(2)), Some("t2"), foreign = 1 to 5)
+    val (run, harvestJobs) = jobsOf(harvest.runOnce(
+      fetcher(Map("resumptionToken=t1" -> page)), ts("2024-03-01 11:00:00")))
+    val (summary, commitJobs) = jobsOf(enrich.commit(pb))
+
+    // the same outcome as every earlier layout of the cycle
+    assert(run.succeeded && run.harvestedHeaders == 23L)
+    assert(summary == EnrichmentSummary(processed = 20, reported = 12,
+      rejected = 8, notRemoved = 3))
+    val queue = headers.read().get.select("record_identifier", "datestamp")
+      .collect().map(r => r.getString(0) -> r.getTimestamp(1)).toMap
+    assert(queue.size == 23)
+    Seq(141, 142, 143).foreach(n => assert(
+      queue(s"oai:example.org:qucosa:$n") == ts("2024-01-02 00:00:00")))
+    assert(reporting.read().get.count() == 36L)
+
+    // the counts come from rows the driver holds and the conditional
+    // delete reads its buckets once, so the only jobs left are the
+    // projections, the checkpoint read and the writes
+    def pinned(what: String, sites: Seq[String], n: Int) =
+      assert(sites.size == n, s"$what ran ${sites.size} jobs, pinned at $n: " +
+        sites.mkString(" | "))
+    pinned("processBatch", processJobs, 2)
+    pinned("runOnce", harvestJobs, 7)
+    pinned("commit", commitJobs, 5)
+  }
+
   // ── OaiHeaderFilters: the named F1 plug-point registry ────────────────
 
   test("header filters: named registry resolves builtins, takes third-party filters, rejects typos") {

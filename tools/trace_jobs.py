@@ -1,13 +1,18 @@
 #!/usr/bin/env python3
-"""Per-job view of a perfbench trace.
+"""Per-job view of a perfbench trace, or a per-span comparison of two.
 
     python3 tools/trace_jobs.py .bench_build/traces/<workload>-seed<n>.jsonl
+    python3 tools/trace_jobs.py A.jsonl B.jsonl
 
 A `perfbench/run.py --trace 1` run writes its spans and Spark jobs as
-JSON lines. This prints every job in start order with the span it ran
-under (as a path from the op down), its wall time, task count and
-executor CPU, then the same totals per span path and for the whole
-trace. A job no span claimed is listed under "-".
+JSON lines. Given one trace, this prints every job in start order with
+the span it ran under (as a path from the op down), its wall time, task
+count and executor CPU, then the same totals per span path and for the
+whole trace. A job no span claimed is listed under "-".
+
+Given two traces (say, before and after a change), it prints jobs,
+tasks and CPU per span path for A, for B and the difference B - A,
+plus the totals.
 
 Many short jobs with many tasks and little CPU point at a per-task
 floor (scheduling and task deserialization), not at work.
@@ -41,7 +46,43 @@ def span_path(spans, span_id):
     return " > ".join(reversed(names)) if names else "-"
 
 
+def wall_s(job):
+    return max(0.0, (job["end_ms"] - job["start_ms"]) / 1000.0)
+
+
+def span_totals(spans, jobs):
+    """span path -> [jobs, wall_s, tasks, cpu_s]"""
+    totals = defaultdict(lambda: [0, 0.0, 0, 0.0])
+    for j in jobs:
+        t = totals[span_path(spans, int(j["span"]))]
+        t[0] += 1
+        t[1] += wall_s(j)
+        t[2] += int(j["tasks"])
+        t[3] += float(j["cpu_s"])
+    return totals
+
+
+def compare(path_a, path_b):
+    a, b = (span_totals(*load(p)) for p in (path_a, path_b))
+    head = f"{'jobs':>5} {'tasks':>6} {'cpu_s':>7}"
+    print(f"{'A: ' + head:>24}  {'B: ' + head:>24}  {'B-A: ' + head:>26}  span")
+
+    def row(ta, tb, name):
+        d = [tb[0] - ta[0], tb[2] - ta[2], tb[3] - ta[3]]
+        print(f"   {ta[0]:>5} {ta[2]:>6} {ta[3]:>7.3f}     {tb[0]:>5} {tb[2]:>6} {tb[3]:>7.3f}"
+              f"       {d[0]:>+5} {d[1]:>+6} {d[2]:>+7.3f}  {name}")
+
+    zero = [0, 0.0, 0, 0.0]
+    for path in sorted(set(a) | set(b), key=lambda p: -max(a.get(p, zero)[0], b.get(p, zero)[0])):
+        row(a.get(path, zero), b.get(path, zero), path)
+    total = lambda t: [sum(v[i] for v in t.values()) for i in range(4)]
+    row(total(a), total(b), "(all)")
+    return 0
+
+
 def main(argv):
+    if len(argv) == 3:
+        return compare(argv[1], argv[2])
     if len(argv) != 2:
         print(__doc__.strip(), file=sys.stderr)
         return 2
@@ -50,18 +91,11 @@ def main(argv):
                  default=jobs[0]["start_ms"] if jobs else 0.0)
 
     print(f"{'job':>5} {'start_s':>8} {'wall_s':>7} {'tasks':>6} {'cpu_s':>7}  span")
-    totals = defaultdict(lambda: [0, 0.0, 0, 0.0])
     for j in jobs:
         path = span_path(spans, int(j["span"]))
-        wall = max(0.0, (j["end_ms"] - j["start_ms"]) / 1000.0)
-        tasks, cpu = int(j["tasks"]), float(j["cpu_s"])
         print(f"{int(j['job']):>5} {(j['start_ms'] - origin) / 1000.0:>8.3f} "
-              f"{wall:>7.3f} {tasks:>6} {cpu:>7.3f}  {path}")
-        t = totals[path]
-        t[0] += 1
-        t[1] += wall
-        t[2] += tasks
-        t[3] += cpu
+              f"{wall_s(j):>7.3f} {int(j['tasks']):>6} {float(j['cpu_s']):>7.3f}  {path}")
+    totals = span_totals(spans, jobs)
 
     print()
     print(f"{'jobs':>5} {'wall_s':>8} {'tasks':>6} {'cpu_s':>7}  span")
