@@ -337,6 +337,19 @@ object StateOps {
       .drop(MaxCol)
   }
 
+  /** [[retentionKeepLatest]] over rows the driver already holds — a
+    * checkpoint log of a few dozen rows — with the same predicate: a
+    * row survives if its `tsCol` is after `cutoff` or NULL, or its
+    * `seqCol` equals the maximum non-NULL sequence. No Spark job. */
+  def retentionKeepLatestRows(rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType, seqCol: String,
+      tsCol: String, cutoff: java.sql.Timestamp): Seq[org.apache.spark.sql.Row] = {
+    val (seq, ts) = (schema.fieldIndex(seqCol), schema.fieldIndex(tsCol))
+    val maxSeq = rows.filterNot(_.isNullAt(seq)).map(_.getLong(seq)).maxOption
+    rows.filter(r => r.isNullAt(ts) || r.getTimestamp(ts).after(cutoff) ||
+      (!r.isNullAt(seq) && maxSeq.contains(r.getLong(seq))))
+  }
+
   /** A1/S3 — newest row by insertion sequence (`ORDER BY ID DESC LIMIT 1`;
     * reference `PostgrePersistenceService.java:94-139`). Insertion order,
     * not timestamp order, decides (reference test

@@ -17,14 +17,16 @@ import graft.operators.StateOps
   *
   * Layout (a minimal transactional-table commit log, the same shape a
   * format like Delta provides): `_commits/` holds one manifest per
-  * commit — bucket -> the data commit holding its rows — and
-  * `data/c<N>/` one directory per bucket a commit wrote;
+  * commit — bucket -> the data commit and the file holding its rows —
+  * and `data/c<N>/` one file per bucket a commit wrote;
   * [[StateManifest]] owns the manifest format and the path convention.
-  * A commit writes its dirty buckets' new contents under one
-  * `data/c<N>` directory, then publishes atomically by renaming a
-  * temp manifest into `_commits/` — readers resolve the newest manifest
-  * and read exactly one directory per bucket, so a crash mid-write
-  * leaves an unreferenced orphan (pruned later) and never a torn state.
+  * A commit writes its dirty buckets' new contents as files at their
+  * final paths in one `data/c<N>` directory ([[BucketWriter]]), then
+  * publishes atomically by renaming a temp manifest into `_commits/` —
+  * the rename is the only commit step. Readers resolve the newest
+  * manifest and open exactly the files it names, without a listing, so
+  * a crash mid-write leaves an unreferenced orphan (pruned later) and
+  * never a torn state.
   *
   * Sizing at 100 TB: pick `numBuckets ≈ stateBytes / targetBucketBytes`
   * with a 1-16 GB target bucket (e.g. 16,384 buckets for 100 TB at
@@ -256,12 +258,13 @@ class BucketedStateTable(
 
   /** A manifest carrying this handle's layout and retention lines. */
   private def manifest(id: Long, buckets: Map[Int, Long],
+      files: Map[Int, StateManifest.DataFile],
       schemaJson: Option[String], bucketStats: Map[Int, String] = Map.empty,
       layout: Int = numBuckets, splitFactor: Option[Int] = None,
       splitBasedOn: Option[Long] = None): StateManifest =
     StateManifest(id, Some(layout), Some(effBucketCols), Some(keyCols),
       Some(keepCommits), Some(retentionFloorMillis), splitFactor,
-      splitBasedOn, statsCols, schemaJson, bucketStats, buckets)
+      splitBasedOn, statsCols, schemaJson, bucketStats, buckets, files)
 
   /** The bucket count `m` was written under (a manifest predating the
     * `numBuckets=` line: this handle's). */
@@ -329,7 +332,7 @@ class BucketedStateTable(
     * onto the new head and republishes instead of failing — only true
     * overlaps (and layout/schema changes) reach the caller. */
   private def writeManifest(m: StateManifest, basedOn: Long): Unit = {
-    fs.mkdirs(StateManifest.commitsDir(root))
+    // `create` makes the missing `_commits/` itself
     val tmp = StateManifest.tempManifestPath(root, m.commitId)
     val out = fs.create(tmp, true)
     try out.write(m.render.getBytes("UTF-8")) finally out.close()
@@ -379,11 +382,10 @@ class BucketedStateTable(
     readSized(m, buckets)._1
 
   /** [[readFrom]] plus the on-disk bytes of the buckets it read, which
-    * the driver listing returns for free and [[writeBuckets]] sizes its
-    * task count by. */
+    * the manifest records and [[writeBuckets]] sizes its task count by. */
   private def readSized(m: StateManifest,
       buckets: Seq[Int]): (Option[DataFrame], Long) = {
-    val listed = BucketedStateTable.listBuckets(fs, m.bucketDirs(root, buckets))
+    val listed = BucketedStateTable.filesOf(fs, m.locations(root, buckets))
     // Read under the manifest's RECORDED schema when it carries one:
     // after a widening merge or [[widenTo]], clean buckets still hold
     // files written under the narrower pre-widening shape, and the
@@ -749,7 +751,7 @@ class BucketedStateTable(
     * index lookup needs. `probe` must carry the table's BUCKET columns
     * (the full key when `bucketCols` was not narrowed); `like` shapes
     * the empty result. A small batch probed against 100 TB of seen-state reads a
-    * few bucket directories, never the table
+    * few bucket files, never the table
     * ([[graft.ops.Dedup.incrementalExact]] is the canonical caller).
     * The returned plan is pinned to the resolved commit's files, so a
     * concurrent commit does not shift it mid-query (old commits
@@ -863,29 +865,17 @@ class BucketedStateTable(
 
   // ---- commit -------------------------------------------------------
 
-  /** Per-bucket zone-map payloads for the `written` buckets of data
-    * commit `next` — row count, bytes, and min/max/null-count for every
-    * `statsCols` column present in `rowSchema` with a
-    * [[ZoneMaps.supported]] type. ONE column-pruned aggregation job
-    * over the freshly-written files (count-star and min/max ride the
-    * parquet footers — no full data-page scan of wide rows) plus one
-    * driver listing per written bucket for bytes; both are bounded
-    * by the DIRTY set, never the table. The collect is ≤ one row per
-    * dirty bucket — the same bounded-driver-read shape as [[stats]]. */
-  private def collectBucketStats(next: Long, written: Seq[Int],
-      rowSchema: org.apache.spark.sql.types.StructType): Map[Int, String] =
-    bucketStatsOf(written.map(b => b -> StateManifest.bucketDir(root, next, b)),
-      statsEligible(statsCols, rowSchema), rowSchema)
-
-  /** The listing + scan half both stats producers share: lists `dirs`,
-    * scans them under the KNOWN `rowSchema` (footer-driven schema
-    * inference — a whole extra Spark job, measured in
-    * SCALE_PROBE_STATSCOST.json — has nothing to add) with each row's
-    * bucket as the index's partition value, and aggregates. */
-  private def bucketStatsOf(dirs: Seq[(Int, Path)],
+  /** Zone maps of a snapshot's files: scans `locs` under the KNOWN
+    * `rowSchema` (footer-driven schema inference — a whole extra Spark
+    * job, measured in SCALE_PROBE_STATSCOST.json — has nothing to add)
+    * with each row's bucket as the index's partition value, and
+    * aggregates. A commit needs none of this: its bucket writer
+    * computes the zone maps of the files as it writes them
+    * ([[ZoneMaps.Collector]]). */
+  private def bucketStatsOf(locs: Seq[StateManifest.Location],
       eligible: Seq[org.apache.spark.sql.types.StructField],
       rowSchema: org.apache.spark.sql.types.StructType): Map[Int, String] = {
-    val listed = BucketedStateTable.listBuckets(fs, dirs)
+    val listed = BucketedStateTable.filesOf(fs, locs)
     statsAggRows(
       BucketedStateTable.scanBuckets(spark, listed, Some(rowSchema),
         withBucket = true),
@@ -899,9 +889,10 @@ class BucketedStateTable(
       .flatMap(c => rowSchema.fields.find(_.name == c))
       .filter(f => ZoneMaps.supported(f.dataType))
 
-  /** The ONE stats aggregation both producers share: `df` must carry
+  /** The stats aggregation of [[analyzeStats]]: `df` must carry
     * [[BucketCol]]; one column-pruned job, ≤ one collected row per
-    * bucket (the same bounded driver shape as [[stats]]). */
+    * bucket (the same bounded driver shape as [[stats]]). Its bounds are
+    * the ones [[ZoneMaps.Collector]] records at write time. */
   private def statsAggRows(df: DataFrame,
       eligible: Seq[org.apache.spark.sql.types.StructField],
       bytes: Map[Int, Long]): Map[Int, String] = {
@@ -946,8 +937,8 @@ class BucketedStateTable(
     * byte of data — the `ANALYZE` verb for tables created before
     * `statsCols` (or relayouted by a stats-less handle): one
     * column-pruned aggregation job over the resolved buckets (reads
-    * only `cols` plus footers), one recursive listing per referenced
-    * commit dir for bytes, then a METADATA-ONLY manifest publish
+    * only `cols` plus footers), bytes from the manifest (or a listing
+    * of each legacy-layout bucket directory), then a METADATA-ONLY manifest publish
     * carrying the same pointers plus the fresh zone-map lines. A commit
     * racing the publish retries like [[widenTo]]; stats survive the
     * retry only for buckets whose POINTER still matches the analyzed
@@ -970,7 +961,7 @@ class BucketedStateTable(
         s"analyzeStats: none of [${cols.mkString(",")}] is a " +
           s"supported stats column of ${rec.fieldNames.mkString(",")}")
       if (m0.buckets.isEmpty) return 0
-      val fresh = bucketStatsOf(m0.bucketDirs(root), eligible, rec)
+      val fresh = bucketStatsOf(m0.locations(root), eligible, rec)
       var attempts = 0
       while (true) {
         // A RELAYOUT (split/coalesce/rebucket) landing mid-analyze
@@ -1002,7 +993,7 @@ class BucketedStateTable(
           // the metadata-only republish (the handle's own count
           // describes the layout it was constructed for, which may
           // just have died).
-          writeManifest(manifest(next, head.buckets, head.schemaJson,
+          writeManifest(manifest(next, head.buckets, head.files, head.schemaJson,
               bucketStats = head.bucketStats ++ valid,
               layout = layoutOf(head)),
             basedOn = head.commitId)
@@ -1029,16 +1020,18 @@ class BucketedStateTable(
   private val maxRebases = 5
 
   /** THE bucket-file write every data commit and relayout shares, so
-    * their write options, task rule and listing can never drift: hash
-    * `rows` into `layout` buckets, write each bucket's rows as ONE
-    * key-sorted file under data commit `next`, and return the bucket
-    * ids written (the listing is the truth — a bucket receiving no rows
-    * materializes no directory). Rows are SORTED by key within each
-    * bucket file, so parquet row-group min/max stats prune a point or
-    * range probe INSIDE a multi-GB bucket — readForKeys narrows to the
-    * bucket directory, the footer stats narrow further to the row
-    * groups holding the keys (free at write time: the sort is per
-    * already-shuffled partition, no extra exchange).
+    * their write options, task rule and file layout can never drift:
+    * hash `rows` into `layout` buckets and write each bucket's rows as
+    * ONE key-sorted file, flat in data commit `next`'s directory, with
+    * [[BucketWriter]] — straight at the final path, no output committer
+    * and no listing afterwards. A bucket receiving no rows writes no
+    * file. Rows are SORTED by key within each bucket file, so parquet
+    * row-group min/max stats prune a point or range probe INSIDE a
+    * multi-GB bucket — readForKeys narrows to the bucket file, the
+    * footer stats narrow further to the row groups holding the keys
+    * (free at write time: the sort is per already-shuffled partition,
+    * no extra exchange). With `statsCols` set the writer also returns
+    * each file's zone map, so a zone-mapped commit runs no stats job.
     *
     * Task count: `min(buckets, max(defaultParallelism, ceil(bytes /
     * advisoryPartitionSizeInBytes)))` for `buckets` dirty buckets
@@ -1050,35 +1043,51 @@ class BucketedStateTable(
     * `executorDeserializeTime` over 84 tasks), so one task per dirty
     * bucket made that write take 1.5 s against 0.78 s with 4 tasks on
     * a 4-core host. Never fewer tasks than cores: a size-adaptive count
-    * below the core count serializes the per-file cost (writer init +
-    * footer) onto fewer cores than the host has. Never more than one
-    * task per bucket: multi-GB buckets at 100 TB keep one task each.
+    * below the core count serializes the per-file cost onto fewer
+    * cores than the host has. Never more than one task per bucket:
+    * multi-GB buckets at 100 TB keep one task each.
+    *
+    * The per-file cost is writer init and footer, and on the local
+    * filesystem mostly process forks: without libhadoop (no
+    * `NativeIO`), Hadoop's `RawLocalFileSystem.setPermission` runs
+    * `chmod` as a child process for every file and directory it
+    * creates, and a checksummed file is two files. Through Hadoop's
+    * committer a 95-bucket merge forked `chmod` about 300 times (the
+    * bucket directory, the file and its `.crc`, each staged and
+    * renamed) for 2.1–2.3 s of thread time inside `chmod` in a
+    * 1.06–1.22 s write; the flat layout drops the directory per
+    * bucket and the staging, so a commit creates one directory and a
+    * file plus its `.crc` per bucket.
     *
     * `afterExchange` runs on the bucket-partitioned rows (which carry
     * `__bucket`) in the write's result stage, after its one exchange:
-    * a per-bucket step placed there needs no shuffle of its own, and
-    * an observation placed there is applied once per task. Returns the
-    * written buckets and the schema of the written rows. */
+    * a per-bucket step placed there needs no shuffle of its own. Rows
+    * it marks with a true [[BucketWriter.CountCol]] are counted, not
+    * written. */
   private def writeBuckets(rows: DataFrame, layout: Int, buckets: Int,
       bytes: BigInt, next: Long,
-      afterExchange: DataFrame => DataFrame = identity)
-      : (Seq[Int], org.apache.spark.sql.types.StructType) = {
-    val out = StateManifest.dataCommitDir(root, next)
+      afterExchange: DataFrame => DataFrame = identity): BucketWriter.Result = {
     val advisory = spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val bySize = (bytes + advisory - 1) / advisory
     val tasks = math.min(buckets,
       bySize.max(spark.sparkContext.defaultParallelism).min(Int.MaxValue).toInt)
-    val written = afterExchange(rows.withColumn(BucketCol, bucketIn(layout))
+    val planned = afterExchange(rows.withColumn(BucketCol, bucketIn(layout))
       .repartition(math.max(tasks, 1), col(BucketCol)))
-    written.sortWithinPartitions(BucketCol, keyCols: _*)
-      .write.partitionBy(BucketCol).mode("errorifexists").parquet(out.toString)
-    (fs.listStatus(out).toSeq.filter(_.isDirectory)
-      .flatMap(s => StateManifest.bucketOf(s.getPath.getName))
-      .sorted,
-      org.apache.spark.sql.types.StructType(
-        written.schema.filterNot(_.name == BucketCol)))
+      .sortWithinPartitions(BucketCol, keyCols: _*)
+    BucketWriter.write(spark, planned,
+      fs.makeQualified(StateManifest.dataCommitDir(root, next)), statsCols)
   }
+
+  /** The manifest fields of a write: pointers, files and (with
+    * `statsCols`) zone maps of the buckets it wrote into data commit
+    * `next`. */
+  private def pointersOf(w: BucketWriter.Result, next: Long)
+      : (Map[Int, Long], Map[Int, StateManifest.DataFile], Map[Int, String]) =
+    (w.files.map(_.bucket -> next).toMap,
+      w.files.map(f => f.bucket -> StateManifest.DataFile(f.name, f.bytes)).toMap,
+      if (statsCols.isEmpty) Map.empty
+      else w.files.map(f => f.bucket -> ZoneMaps.encode(f.stat)).toMap)
 
   /** Catalyst's size estimate of `rows`, for the full rewrites
     * ([[replaceAll]], [[importFrom]]) that read no buckets to list: a
@@ -1088,9 +1097,10 @@ class BucketedStateTable(
     rows.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Write `rows` as the new contents of exactly the `dirty` buckets and
-    * publish. Buckets in `dirty` that end up with zero rows drop out of
-    * the manifest (partitioned writes materialize no empty directories —
-    * the listing after the write is the truth).
+    * publish; returns the commit and the rows `afterExchange` marked
+    * for counting. Buckets in `dirty` that end up with zero rows drop
+    * out of the manifest (the writer writes no empty files, and its
+    * task results are the truth).
     *
     * `planBase` is the manifest the mutation READ its current-bucket
     * rows from (None for a creating write or a read-less full rewrite,
@@ -1112,10 +1122,11 @@ class BucketedStateTable(
   private def commit(rows: DataFrame, dirty: Seq[Int], dirtyBytes: BigInt,
       planBase: Option[StateManifest] = None,
       publishGate: Option[PublishGate] = None,
-      afterExchange: DataFrame => DataFrame = identity): CommitStats = {
+      afterExchange: DataFrame => DataFrame = identity): (CommitStats, Long) = {
     val next = nextCommitId()
-    val (written, rowSchema) = writeBuckets(rows, numBuckets, dirty.size,
-      dirtyBytes, next, afterExchange)
+    val w = writeBuckets(rows, numBuckets, dirty.size, dirtyBytes, next, afterExchange)
+    val (pointers, files, zstats) = pointersOf(w, next)
+    val written = w.files.map(_.bucket)
     // A bucket written OUTSIDE the dirty set means `rows` re-evaluated
     // differently between the dirty-bucket probe and this write (a
     // non-deterministic expression in the update lineage — rand() salt,
@@ -1128,24 +1139,18 @@ class BucketedStateTable(
         s"outside the dirty set ${dirty.sorted.mkString(",")} at $path — " +
         "the updates DataFrame is non-deterministic; materialize it " +
         "(cache/checkpoint) before mutating state")
-    // the base the publish is conditioned on: the manifest the mutation
-    // read its rows against when it has one; otherwise whatever is
-    // current here (a creating write, or replaceAll's deliberate
-    // full-overwrite semantics)
-    // zone maps for the rewritten buckets (one bounded job; see
-    // [[collectBucketStats]]) — computed ONCE, outside the publish
-    // loop: a rebase republishes the same data, so the same stats hold
-    val zstats: Map[Int, String] =
-      if (statsCols.isEmpty || written.isEmpty) Map.empty
-      else collectBucketStats(next, written, rowSchema)
     // gated publish (see [[PublishGate]]): everything above — the
-    // expensive bucket-file write and its stats — ran concurrently
+    // expensive bucket-file write and its zone maps — ran concurrently
     // with the gate owner's foreground work; nothing is observable
     // until the manifest rename below, so waiting HERE preserves the
     // sequential order's crash-consistency exactly (an abort leaves
     // only an unreferenced data dir, the crashed-commit shape prune
     // already cleans)
     publishGate.foreach(_.awaitPublish())
+    // the base the publish is conditioned on: the manifest the mutation
+    // read its rows against when it has one; otherwise whatever is
+    // current here (a creating write, or replaceAll's deliberate
+    // full-overwrite semantics)
     var base = planBase.orElse(currentManifest())
     beforePublish()
     var rebases = 0
@@ -1159,8 +1164,9 @@ class BucketedStateTable(
       val prev = base.map(_.buckets).getOrElse(Map.empty)
       try {
         writeManifest(manifest(manifestId,
-          prev -- dirty ++ written.map(_ -> next),
-          Some(rowSchema.json),
+          prev -- dirty ++ pointers,
+          base.map(_.files).getOrElse(Map.empty) -- dirty ++ files,
+          Some(w.schema.json),
           // clean buckets CARRY the base's stats; every dirty bucket's
           // stale entry drops even when this handle records none — a
           // stats-less rewrite must never leave another handle's
@@ -1184,7 +1190,7 @@ class BucketedStateTable(
         prune()
         val stats = CommitStats(manifestId, dirty, written, rebases)
         last = Some(stats)
-        return stats
+        return (stats, w.counted)
       } catch {
         case e: java.util.ConcurrentModificationException =>
           // tolerant read: the head may record a different layout (a
@@ -1273,9 +1279,7 @@ class BucketedStateTable(
         fs.delete(target, recursive)
         fs.delete(m, false)
       case Some(_) => () // condemned, still inside the floor
-      case None =>
-        fs.mkdirs(condemnedDir)
-        fs.create(m, true).close()
+      case None => fs.create(m, true).close() // makes `_condemned/` too
     }
   }
 
@@ -1528,7 +1532,7 @@ class BucketedStateTable(
         // metadata-only: no bucket moved, so every recorded zone map
         // still bounds its bucket exactly (the added column simply has
         // no stats anywhere — conservative, never pruned on)
-        writeManifest(manifest(next, base.buckets, Some(widened.json),
+        writeManifest(manifest(next, base.buckets, base.files, Some(widened.json),
             bucketStats = base.bucketStats),
           basedOn = base.commitId)
         prune()
@@ -1586,16 +1590,16 @@ class BucketedStateTable(
     * window over (bucket, full tuple) — a finer key than the bucket the
     * rows are already partitioned by, so it adds no shuffle — sees
     * whether each tuple has rows of either tag: a state row with no
-    * processed twin is kept, everything else is dropped before the
-    * write, and the processed rows with no state twin are the not-
-    * removed count. A null-safe `<=>` and a window partition group
-    * nulls alike. The count is an [[org.apache.spark.sql.Observation]]
-    * placed after the exchange, so it runs in the write's result stage,
-    * whose accumulator updates Spark applies once per partition even
-    * when a task or the stage re-runs (a map stage's would be applied
-    * again on a re-run). A processed column that is neither the stored
-    * type nor a lossless widening into it (which the union would widen
-    * the stored column to) takes the two-plan form instead. */
+    * processed twin is kept, a processed row with no state twin is
+    * marked for the writer to count ([[BucketWriter.CountCol]]), and
+    * everything else is dropped before the write. A null-safe `<=>`
+    * and a window partition group nulls alike. Each write task returns
+    * its count with its files, and the driver sums what the job's
+    * collect returns — one result per partition, the successful
+    * attempt's, however often a task or the stage re-runs. A processed
+    * column that is neither the stored type nor a lossless widening
+    * into it (which the union would widen the stored column to) takes
+    * the two-plan form instead. */
   override def deleteWhereUnmodified(processed: DataFrame): Long =
     BucketedStateTable.lockFor(lockKey).synchronized { withLease {
       withPinned(processed) { processed =>
@@ -1621,7 +1625,6 @@ class BucketedStateTable(
           val Tag = "__graft_tag"
           val seen = org.apache.spark.sql.expressions.Window
             .partitionBy((BucketCol +: cols).map(StateOps.qcol): _*)
-          val observed = org.apache.spark.sql.Observation("notRemoved")
           commit(
             cur.withColumn(Tag, lit(0))
               .unionByName(proc.select(aligned.flatten: _*).withColumn(Tag, lit(1))),
@@ -1629,11 +1632,11 @@ class BucketedStateTable(
             afterExchange = _
               .withColumn("__graft_min", min(Tag).over(seen))
               .withColumn("__graft_max", max(Tag).over(seen))
-              .observe(observed,
-                count_if(col(Tag) === 1 && col("__graft_min") === 1).as("n"))
-              .filter(col("__graft_max") === 0)
-              .drop(Tag, "__graft_min", "__graft_max"))
-          observed.get("n").asInstanceOf[Long]
+              // state rows without a processed twin, and processed rows
+              // without a state twin (counted, not written)
+              .filter(col("__graft_max") === 0 || col("__graft_min") === 1)
+              .withColumn(BucketWriter.CountCol, col(Tag) === 1)
+              .drop(Tag, "__graft_min", "__graft_max"))._2
         }
       }
       }
@@ -1702,17 +1705,17 @@ class BucketedStateTable(
     * the two operational questions a bucketed table raises at scale:
     * is a bucket skewed (rebucket / salt upstream), and is the table
     * over- or under-bucketed for its volume (`numBuckets ≈ bytes /
-    * 1–16 GB`, §10). File counts and byte sizes come from the driver
-    * listing of each bucket directory; row counts from parquet footers
-    * (a metadata-only `count()` — no data pages are read). Empty table
-    * → empty frame.
+    * 1–16 GB`, §10). File counts and byte sizes come from the
+    * manifest's file pointers (a legacy-layout bucket directory is
+    * listed); row counts from parquet footers (a metadata-only
+    * `count()` — no data pages are read). Empty table → empty frame.
     *
     * FAST PATH: when EVERY bucket of the current manifest carries a
     * zone-map payload (a stats-recording handle, or after
     * [[analyzeStats]]), rows and bytes come straight from the
-    * manifest — zero filesystem listings, zero jobs; file counts
+    * manifest — zero filesystem calls, zero jobs; file counts
     * report -1 (not recorded). One un-statted bucket falls back to
-    * the listing+footers path for the whole view, so the two sources
+    * the files+footers path for the whole view, so the two sources
     * are never mixed in one frame. */
   def stats(): DataFrame = {
     import spark.implicits._
@@ -1725,7 +1728,7 @@ class BucketedStateTable(
         }.toDF("bucket", "commit", "n_files", "total_bytes", "n_rows")
     }
     val listed = cur.toSeq.flatMap { m =>
-      BucketedStateTable.listBuckets(fs, m.bucketDirs(root))
+      BucketedStateTable.filesOf(fs, m.locations(root))
         .map(l => m.buckets(l.bucket) -> l)
     }
     // row counts in ONE job over every bucket dir (count-star over an
@@ -1773,7 +1776,7 @@ class BucketedStateTable(
             "createExclusive is the creating commit only")
       val next = nextCommitId()
       beforePublish()
-      writeManifest(manifest(next, Map.empty, Some(rowSchema.json)),
+      writeManifest(manifest(next, Map.empty, Map.empty, Some(rowSchema.json)),
         basedOn = 0L)
       last = Some(CommitStats(next, Nil, Nil))
     } }
@@ -1792,19 +1795,39 @@ class BucketedStateTable(
       read().foreach(cur => replaceAll(f(cur)))
     } }
 
-  /** Zone maps for a relayout's freshly-rewritten snapshot: a layout
-    * change rewrites EVERY bucket, so the new manifest's stats are
-    * rebuilt whole-table here (one bounded stats job over data the
-    * rewrite just produced) instead of silently dropping — a 100-TB
-    * table splitting its layout must not lose bucket pruning until the
-    * next incidental rewrite of each bucket. */
-  private def relayoutStats(snapshot: Option[DataFrame], written: Seq[Int],
-      next: Long): Map[Int, String] =
-    snapshot match {
-      case Some(df) if statsCols.nonEmpty && written.nonEmpty =>
-        collectBucketStats(next, written, df.schema)
-      case _ => Map.empty
-    }
+  /** The full rewrite every relayout shares: re-hash the current
+    * snapshot into `newNumBuckets` buckets under a fresh data commit and
+    * publish it, fenced on the snapshot's base (a commit landing during
+    * the rewrite withdraws the relayout — never a rebase: a layout
+    * change conflicts with everything). `splitFactor` records a
+    * split (`f`) or coalesce (`-f`) with its base. Zone maps come from
+    * the writer for every rewritten bucket, so a 100-TB table changing
+    * its layout keeps bucket pruning. Returns the published id. */
+  private def relayout(newNumBuckets: Int, splitFactor: Option[Int]): Long = {
+    val cur = currentManifest()
+    val basedOn = cur.map(_.commitId).getOrElse(0L)
+    val (snapshot, bytes) = cur.map(m => readSized(m, m.buckets.keys.toSeq))
+      .getOrElse((None, 0L))
+    val next = nextCommitId()
+    val (pointers, files, zstats) = snapshot.fold(
+      (Map.empty[Int, Long], Map.empty[Int, StateManifest.DataFile], Map.empty[Int, String]))(
+      df => pointersOf(writeBuckets(df, newNumBuckets, newNumBuckets, bytes, next), next))
+    beforePublish()
+    writeManifest(manifest(next, pointers, files,
+        snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
+        splitFactor = splitFactor,
+        splitBasedOn = splitFactor.map(_ => basedOn),
+        bucketStats = zstats,
+        layout = newNumBuckets),
+      basedOn)
+    next
+  }
+
+  /** This table under a new bucket count. */
+  private def relaidOut(newNumBuckets: Int): BucketedStateTable =
+    new BucketedStateTable(spark, path, keyCols, newNumBuckets,
+      keepCommits, retentionFloorMillis, bucketCols, leaseStaleMillis,
+      leaseAcquireTimeoutMillis, leaseStore, statsCols)
 
   /** Re-shard the table into `newNumBuckets` buckets IN PLACE — the
     * maintenance op a table that grew 100× needs once [[stats]] shows
@@ -1831,19 +1854,7 @@ class BucketedStateTable(
       // during the potentially hours-long rewrite must WITHDRAW this
       // relayout — reading the base afterwards would absorb the
       // interloper as basedOn and publish a snapshot missing its rows
-      val cur = currentManifest()
-      val basedOn = cur.map(_.commitId).getOrElse(0L)
-      val (snapshot, bytes) = cur.map(m => readSized(m, m.buckets.keys.toSeq))
-        .getOrElse((None, 0L))
-      val next = nextCommitId()
-      val written = snapshot.fold(Seq.empty[Int])(
-        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next)._1)
-      beforePublish()
-      writeManifest(manifest(next, written.map(_ -> next).toMap,
-          snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
-          bucketStats = relayoutStats(snapshot, written, next),
-          layout = newNumBuckets),
-        basedOn)
+      val next = relayout(newNumBuckets, splitFactor = None)
       // Truncate pre-rebucket manifests — through the same
       // condemn-then-reap shield prune() uses: a reader that listed a
       // manifest moments ago must still be able to open it and scan its
@@ -1854,9 +1865,7 @@ class BucketedStateTable(
       manifestFiles().filter(_._1 < next).foreach { case (id, st) =>
         condemnOrReap(s"m$id", st.getPath, recursive = false, now)
       }
-      new BucketedStateTable(spark, path, keyCols, newNumBuckets,
-        keepCommits, retentionFloorMillis, bucketCols, leaseStaleMillis,
-        leaseAcquireTimeoutMillis, leaseStore, statsCols)
+      relaidOut(newNumBuckets)
     } }
 
   /** Grow the layout by an integer `factor` (B → B·factor buckets) —
@@ -1886,29 +1895,9 @@ class BucketedStateTable(
     BucketedStateTable.lockFor(lockKey).synchronized { withLease {
       require(factor >= 2, s"splitBuckets wants a factor >= 2, got $factor")
       val newNumBuckets = math.multiplyExact(numBuckets, factor)
-      val cur = currentManifest()
-      val basedOn = cur.map(_.commitId).getOrElse(0L)
-      val (snapshot, bytes) = cur.map(m => readSized(m, m.buckets.keys.toSeq))
-        .getOrElse((None, 0L))
-      val next = nextCommitId()
-      val written = snapshot.fold(Seq.empty[Int])(
-        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next)._1)
-      // same publish-window seam as commit(): a relayout must detect a
-      // commit landing between its snapshot rewrite and its manifest
-      // publish — the rewrite is stale against it and must WITHDRAW
-      // (never rebase: a layout change conflicts with everything)
-      beforePublish()
-      writeManifest(manifest(next, written.map(_ -> next).toMap,
-          snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
-          splitFactor = Some(factor),
-          splitBasedOn = Some(basedOn),
-          bucketStats = relayoutStats(snapshot, written, next),
-          layout = newNumBuckets),
-        basedOn)
+      relayout(newNumBuckets, splitFactor = Some(factor))
       prune()
-      new BucketedStateTable(spark, path, keyCols, newNumBuckets,
-        keepCommits, retentionFloorMillis, bucketCols, leaseStaleMillis,
-        leaseAcquireTimeoutMillis, leaseStore, statsCols)
+      relaidOut(newNumBuckets)
     } }
 
   /** Shrink the layout by an integer `factor` (B → B/factor buckets) —
@@ -1936,27 +1925,9 @@ class BucketedStateTable(
           s"$numBuckets buckets do not — coalesce by a divisor, or " +
           "rebucket (history-truncating) for an arbitrary count")
       val newNumBuckets = numBuckets / factor
-      val cur = currentManifest()
-      val basedOn = cur.map(_.commitId).getOrElse(0L)
-      val (snapshot, bytes) = cur.map(m => readSized(m, m.buckets.keys.toSeq))
-        .getOrElse((None, 0L))
-      val next = nextCommitId()
-      val written = snapshot.fold(Seq.empty[Int])(
-        writeBuckets(_, newNumBuckets, newNumBuckets, bytes, next)._1)
-      // same publish-window discipline as splitBuckets: any interleaved
-      // commit withdraws the relayout (its rewrite is stale against it)
-      beforePublish()
-      writeManifest(manifest(next, written.map(_ -> next).toMap,
-          snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
-          splitFactor = Some(-factor),
-          splitBasedOn = Some(basedOn),
-          bucketStats = relayoutStats(snapshot, written, next),
-          layout = newNumBuckets),
-        basedOn)
+      relayout(newNumBuckets, splitFactor = Some(-factor))
       prune()
-      new BucketedStateTable(spark, path, keyCols, newNumBuckets,
-        keepCommits, retentionFloorMillis, bucketCols, leaseStaleMillis,
-        leaseAcquireTimeoutMillis, leaseStore, statsCols)
+      relaidOut(newNumBuckets)
     } }
 
   /** Export the current snapshot to `outPath` in `format` — the
@@ -2074,10 +2045,30 @@ object BucketedStateTable {
   private def lockFor(path: String): Object =
     locks.computeIfAbsent(path, _ => new Object)
 
-  /** One bucket directory's data files, as the driver listed them. */
+  /** One bucket's data files, as the manifest names them or the driver
+    * listed them. */
   private[graft] final case class BucketFiles(bucket: Int,
       files: Seq[org.apache.hadoop.fs.FileStatus]) {
     def bytes: Long = files.map(_.getLen).sum
+  }
+
+  /** The data files of `locs`, by location: a bucket file straight from
+    * its manifest pointer (path and size, no filesystem call), a legacy
+    * bucket directory by listing it ([[listBuckets]]). */
+  private[graft] def filesOf(fs: org.apache.hadoop.fs.FileSystem,
+      locs: Seq[StateManifest.Location]): Seq[BucketFiles] = {
+    val listed = listBuckets(fs,
+      locs.filter(_.bytes.isEmpty).map(l => l.bucket -> l.path))
+      .map(l => l.bucket -> l).toMap
+    lazy val blockSize = fs.getDefaultBlockSize(locs.head.path)
+    locs.map { l =>
+      l.bytes match {
+        case Some(n) =>
+          BucketFiles(l.bucket, Seq(new org.apache.hadoop.fs.FileStatus(
+            n, false, 1, blockSize, 0L, fs.makeQualified(l.path))))
+        case None => listed(l.bucket)
+      }
+    }
   }
 
   /** Lists each `(bucket, dir)` with ONE `listStatus` on the driver,
@@ -2214,7 +2205,8 @@ object BucketedStateTable {
 
   /** Resolve ONE committed snapshot of the table at `path` — the newest
     * manifest, or the manifest of `commit` (time travel) — to its
-    * concrete bucket-parquet directories, by bucket. A manifest is
+    * concrete bucket data, by bucket: each bucket's file, or its
+    * directory for a bucket written in the legacy layout. A manifest is
     * immutable once published and its rename was the atomic commit
     * point, so the returned path list IS one consistent snapshot no
     * matter what writers do afterwards (pruning retains `keepCommits`
@@ -2227,7 +2219,7 @@ object BucketedStateTable {
   def snapshotPaths(hadoopConf: org.apache.hadoop.conf.Configuration,
       path: String, commit: Option[Long] = None): Seq[String] =
     StateManifest.snapshot(hadoopConf, path, commit).toSeq
-      .flatMap(_.bucketDirs(new Path(path))).map(_._2.toString)
+      .flatMap(_.locations(new Path(path))).map(_.path.toString)
 
   /** The physical layout a writer must reproduce to mutate the table at
     * `path` — merge key, bucket columns, bucket count — as its newest
@@ -2278,7 +2270,7 @@ private[graft] final case class ListedFileIndex(
   private def statuses = parts.flatMap(_.files).map(_.fileStatus)
 
   override def rootPaths: Seq[Path] =
-    parts.flatMap(_.files.headOption).map(_.fileStatus.getPath.getParent)
+    parts.flatMap(_.files.headOption).map(_.fileStatus.getPath.getParent).distinct
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
@@ -2299,4 +2291,30 @@ private[graft] final case class ListedFileIndex(
   override def refresh(): Unit = ()
 
   override def sizeInBytes: Long = statuses.map(_.getLen).sum
+}
+
+private[graft] object ListedFileIndex {
+  /** Spark's own `InMemoryFileIndex` over data files the driver already
+    * holds — the `PartitioningAwareFileIndex` a DSv2 parquet scan
+    * needs. `roots` are `(path, files)`: a bucket file with itself, or
+    * a legacy bucket directory with its listed files. The index's
+    * status cache answers every root from `roots`, so building it lists
+    * nothing and starts no Spark job, however many roots there are
+    * (uncached, it lists them with a job past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`). Each
+    * root is its own base path, so no partition column is inferred. */
+  def partitionAware(spark: SparkSession,
+      roots: Seq[(Path, Array[org.apache.hadoop.fs.FileStatus])],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      options: Map[String, String])
+      : org.apache.spark.sql.execution.datasources.InMemoryFileIndex = {
+    val known = roots.toMap
+    new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+      spark, roots.map(_._1), options, schema,
+      new org.apache.spark.sql.execution.datasources.FileStatusCache {
+        override def getLeafFiles(p: Path) = known.get(p)
+        override def putLeafFiles(p: Path, files: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }, None, None)
+  }
 }

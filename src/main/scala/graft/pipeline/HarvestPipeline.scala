@@ -76,14 +76,21 @@ class HarvestPipeline(
 
   Tables.configure(spark)
 
-  /** Newest checkpoint (A1 top-1-by-sequence over the runs state).
-    * A committed-but-EMPTY runs table (a legal StateTable state — ops
-    * truncation, spec setup) falls back to the initial checkpoint like
-    * a never-written one, instead of throwing on `.head` of nothing. */
+  /** Newest checkpoint (A1 top-1-by-sequence over the runs state),
+    * picked on the driver from the runs table's driver-held rows
+    * ([[ParquetStateTable.readLocal]]): no Spark job while the newest
+    * version is the one this pipeline last wrote. A committed-but-EMPTY
+    * runs table (a legal StateTable state — ops truncation, spec setup)
+    * falls back to the initial checkpoint like a never-written one,
+    * instead of throwing on `.head` of nothing. */
   def lastRun(): OaiRunResult =
-    runsTable.read()
-      .flatMap(df =>
-        StateOps.top1BySeq(df, "id").as[OaiRunResult].collect().headOption)
+    runsTable.readLocal()
+      .flatMap { df =>
+        val id = df.schema.fieldIndex("id")
+        df.collect().filterNot(_.isNullAt(id)).maxByOption(_.getLong(id)).map(r =>
+          spark.createDataFrame(java.util.List.of(r), df.schema)
+            .as[OaiRunResult].collect().head)
+      }
       .getOrElse(OffsetStateMachine.initial)
 
   /** One poll iteration. `now` is injected (the reference's
@@ -156,20 +163,23 @@ class HarvestPipeline(
         val next = OffsetStateMachine.advance(last, page, now, fc3CompatibilityMode)
         // D2 retention with keep-latest runs in the same commit; cutoff =
         // start of current run minus the configured history length.
-        // ATOMIC read-union-retain-write (runsTable.update holds the
-        // table's write lock across the read and the write): a separate
-        // read() + write() would let a concurrent appender's checkpoint
-        // row vanish from the union — a backfill racing the poll loop
-        // would then resume from the older checkpoint, dropping a
-        // mid-pagination resumption token and the backlog behind it.
+        // ATOMIC read-union-retain-write (runsTable.updateLocal holds
+        // the table's write lock across the read and the write): a
+        // separate read() + write() would let a concurrent appender's
+        // checkpoint row vanish from the union — a backfill racing the
+        // poll loop would then resume from the older checkpoint,
+        // dropping a mid-pagination resumption token and the backlog
+        // behind it. The union and the retention run on the driver-held
+        // rows, so the write is the cycle's only runs-table job.
         val cutoff = new Timestamp(now.getTime - historyLengthHours * 3600_000L)
-        runsTable.update { cur =>
-          val runs = cur match {
-            case Some(df) => df.unionByName(Seq(next).toDF())
-            case None     => Seq(next).toDF()
-          }
-          StateOps.retentionKeepLatest(
-            runs, seqCol = "id", tsCol = "timestampOfRun", cutoff = lit(cutoff))
+        runsTable.updateLocal { cur =>
+          val nextRow = Seq(next).toDF()
+          val schema = cur.map(_.schema).getOrElse(nextRow.schema)
+          val runs = cur.toSeq.flatMap(_.collect()) ++
+            nextRow.select(schema.fieldNames.toSeq.map(col): _*).collect()
+          spark.createDataFrame(java.util.Arrays.asList(
+            StateOps.retentionKeepLatestRows(runs, schema, seqCol = "id",
+              tsCol = "timestampOfRun", cutoff = cutoff): _*), schema)
         }
 
         HarvestRunSummary(succeeded = true, uri, nHeaders, page.errors, Some(next))

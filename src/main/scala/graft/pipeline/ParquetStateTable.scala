@@ -37,19 +37,30 @@ class ParquetStateTable(
   // directory (relative, doubled slashes) share one lock
   private lazy val lockKey = fs.makeQualified(root).toUri.toString
 
-  private def committedVersions(): Seq[(Long, Path)] =
+  /** `(version, directory status)` of every committed version, oldest
+    * first. */
+  private def committedVersions(): Seq[(Long, org.apache.hadoop.fs.FileStatus)] =
     if (!fs.exists(root)) Nil
     else fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("v"))
       .flatMap { s =>
         val n = s.getPath.getName.drop(1)
         if (n.forall(_.isDigit) && fs.exists(new Path(s.getPath, "_SUCCESS")))
-          Some(n.toLong -> s.getPath)
+          Some(n.toLong -> s)
         else None
       }
       .sortBy(_._1)
 
   def latestVersion: Option[Long] = committedVersions().lastOption.map(_._1)
+
+  /** The rows of the version this handle last read or wrote through
+    * [[readLocal]] / [[updateLocal]], keyed by that version's number
+    * and directory mtime (a version another handle or process commits
+    * has another number). */
+  @transient @volatile private var held: Option[((Long, Long), DataFrame)] = None
+
+  private def key(v: (Long, org.apache.hadoop.fs.FileStatus)): (Long, Long) =
+    (v._1, v._2.getModificationTime)
 
   /** Newest committed snapshot, if any. The version directory is listed
     * on the driver and read under the schema Spark recorded in a data
@@ -57,12 +68,51 @@ class ParquetStateTable(
     * inference runs one); a directory whose files carry no such footer
     * entry falls back to `spark.read.parquet`. */
   override def read(): Option[DataFrame] =
-    committedVersions().lastOption.map { case (_, p) =>
-      val listed = BucketedStateTable.listBuckets(fs, Seq(0 -> p))
-      listed.flatMap(_.files).headOption.flatMap(f => footerSchema(f.getPath)) match {
-        case Some(schema) => BucketedStateTable.scanBuckets(spark, listed, Some(schema))
-        case None         => spark.read.parquet(p.toString)
+    committedVersions().lastOption.map { case (_, st) => readVersion(st.getPath) }
+
+  private def readVersion(p: Path): DataFrame = {
+    val listed = BucketedStateTable.listBuckets(fs, Seq(0 -> p))
+    listed.flatMap(_.files).headOption.flatMap(f => footerSchema(f.getPath)) match {
+      case Some(schema) => BucketedStateTable.scanBuckets(spark, listed, Some(schema))
+      case None         => spark.read.parquet(p.toString)
+    }
+  }
+
+  /** The newest committed snapshot as a driver-local frame, for a table
+    * small enough to hold on the driver (the harvest's checkpoint log):
+    * collected in one Spark job the first time a version is seen, then
+    * served from memory — no job — while it stays the newest committed
+    * version. Filters, projections and `collect` on the frame run on
+    * the driver. */
+  def readLocal(): Option[DataFrame] =
+    committedVersions().lastOption.map { v =>
+      held.collect { case (k, df) if k == key(v) => df }.getOrElse {
+        val df = readVersion(v._2.getPath)
+        val local = spark.createDataFrame(df.collectAsList(), df.schema)
+        held = Some(key(v) -> local)
+        local
       }
+    }
+
+  /** [[update]] over [[readLocal]]'s frame: `f` maps the driver-held
+    * current rows to the next snapshot, under the same per-path lock,
+    * so the read, `f` and the write stay one atomic read-modify-write.
+    * The snapshot is written as one file. When `f` returns a
+    * driver-local frame, that frame is what this handle holds for the
+    * version it wrote, and the next [[readLocal]] or [[updateLocal]]
+    * reads no file: the write is the only Spark job. */
+  def updateLocal(f: Option[DataFrame] => DataFrame): Long =
+    ParquetStateTable.lockFor(lockKey).synchronized {
+      val next = f(readLocal())
+      // small by contract: one file
+      val v = write(next.coalesce(1))
+      val versionDir = new Path(f"$path/v$v%08d")
+      held = next.queryExecution.optimizedPlan match {
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          Some(key(v -> fs.getFileStatus(versionDir)) -> next)
+        case _ => None
+      }
+      v
     }
 
   /** The Catalyst schema Spark wrote into a parquet file's footer. */

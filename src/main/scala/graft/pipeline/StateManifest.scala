@@ -25,8 +25,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   statsCols=<a,b>                  # only when zone maps are recorded
   *   schema=<StructType JSON>         # the row schema, one line
   *   zmap.<bucket>=<ZoneMaps JSON>    # per-bucket zone map, by bucket
-  *   <bucket>=<data commit>           # bucket pointers, by bucket
+  *   <bucket>=<data commit>,<file>,<bytes>   # bucket pointers, by bucket
   * }}}
+  * A bucket pointer names the one file the data commit wrote for the
+  * bucket and its size, so a reader opens the files without listing
+  * a directory. A bare `<bucket>=<data commit>` is a pointer written
+  * before the flat file layout: the bucket is the directory
+  * `data/c<commit>/__bucket=<bucket>/`, read by listing it.
   * The recorded schema lets a committed-but-EMPTY snapshot (a drained
   * queue) still present its shape; the layout and retention lines let a
   * handle-less writer (the DSv2 SQL surface) rebuild the exact table
@@ -54,7 +59,10 @@ final case class StateManifest(
     // verbatim so a republished manifest carries them byte for byte; a
     // bucket absent here is un-statted and pruning must keep it
     bucketStats: Map[Int, String] = Map.empty,
-    buckets: Map[Int, Long] = Map.empty) {
+    buckets: Map[Int, Long] = Map.empty,
+    // the file each pointer names, by bucket; a bucket absent here has a
+    // bare pointer (the directory layout)
+    files: Map[Int, StateManifest.DataFile] = Map.empty) {
 
   def render: String = {
     val sb = new StringBuilder
@@ -71,7 +79,9 @@ final case class StateManifest(
     if (statsCols.nonEmpty) line("statsCols", statsCols.mkString(","))
     schemaJson.foreach(line("schema", _))
     bucketStats.toSeq.sortBy(_._1).foreach { case (b, j) => line(s"zmap.$b", j) }
-    buckets.toSeq.sorted.foreach { case (b, c) => line(b.toString, c) }
+    buckets.toSeq.sorted.foreach { case (b, c) =>
+      line(b.toString, files.get(b).fold(c.toString)(f => s"$c,${f.name},${f.bytes}"))
+    }
     sb.toString
   }
 
@@ -90,12 +100,17 @@ final case class StateManifest(
       yield BucketedStateTable.Layout(kc, bucketCols.getOrElse(kc), nb,
         keepCommits, retentionFloorMillis, statsCols)
 
-  /** `(bucket, data directory)` of the `only` buckets this manifest
-    * holds (default: all), by bucket, under the table `root`. */
-  def bucketDirs(root: Path,
-      only: Iterable[Int] = buckets.keys): Seq[(Int, Path)] =
-    only.toSeq.sorted.flatMap(b =>
-      buckets.get(b).map(c => b -> StateManifest.bucketDir(root, c, b)))
+  /** Where the `only` buckets this manifest holds (default: all) live
+    * under the table `root`, by bucket. */
+  def locations(root: Path,
+      only: Iterable[Int] = buckets.keys): Seq[StateManifest.Location] =
+    only.toSeq.sorted.flatMap(b => buckets.get(b).map { c =>
+      files.get(b) match {
+        case Some(f) => StateManifest.Location(b,
+          new Path(StateManifest.dataCommitDir(root, c), f.name), Some(f.bytes))
+        case None => StateManifest.Location(b, StateManifest.bucketDir(root, c, b), None)
+      }
+    })
 
   /** The buckets a scan constrained by `filters` must read, by bucket
     * hash and zone maps ([[ZoneMaps.surviving]]) — always a superset of
@@ -111,19 +126,34 @@ final case class StateManifest(
 
 object StateManifest {
 
-  /** The partition column bucket directories are named by. */
+  /** The column a write carries each row's bucket in; directories of
+    * the legacy layout are named by it. */
   private[graft] val BucketCol = "__bucket"
+
+  /** The file a bucket pointer names, in its data commit's directory. */
+  final case class DataFile(name: String, bytes: Long)
+
+  /** One bucket of a snapshot on disk: its file and size, or (`bytes`
+    * None) the legacy directory that holds its files. */
+  final case class Location(bucket: Int, path: Path, bytes: Option[Long])
 
   def parse(text: String): StateManifest = {
     val kv = Map.newBuilder[String, String]
     val stats = Map.newBuilder[Int, String]
     val ptrs = Map.newBuilder[Int, Long]
+    val files = Map.newBuilder[Int, DataFile]
     text.linesIterator.filter(_.nonEmpty).foreach { l =>
       val i = l.indexOf('=')
       require(i > 0, s"malformed manifest line: $l")
       val k = l.substring(0, i)
       val v = l.substring(i + 1)
-      if (k.head.isDigit) ptrs += k.toInt -> v.toLong
+      if (k.head.isDigit) v.split(',') match {
+        case Array(c) => ptrs += k.toInt -> c.toLong
+        case Array(c, name, bytes) =>
+          ptrs += k.toInt -> c.toLong
+          files += k.toInt -> DataFile(name, bytes.toLong)
+        case _ => throw new IllegalArgumentException(s"malformed bucket pointer: $l")
+      }
       else if (k.startsWith("zmap.")) stats += k.stripPrefix("zmap.").toInt -> v
       else kv += k -> v
     }
@@ -142,15 +172,17 @@ object StateManifest {
       cols("statsCols").getOrElse(Nil),
       h.get("schema"),
       stats.result(),
-      ptrs.result())
+      ptrs.result(),
+      files.result())
   }
 
   private[graft] def schemaOf(json: String): StructType =
     DataType.fromJson(json).asInstanceOf[StructType]
 
   // ---- path convention ----------------------------------------------
-  //   root/_commits/c00000003.txt              manifest of commit 3
-  //   root/data/c00000003/__bucket=42/part-*   bucket 42 as commit 3 wrote it
+  //   root/_commits/c00000003.txt                  manifest of commit 3
+  //   root/data/c00000003/b00042-t1-a17.parquet    bucket 42 as commit 3 wrote it
+  //   root/data/c00000003/__bucket=42/part-*       the same, in the legacy layout
 
   private[graft] def commitsDir(root: Path): Path = new Path(root, "_commits")
 
@@ -166,8 +198,17 @@ object StateManifest {
   private[graft] def dataCommitDir(root: Path, commit: Long): Path =
     new Path(dataDir(root), f"c$commit%08d")
 
+  /** A legacy-layout bucket directory. */
   private[graft] def bucketDir(root: Path, commit: Long, bucket: Int): Path =
     new Path(dataCommitDir(root, commit), s"$BucketCol=$bucket")
+
+  /** The name of bucket `bucket`'s file as task `partition` (task
+    * attempt `attempt`, unique within the application) writes it: one
+    * file per bucket and attempt, flat in the commit's directory. */
+  private[graft] def bucketFileName(bucket: Int, partition: Int, attempt: Long): String =
+    f"b$bucket%05d-t$partition-a$attempt.parquet"
+
+  private val BucketFile = "b(\\d+)-t\\d+-a\\d+\\.parquet".r
 
   /** The commit id a `data/` entry named `name` holds, if it is one. */
   private[graft] def dataCommitOf(name: String): Option[Long] =
@@ -175,12 +216,15 @@ object StateManifest {
       Some(name.drop(1).toLong)
     else None
 
-  /** The bucket a path lies in: its `__bucket=N` segment, if any. */
-  private[graft] def bucketOf(path: String): Option[Int] =
-    path.split('/').collectFirst {
+  /** The bucket a data path holds: its `__bucket=N` segment (legacy
+    * layout) or its bucket file's name, if either. */
+  private[graft] def bucketOf(path: String): Option[Int] = {
+    val segments = path.split('/')
+    segments.collectFirst {
       case s if s.startsWith(s"$BucketCol=") =>
         s.substring(BucketCol.length + 1).toInt
-    }
+    }.orElse(segments.lastOption.collect { case BucketFile(b) => b.toInt })
+  }
 
   // ---- reading ------------------------------------------------------
 

@@ -80,6 +80,58 @@ object ZoneMaps {
     case _ => false
   }
 
+  /** One bucket's zone map computed row by row as its file is written,
+    * so a commit needs no second pass over what it wrote. `cols` are
+    * `(name, ordinal, type)` of the eligible columns in the written
+    * rows. Bounds follow Spark's own `min`/`max` ordering (NaN above
+    * every number, -0.0 equal to 0.0, strings in UTF-8 byte order) and
+    * are recorded in the canonical forms the stats aggregation of
+    * [[BucketedStateTable.analyzeStats]] produces: timestamps as epoch
+    * micros, dates as epoch days, floats with -0.0 folded into 0.0,
+    * everything else as Spark's cast to string. */
+  private[pipeline] final class Collector(cols: Seq[(String, Int, DataType)]) {
+    private val ordinals = cols.map(_._2).toArray
+    private val types = cols.map(_._3).toArray
+    private val orderings: Array[Ordering[Any]] =
+      types.map(org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering)
+    private val mins = new Array[Any](cols.size)
+    private val maxs = new Array[Any](cols.size)
+    private val nulls = new Array[Long](cols.size)
+    private var rows = 0L
+
+    def add(row: InternalRow): Unit = {
+      rows += 1
+      var i = 0
+      while (i < ordinals.length) {
+        if (row.isNullAt(ordinals(i))) nulls(i) += 1
+        else {
+          val v = row.get(ordinals(i), types(i))
+          if (mins(i) == null || orderings(i).lt(v, mins(i))) mins(i) = InternalRow.copyValue(v)
+          if (maxs(i) == null || orderings(i).gt(v, maxs(i))) maxs(i) = InternalRow.copyValue(v)
+        }
+        i += 1
+      }
+    }
+
+    def result(bytes: Long): BucketStat =
+      BucketStat(rows, bytes, cols.zipWithIndex.map { case ((name, _, dt), i) =>
+        def bound(v: Any) = Option(v).map(canonical(dt, _)).filter(s =>
+          dt != StringType || s.length <= MaxStatString)
+        name -> ColStat(bound(mins(i)), bound(maxs(i)), nulls(i))
+      }.toMap)
+  }
+
+  /** The recorded form of a non-null internal value `v` of type `dt`. */
+  private def canonical(dt: DataType, v: Any): String = {
+    import org.apache.spark.sql.catalyst.expressions.{Add, Cast}
+    dt match {
+      case TimestampType | DateType => v.toString
+      case FloatType | DoubleType =>
+        Cast(Add(Literal(v, dt), Literal.default(dt)), StringType).eval().toString
+      case _ => Cast(Literal(v, dt), StringType).eval().toString
+    }
+  }
+
   // ---- manifest encoding ---------------------------------------------
 
   /** One-line JSON for one bucket's stats: `{"n":…,"b":…,"c":{col:

@@ -360,16 +360,16 @@ private[sources] class GraftStateChangesSource(
     * chunk list never consulted) don't require the base commit to
     * still be retained. */
   private lazy val bootstrapMeta
-      : (Seq[Seq[(Int, Path)]], Option[StructType]) =
+      : (Seq[Seq[StateManifest.Location]], Option[StructType]) =
     maxSnapshotBucketsPerTrigger match {
       case Some(m) if initialSnapshot =>
         val snap = StateManifest.snapshot(conf, path, Some(base))
-        (snap.toSeq.flatMap(_.bucketDirs(new Path(path))).grouped(m).toSeq,
+        (snap.toSeq.flatMap(_.locations(new Path(path))).grouped(m).toSeq,
           snap.flatMap(_.schema))
       case _ => (Nil, None)
     }
 
-  private def snapshotChunks: Seq[Seq[(Int, Path)]] = bootstrapMeta._1
+  private def snapshotChunks: Seq[Seq[StateManifest.Location]] = bootstrapMeta._1
 
   private def bootstrapStart: Long = base - snapshotChunks.size
 
@@ -581,11 +581,11 @@ private[sources] class GraftStateChangesSource(
         val hi = math.min(to, base)
         if (lo >= hi) None
         else {
-          val dirs = ((lo - bootstrapStart) until (hi - bootstrapStart))
+          val locs = ((lo - bootstrapStart) until (hi - bootstrapStart))
             .flatMap(i => snapshotChunks(i.toInt))
           val raw = BucketedStateTable.scanBuckets(spark,
-            BucketedStateTable.listBuckets(
-              new Path(path).getFileSystem(conf), dirs),
+            BucketedStateTable.filesOf(
+              new Path(path).getFileSystem(conf), locs),
             bootstrapMeta._2)
           Some(pinned(raw
             .withColumn("change_type", lit("insert"))

@@ -9,13 +9,14 @@ import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Support
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta, V1Write, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter, InsertableRelation}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.pipeline.{BucketedStateTable, StateManifest}
+import graft.pipeline.{BucketedStateTable, ListedFileIndex, StateManifest}
 
 /** DSv2 batch source over a [[graft.pipeline.BucketedStateTable]]
   * snapshot — the SQL-addressable face of the engine's big-state layout,
@@ -115,12 +116,33 @@ object GraftStateSource {
       throw new IllegalArgumentException(
         s"graft-state table at $path has no committed snapshot" +
           commit.map(c => s" readable at commit $c").getOrElse(""))
-    val paths = z.bucketDirs(new Path(path)).map(_._2.toString)
     new GraftStateSqlTable(path,
-      ParquetTable(s"graft-state `$path`", SparkSession.active, options,
-        paths, userSpecifiedSchema = z.schema,
-        fallbackFileFormat = classOf[ParquetFileFormat]),
+      manifestTable(s"graft-state `$path`", options, path, z, z.buckets.keys),
       z)
+  }
+
+  /** A [[ParquetTable]] over the `buckets` of snapshot `z` whose file
+    * index comes from the manifest's file pointers
+    * ([[ListedFileIndex.partitionAware]]): loading and planning the
+    * scan list nothing, where a `ParquetTable` over paths lists them
+    * with a Spark job past 32 buckets. */
+  private[sources] def manifestTable(name: String,
+      options: CaseInsensitiveStringMap, path: String, z: StateManifest,
+      buckets: Iterable[Int]): ParquetTable = {
+    import scala.jdk.CollectionConverters._
+    val spark = SparkSession.active
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val opts = options.asCaseSensitiveMap.asScala.toMap
+    val locs = z.locations(new Path(path), buckets)
+    val roots = locs.zip(BucketedStateTable.filesOf(fs, locs)).map {
+      case (l, f) => fs.makeQualified(l.path) -> f.files.toArray
+    }
+    new ParquetTable(name, spark, options, roots.map(_._1.toString),
+        userSpecifiedSchema = z.schema,
+        fallbackFileFormat = classOf[ParquetFileFormat]) {
+      override lazy val fileIndex: PartitioningAwareFileIndex =
+        ListedFileIndex.partitionAware(spark, roots, z.schema, opts)
+    }
   }
 }
 
@@ -345,14 +367,10 @@ private[sources] class GraftZonePrunedScanBuilder(
       snapshot.survivingBuckets(v1).foreach { surv =>
         survivors = Some(surv)
         if (surv.size != snapshot.buckets.size) {
-          val paths = snapshot.bucketDirs(new Path(rootPath), surv).map(_._2.toString)
-          inner = ParquetTable(
-            s"graft-state `$rootPath` (bucket-pruned ${paths.size}/" +
-              s"${snapshot.buckets.size})",
-            SparkSession.active, options, paths,
-            userSpecifiedSchema = snapshot.schema,
-            fallbackFileFormat = classOf[ParquetFileFormat])
-            .newScanBuilder(options)
+          inner = GraftStateSource.manifestTable(
+            s"graft-state `$rootPath` (bucket-pruned " +
+              s"${surv.count(snapshot.buckets.contains)}/${snapshot.buckets.size})",
+            options, rootPath, snapshot, surv).newScanBuilder(options)
         }
       }
     }

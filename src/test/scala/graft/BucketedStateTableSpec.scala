@@ -48,12 +48,11 @@ class BucketedStateTableSpec extends SparkSpec {
     assert(stats.bucketsRead == Seq(expectedBucket))
     assert(stats.bucketsWritten == Seq(expectedBucket))
 
-    // file-count evidence: the merge's commit directory holds ONE bucket
-    // subdirectory with ONE parquet file — not a rewrite of 64 buckets
+    // file-count evidence: the merge's commit directory holds ONE
+    // parquet file, the bucket's — not a rewrite of 64 buckets
     val commitDir = new java.io.File(f"$dir/state/data/c${stats.commitId}%08d")
-    val bucketDirs = commitDir.listFiles().filter(_.getName.startsWith("__bucket="))
-    assert(bucketDirs.map(_.getName).toSeq == Seq(s"__bucket=$expectedBucket"))
-    assert(parquetFiles(commitDir).size == 1)
+    assert(parquetFiles(commitDir).map(f =>
+      StateManifest.bucketOf(f.getPath)) == Seq(Some(expectedBucket)))
 
     // and the logical state is the full million rows with the update applied
     assert(t.read().get.count() == 1000000L)
@@ -163,35 +162,35 @@ class BucketedStateTableSpec extends SparkSpec {
     finally spark.sparkContext.removeSparkListener(l)
   }
 
-  /** Task counts of the bucket-write stages `body` runs: every stage
-    * that wrote output files (shuffle map stages write none). */
+  /** Task counts of the bucket-write stages `body` runs: every stage of
+    * the bucket writer's job (by call site) that reads the write's
+    * exchange — its map stage reads none. */
   private def writeStageTasks(body: => Unit): Seq[Int] = {
     val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     listening(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val si = e.stageInfo
-        if (si.taskMetrics != null &&
-            si.taskMetrics.outputMetrics.recordsWritten > 0)
+        if (si.name.contains("BucketWriter.scala") && si.taskMetrics != null &&
+            si.taskMetrics.shuffleReadMetrics.recordsRead > 0)
           tasks.add(si.numTasks)
       }
     })(body)
     scala.jdk.CollectionConverters.IterableHasAsScala(tasks).asScala.toSeq
   }
 
-  /** Every bucket directory of data commit `commit` holds exactly ONE
-    * parquet file, written key-sorted; returns the bucket count. */
+  /** Every bucket data commit `commit` wrote is exactly ONE parquet
+    * file, written key-sorted; returns the bucket count. */
   private def oneSortedFilePerBucket(root: String, commit: Long): Int = {
     val commitDir = new java.io.File(f"$root/data/c$commit%08d")
-    val bucketDirs = commitDir.listFiles().filter(_.getName.startsWith("__bucket="))
-    bucketDirs.foreach { d =>
-      val files = parquetFiles(d)
-      assert(files.size == 1, s"${d.getName} must hold one file: $files")
+    val byBucket = parquetFiles(commitDir).groupBy(f => StateManifest.bucketOf(f.getPath).get)
+    byBucket.foreach { case (b, files) =>
+      assert(files.size == 1, s"bucket $b must be one file: $files")
       val keys = spark.read.parquet(files.head.getPath).select("k")
         .collect().map(_.getString(0)).toSeq
-      assert(keys == keys.sorted, s"${d.getName} must be written key-sorted")
+      assert(keys == keys.sorted, s"bucket $b must be written key-sorted")
     }
-    bucketDirs.length
+    byBucket.size
   }
 
   test("a read over more than 32 buckets starts no Spark job before an action") {
@@ -211,12 +210,14 @@ class BucketedStateTableSpec extends SparkSpec {
     assert(full.inputFiles.length == 64)
     assert(jobs.get == 0, s"building the reads started ${jobs.get} jobs")
     Seq(full, old, pruned).foreach(df => assert(df.count() == 3000L))
-    // a bucket directory pruned under the reader surfaces from the
-    // driver listing itself, as the file system's own error
-    val victim = new java.io.File(f"$dir/state/data/c$commit%08d")
-      .listFiles().filter(_.getName.startsWith("__bucket=")).head
-    org.apache.commons.io.FileUtils.deleteDirectory(victim)
-    intercept[java.io.FileNotFoundException](t.read())
+    // a bucket file pruned under the reader surfaces when the scan
+    // opens it, as the file system's own error (a legacy-layout bucket
+    // directory surfaces from the driver listing: LegacyLayoutSpec)
+    val victim = parquetFiles(new java.io.File(f"$dir/state/data/c$commit%08d")).head
+    Files.delete(victim.toPath)
+    val err = intercept[Exception](t.read().get.count())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]), s"got: $err")
   }
 
   test("a merge dirtying more small buckets than cores writes with one task per core, one sorted file per bucket") {
@@ -255,9 +256,16 @@ class BucketedStateTableSpec extends SparkSpec {
 
   test("stray _SUCCESS, .crc and _temporary entries in a bucket directory are ignored by reads") {
     val dir = tmp()
-    val t = seeded(s"$dir/state", buckets = 4, rows = 400)
-    val bucketDir = new java.io.File(
-      f"$dir/state/data/c${t.lastCommit.get.commitId}%08d")
+    // the legacy layout's bucket directories are listed; a flat-layout
+    // commit directory is never listed, so the same junk there is
+    // ignored by construction
+    val s = spark
+    import s.implicits._
+    LegacyLayout.create(spark, s"$dir/state",
+      (0 until 400).map(i => (f"k$i%06d", i.toLong)).toDF("k", "v"), Seq("k"), 4)
+    val t = new BucketedStateTable(spark, s"$dir/state", keyCols = Seq("k"),
+      numBuckets = 4, retentionFloorMillis = 0L)
+    val bucketDir = new java.io.File(f"$dir/state/data/c00000001")
       .listFiles().filter(_.getName.startsWith("__bucket=")).head
     val junk = "not parquet".getBytes("UTF-8")
     Files.write(new java.io.File(bucketDir, "_SUCCESS").toPath, Array.emptyByteArray)
@@ -470,7 +478,7 @@ class BucketedStateTableSpec extends SparkSpec {
     val readFiles = feed.inputFiles.toSeq
     assert(readFiles.nonEmpty)
     assert(readFiles.forall(f =>
-      changedBuckets.exists(b => f.contains(s"__bucket=$b/"))),
+      graft.pipeline.StateManifest.bucketOf(f).exists(changedBuckets.contains)),
       s"feed read outside the changed buckets: $readFiles")
 
     // self-diff is empty without reading data
@@ -979,7 +987,7 @@ class BucketedStateTableSpec extends SparkSpec {
     assert(diff.as[(String, String, Long)].collect().toSet == Set(
       ("update_preimage", "k2", 2L), ("update_postimage", "k2", -2L)))
     val touchedDirs = diff.inputFiles.toSeq
-      .map(_.replaceAll(".*__bucket=", "").replaceAll("/.*", "").toInt)
+      .map(f => graft.pipeline.StateManifest.bucketOf(f).get)
       .distinct
     assert(touchedDirs.size <= 2,
       s"cross-split diff must read one parent + one child bucket, " +
@@ -1087,7 +1095,7 @@ class BucketedStateTableSpec extends SparkSpec {
     assert(diff.as[(String, String, Long)].collect().toSet == Set(
       ("update_preimage", "k2", 2L), ("update_postimage", "k2", -2L)))
     val touchedDirs = diff.inputFiles.toSeq
-      .map(_.replaceAll(".*__bucket=", "").replaceAll("/.*", "").toInt)
+      .map(f => graft.pipeline.StateManifest.bucketOf(f).get)
       .distinct
     assert(touchedDirs.size <= 3,
       s"cross-coalesce diff must read one parent + its two children, " +
@@ -1193,7 +1201,7 @@ class BucketedStateTableSpec extends SparkSpec {
     assert(diff.as[(String, String, Long)].collect().toSet == Set(
       ("update_preimage", "k2", 2L), ("update_postimage", "k2", -2L)))
     val touchedDirs = diff.inputFiles.toSeq
-      .map(_.replaceAll(".*__bucket=", "").replaceAll("/.*", "").toInt)
+      .map(f => graft.pipeline.StateManifest.bucketOf(f).get)
       .distinct
     assert(touchedDirs.size <= 3,
       s"a round-trip diff must stay pruned to the touched lineage, " +

@@ -39,6 +39,49 @@ class GraftStateSourceSpec extends SparkSpec {
     assert(viaSql.orderBy("k").collect().toSeq == lib)
   }
 
+  test("graft-state: loading and planning a 64-bucket read starts no Spark job") {
+    val dir = tmp()
+    val t = new BucketedStateTable(spark, s"$dir/wide", keyCols = Seq("k"),
+      numBuckets = 64, retentionFloorMillis = 0L, statsCols = Seq("v"))
+    t.merge(spark.range(3000)
+      .select(concat(lit("k"), col("id")).as("k"), col("id").as("v")), keys = Seq("k"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val (full, pruned) =
+      try {
+        val full = spark.read.format("graft-state").load(s"$dir/wide")
+        // a zone-pruned scan: only buckets whose v range can hold v < 10
+        val pruned = full.where(col("v") < 10)
+        def planned(df: org.apache.spark.sql.DataFrame): Seq[String] =
+          df.queryExecution.executedPlan.collect {
+            case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+          }.flatMap {
+            case m: graft.sources.ManifestStatsScan => Some(m.inner)
+            case s => Some(s)
+          }.flatMap {
+            case p: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan =>
+              p.fileIndex.inputFiles.toSeq
+            case _ => Nil
+          }
+        val r = (planned(full), planned(pruned))
+        BenchMetrics.drainListenerBus(spark.sparkContext)
+        r
+      } finally spark.sparkContext.removeSparkListener(l)
+    // a ParquetTable over 64 paths lists them with a job (past
+    // spark.sql.sources.parallelPartitionDiscovery.threshold = 32)
+    assert(jobs.get == 0, s"loading and planning started ${jobs.get} jobs")
+    assert(full.length == 64)
+    assert(pruned.nonEmpty && pruned.length < full.length,
+      s"zone pruning planned ${pruned.length} of ${full.length} files")
+    assert(spark.read.format("graft-state").load(s"$dir/wide").where(col("v") < 10)
+      .count() == 10L)
+  }
+
   test("graft-state: a loaded frame keeps ITS snapshot; a fresh load sees the new commit; commit option time-travels") {
     val dir = tmp()
     val t = seeded(dir, rows = 100L)

@@ -109,13 +109,13 @@ class IncrementalDedupSpec extends SparkSpec {
       .select(graft.ops.TextAnalysis.fingerprint(col("text")).as("content_hash"))
     val sliceFiles = t.readForKeys(probe, probe.limit(0)).inputFiles
     val sliceBuckets = sliceFiles.map(f =>
-      f.split("/").find(_.startsWith("__bucket=")).get).distinct
+      graft.pipeline.StateManifest.bucketOf(f).get).distinct
     assert(sliceBuckets.length == 1)
 
     // and the commit rewrote exactly that bucket
     val commit = t.lastCommit.get
     assert(commit.bucketsWritten.length == 1)
-    assert(sliceBuckets.head == s"__bucket=${commit.bucketsWritten.head}")
+    assert(sliceBuckets.head == commit.bucketsWritten.head)
   }
 
   test("streaming ingest: foreachBatch dedup drops cross-batch dups; a replayed batch is a no-op") {
@@ -179,9 +179,9 @@ class IncrementalDedupSpec extends SparkSpec {
         .select("bucket"),
       index.read().get.limit(0))
     val bucketsRead = slice.inputFiles
-      .flatMap(_.split("/").find(_.startsWith("__bucket="))).distinct
+      .flatMap(graft.pipeline.StateManifest.bucketOf).distinct
     val bucketsAll = index.read().get.inputFiles
-      .flatMap(_.split("/").find(_.startsWith("__bucket="))).distinct
+      .flatMap(graft.pipeline.StateManifest.bucketOf).distinct
     assert(bucketsRead.length < bucketsAll.length,
       s"probe read ${bucketsRead.length}/${bucketsAll.length} buckets")
 
@@ -225,7 +225,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val probe = banded.select(col("band"), col("band_hash"))
     val slice = index.readForKeys(probe, index.read().get.limit(0))
     val bucketsRead = slice.inputFiles
-      .flatMap(_.split("/").find(_.startsWith("__bucket="))).distinct
+      .flatMap(graft.pipeline.StateManifest.bucketOf).distinct
     assert(bucketsRead.length < 32, s"probe read ${bucketsRead.length}/32 buckets")
 
     // replay: same pairs, index row count unchanged

@@ -49,9 +49,9 @@ class IvfIndexSpec extends SparkSpec {
       .select(lit(0L).as("centroid_id"))
     val slice = index.readForKeys(oneCent, index.read().get.limit(0))
     val bucketsRead = slice.inputFiles
-      .flatMap(_.split("/").find(_.startsWith("__bucket="))).distinct
+      .flatMap(graft.pipeline.StateManifest.bucketOf).distinct
     val bucketsAll = index.read().get.inputFiles
-      .flatMap(_.split("/").find(_.startsWith("__bucket="))).distinct
+      .flatMap(graft.pipeline.StateManifest.bucketOf).distinct
     assert(bucketsRead.length < bucketsAll.length,
       s"probe read ${bucketsRead.length}/${bucketsAll.length} buckets")
 

@@ -115,7 +115,7 @@ class PairNearDupSpec extends SparkSpec {
       pairsDF((0L until 64L).map(i => (i, corpusV(i), (i % 32).toInt)): _*))
 
     val bucketsAll = index.read().get.inputFiles
-      .flatMap(_.split("/").find(_.startsWith("__bucket="))).distinct
+      .flatMap(graft.pipeline.StateManifest.bucketOf).distinct
     assert(bucketsAll.length > 8, s"seed too narrow: ${bucketsAll.length} buckets")
 
     // a one-pair batch probes exactly its 4 (band, bh) keys — derived
@@ -125,7 +125,7 @@ class PairNearDupSpec extends SparkSpec {
       .toDF("band", "bh")
     val bucketsRead = index.readForKeys(probe, index.read().get.limit(0))
       .inputFiles
-      .flatMap(_.split("/").find(_.startsWith("__bucket="))).distinct
+      .flatMap(graft.pipeline.StateManifest.bucketOf).distinct
     assert(bucketsRead.length <= 4,
       s"probe read ${bucketsRead.length} buckets for 4 band keys")
     assert(bucketsRead.length < bucketsAll.length,

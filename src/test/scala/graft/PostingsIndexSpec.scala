@@ -63,7 +63,7 @@ class PostingsIndexSpec extends SparkSpec {
     TextAnalysis.indexPostings(postings, docLengths, docs, "doc_id", "text")
 
     val bucketsAll = postings.read().get.inputFiles
-      .flatMap(_.split("/").find(_.startsWith("__bucket="))).distinct
+      .flatMap(graft.pipeline.StateManifest.bucketOf).distinct
     assert(bucketsAll.length > 8,
       s"corpus vocabulary too narrow: ${bucketsAll.length} buckets")
     val probe = Seq("spark").toDF("term")
@@ -71,7 +71,7 @@ class PostingsIndexSpec extends SparkSpec {
       .readForKeys(probe,
         Seq.empty[(String, Long, Long, Long)].toDF("term", "doc_id", "tf", "dl"))
       .inputFiles
-      .flatMap(_.split("/").find(_.startsWith("__bucket="))).distinct
+      .flatMap(graft.pipeline.StateManifest.bucketOf).distinct
     assert(bucketsRead.length == 1,
       s"one term probed ${bucketsRead.length} buckets")
   }

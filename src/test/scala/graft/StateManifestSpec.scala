@@ -14,10 +14,16 @@ class StateManifestSpec extends SparkSpec {
   private def tmp(): String =
     Files.createTempDirectory("graft-manifest").toString
 
-  /** A split commit's manifest exactly as the format writes it: table
-    * keyed (k, g), bucketed by k, statsCols g,v, 6 buckets split by 2
-    * (so bucket ids reach two digits and numeric order shows). */
+  /** A split commit's manifest exactly as the format wrote it before
+    * bucket files went flat (bare pointers to `__bucket=N/`
+    * directories): table keyed (k, g), bucketed by k, statsCols g,v, 6
+    * buckets split by 2 (so bucket ids reach two digits and numeric
+    * order shows). */
   private lazy val golden = fixture("/manifests/split-commit.txt")
+
+  /** The same split commit as today's writer writes it: every bucket
+    * pointer names its file and size. */
+  private lazy val goldenFiles = fixture("/manifests/split-commit-files.txt")
 
   private def without(text: String, key: String): String =
     text.linesIterator.filterNot(_.startsWith(s"$key=")).mkString("", "\n", "\n")
@@ -46,6 +52,17 @@ class StateManifestSpec extends SparkSpec {
     assert(StateManifest.parse(m.render) == m)
   }
 
+  test("codec: render(parse(text)) reproduces a flat-layout manifest byte for byte") {
+    val m = StateManifest.parse(goldenFiles)
+    assert(m.render == goldenFiles)
+    assert(m.buckets == (0 until 12).map(_ -> 2L).toMap)
+    assert(m.files.keySet == (0 until 12).toSet)
+    assert(m.files(10) == StateManifest.DataFile("b00010-t2-a12.parquet", 965L))
+    // bucket pointers aside, it is the legacy fixture line for line
+    assert(m.copy(files = Map.empty).render == golden)
+    assert(StateManifest.parse(m.render) == m)
+  }
+
   test("codec: a table written today produces the fixture's lines (zone-map byte sizes aside)") {
     val s = spark
     import s.implicits._
@@ -59,7 +76,8 @@ class StateManifestSpec extends SparkSpec {
     val written = new String(Files.readAllBytes(
       new java.io.File(s"$dir/t/_commits/c00000002.txt").toPath), "UTF-8")
     def sizeless(text: String) = text.replaceAll("\"b\":\\d+", "\"b\":_")
-    assert(sizeless(written) == sizeless(golden))
+      .replaceAll("-t\\d+-a\\d+\\.parquet,\\d+", "-t_-a_.parquet,_")
+    assert(sizeless(written) == sizeless(goldenFiles))
   }
 
   test("codec: a legacy manifest without schema= parses and its table still reads by footer inference") {
@@ -122,8 +140,14 @@ class StateManifestSpec extends SparkSpec {
     val m = StateManifest.snapshot(conf, s"$dir/t").get
     val paths = BucketedStateTable.snapshotPaths(conf, s"$dir/t")
     assert(paths.map(p => StateManifest.bucketOf(p).get) == m.buckets.keys.toSeq.sorted)
-    assert(paths.forall(p =>
-      new java.io.File(new org.apache.hadoop.fs.Path(p).toUri.getPath).isDirectory))
+    // each path is the file the manifest names, at its recorded size (a
+    // legacy-layout bucket resolves to its directory: LegacyLayoutSpec)
+    assert(paths.map(p => new org.apache.hadoop.fs.Path(p).getName) ==
+      m.buckets.keys.toSeq.sorted.map(m.files(_).name))
+    assert(paths.forall { p =>
+      val f = new java.io.File(new org.apache.hadoop.fs.Path(p).toUri.getPath)
+      f.isFile && f.length == m.files(StateManifest.bucketOf(p).get).bytes
+    })
     assert(t.read().get.inputFiles.flatMap(StateManifest.bucketOf).toSet ==
       m.buckets.keySet)
   }

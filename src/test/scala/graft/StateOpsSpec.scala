@@ -81,6 +81,32 @@ class StateOpsSpec extends SparkSpec {
     assert(kept2.map(_.getLong(0)).toSeq == Seq(2L, 3L))
   }
 
+  test("D2 on driver-held rows keeps exactly the rows the frame form keeps") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType), StructField("ts", TimestampType),
+      StructField("tag", StringType)))
+    def t(s: String) = java.sql.Timestamp.valueOf(s)
+    val rows = Seq(
+      Row(1L, t("2020-01-01 00:00:00"), "expired"),
+      Row(2L, t("2020-01-02 00:00:00"), "at the cutoff"),
+      Row(3L, t("2020-01-02 00:00:00.000001"), "just after"),
+      Row(4L, null, "null ts"),
+      Row(null, t("2020-01-01 00:00:00"), "null id, expired"),
+      Row(null, t("2020-01-03 00:00:00"), "null id, fresh"),
+      Row(5L, t("2019-01-01 00:00:00"), "max id, expired"),
+      Row(5L, t("2019-01-02 00:00:00"), "max id twin"))
+    val cutoff = t("2020-01-02 00:00:00")
+    val frame = StateOps.retentionKeepLatest(
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema), "id", "ts",
+      lit(cutoff)).collect().map(_.getString(2)).toSet
+    val local = StateOps.retentionKeepLatestRows(rows, schema, "id", "ts", cutoff)
+      .map(_.getString(2)).toSet
+    assert(local == frame)
+    assert(local == Set("just after", "null ts", "null id, fresh", "max id, expired",
+      "max id twin"))
+  }
+
   test("A1: top-1 follows insertion sequence, not timestamp (IT:194-221)") {
     // out-of-order timestamps: the highest ID wins even with an older ts
     val df = runs((1L, "2020-06-01 00:00:00"), (2L, "2020-01-01 00:00:00"))

@@ -223,7 +223,7 @@ class ZoneMapsSpec extends SparkSpec {
 
   private def touchedBuckets(df: org.apache.spark.sql.DataFrame): Set[Int] =
     df.inputFiles.toSeq
-      .map(_.replaceAll(".*__bucket=", "").replaceAll("/.*", "").toInt).toSet
+      .map(f => graft.pipeline.StateManifest.bucketOf(f).get).toSet
 
   test("readWhere zone-prunes a clustered range predicate, exactly") {
     val t = seededTable(tmp())
@@ -542,9 +542,8 @@ class ZoneMapsSpec extends SparkSpec {
 
     val point = sql.where(col("grp") === "g5")
     val pointFiles = plannedFiles(point)
-    assert(pointFiles.forall(_.contains("__bucket=")) &&
-      pointFiles.map(_.replaceAll(".*__bucket=", "").replaceAll("/.*", ""))
-        .distinct.size == 1,
+    assert(pointFiles.forall(graft.pipeline.StateManifest.bucketOf(_).isDefined) &&
+      pointFiles.flatMap(graft.pipeline.StateManifest.bucketOf).distinct.size == 1,
       s"point lookup planned ${pointFiles.size} files across buckets")
     assert(point.count() == 100)
 
