@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 
 import graft.operators.StateOps
@@ -18,8 +19,11 @@ import graft.operators.StateOps
   * Layout (a minimal transactional-table commit log, the same shape a
   * format like Delta provides): `_commits/` holds one manifest per
   * commit — bucket -> the data commit and the file holding its rows —
-  * and `data/c<N>/` one file per bucket a commit wrote;
-  * [[StateManifest]] owns the manifest format and the path convention.
+  * and `data/c<N>/` the files a commit wrote: one per bucket, or, for a
+  * table small enough that rewriting it whole costs less than the
+  * files it saves, one per write task holding many buckets
+  * ([[writeBuckets]]); [[StateManifest]] owns the manifest format and
+  * the path convention.
   * A commit writes its dirty buckets' new contents as files at their
   * final paths in one `data/c<N>` directory ([[BucketWriter]]), then
   * publishes atomically by renaming a temp manifest into `_commits/` —
@@ -103,6 +107,8 @@ class BucketedStateTable(
     // scan-size estimates. Nil (default) = no stats job, no lines.
     statsCols: Seq[String] = Nil) extends StateTable {
 
+  import BucketedStateTable.WritePlan
+
   require(keyCols.nonEmpty, "BucketedStateTable needs at least one key column")
   require(numBuckets > 0, "numBuckets must be positive")
   require(bucketCols.forall(keyCols.contains),
@@ -136,13 +142,18 @@ class BucketedStateTable(
     if (bucketCols.isEmpty) keyCols else bucketCols
 
   /** What one commit touched — the spec's evidence that mutations are
-    * bucket-pruned. `rebases` counts how many times the publish was
-    * rebased onto a concurrent-but-bucket-disjoint commit (0 on the
-    * uncontended path): the spec's evidence that disjoint writers land
-    * without retry-from-scratch. */
+    * bucket-pruned. `bucketsRead` is the dirty set the mutation probed,
+    * `bucketsWritten` every bucket the commit wrote (a packed commit
+    * writes every live bucket), `filesWritten` the data files it
+    * created and `packed` whether it wrote one file per write task
+    * instead of one per bucket (see [[writeBuckets]]). `rebases`
+    * counts how many times the publish was rebased onto a
+    * concurrent-but-bucket-disjoint commit (0 on the uncontended path):
+    * the spec's evidence that disjoint writers land without
+    * retry-from-scratch. */
   case class CommitStats(
       commitId: Long, bucketsRead: Seq[Int], bucketsWritten: Seq[Int],
-      rebases: Int = 0)
+      rebases: Int = 0, filesWritten: Int = 0, packed: Boolean = false)
 
   @volatile private var last: Option[CommitStats] = None
   /** Stats of the most recent commit through this instance. */
@@ -157,7 +168,7 @@ class BucketedStateTable(
   private def bucketOf = bucketIn(numBuckets)
 
   private def bucketIn(layout: Int) =
-    pmod(xxhash64(effBucketCols.map(col): _*), lit(layout.toLong)).cast("int")
+    BucketedStateTable.bucketExpr(effBucketCols, layout)
 
   // ---- writer lease (cross-process single-writer discipline) --------
 
@@ -395,7 +406,8 @@ class BucketedStateTable(
     // [[readAt]] passes the OLD manifest, so time travel keeps the
     // snapshot's contemporary schema.
     (if (listed.isEmpty) None
-     else Some(BucketedStateTable.scanBuckets(spark, listed, m.schema)),
+     else Some(BucketedStateTable.scanBuckets(spark, listed, m.schema,
+       bucketing = m.bucketing)),
       listed.map(_.bytes).sum)
   }
 
@@ -721,18 +733,21 @@ class BucketedStateTable(
   override def readOrEmpty(like: DataFrame): DataFrame =
     read().getOrElse(like.limit(0))
 
-  /** The listed buckets' current rows plus the manifest the read
-    * RESOLVED — the mutation's plan-time base. [[commit]] conditions
-    * its publish on exactly this manifest, so the conflict check
-    * covers the whole mutation window (plan → publish), not just the
-    * publish itself: a foreign commit landing anywhere inside it is
-    * either rebased over (bucket-disjoint) or withdrawn from
-    * (overlapping), never silently overwritten with rows merged
-    * against its predecessor's content. */
-  private def readBucketsWithBase(buckets: Seq[Int],
-      like: DataFrame): (DataFrame, Option[StateManifest], Long) =
+  /** The current rows of the buckets a commit dirtying `dirty` writes
+    * ([[planWrite]]: the dirty set, its closure or the whole table),
+    * the manifest the read RESOLVED — the mutation's plan-time base —
+    * and the write's plan. [[commit]] conditions its publish on
+    * exactly this manifest, so the conflict check covers the whole
+    * mutation window (plan → publish), not just the publish itself: a
+    * foreign commit landing anywhere inside it is either rebased over
+    * (bucket-disjoint) or withdrawn from (overlapping), never silently
+    * overwritten with rows merged against its predecessor's content.
+    * Rows of a written bucket outside `dirty` meet no update, so every
+    * mutation carries them over unchanged. */
+  private def readBucketsWithBase(dirty: Seq[Int],
+      like: DataFrame): (DataFrame, Option[StateManifest], WritePlan) =
     currentManifest() match {
-      case None => (like.limit(0), None, 0L)
+      case None => (like.limit(0), None, planWrite(None, dirty))
       case Some(m) =>
         // an empty slice of an EXISTING table shapes from the
         // manifest's RECORDED schema, not from `like`: a post-widenTo
@@ -741,9 +756,12 @@ class BucketedStateTable(
         // and the commit would record the narrow schema — silently
         // dropping the freshly widened column from every later read.
         // `like` only shapes a pre-schema-line manifest's fallback.
-        val (read, bytes) = readSized(m, buckets)
+        val written = planWrite(Some(m), dirty)
+        val (read, bytes) = readSized(m, written.buckets)
         val df = read.orElse(emptyUnder(m)).getOrElse(like.limit(0))
-        (df, Some(m), bytes)
+        (df, Some(m),
+          if (written.packing != BucketWriter.PerBucket) written
+          else written.copy(tasks = taskCount(written.buckets.size, bytes)))
     }
 
   /** Current rows of ONLY the buckets that `probe`'s bucket-column
@@ -872,14 +890,14 @@ class BucketedStateTable(
     * aggregates. A commit needs none of this: its bucket writer
     * computes the zone maps of the files as it writes them
     * ([[ZoneMaps.Collector]]). */
-  private def bucketStatsOf(locs: Seq[StateManifest.Location],
+  private def bucketStatsOf(m: StateManifest,
       eligible: Seq[org.apache.spark.sql.types.StructField],
       rowSchema: org.apache.spark.sql.types.StructType): Map[Int, String] = {
-    val listed = BucketedStateTable.filesOf(fs, locs)
+    val listed = BucketedStateTable.filesOf(fs, m.locations(root))
     statsAggRows(
       BucketedStateTable.scanBuckets(spark, listed, Some(rowSchema),
-        withBucket = true),
-      eligible, listed.map(l => l.bucket -> l.bytes).toMap)
+        withBucket = true, bucketing = m.bucketing),
+      eligible, listed.flatMap(_.shares).toMap)
   }
 
   private def statsEligible(cols: Seq[String],
@@ -961,7 +979,7 @@ class BucketedStateTable(
         s"analyzeStats: none of [${cols.mkString(",")}] is a " +
           s"supported stats column of ${rec.fieldNames.mkString(",")}")
       if (m0.buckets.isEmpty) return 0
-      val fresh = bucketStatsOf(m0.locations(root), eligible, rec)
+      val fresh = bucketStatsOf(m0, eligible, rec)
       var attempts = 0
       while (true) {
         // A RELAYOUT (split/coalesce/rebucket) landing mid-analyze
@@ -1021,63 +1039,143 @@ class BucketedStateTable(
 
   /** THE bucket-file write every data commit and relayout shares, so
     * their write options, task rule and file layout can never drift:
-    * hash `rows` into `layout` buckets and write each bucket's rows as
-    * ONE key-sorted file, flat in data commit `next`'s directory, with
-    * [[BucketWriter]] — straight at the final path, no output committer
-    * and no listing afterwards. A bucket receiving no rows writes no
-    * file. Rows are SORTED by key within each bucket file, so parquet
-    * row-group min/max stats prune a point or range probe INSIDE a
-    * multi-GB bucket — readForKeys narrows to the bucket file, the
-    * footer stats narrow further to the row groups holding the keys
+    * hash `rows` into `layout` buckets and write them with
+    * [[BucketWriter]], flat in data commit `next`'s directory, straight
+    * at the final path — no output committer and no listing
+    * afterwards — in `plan.tasks` tasks, one key-sorted file per bucket
+    * or, packed, one file per task holding every bucket the task holds,
+    * still sorted by bucket and key. A bucket receiving no rows
+    * writes nothing. Rows are SORTED by key within each bucket, so
+    * parquet row-group min/max stats prune a point or range probe
+    * INSIDE a multi-GB bucket — readForKeys narrows to the bucket file,
+    * the footer stats narrow further to the row groups holding the keys
     * (free at write time: the sort is per already-shuffled partition,
     * no extra exchange). With `statsCols` set the writer also returns
-    * each file's zone map, so a zone-mapped commit runs no stats job.
-    *
-    * Task count: `min(buckets, max(defaultParallelism, ceil(bytes /
-    * advisoryPartitionSizeInBytes)))` for `buckets` dirty buckets
-    * holding `bytes` on disk. Hash-partitioning on the bucket column
-    * keeps each bucket in exactly one task however many tasks there
-    * are, so the file count still tracks the dirty set. A small write
-    * runs one task per core: each task pays ~30 ms of deserialization
-    * (measured on an 80-bucket write: 2.4–2.8 s of
-    * `executorDeserializeTime` over 84 tasks), so one task per dirty
-    * bucket made that write take 1.5 s against 0.78 s with 4 tasks on
-    * a 4-core host. Never fewer tasks than cores: a size-adaptive count
-    * below the core count serializes the per-file cost onto fewer
-    * cores than the host has. Never more than one task per bucket:
-    * multi-GB buckets at 100 TB keep one task each.
-    *
-    * The per-file cost is writer init and footer, and on the local
-    * filesystem mostly process forks: without libhadoop (no
-    * `NativeIO`), Hadoop's `RawLocalFileSystem.setPermission` runs
-    * `chmod` as a child process for every file and directory it
-    * creates, and a checksummed file is two files. Through Hadoop's
-    * committer a 95-bucket merge forked `chmod` about 300 times (the
-    * bucket directory, the file and its `.crc`, each staged and
-    * renamed) for 2.1–2.3 s of thread time inside `chmod` in a
-    * 1.06–1.22 s write; the flat layout drops the directory per
-    * bucket and the staging, so a commit creates one directory and a
-    * file plus its `.crc` per bucket.
+    * each bucket's zone map, so a zone-mapped commit runs no stats job.
+    * Hash-partitioning on the bucket column keeps each bucket in
+    * exactly one task however many tasks there are. [[planWrite]]
+    * chooses the tasks and the layout.
     *
     * `afterExchange` runs on the bucket-partitioned rows (which carry
     * `__bucket`) in the write's result stage, after its one exchange:
     * a per-bucket step placed there needs no shuffle of its own. Rows
     * it marks with a true [[BucketWriter.CountCol]] are counted, not
     * written. */
-  private def writeBuckets(rows: DataFrame, layout: Int, buckets: Int,
-      bytes: BigInt, next: Long,
-      afterExchange: DataFrame => DataFrame = identity): BucketWriter.Result = {
+  private def writeBuckets(rows: DataFrame, layout: Int, plan: WritePlan,
+      next: Long, afterExchange: DataFrame => DataFrame = identity): BucketWriter.Result = {
+    val planned = afterExchange(rows.withColumn(BucketCol, bucketIn(layout))
+      .repartition(plan.tasks, col(BucketCol)))
+      .sortWithinPartitions(BucketCol, keyCols: _*)
+    BucketWriter.write(spark, planned,
+      fs.makeQualified(StateManifest.dataCommitDir(root, next)), statsCols,
+      plan.packing)
+  }
+
+  /** Rewrite bytes that cost as much as one more data file: its create
+    * and `.crc` (each forks `chmod` on the local file system without
+    * libhadoop), writer init and footer. Measured on merges of the same
+    * 81-row driver-local batches into a 1,024-bucket table at
+    * `local[4]` (medians of 8): at 27k rows 4 whole-table files took
+    * 300 ms against 553 ms for 76 one-bucket files, at 108k rows
+    * 510 ms against 551 ms; the break-even is about 124k rows (about
+    * 1.8 MB), about 22 KB of rewrite per file saved. This takes the
+    * conservative side of that curve. The curve is one host's local
+    * file system; a file system whose creates cost differently (HDFS,
+    * an object store) moves the break-even, and was not measured. */
+  private val PerFileBytes = 16L * 1024
+
+  /** Today's task rule for a write of `buckets` buckets holding `bytes`
+    * on disk: `min(buckets, max(defaultParallelism, ceil(bytes /
+    * advisoryPartitionSizeInBytes)))`. A small write runs one task per
+    * core: each task pays ~30 ms of deserialization (measured on an
+    * 80-bucket write: 2.4–2.8 s of `executorDeserializeTime` over 84
+    * tasks), so one task per dirty bucket made that write take 1.5 s
+    * against 0.78 s with 4 tasks on a 4-core host. Never fewer tasks
+    * than cores: a size-adaptive count below the core count serializes
+    * the per-file cost onto fewer cores than the host has. Never more
+    * than one task per bucket: multi-GB buckets at 100 TB keep one task
+    * each. */
+  private def taskCount(buckets: Int, bytes: BigInt): Int = {
     val advisory = spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
     val bySize = (bytes + advisory - 1) / advisory
-    val tasks = math.min(buckets,
-      bySize.max(spark.sparkContext.defaultParallelism).min(Int.MaxValue).toInt)
-    val planned = afterExchange(rows.withColumn(BucketCol, bucketIn(layout))
-      .repartition(math.max(tasks, 1), col(BucketCol)))
-      .sortWithinPartitions(BucketCol, keyCols: _*)
-    BucketWriter.write(spark, planned,
-      fs.makeQualified(StateManifest.dataCommitDir(root, next)), statsCols)
+    math.max(1, math.min(buckets,
+      bySize.max(spark.sparkContext.defaultParallelism).min(Int.MaxValue).toInt))
   }
+
+  /** Whether `bytes` are worth writing `buckets` buckets as `files`
+    * files instead of one file per bucket: iff that saves files and
+    * `bytes ≤ (buckets − files) × PerFileBytes`. */
+  private def packs(bytes: BigInt, buckets: Int, files: Int): Boolean =
+    buckets > files && bytes <= BigInt(buckets - files) * PerFileBytes
+
+  /** The write of a commit dirtying `dirty` over `base`, from the byte
+    * shares the manifest records, so that the number of files a commit
+    * creates follows the bytes it writes, not its dirty-bucket count.
+    * Every write covers the dirty set's closure (every bucket sharing a
+    * file with a dirty one — for one-bucket files the dirty set), so a
+    * data file is referenced whole or not at all:
+    *  - a commit dirtying more buckets than the `tasks` of a packed
+    *    write of the table packs iff the clean bytes that costs, `live −
+    *    dirtyBytes`, are worth its files ([[packs]]): it rewrites every
+    *    live bucket, one file per task. Otherwise it writes its closure
+    *    one file per bucket: a table past the bound keeps one file per
+    *    dirty bucket, and a packed table that outgrows the bound
+    *    unpacks in one commit.
+    *  - a smaller commit saves nothing by packing in the long run, so it
+    *    decides no layout: it writes its closure one file per bucket,
+    *    or packed into one file per task when the closure's own bytes
+    *    are worth that — the test a creating write applies to each
+    *    task's rows. A table of one-bucket files keeps them, and a
+    *    1-row upsert into a packed 1,024-bucket table writes the ~256
+    *    buckets of the file it touches in at most `tasks` files.
+    * A table with no live bucket records no size: each task decides
+    * from the rows it writes ([[BucketWriter.IfSmall]]). A table holding
+    * legacy-layout buckets (no recorded size) never packs.
+    *
+    * The trade: on a table small enough to pack, a commit writes every
+    * bucket or a whole file's, so concurrent writers serialize through
+    * the withdraw-and-retry of [[commit]] instead of rebasing
+    * bucket-disjoint commits; above the bound disjoint rebases apply
+    * as before. */
+  private def planWrite(base: Option[StateManifest], dirty: Seq[Int]): WritePlan = {
+    val m = base.getOrElse(StateManifest(0L))
+    val share = m.files.map { case (b, f) => b -> BigInt(f.bytes) }
+    def bytes(buckets: Seq[Int]): BigInt = buckets.flatMap(share.get).sum
+    val live = share.values.sum
+    val closure = m.closure(dirty)
+    val closureTasks = taskCount(closure.size, bytes(closure))
+    val all = (m.buckets.keySet ++ dirty).toSeq.sorted
+    val tasks = taskCount(all.size, live)
+    if (m.buckets.isEmpty) {
+      val t = taskCount(dirty.size, 0)
+      WritePlan(dirty, t, ifSmall(dirty.size, t))
+    } else if (!m.buckets.keySet.forall(share.contains))
+      WritePlan(closure, closureTasks, BucketWriter.PerBucket)
+    else if (dirty.size > tasks)
+      if (packs(live - bytes(dirty), dirty.size, tasks))
+        WritePlan(all, tasks, BucketWriter.Packed)
+      else WritePlan(closure, closureTasks, BucketWriter.PerBucket)
+    else WritePlan(closure, closureTasks,
+      if (packs(bytes(closure), closure.size, closureTasks)) BucketWriter.Packed
+      else BucketWriter.PerBucket)
+  }
+
+  /** The write of a full rewrite of `buckets` buckets holding about
+    * `bytes` ([[replaceAll]], [[importFrom]], the relayouts): today's
+    * task rule, and each task decides from the rows it writes whether
+    * they pack. */
+  private def planFull(buckets: Int, bytes: BigInt): WritePlan = {
+    val tasks = taskCount(buckets, bytes)
+    WritePlan(0 until buckets, tasks, ifSmall(buckets, tasks))
+  }
+
+  /** [[BucketWriter.IfSmall]] for a write of `buckets` buckets in
+    * `tasks` tasks: a task holds about `buckets / tasks` of them, so it
+    * holds back no more rows than that many buckets pack into. */
+  private def ifSmall(buckets: Int, tasks: Int): BucketWriter.IfSmall =
+    BucketWriter.IfSmall(PerFileBytes,
+      ((buckets + tasks - 1) / tasks - 1).toLong * PerFileBytes)
 
   /** The manifest fields of a write: pointers, files and (with
     * `statsCols`) zone maps of the buckets it wrote into data commit
@@ -1092,15 +1190,18 @@ class BucketedStateTable(
   /** Catalyst's size estimate of `rows`, for the full rewrites
     * ([[replaceAll]], [[importFrom]]) that read no buckets to list: a
     * file scan reports its file bytes, an opaque source the default
-    * maximum (one task per bucket, the scale-safe fallback). */
+    * maximum (one task per bucket, the scale-safe fallback). It sizes
+    * the write's tasks only: it counts a string as 20 bytes whatever
+    * its width, so it cannot tell whether the rows pack. */
   private def estimatedBytes(rows: DataFrame): BigInt =
     rows.queryExecution.optimizedPlan.stats.sizeInBytes
 
-  /** Write `rows` as the new contents of exactly the `dirty` buckets and
-    * publish; returns the commit and the rows `afterExchange` marked
-    * for counting. Buckets in `dirty` that end up with zero rows drop
-    * out of the manifest (the writer writes no empty files, and its
-    * task results are the truth).
+  /** Write `rows` as the new contents of exactly the `plan`'s buckets
+    * (the `dirty` set, or more: see [[planWrite]]) and publish; returns
+    * the commit and the rows `afterExchange` marked for counting.
+    * Written buckets that end up with zero rows drop out of the
+    * manifest (the writer writes no empty files, and its task results
+    * are the truth).
     *
     * `planBase` is the manifest the mutation READ its current-bucket
     * rows from (None for a creating write or a read-less full rewrite,
@@ -1108,7 +1209,7 @@ class BucketedStateTable(
     * fenced on it; on a detected race the commit resolves LOGICALLY
     * instead of always failing: if every intervening commit's
     * rewritten-bucket set (manifest pointer diff — free, no data read)
-    * is disjoint from our `dirty` set, and neither the layout nor the
+    * is disjoint from our written set, and neither the layout nor the
     * recorded schema moved, the already-written data directory is
     * simply republished under a manifest based on the new head —
     * disjoint writers both land, no retry-from-scratch of the data
@@ -1119,24 +1220,25 @@ class BucketedStateTable(
     * same bucket. The reference's two pipeline stages write disjoint
     * tables concurrently by design (`ReportingManager.java:93-95`);
     * this is the bucket-granular version of the same guarantee. */
-  private def commit(rows: DataFrame, dirty: Seq[Int], dirtyBytes: BigInt,
+  private def commit(rows: DataFrame, dirty: Seq[Int], plan: WritePlan,
       planBase: Option[StateManifest] = None,
       publishGate: Option[PublishGate] = None,
       afterExchange: DataFrame => DataFrame = identity): (CommitStats, Long) = {
     val next = nextCommitId()
-    val w = writeBuckets(rows, numBuckets, dirty.size, dirtyBytes, next, afterExchange)
+    val w = writeBuckets(rows, numBuckets, plan, next, afterExchange)
     val (pointers, files, zstats) = pointersOf(w, next)
     val written = w.files.map(_.bucket)
-    // A bucket written OUTSIDE the dirty set means `rows` re-evaluated
+    // A bucket written OUTSIDE the planned set means `rows` re-evaluated
     // differently between the dirty-bucket probe and this write (a
     // non-deterministic expression in the update lineage — rand() salt,
     // unseeded sample/limit, shuffle-order-dependent ids): its manifest
     // pointer would replace prior contents that were never read into
     // the merge. Fail loudly instead of silently losing rows.
-    val dirtySet = dirty.toSet
-    require(written.forall(dirtySet.contains),
-      s"commit wrote buckets ${written.filterNot(dirtySet.contains).mkString(",")} " +
-        s"outside the dirty set ${dirty.sorted.mkString(",")} at $path — " +
+    val planned = plan.buckets.toSet
+    require(written.forall(planned.contains),
+      s"commit wrote buckets ${written.filterNot(planned.contains).mkString(",")} " +
+        s"outside the dirty set ${dirty.sorted.mkString(",")} (written set " +
+        s"${plan.buckets.mkString(",")}) at $path — " +
         "the updates DataFrame is non-deterministic; materialize it " +
         "(cache/checkpoint) before mutating state")
     // gated publish (see [[PublishGate]]): everything above — the
@@ -1164,15 +1266,15 @@ class BucketedStateTable(
       val prev = base.map(_.buckets).getOrElse(Map.empty)
       try {
         writeManifest(manifest(manifestId,
-          prev -- dirty ++ pointers,
-          base.map(_.files).getOrElse(Map.empty) -- dirty ++ files,
+          prev -- plan.buckets ++ pointers,
+          base.map(_.files).getOrElse(Map.empty) -- plan.buckets ++ files,
           Some(w.schema.json),
-          // clean buckets CARRY the base's stats; every dirty bucket's
+          // clean buckets CARRY the base's stats; every written bucket's
           // stale entry drops even when this handle records none — a
           // stats-less rewrite must never leave another handle's
           // now-wrong bounds behind
           bucketStats = base.map(_.bucketStats).getOrElse(Map.empty) --
-            dirty ++ zstats), basedOn)
+            plan.buckets ++ zstats), basedOn)
         // TOCTOU backstop for a REBASED publish: a concurrent prune
         // whose live set was computed before this manifest appeared
         // can reap the adopted (then-orphan) data dir between the
@@ -1188,7 +1290,8 @@ class BucketedStateTable(
               "prune reaped mid-rebase and was withdrawn; retry the mutation")
         }
         prune()
-        val stats = CommitStats(manifestId, dirty, written, rebases)
+        val stats = CommitStats(manifestId, dirty, written, rebases,
+          w.filesWritten, w.packed)
         last = Some(stats)
         return (stats, w.counted)
       } catch {
@@ -1206,21 +1309,24 @@ class BucketedStateTable(
                 ".snapshot(...).layout + BucketedStateTable.fromLayout) " +
                 "and retry the mutation")
           }
-          val dirtySet = dirty.toSet
           val eligible = rebases < maxRebases && head.exists { h =>
             // same recorded schema (a raced widenTo must not be
             // silently narrowed back by our republish)...
             h.schemaJson == base.flatMap(_.schemaJson) &&
             // ...and the intervening commits' rewritten buckets —
             // pointer diff base -> head, covering adds, rewrites, and
-            // drops — never touch our dirty set. `base` advances on
+            // drops — never touch our written set (a commit packing the
+            // table writes every live bucket, so it rebases only over
+            // commits that add buckets; and an untouched written bucket
+            // still names the file the plan closed over, so no file ends
+            // up named by only some of its buckets). `base` advances on
             // every rebase, so each round checks only the NEWLY
             // intervened commits.
             {
               val prevB = base.map(_.buckets).getOrElse(Map.empty[Int, Long])
               (h.buckets.keySet ++ prevB.keySet)
                 .filter(b => h.buckets.get(b) != prevB.get(b))
-                .forall(!dirtySet.contains(_))
+                .forall(!planned.contains(_))
             }
           }
           if (!eligible) throw e
@@ -1290,7 +1396,16 @@ class BucketedStateTable(
     }
     // live set from every manifest STILL on disk after the reap above —
     // a floor-protected old manifest keeps its data dirs alive too
-    val surviving = manifestFiles()
+    val (surviving, temps) = StateManifest.listWithTemps(fs, root)
+    // a temp manifest a crashed writer created but never renamed: at or
+    // below the newest published id its publish can no longer succeed
+    // (a live writer that loses it here fails its rename and retries),
+    // and past the floor no writer is still in its publish window
+    val newest = surviving.lastOption.map(_._1).getOrElse(0L)
+    temps.foreach { case (id, st) =>
+      if (id <= newest || now - st.getModificationTime >= retentionFloorMillis)
+        fs.delete(st.getPath, false)
+    }
     val live: Set[Long] =
       surviving.flatMap(readManifest(_, checkLayout = false).buckets.values)
         .toSet ++
@@ -1437,12 +1552,12 @@ class BucketedStateTable(
         // schema), and post-widenTo narrow writers preserve the
         // columns they don't know (see alignPair). Renames/type
         // changes are refused inside alignTo.
-        val (cur0, base, bytes) = readBucketsWithBase(dirty, like = updates)
+        val (cur0, base, plan) = readBucketsWithBase(dirty, like = updates)
         val (cur, up) = alignPair(cur0, updates, keys, "merge")
         // StateOps.mergeByKey with its per-key window run after the
         // bucket write's exchange, partitioned by (bucket, keys): the
         // groups are the same, and the write's shuffle is the only one
-        commit(StateOps.sourced(cur, up), dirty, bytes, base, publishGate,
+        commit(StateOps.sourced(cur, up), dirty, plan, base, publishGate,
           afterExchange = StateOps.latestPerKey(_, BucketCol +: keys, versionCols))
       } else publishGate.foreach(_.awaitPublish()) // no-op merges honor an abort too
       }
@@ -1564,7 +1679,7 @@ class BucketedStateTable(
         // and drifts in either direction the same way (see alignPair) —
         // wider upserts widen the commit, narrower (pre-widenTo writer)
         // upserts preserve the columns they don't know
-        val (cur0, base, bytes) = readBucketsWithBase(dirty, like = upserts)
+        val (cur0, base, plan) = readBucketsWithBase(dirty, like = upserts)
         val (cur, up) = alignPair(cur0, upserts, keys, "applyDelta")
         // NULL-SAFE anti-join: mergeByKey documents null keys as equal
         // (the table can legitimately hold a null-keyed row), so a
@@ -1575,7 +1690,7 @@ class BucketedStateTable(
           keys.map(c => StateOps.aliasedCol("__cur", c) <=>
             StateOps.aliasedCol("__del", c)).reduce(_ && _),
           "left_anti")
-        commit(StateOps.mergeByKey(kept, up, keys), dirty, bytes, base)
+        commit(StateOps.mergeByKey(kept, up, keys), dirty, plan, base)
       }
       }
     } }
@@ -1606,7 +1721,7 @@ class BucketedStateTable(
       val dirty = dirtyBucketsOf(processed)
       if (dirty.isEmpty) 0L
       else {
-        val (cur, base, bytes) = readBucketsWithBase(dirty, like = processed)
+        val (cur, base, plan) = readBucketsWithBase(dirty, like = processed)
         val cols = cur.columns.toSeq
         val proc = processed.select(cols.map(StateOps.qcol): _*)
         val aligned = cur.schema.fields.zip(proc.schema.fields).map {
@@ -1619,7 +1734,7 @@ class BucketedStateTable(
         if (aligned.contains(None)) {
           val res = StateOps.deleteIfUnmodified(cur, processed)
           val notRemoved = res.notRemoved.count()
-          commit(res.newState, dirty, bytes, base)
+          commit(res.newState, dirty, plan, base)
           notRemoved
         } else {
           val Tag = "__graft_tag"
@@ -1628,7 +1743,7 @@ class BucketedStateTable(
           commit(
             cur.withColumn(Tag, lit(0))
               .unionByName(proc.select(aligned.flatten: _*).withColumn(Tag, lit(1))),
-            dirty, bytes, base,
+            dirty, plan, base,
             afterExchange = _
               .withColumn("__graft_min", min(Tag).over(seen))
               .withColumn("__graft_max", max(Tag).over(seen))
@@ -1686,7 +1801,7 @@ class BucketedStateTable(
             StateOps.qcol(seqCol) =!= lit(maxSeq))
           .select(bucketOf.as("b")).distinct().as[Int].collect().toSeq.sorted
         if (dirty.nonEmpty) {
-          val (cur, base, bytes) = readBucketsWithBase(dirty, like = df)
+          val (cur, base, plan) = readBucketsWithBase(dirty, like = df)
           // NULL-ts rows survive the bucket rewrite too (the reference
           // DELETE form keeps them) — without the isNull arm a NULL-ts
           // row sharing a bucket with an expired one would vanish
@@ -1695,7 +1810,7 @@ class BucketedStateTable(
             cur.filter(StateOps.qcol(tsCol) > cutoff ||
               StateOps.qcol(tsCol).isNull ||
               StateOps.qcol(seqCol) === lit(maxSeq)),
-            dirty, bytes, base)
+            dirty, plan, base)
         }
       }
     } }
@@ -1706,9 +1821,12 @@ class BucketedStateTable(
     * is a bucket skewed (rebucket / salt upstream), and is the table
     * over- or under-bucketed for its volume (`numBuckets ≈ bytes /
     * 1–16 GB`, §10). File counts and byte sizes come from the
-    * manifest's file pointers (a legacy-layout bucket directory is
-    * listed); row counts from parquet footers (a metadata-only
-    * `count()` — no data pages are read). Empty table → empty frame.
+    * manifest's file pointers — a bucket of a packed file counts that
+    * one file and its share of the bytes (a legacy-layout bucket
+    * directory is listed); row counts from parquet footers (a
+    * metadata-only `count()` — no data pages are read — except for a
+    * packed file, whose bucket columns place each row). Empty table →
+    * empty frame.
     *
     * FAST PATH: when EVERY bucket of the current manifest carries a
     * zone-map payload (a stats-recording handle, or after
@@ -1727,24 +1845,26 @@ class BucketedStateTable(
           (b, c, -1L, s.bytes, s.rows)
         }.toDF("bucket", "commit", "n_files", "total_bytes", "n_rows")
     }
-    val listed = cur.toSeq.flatMap { m =>
-      BucketedStateTable.filesOf(fs, m.locations(root))
-        .map(l => m.buckets(l.bucket) -> l)
-    }
-    // row counts in ONE job over every bucket dir (count-star over an
+    val listed = cur.toSeq.flatMap(m =>
+      BucketedStateTable.filesOf(fs, m.locations(root)).map(m -> _))
+    // row counts in ONE job over every bucket file (count-star over an
     // empty data schema reads parquet row-group metadata, no data
-    // pages) — a per-bucket count() loop would serialize numBuckets
+    // pages; a packed file reads its bucket columns to place each row)
+    // — a per-bucket count() loop would serialize numBuckets
     // scheduler round-trips through the driver for a view a 16k-bucket
     // table wants cheap
     val counts =
       if (listed.isEmpty) Map.empty[Int, Long]
       else BucketedStateTable.scanBuckets(spark, listed.map(_._2),
-          Some(new org.apache.spark.sql.types.StructType()), withBucket = true)
+          Some(new org.apache.spark.sql.types.StructType()), withBucket = true,
+          bucketing = cur.flatMap(_.bucketing))
         .groupBy(BucketCol).count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    listed.map { case (c, l) =>
-      (l.bucket, c, l.files.size.toLong, l.bytes, counts.getOrElse(l.bucket, 0L))
-    }.toDF("bucket", "commit", "n_files", "total_bytes", "n_rows")
+    listed.flatMap { case (m, l) =>
+      l.shares.toSeq.map { case (b, bytes) =>
+        (b, m.buckets(b), l.files.size.toLong, bytes, counts.getOrElse(b, 0L))
+      }
+    }.sortBy(_._1).toDF("bucket", "commit", "n_files", "total_bytes", "n_rows")
   }
 
   /** Replace the ENTIRE table contents with `rows` in one commit — the
@@ -1756,7 +1876,8 @@ class BucketedStateTable(
     * history stays time-travelable via [[readAt]]. */
   def replaceAll(rows: DataFrame): Unit =
     BucketedStateTable.lockFor(lockKey).synchronized { withLease {
-      commit(rows, (0 until numBuckets).toSeq, estimatedBytes(rows))
+      commit(rows, (0 until numBuckets).toSeq,
+        planFull(numBuckets, estimatedBytes(rows)))
       ()
     } }
 
@@ -1811,7 +1932,8 @@ class BucketedStateTable(
     val next = nextCommitId()
     val (pointers, files, zstats) = snapshot.fold(
       (Map.empty[Int, Long], Map.empty[Int, StateManifest.DataFile], Map.empty[Int, String]))(
-      df => pointersOf(writeBuckets(df, newNumBuckets, newNumBuckets, bytes, next), next))
+      df => pointersOf(writeBuckets(df, newNumBuckets, planFull(newNumBuckets, bytes),
+        next), next))
     beforePublish()
     writeManifest(manifest(next, pointers, files,
         snapshot.map(_.schema.json).orElse(cur.flatMap(_.schemaJson)),
@@ -2030,7 +2152,8 @@ class BucketedStateTable(
           "zone-map-supported type — the analyzeAfter pass would refuse " +
           "AFTER the creating commit; import with analyzeAfter = false " +
           "or export an eligible column")
-      commit(rows, (0 until numBuckets).toSeq, estimatedBytes(rows))
+      commit(rows, (0 until numBuckets).toSeq,
+        planFull(numBuckets, estimatedBytes(rows)))
       if (analyzeAfter) analyzeStats()
       read().map(_.count()).getOrElse(0L)
     } }
@@ -2040,33 +2163,42 @@ class BucketedStateTable(
 }
 
 object BucketedStateTable {
+  /** The buckets a commit writes — the dirty set, its closure or the
+    * whole table — in `tasks` write tasks, laid out by `packing`. */
+  private final case class WritePlan(buckets: Seq[Int], tasks: Int,
+      packing: BucketWriter.Packing)
+
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def lockFor(path: String): Object =
     locks.computeIfAbsent(path, _ => new Object)
 
-  /** One bucket's data files, as the manifest names them or the driver
-    * listed them. */
-  private[graft] final case class BucketFiles(bucket: Int,
-      files: Seq[org.apache.hadoop.fs.FileStatus]) {
-    def bytes: Long = files.map(_.getLen).sum
+  /** One location of a read — a data file or a legacy bucket
+    * directory at `root` — with its files as the manifest names them or
+    * the driver listed them, the requested buckets it holds with their
+    * byte shares, and whether it also holds buckets not requested. */
+  private[graft] final case class BucketFiles(root: Path,
+      files: Seq[org.apache.hadoop.fs.FileStatus], shares: Map[Int, Long],
+      partial: Boolean = false) {
+    def bytes: Long = shares.values.sum
   }
 
-  /** The data files of `locs`, by location: a bucket file straight from
-    * its manifest pointer (path and size, no filesystem call), a legacy
-    * bucket directory by listing it ([[listBuckets]]). */
+  /** The data files of `locs`: a file straight from its manifest
+    * pointers (path and size, no filesystem call), once however many
+    * buckets name it; a legacy bucket directory by listing it
+    * ([[listBuckets]]). */
   private[graft] def filesOf(fs: org.apache.hadoop.fs.FileSystem,
       locs: Seq[StateManifest.Location]): Seq[BucketFiles] = {
     val listed = listBuckets(fs,
-      locs.filter(_.bytes.isEmpty).map(l => l.bucket -> l.path))
-      .map(l => l.bucket -> l).toMap
+      locs.filter(_.length.isEmpty).map(l => l.shares.head._1 -> l.path))
+      .map(l => l.root -> l).toMap
     lazy val blockSize = fs.getDefaultBlockSize(locs.head.path)
     locs.map { l =>
-      l.bytes match {
+      l.length match {
         case Some(n) =>
-          BucketFiles(l.bucket, Seq(new org.apache.hadoop.fs.FileStatus(
-            n, false, 1, blockSize, 0L, fs.makeQualified(l.path))))
-        case None => listed(l.bucket)
+          BucketFiles(l.path, Seq(new org.apache.hadoop.fs.FileStatus(
+            n, false, 1, blockSize, 0L, fs.makeQualified(l.path))), l.shares, l.partial)
+        case None => listed(l.path)
       }
     }
   }
@@ -2081,11 +2213,13 @@ object BucketedStateTable {
     * trip per bucket) does not serialize thousands of them. */
   private[graft] def listBuckets(fs: org.apache.hadoop.fs.FileSystem,
       dirs: Seq[(Int, Path)]): Seq[BucketFiles] = {
-    def one(b: Int, dir: Path) =
-      BucketFiles(b, fs.listStatus(dir).toSeq.filter { s =>
+    def one(b: Int, dir: Path) = {
+      val files = fs.listStatus(dir).toSeq.filter { s =>
         val n = s.getPath.getName
         s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      })
+      }
+      BucketFiles(dir, files, Map(b -> files.map(_.getLen).sum))
+    }
     if (dirs.size <= ListingThreshold) dirs.map { case (b, d) => one(b, d) }
     else dirs.map { case (b, d) => listingPool.submit(
         new java.util.concurrent.Callable[BucketFiles] { def call() = one(b, d) }) }
@@ -2105,42 +2239,84 @@ object BucketedStateTable {
       t
     })
 
-  /** Scans already-listed bucket files as one parquet relation over a
+  /** A row's bucket under `layout` buckets of `cols`. */
+  private[graft] def bucketExpr(cols: Seq[String], layout: Int): org.apache.spark.sql.Column =
+    pmod(xxhash64(cols.map(col): _*), lit(layout.toLong)).cast("int")
+
+  /** Scans already-listed bucket files as parquet relations over a
     * [[ListedFileIndex]], under `schema` (None = inferred from the
     * listed files' footers, for manifests that predate the schema
     * line). With `withBucket` the rows also carry their bucket id as
-    * the `__bucket` partition column. Building the frame launches no
-    * Spark job: `spark.read.parquet` over more than
+    * the `__bucket` column: the partition value of a one-bucket file,
+    * computed from the bucket columns (`bucketing`, as
+    * [[StateManifest.bucketing]] gives them) for a file holding several.
+    * A `partial` file keeps only the rows of its requested buckets, so
+    * a read of any bucket subset is exact. Building the frame launches
+    * no Spark job: `spark.read.parquet` over more than
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
     * directories runs a listing job with one task per directory, which
     * dominated the state layer's reads at ~30 ms per task. */
   private[graft] def scanBuckets(spark: SparkSession, listed: Seq[BucketFiles],
       schema: Option[org.apache.spark.sql.types.StructType],
-      withBucket: Boolean = false): DataFrame = {
+      withBucket: Boolean = false,
+      bucketing: Option[(Seq[org.apache.spark.sql.types.StructField], Int)] = None)
+      : DataFrame = {
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val format = new ParquetFileFormat
     val dataSchema = schema
       .orElse(format.inferSchema(spark, Map.empty, listed.flatMap(_.files)))
       .getOrElse(throw new IllegalStateException(
         "unable to infer a parquet schema: the manifest records none and " +
           s"the ${listed.size} listed bucket directories hold no data files"))
+    // a file read whole needs its rows placed only for `withBucket`, and
+    // then only when it holds several buckets
+    val (plain, shared) = listed.partition(l =>
+      !l.partial && (!withBucket || l.shares.size == 1))
+    val plains = relation(spark, dataSchema, plain.map(l =>
+      (l.files, if (withBucket) Some(l.shares.head._1) else None)), withBucket)
+    if (shared.isEmpty) return plains
+    val (fields, layout) = bucketing.getOrElse(throw new IllegalStateException(
+      "a data file holds several buckets but the manifest records no layout"))
+    val out = dataSchema.fieldNames.toSeq.map(StateOps.qcol) ++
+      (if (withBucket) Seq(col(StateManifest.BucketCol)) else Nil)
+    val wanted = shared.filter(_.partial).flatMap(_.shares.keys)
+    val raw = relation(spark,
+      StructType(dataSchema.fields ++ fields.filterNot(f => dataSchema.fieldNames.contains(f.name))),
+      shared.map(l => (l.files, None)), withBucket = false)
+    val placed =
+      if (withBucket || wanted.nonEmpty)
+        raw.withColumn(StateManifest.BucketCol, bucketExpr(fields.map(_.name), layout))
+      else raw
+    val kept =
+      if (wanted.isEmpty) placed
+      else placed.filter(col(StateManifest.BucketCol).isin(wanted.distinct.map(Integer.valueOf): _*))
+    val packed = kept.select(out: _*)
+    if (plain.isEmpty) packed else plains.union(packed)
+  }
+
+  /** One parquet relation over groups of files, each with its
+    * `__bucket` partition value when `withBucket`. */
+  private def relation(spark: SparkSession,
+      dataSchema: org.apache.spark.sql.types.StructType,
+      groups: Seq[(Seq[org.apache.hadoop.fs.FileStatus], Option[Int])],
+      withBucket: Boolean): DataFrame = {
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     val partitionSchema =
       if (withBucket) StructType(Seq(StructField(StateManifest.BucketCol, IntegerType)))
       else new StructType()
-    val parts = listed.map { l =>
+    val parts = groups.map { case (files, bucket) =>
       org.apache.spark.sql.execution.datasources.PartitionDirectory(
-        if (withBucket) org.apache.spark.sql.catalyst.InternalRow(l.bucket)
-        else org.apache.spark.sql.catalyst.InternalRow.empty,
-        l.files.toArray)
+        bucket.fold(org.apache.spark.sql.catalyst.InternalRow.empty)(
+          org.apache.spark.sql.catalyst.InternalRow(_)),
+        files.toArray)
     }
     // file sources read every column as nullable, whatever the files or
     // the recorded schema say (DataSource.resolveRelation does the same)
     spark.baseRelationToDataFrame(HadoopFsRelation(
       ListedFileIndex(partitionSchema, parts),
       partitionSchema, asNullable(dataSchema).asInstanceOf[StructType],
-      None, format, Map.empty)(spark))
+      None, new ParquetFileFormat, Map.empty)(spark))
   }
 
   private def asNullable(

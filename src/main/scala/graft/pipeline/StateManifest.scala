@@ -27,9 +27,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   zmap.<bucket>=<ZoneMaps JSON>    # per-bucket zone map, by bucket
   *   <bucket>=<data commit>,<file>,<bytes>   # bucket pointers, by bucket
   * }}}
-  * A bucket pointer names the one file the data commit wrote for the
-  * bucket and its size, so a reader opens the files without listing
-  * a directory. A bare `<bucket>=<data commit>` is a pointer written
+  * A bucket pointer names the file of the data commit that holds the
+  * bucket and the bucket's share of that file's bytes, so a reader
+  * opens the files without listing a directory. Several buckets may
+  * name one file (a packed commit writes a small table, or the files
+  * it touches, as one file per write task): a file is named whole or
+  * not at all — every
+  * bucket it holds points to it, or none does — and the shares of the
+  * buckets naming it sum to its size, so every sum over buckets stays
+  * the table's bytes. A bare `<bucket>=<data commit>` is a pointer written
   * before the flat file layout: the bucket is the directory
   * `data/c<commit>/__bucket=<bucket>/`, read by listing it.
   * The recorded schema lets a committed-but-EMPTY snapshot (a drained
@@ -100,17 +106,49 @@ final case class StateManifest(
       yield BucketedStateTable.Layout(kc, bucketCols.getOrElse(kc), nb,
         keepCommits, retentionFloorMillis, statsCols)
 
+  /** The file bucket `b` points to: its data commit and name. */
+  private def fileOf(b: Int): Option[(Long, String)] =
+    files.get(b).map(f => (buckets(b), f.name))
+
+  /** Every named file's size and the buckets it holds. */
+  private lazy val held: Map[(Long, String), (Long, Seq[Int])] =
+    files.toSeq.groupBy { case (b, _) => fileOf(b).get }.map { case (k, bs) =>
+      k -> (bs.map(_._2.bytes).sum, bs.map(_._1).sorted)
+    }
+
   /** Where the `only` buckets this manifest holds (default: all) live
-    * under the table `root`, by bucket. */
+    * under the table `root`: each file once, with the shares of the
+    * requested buckets it holds, in bucket order. A legacy bucket
+    * directory is one location of unknown size. */
   def locations(root: Path,
-      only: Iterable[Int] = buckets.keys): Seq[StateManifest.Location] =
-    only.toSeq.sorted.flatMap(b => buckets.get(b).map { c =>
-      files.get(b) match {
-        case Some(f) => StateManifest.Location(b,
-          new Path(StateManifest.dataCommitDir(root, c), f.name), Some(f.bytes))
-        case None => StateManifest.Location(b, StateManifest.bucketDir(root, c, b), None)
-      }
-    })
+      only: Iterable[Int] = buckets.keys): Seq[StateManifest.Location] = {
+    val (named, legacy) = only.toSeq.distinct.filter(buckets.contains).partition(files.contains)
+    val inFiles = named.groupBy(b => fileOf(b).get).map { case (k @ (c, name), bs) =>
+      StateManifest.Location(new Path(StateManifest.dataCommitDir(root, c), name),
+        Some(held(k)._1), bs.map(b => b -> files(b).bytes).toMap, held(k)._2.size)
+    }
+    val inDirs = legacy.map(b => StateManifest.Location(
+      StateManifest.bucketDir(root, buckets(b), b), None, Map(b -> 0L), 1))
+    (inFiles ++ inDirs).toSeq.sortBy(_.shares.keys.min)
+  }
+
+  /** `dirty` and every bucket that shares a file with one of them: the
+    * buckets a commit rewriting `dirty` must write at least, so that no
+    * file stays named by only some of its buckets. */
+  def closure(dirty: Iterable[Int]): Seq[Int] = {
+    val fs = dirty.flatMap(fileOf).toSet
+    (dirty ++ fs.flatMap(held(_)._2)).toSeq.distinct.sorted
+  }
+
+  /** The bucket columns as the recorded schema types them and the
+    * bucket count: what a reader needs to compute a row's bucket. None
+    * for a manifest that records no schema or layout. */
+  def bucketing: Option[(Seq[org.apache.spark.sql.types.StructField], Int)] =
+    for (s <- schema; nb <- numBuckets;
+         cols <- bucketCols.orElse(keyCols);
+         fields = cols.flatMap(c => s.fields.find(_.name == c))
+         if fields.size == cols.size)
+      yield (fields, nb)
 
   /** The buckets a scan constrained by `filters` must read, by bucket
     * hash and zone maps ([[ZoneMaps.surviving]]) — always a superset of
@@ -133,9 +171,15 @@ object StateManifest {
   /** The file a bucket pointer names, in its data commit's directory. */
   final case class DataFile(name: String, bytes: Long)
 
-  /** One bucket of a snapshot on disk: its file and size, or (`bytes`
-    * None) the legacy directory that holds its files. */
-  final case class Location(bucket: Int, path: Path, bytes: Option[Long])
+  /** One data file of a snapshot read: its path and `length`, the
+    * requested buckets it holds with their byte `shares`, and how many
+    * buckets it `holds` in all (more than requested: a read of it must
+    * keep only the requested buckets' rows). A legacy bucket directory
+    * has no `length` and its share is 0 until listed. */
+  final case class Location(path: Path, length: Option[Long],
+      shares: Map[Int, Long], holds: Int) {
+    def partial: Boolean = shares.size < holds
+  }
 
   def parse(text: String): StateManifest = {
     val kv = Map.newBuilder[String, String]
@@ -182,6 +226,7 @@ object StateManifest {
   // ---- path convention ----------------------------------------------
   //   root/_commits/c00000003.txt                  manifest of commit 3
   //   root/data/c00000003/b00042-t1-a17.parquet    bucket 42 as commit 3 wrote it
+  //   root/data/c00000003/p-t1-a17.parquet         the buckets task 1 of a packed commit held
   //   root/data/c00000003/__bucket=42/part-*       the same, in the legacy layout
 
   private[graft] def commitsDir(root: Path): Path = new Path(root, "_commits")
@@ -208,6 +253,11 @@ object StateManifest {
   private[graft] def bucketFileName(bucket: Int, partition: Int, attempt: Long): String =
     f"b$bucket%05d-t$partition-a$attempt.parquet"
 
+  /** The name of the one file task `partition` (task attempt `attempt`)
+    * of a packed commit writes, holding every bucket the task holds. */
+  private[graft] def packedFileName(partition: Int, attempt: Long): String =
+    f"p-t$partition-a$attempt.parquet"
+
   private val BucketFile = "b(\\d+)-t\\d+-a\\d+\\.parquet".r
 
   /** The commit id a `data/` entry named `name` holds, if it is one. */
@@ -230,16 +280,25 @@ object StateManifest {
 
   /** `(commitId, FileStatus)` of every published manifest under `root`,
     * oldest → newest, from one directory listing. */
-  private[graft] def list(fs: FileSystem, root: Path): Seq[(Long, FileStatus)] = {
+  private[graft] def list(fs: FileSystem, root: Path): Seq[(Long, FileStatus)] =
+    listWithTemps(fs, root)._1
+
+  /** [[list]] plus the temp manifests (`.c<id>.txt.tmp`) the same
+    * listing finds: a writer that crashed between creating one and
+    * renaming it leaves it behind. */
+  private[graft] def listWithTemps(fs: FileSystem,
+      root: Path): (Seq[(Long, FileStatus)], Seq[(Long, FileStatus)]) = {
     val dir = commitsDir(root)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      if (n.length > 5 && n.startsWith("c") && n.endsWith(".txt") &&
-          n.drop(1).dropRight(4).forall(_.isDigit))
-        Some(n.drop(1).dropRight(4).toLong -> s)
+    def idOf(n: String, prefix: String, suffix: String): Option[Long] =
+      if (n.length > prefix.length + suffix.length && n.startsWith(prefix) &&
+          n.endsWith(suffix) && n.drop(prefix.length).dropRight(suffix.length).forall(_.isDigit))
+        Some(n.drop(prefix.length).dropRight(suffix.length).toLong)
       else None
+    val all = if (!fs.exists(dir)) Nil else fs.listStatus(dir).toSeq
+    def named(prefix: String, suffix: String) = all.flatMap { s =>
+      idOf(s.getPath.getName, prefix, suffix).map(_ -> s)
     }.sortBy(_._1)
+    (named("c", ".txt"), named(".c", ".txt.tmp"))
   }
 
   /** The committed snapshot of the table at `path`: the newest

@@ -359,17 +359,15 @@ private[sources] class GraftStateChangesSource(
     * 100 TB seed). Lazy so post-bootstrap restarts (floor ≥ base, the
     * chunk list never consulted) don't require the base commit to
     * still be retained. */
-  private lazy val bootstrapMeta
-      : (Seq[Seq[StateManifest.Location]], Option[StructType]) =
+  private lazy val bootstrapMeta: (Seq[Seq[Int]], Option[StateManifest]) =
     maxSnapshotBucketsPerTrigger match {
       case Some(m) if initialSnapshot =>
         val snap = StateManifest.snapshot(conf, path, Some(base))
-        (snap.toSeq.flatMap(_.locations(new Path(path))).grouped(m).toSeq,
-          snap.flatMap(_.schema))
+        (snap.toSeq.flatMap(_.buckets.keys.toSeq.sorted).grouped(m).toSeq, snap)
       case _ => (Nil, None)
     }
 
-  private def snapshotChunks: Seq[Seq[StateManifest.Location]] = bootstrapMeta._1
+  private def snapshotChunks: Seq[Seq[Int]] = bootstrapMeta._1
 
   private def bootstrapStart: Long = base - snapshotChunks.size
 
@@ -581,12 +579,15 @@ private[sources] class GraftStateChangesSource(
         val hi = math.min(to, base)
         if (lo >= hi) None
         else {
-          val locs = ((lo - bootstrapStart) until (hi - bootstrapStart))
+          val buckets = ((lo - bootstrapStart) until (hi - bootstrapStart))
             .flatMap(i => snapshotChunks(i.toInt))
+          // a file holding buckets of other chunks is read here for this
+          // chunk's rows only, so no row is emitted twice
+          val snap = bootstrapMeta._2.get
           val raw = BucketedStateTable.scanBuckets(spark,
             BucketedStateTable.filesOf(
-              new Path(path).getFileSystem(conf), locs),
-            bootstrapMeta._2)
+              new Path(path).getFileSystem(conf), snap.locations(new Path(path), buckets)),
+            snap.schema, bucketing = snap.bucketing)
           Some(pinned(raw
             .withColumn("change_type", lit("insert"))
             .withColumn("_commit_id", lit(base))))

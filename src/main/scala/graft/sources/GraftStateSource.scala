@@ -133,10 +133,11 @@ object GraftStateSource {
     val spark = SparkSession.active
     val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
     val opts = options.asCaseSensitiveMap.asScala.toMap
-    val locs = z.locations(new Path(path), buckets)
-    val roots = locs.zip(BucketedStateTable.filesOf(fs, locs)).map {
-      case (l, f) => fs.makeQualified(l.path) -> f.files.toArray
-    }
+    // one root per file, however many buckets name it; a file holding
+    // buckets outside `buckets` adds rows the scan's residual filters
+    // drop (a pruned set is a superset of the matching buckets)
+    val roots = BucketedStateTable.filesOf(fs, z.locations(new Path(path), buckets))
+      .map(f => fs.makeQualified(f.root) -> f.files.toArray)
     new ParquetTable(name, spark, options, roots.map(_._1.toString),
         userSpecifiedSchema = z.schema,
         fallbackFileFormat = classOf[ParquetFileFormat]) {

@@ -145,12 +145,14 @@ class BucketedStateTableSpec extends SparkSpec {
 
   // ── the per-task floor: reads list on the driver, writes size by bytes ─
 
-  private def seeded(path: String, buckets: Int, rows: Int): BucketedStateTable = {
+  private def seeded(path: String, buckets: Int, rows: Int,
+      wide: Boolean = false): BucketedStateTable = {
     val t = new BucketedStateTable(spark, path,
       keyCols = Seq("k"), numBuckets = buckets, retentionFloorMillis = 0L)
-    t.merge(spark.range(rows)
+    val kv = spark.range(rows)
       .select(concat(lit("k"), format_string("%06d", col("id"))).as("k"),
-        col("id").as("v")), keys = Seq("k"))
+        col("id").as("v"))
+    t.merge(if (wide) StateLayouts.wide(kv) else kv, keys = Seq("k"))
     t
   }
 
@@ -195,7 +197,8 @@ class BucketedStateTableSpec extends SparkSpec {
 
   test("a read over more than 32 buckets starts no Spark job before an action") {
     val dir = tmp()
-    val t = seeded(s"$dir/state", buckets = 64, rows = 3000)
+    // past the bound (~2 KB a row): one file per bucket
+    val t = seeded(s"$dir/state", buckets = 64, rows = 3000, wide = true)
     val commit = t.lastCommit.get.commitId
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val (full, old, pruned) = listening(new org.apache.spark.scheduler.SparkListener {
@@ -222,6 +225,26 @@ class BucketedStateTableSpec extends SparkSpec {
 
   test("a merge dirtying more small buckets than cores writes with one task per core, one sorted file per bucket") {
     val dir = tmp()
+    // past the bound: ~2 KB a row, and the merge dirties about half the
+    // buckets (a merge dirtying every bucket rewrites no clean bytes by
+    // packing, so it packs however large the table)
+    val t = seeded(s"$dir/state", buckets = 64, rows = 3000, wide = true)
+    val cores = spark.sparkContext.defaultParallelism
+    val upd = spark.range(0, 300, 7)
+      .select(concat(lit("k"), format_string("%06d", col("id"))).as("k"),
+        (-col("id") - 1).as("v"))
+    val tasks = writeStageTasks(t.merge(upd, keys = Seq("k")))
+    val stats = t.lastCommit.get
+    assert(stats.bucketsRead.size > cores && !stats.packed)
+    assert(tasks == Seq(cores), s"write stages ran $tasks tasks")
+    assert(oneSortedFilePerBucket(s"$dir/state", stats.commitId) ==
+      stats.bucketsWritten.size)
+    assert(stats.bucketsWritten == stats.bucketsRead)
+    assert(t.read().get.filter(col("v") < 0).count() == upd.count())
+  }
+
+  test("a packed merge of a small table writes with one task per core, one file per task sorted by bucket and key") {
+    val dir = tmp()
     val t = seeded(s"$dir/state", buckets = 64, rows = 3000)
     val cores = spark.sparkContext.defaultParallelism
     val upd = spark.range(0, 3000, 7)
@@ -229,10 +252,18 @@ class BucketedStateTableSpec extends SparkSpec {
         (-col("id") - 1).as("v"))
     val tasks = writeStageTasks(t.merge(upd, keys = Seq("k")))
     val stats = t.lastCommit.get
-    assert(stats.bucketsRead.size > cores)
+    assert(stats.bucketsRead.size > cores && stats.packed)
     assert(tasks == Seq(cores), s"write stages ran $tasks tasks")
-    assert(oneSortedFilePerBucket(s"$dir/state", stats.commitId) ==
-      stats.bucketsWritten.size)
+    val files = parquetFiles(new java.io.File(f"$dir/state/data/c${stats.commitId}%08d"))
+    assert(files.size == stats.filesWritten && files.size <= cores, files)
+    val bucket = pmod(xxhash64(col("k")), lit(64L)).cast("int")
+    files.foreach { f =>
+      val rows = spark.read.parquet(f.getPath).select(bucket, col("k"))
+        .collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+      assert(rows == rows.sorted, s"${f.getName} must be sorted by bucket and key")
+      assert(rows.map(_._1).distinct.size > 1, s"${f.getName} holds several buckets")
+    }
+    assert(stats.bucketsWritten.size == 64)
     assert(t.read().get.filter(col("v") < 0).count() == upd.count())
   }
 
@@ -443,10 +474,11 @@ class BucketedStateTableSpec extends SparkSpec {
     val t = new BucketedStateTable(spark, s"$dir/state",
       keyCols = Seq("k"), numBuckets = 32, retentionFloorMillis = 60_000L)
 
-    // commit 1: a 2000-row world
+    // commit 1: a 2000-row world, past the bound (~2 KB a row) so that
+    // every bucket is its own file
     val base = spark.range(2000)
       .select(concat(lit("k"), col("id")).as("k"), col("id").as("v"))
-    t.merge(base, keys = Seq("k"))
+    t.merge(StateLayouts.wide(base), keys = Seq("k"))
     val c1 = t.commits().last
 
     // commit 2: one updated row, one new row (net vs c1: update + insert)
@@ -461,8 +493,8 @@ class BucketedStateTableSpec extends SparkSpec {
     val c3 = t.commits().last
 
     val feed = t.changesBetween(c1, c3)
-    assert(feed.columns.toSeq == Seq("change_type", "k", "v"))
-    val got = feed.as[(String, String, Long)].collect().toSet
+    assert(feed.columns.toSeq == Seq("change_type", "k", "v", "pad"))
+    val got = feed.select("change_type", "k", "v").as[(String, String, Long)].collect().toSet
     assert(got == Set(
       ("update_preimage", "k7", 7L), ("update_postimage", "k7", 70L),
       ("delete", "k11", 11L)),
@@ -486,7 +518,7 @@ class BucketedStateTableSpec extends SparkSpec {
     assert(same.count() == 0L)
 
     // apply-check: from-snapshot + feed reconstructs the to-snapshot
-    val fromSnap = t.readAt(c1).get
+    val fromSnap = t.readAt(c1).get.select("k", "v")
     val applied = fromSnap
       .join(feed.filter(col("change_type").isin("delete", "update_preimage"))
         .select("k"), Seq("k"), "left_anti")
@@ -494,7 +526,7 @@ class BucketedStateTableSpec extends SparkSpec {
         .filter(col("change_type").isin("insert", "update_postimage"))
         .select("k", "v"))
     assert(applied.as[(String, Long)].collect().toSet ==
-      t.readAt(c3).get.as[(String, Long)].collect().toSet)
+      t.readAt(c3).get.select("k", "v").as[(String, Long)].collect().toSet)
 
     // a drained table still diffs via the manifest-recorded schema
     val t2 = new BucketedStateTable(spark, s"$dir/state2",
@@ -873,7 +905,10 @@ class BucketedStateTableSpec extends SparkSpec {
     val dir = tmp()
     val t = new BucketedStateTable(spark, s"$dir/state",
       keyCols = Seq("k"), numBuckets = 4, retentionFloorMillis = 60_000L)
-    t.merge((1L to 500L).map(i => (s"k$i", i)).toDF("k", "v"), keys = Seq("k"))
+    // past the bound (~2 KB a row), so the rebucket writes one file per
+    // bucket
+    t.merge(StateLayouts.wide((1L to 500L).map(i => (s"k$i", i)).toDF("k", "v")),
+      keys = Seq("k"))
     t.merge(Seq(("k1", -1L)).toDF("k", "v"), keys = Seq("k"))
     val reader = t.read().get // resolves the OLD layout's manifest
     val oldCommits = t.commits()
@@ -979,12 +1014,15 @@ class BucketedStateTableSpec extends SparkSpec {
     val t2 = new BucketedStateTable(spark, s"$dir/state2",
       keyCols = Seq("k"), numBuckets = 4, keepCommits = 10,
       retentionFloorMillis = 60_000L)
-    t2.merge((1L to 400L).map(i => (s"k$i", i)).toDF("k", "v"), keys = Seq("k"))
+    // past the bound (~2 KB a row), so the split writes one file per
+    // bucket
+    t2.merge(StateLayouts.wide((1L to 400L).map(i => (s"k$i", i)).toDF("k", "v")),
+      keys = Seq("k"))
     val qa = t2.commits().last
     val t2w = t2.splitBuckets(2)
     t2w.merge(Seq(("k2", -2L)).toDF("k", "v"), keys = Seq("k"))
     val diff = t2w.changesBetween(qa, t2w.commits().last)
-    assert(diff.as[(String, String, Long)].collect().toSet == Set(
+    assert(diff.select("change_type", "k", "v").as[(String, String, Long)].collect().toSet == Set(
       ("update_preimage", "k2", 2L), ("update_postimage", "k2", -2L)))
     val touchedDirs = diff.inputFiles.toSeq
       .map(f => graft.pipeline.StateManifest.bucketOf(f).get)
@@ -1087,12 +1125,15 @@ class BucketedStateTableSpec extends SparkSpec {
     val t2 = new BucketedStateTable(spark, s"$dir/state2",
       keyCols = Seq("k"), numBuckets = 8, keepCommits = 10,
       retentionFloorMillis = 60_000L)
-    t2.merge((1L to 400L).map(i => (s"k$i", i)).toDF("k", "v"), keys = Seq("k"))
+    // past the bound (~2 KB a row): one file per bucket (the coalesce to
+    // 4 buckets has as many write tasks as buckets)
+    t2.merge(StateLayouts.wide((1L to 400L).map(i => (s"k$i", i)).toDF("k", "v")),
+      keys = Seq("k"))
     val qa = t2.commits().last
     val t2n = t2.coalesceBuckets(2)
     t2n.merge(Seq(("k2", -2L)).toDF("k", "v"), keys = Seq("k"))
     val diff = t2n.changesBetween(qa, t2n.commits().last)
-    assert(diff.as[(String, String, Long)].collect().toSet == Set(
+    assert(diff.select("change_type", "k", "v").as[(String, String, Long)].collect().toSet == Set(
       ("update_preimage", "k2", 2L), ("update_postimage", "k2", -2L)))
     val touchedDirs = diff.inputFiles.toSeq
       .map(f => graft.pipeline.StateManifest.bucketOf(f).get)
@@ -1189,7 +1230,10 @@ class BucketedStateTableSpec extends SparkSpec {
     val t8 = new BucketedStateTable(spark, s"$dir/state",
       keyCols = Seq("k"), numBuckets = 8, keepCommits = 30,
       retentionFloorMillis = 60_000L)
-    t8.merge((1L to 400L).map(i => (s"k$i", i)).toDF("k", "v"), keys = Seq("k"))
+    // past the bound (~2 KB a row), so the seed and both relayouts
+    // write one file per bucket
+    t8.merge(StateLayouts.wide((1L to 400L).map(i => (s"k$i", i)).toDF("k", "v")),
+      keys = Seq("k"))
     val c1 = t8.commits().last
     // 8 -> 16 -> 8: endpoint layouts EQUAL, but both relayouts rewrote
     // every bucket — a plain endpoint pointer-compare would mark ALL
@@ -1198,7 +1242,7 @@ class BucketedStateTableSpec extends SparkSpec {
     val tBack = t16.coalesceBuckets(2)
     tBack.merge(Seq(("k2", -2L)).toDF("k", "v"), keys = Seq("k"))
     val diff = tBack.changesBetween(c1, tBack.commits().last)
-    assert(diff.as[(String, String, Long)].collect().toSet == Set(
+    assert(diff.select("change_type", "k", "v").as[(String, String, Long)].collect().toSet == Set(
       ("update_preimage", "k2", 2L), ("update_postimage", "k2", -2L)))
     val touchedDirs = diff.inputFiles.toSeq
       .map(f => graft.pipeline.StateManifest.bucketOf(f).get)

@@ -10,6 +10,7 @@ import org.apache.hadoop.fs.{FileStatus, FSDataOutputStream, Path, RawLocalFileS
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.pipeline.{BucketedStateTable, StateManifest, ZoneMaps}
 
@@ -126,11 +127,35 @@ class CommitPathSpec extends SparkSpec {
 
   private def seed(n: Int) = (0 until n).map(i => f"k$i%04d" -> i.toLong)
 
+  /** `rows` with a ~2 KB pseudo-random payload each: past the bound,
+    * where a table keeps one file per bucket. */
+  private def wide(rows: (String, Long)*): DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(rows.size)
+    rows.map { case (k, v) => (k, v, Iterator.fill(2000)(('a' + rnd.nextInt(26)).toChar).mkString) }
+      .toDF("k", "v", "pad")
+  }
+
+  /** `n` keys of `seed(60)`, each in its own bucket of `buckets`. */
+  private def spreadOver(n: Int, buckets: Int): Seq[String] = {
+    val s = spark
+    import s.implicits._
+    val byBucket = seed(60).map(_._1).toDF("k")
+      .select($"k", org.apache.spark.sql.functions.pmod(
+        org.apache.spark.sql.functions.xxhash64($"k"),
+        org.apache.spark.sql.functions.lit(buckets.toLong)).as("b"))
+      .as[(String, Long)].collect().groupBy(_._2).values.map(_.map(_._1).min).toSeq.sorted
+    assert(byBucket.size >= n)
+    byBucket.take(n)
+  }
+
   test("a merge rewriting K buckets creates K files and a manifest, renames once, makes one directory and lists no commit directory") {
     val dir = tmp()
     val root = s"${CountingFs.Scheme}://$dir/t"
     val t = table(root)
-    t.merge(kv(seed(200): _*), keys = Seq("k"))
+    // past the bound: one file per bucket
+    t.merge(wide(seed(200): _*), keys = Seq("k"))
     val (res, log) = CountingFs.watch(dir) {
       t.merge(kv(("k0001", -1L), ("k0002", -2L), ("k0150", -150L), ("new", 9L)),
         keys = Seq("k"))
@@ -141,6 +166,7 @@ class CommitPathSpec extends SparkSpec {
     val commitDir = f"$dir/t/data/c${c.commitId}%08d"
     def ops(op: String) = log.filter(_._1 == op).map(_._2)
     assert(k >= 3 && c.bucketsWritten == c.bucketsRead, c)
+    assert(!c.packed && c.filesWritten == k, c)
     assert(ops("create").count(_.startsWith(s"$commitDir/")) == k, log)
     assert(ops("create").count(_.startsWith(s"$dir/t/_commits/")) == 1, log)
     assert(ops("create").size == k + 1, log)
@@ -151,6 +177,30 @@ class CommitPathSpec extends SparkSpec {
     assert(!ops("list").exists(_.startsWith(commitDir)), log)
     assert(rows(t) == seed(200).toMap ++ Map("k0001" -> -1L, "k0002" -> -2L,
       "k0150" -> -150L, "new" -> 9L))
+  }
+
+  test("a packed merge creates one file per write task and a manifest, renames once, makes one directory and lists no commit directory") {
+    val dir = tmp()
+    val root = s"${CountingFs.Scheme}://$dir/t"
+    val t = table(root)
+    val spread = spreadOver(8, 16)
+    t.merge(kv(seed(200): _*), keys = Seq("k"))
+    val (res, log) = CountingFs.watch(dir) {
+      t.merge(kv(spread.map(_ -> -1L) :+ ("new" -> 9L): _*), keys = Seq("k"))
+    }
+    res.get
+    val c = t.lastCommit.get
+    val commitDir = f"$dir/t/data/c${c.commitId}%08d"
+    def ops(op: String) = log.filter(_._1 == op).map(_._2)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(c.packed && c.bucketsRead.size > cores, c)
+    assert(c.bucketsWritten.size == 16 && c.filesWritten <= cores, c)
+    assert(ops("create").count(_.startsWith(s"$commitDir/")) == c.filesWritten, log)
+    assert(ops("create").size == c.filesWritten + 1, log)
+    assert(ops("rename").size == 1 && ops("rename").head.contains("/_commits/"), log)
+    assert(ops("mkdir").distinct == Seq(commitDir), log)
+    assert(!ops("list").exists(_.startsWith(commitDir)), log)
+    assert(rows(t) == seed(200).toMap ++ spread.map(_ -> -1L) + ("new" -> 9L))
   }
 
   test("a zone-mapped merge of a driver-local batch runs two jobs: its map stage and the bucket write") {
@@ -258,21 +308,38 @@ class CommitPathSpec extends SparkSpec {
       .toSet -- named
   }
 
+  /** Anything in `_commits/` but a published manifest and its checksum. */
+  private def strayManifests(dir: String): Seq[String] = {
+    val names = Option(new java.io.File(s"$dir/t/_commits").list()).toSeq.flatten
+    val published = names.filter(_.matches("c\\d+\\.txt")).toSet
+    names.filterNot(n => published(n) ||
+      (n.startsWith(".") && n.endsWith(".crc") && published(n.drop(1).dropRight(4))))
+  }
+
   /** Runs `op` on a freshly seeded table once to count its mutating
     * calls, then once per call with a crash injected there, and checks
-    * that the table recovers from each. */
-  private def crashEveryCall(op: BucketedStateTable => Unit) = {
+    * that the table recovers from each. The seed is `rows` narrow rows,
+    * which pack; `wide`, a second commit gives every row a ~2 KB
+    * payload, which leaves a packed table past the bound. `packs` is
+    * whether `op`'s commit packs. */
+  private def crashEveryCall(op: BucketedStateTable => Unit, rows: Int = 60,
+      wide: Boolean = false, packs: Option[Boolean] = None) = {
     def seeded(): (String, BucketedStateTable) = {
       val dir = tmp()
       val t = table(s"${CountingFs.Scheme}://$dir/t", buckets = 8)
-      t.merge(kv(seed(60): _*), keys = Seq("k"))
+      t.merge(kv(seed(rows): _*), keys = Seq("k"))
+      if (wide) {
+        t.merge(this.wide(seed(rows): _*), keys = Seq("k"))
+        assert(t.lastCommit.get.packed, t.lastCommit)
+      }
       (dir, t)
     }
-    val pre = seed(60).toMap
+    val pre = seed(rows).toMap
     val (cleanDir, clean) = seeded()
     val (ok, log) = CountingFs.watch(cleanDir)(op(clean))
     ok.get
-    val post = rows(clean)
+    packs.foreach(p => assert(clean.lastCommit.get.packed == p, clean.lastCommit))
+    val post = this.rows(clean)
     val n = CountingFs.mutatingOps(log)
     assert(n >= 4 && post != pre && log.exists(_._1 == "rename"), log)
     val next = Map("k0000" -> 1000L, "zz" -> 1L)
@@ -283,18 +350,25 @@ class CommitPathSpec extends SparkSpec {
       assert(res.isFailure, s"crash at call $at of $n did not surface")
       // a restarted process: a fresh handle over what the crash left
       val after = table(s"${CountingFs.Scheme}://$dir/t", buckets = 8)
-      val now = rows(after)
+      val now = this.rows(after)
       assert(now == pre || now == post, s"crash at call $at of $n: torn state")
       val head = after.commits().last
       assert(changes(after, preId, head) == diff(pre, now), s"crash at call $at of $n")
       after.merge(kv(next.toSeq: _*), keys = Seq("k"))
-      assert(rows(after) == now ++ next, s"crash at call $at of $n: next commit")
+      assert(this.rows(after) == now ++ next, s"crash at call $at of $n: next commit")
       assert(changes(after, preId, after.commits().last) == diff(pre, now ++ next))
       assert(unreferenced(dir).isEmpty,
         s"crash at call $at of $n left ${unreferenced(dir)}")
+      assert(strayManifests(dir).isEmpty,
+        s"crash at call $at of $n left ${strayManifests(dir)} in _commits/")
     }
     n
   }
+
+  /** Keys that dirty enough buckets of 8 for a narrow table to pack,
+    * and few enough that a packed table of 200 wide rows unpacks. */
+  private def packing = spreadOver(7, 8)
+  private def unpacking = spreadOver(5, 8)
 
   test("a crash at any mutating call of a merge leaves the pre- or post-state, and the table recovers") {
     crashEveryCall(_.merge(kv(("k0003", -3L), ("k0040", -40L), ("n1", 1L), ("n2", 2L)),
@@ -306,5 +380,37 @@ class CommitPathSpec extends SparkSpec {
       val processed = kv(("k0003", 3L), ("k0040", 40L), ("k0041", -1L), ("k0050", 50L))
       assert(t.deleteWhereUnmodified(processed) == 1L)
     }
+  }
+
+  test("a crash at any mutating call of a packed merge leaves the pre- or post-state, and the table recovers") {
+    val keys = packing
+    crashEveryCall(_.merge(kv(keys.map(_ -> -1L) :+ ("n1" -> 1L): _*), keys = Seq("k")),
+      packs = Some(true))
+  }
+
+  test("a crash at any mutating call of a packed deleteWhereUnmodified leaves the pre- or post-state, and the table recovers") {
+    val keys = packing
+    crashEveryCall({ t =>
+      val processed = kv(keys.map(k => k -> k.drop(1).toLong) :+ ("k0041" -> -1L): _*)
+      assert(t.deleteWhereUnmodified(processed) == 1L)
+    }, packs = Some(true))
+  }
+
+  test("a crash at any mutating call of the merge that unpacks a table past the bound leaves the pre- or post-state, and the table recovers") {
+    val keys = unpacking
+    crashEveryCall(_.merge(kv(keys.map(_ -> -1L): _*), keys = Seq("k")),
+      rows = 200, wide = true, packs = Some(false))
+  }
+
+  test("a crash at any mutating call of the deleteWhereUnmodified that unpacks a table past the bound leaves the pre- or post-state, and the table recovers") {
+    val keys = unpacking
+    crashEveryCall({ t =>
+      // the full tuple, payload included, of seeded rows, and one row
+      // the table no longer holds
+      val held = t.read().get.filter(col("k").isin(keys: _*))
+      val processed = held.filter(col("k") =!= keys.head)
+        .unionByName(held.filter(col("k") === keys.head).withColumn("v", col("v") - 1))
+      assert(t.deleteWhereUnmodified(processed) == 1L)
+    }, rows = 200, wide = true, packs = Some(false))
   }
 }

@@ -43,8 +43,9 @@ class GraftStateSourceSpec extends SparkSpec {
     val dir = tmp()
     val t = new BucketedStateTable(spark, s"$dir/wide", keyCols = Seq("k"),
       numBuckets = 64, retentionFloorMillis = 0L, statsCols = Seq("v"))
-    t.merge(spark.range(3000)
-      .select(concat(lit("k"), col("id")).as("k"), col("id").as("v")), keys = Seq("k"))
+    // past the bound (~2 KB a row): one file per bucket
+    t.merge(StateLayouts.wide(spark.range(3000)
+      .select(concat(lit("k"), col("id")).as("k"), col("id").as("v"))), keys = Seq("k"))
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {

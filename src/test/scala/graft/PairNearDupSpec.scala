@@ -25,16 +25,19 @@ class PairNearDupSpec extends SparkSpec {
   /** One-hot caption embedding: distinct ids are orthogonal (cos 0),
     * shared slots are identical (cos 1) — closed-form conjunction
     * ground truth. */
-  private def oneHot(i: Int): Seq[Float] =
-    Seq.tabulate(40)(j => if (j == i) 1f else 0f)
+  private def oneHot(i: Int, dim: Int = 40): Seq[Float] =
+    Seq.tabulate(dim)(j => if (j == i) 1f else 0f)
 
   /** (id, dHash-by-construction, embedding slot) → pair rows whose
     * image hash is exactly `v` (plantedImage round-trip). */
-  private def pairsDF(rows: (Long, Long, Int)*): DataFrame = {
+  private def pairsDF(rows: (Long, Long, Int)*): DataFrame = pairsOf(40, rows)
+
+  /** [[pairsDF]] with `dim`-wide embeddings. */
+  private def pairsOf(dim: Int, rows: Seq[(Long, Long, Int)]): DataFrame = {
     val s = spark
     import s.implicits._
     rows.map { case (id, v, slot) =>
-      (id, Multimodal.plantedImage(v), oneHot(slot))
+      (id, Multimodal.plantedImage(v), oneHot(slot, dim))
     }.toDF("pair_id", "payload", "embedding")
   }
 
@@ -110,9 +113,11 @@ class PairNearDupSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val index = newIndex(tmp())
-    // 64 pairs × 4 bands = 256 band keys → ~all 32 buckets populated
+    // 64 pairs × 4 bands = 256 band keys → ~all 32 buckets populated;
+    // 1,000-wide embeddings (~4 KB a row) put the index past the bound,
+    // one file per bucket
     Multimodal.indexPairs(index,
-      pairsDF((0L until 64L).map(i => (i, corpusV(i), (i % 32).toInt)): _*))
+      pairsOf(1000, (0L until 64L).map(i => (i, corpusV(i), (i % 32).toInt))))
 
     val bucketsAll = index.read().get.inputFiles
       .flatMap(graft.pipeline.StateManifest.bucketOf).distinct

@@ -33,7 +33,8 @@ class SchemaEvolutionSpec extends SparkSpec {
     val dir = tmp()
     val t = new BucketedStateTable(spark, s"$dir/state",
       keyCols = Seq("k"), numBuckets = 8, retentionFloorMillis = 0L)
-    t.merge(seedFrame(200L), keys = Seq("k"))
+    // past the bound (~2 KB a row): one file per bucket
+    t.merge(StateLayouts.wide(seedFrame(200L)), keys = Seq("k"))
     val preWiden = t.commits().last
 
     // one-key widened batch: adds column w, touches ONE bucket
@@ -44,7 +45,7 @@ class SchemaEvolutionSpec extends SparkSpec {
       s"a 1-key widening merge must stay bucket-pruned, wrote ${stats.bucketsWritten}")
 
     val cur = t.read().get
-    assert(cur.schema.fieldNames.toSeq == Seq("k", "v", "w"))
+    assert(cur.schema.fieldNames.toSeq == Seq("k", "v", "pad", "w"))
     assert(cur.count() == 200L)
     assert(cur.filter(col("k") === "k7").select("v", "w").collect().toSeq
       .map(r => (r.getLong(0), r.getString(1))) == Seq((700L, "seven")))
@@ -53,7 +54,7 @@ class SchemaEvolutionSpec extends SparkSpec {
 
     // time travel keeps the pre-widening snapshot's contemporary shape
     val old = t.readAt(preWiden).get
-    assert(old.schema.fieldNames.toSeq == Seq("k", "v"))
+    assert(old.schema.fieldNames.toSeq == Seq("k", "v", "pad"))
     assert(old.count() == 200L)
   }
 

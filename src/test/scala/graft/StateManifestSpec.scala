@@ -21,9 +21,14 @@ class StateManifestSpec extends SparkSpec {
     * order shows). */
   private lazy val golden = fixture("/manifests/split-commit.txt")
 
-  /** The same split commit as today's writer writes it: every bucket
-    * pointer names its file and size. */
+  /** The same split commit as today's writer writes it for a table past
+    * the bound: every bucket pointer names its file and size. */
   private lazy val goldenFiles = fixture("/manifests/split-commit-files.txt")
+
+  /** The same split commit as today's writer writes it for a table small
+    * enough to pack: bucket pointers name the file of the write task that
+    * held the bucket, with the bucket's share of its bytes. */
+  private lazy val goldenPacked = fixture("/manifests/split-commit-packed.txt")
 
   private def without(text: String, key: String): String =
     text.linesIterator.filterNot(_.startsWith(s"$key=")).mkString("", "\n", "\n")
@@ -63,21 +68,49 @@ class StateManifestSpec extends SparkSpec {
     assert(StateManifest.parse(m.render) == m)
   }
 
-  test("codec: a table written today produces the fixture's lines (zone-map byte sizes aside)") {
+  /** The split commit's manifest of the fixture table, written today,
+    * its rows `wide` (past the bound) or not. */
+  private def splitCommitWritten(wide: Boolean): String = {
     val s = spark
     import s.implicits._
     val dir = tmp()
     val t = new BucketedStateTable(spark, s"$dir/t", keyCols = Seq("k", "g"),
       numBuckets = 6, keepCommits = 5, retentionFloorMillis = 0L,
       bucketCols = Seq("k"), statsCols = Seq("g", "v"))
-    t.merge((0 until 30).map(i => (i.toLong, s"g${i % 3}", i * 10L))
-      .toDF("k", "g", "v"), keys = Seq("k", "g"))
+    val rows = (0 until 30).map(i => (i.toLong, s"g${i % 3}", i * 10L)).toDF("k", "g", "v")
+    t.merge(if (wide) StateLayouts.wide(rows, kb = 8) else rows, keys = Seq("k", "g"))
     t.splitBuckets(2)
-    val written = new String(Files.readAllBytes(
+    new String(Files.readAllBytes(
       new java.io.File(s"$dir/t/_commits/c00000002.txt").toPath), "UTF-8")
-    def sizeless(text: String) = text.replaceAll("\"b\":\\d+", "\"b\":_")
-      .replaceAll("-t\\d+-a\\d+\\.parquet,\\d+", "-t_-a_.parquet,_")
-    assert(sizeless(written) == sizeless(goldenFiles))
+  }
+
+  private def sizeless(text: String) = text.replaceAll("\"b\":\\d+", "\"b\":_")
+    .replaceAll("-t\\d+-a\\d+\\.parquet,\\d+", "-t_-a_.parquet,_")
+
+  test("codec: a table written today produces the fixture's lines (zone-map byte sizes aside)") {
+    // past the bound: ~8 KB a row in a `pad` column, which the schema
+    // line adds; every other line is the fixture's
+    val widened = goldenFiles.replace(
+      """{"name":"v","type":"long","nullable":true,"metadata":{}}]}""",
+      """{"name":"v","type":"long","nullable":true,"metadata":{}},""" +
+        """{"name":"pad","type":"string","nullable":true,"metadata":{}}]}""")
+    assert(widened != goldenFiles)
+    assert(sizeless(splitCommitWritten(wide = true)) == sizeless(widened))
+  }
+
+  test("codec: a small table written today produces the packed fixture's lines (zone-map byte sizes aside)") {
+    val written = splitCommitWritten(wide = false)
+    assert(sizeless(written) == sizeless(goldenPacked))
+    // the fixture: several buckets name each file, the shares of the
+    // buckets naming a file sum to its size, and apart from the file
+    // pointers it is the per-bucket fixture line for line
+    val m = StateManifest.parse(goldenPacked)
+    assert(m.render == goldenPacked)
+    val byFile = m.files.toSeq.groupBy(_._2.name)
+    assert(byFile.size <= 4 && byFile.values.forall(_.size > 1))
+    def noFiles(text: String) =
+      sizeless(StateManifest.parse(text).copy(files = Map.empty).render)
+    assert(noFiles(goldenPacked) == noFiles(goldenFiles))
   }
 
   test("codec: a legacy manifest without schema= parses and its table still reads by footer inference") {
@@ -135,7 +168,9 @@ class StateManifestSpec extends SparkSpec {
     val dir = tmp()
     val t = new BucketedStateTable(spark, s"$dir/t", keyCols = Seq("k"),
       numBuckets = 16, retentionFloorMillis = 0L)
-    t.merge((0 until 50).map(i => (s"k$i", i.toLong)).toDF("k", "v"), keys = Seq("k"))
+    // past the bound (~8 KB a row): one file per bucket
+    t.merge(StateLayouts.wide((0 until 50).map(i => (s"k$i", i.toLong)).toDF("k", "v"), kb = 8),
+      keys = Seq("k"))
     val conf = spark.sparkContext.hadoopConfiguration
     val m = StateManifest.snapshot(conf, s"$dir/t").get
     val paths = BucketedStateTable.snapshotPaths(conf, s"$dir/t")
@@ -150,6 +185,28 @@ class StateManifestSpec extends SparkSpec {
     })
     assert(t.read().get.inputFiles.flatMap(StateManifest.bucketOf).toSet ==
       m.buckets.keySet)
+  }
+
+  test("path convention: a packed snapshot's paths name each file once, at the sum of its buckets' shares") {
+    val s = spark
+    import s.implicits._
+    val dir = tmp()
+    val t = new BucketedStateTable(spark, s"$dir/t", keyCols = Seq("k"),
+      numBuckets = 16, retentionFloorMillis = 0L)
+    t.merge((0 until 50).map(i => (s"k$i", i.toLong)).toDF("k", "v"), keys = Seq("k"))
+    assert(t.lastCommit.get.packed)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val m = StateManifest.snapshot(conf, s"$dir/t").get
+    val paths = BucketedStateTable.snapshotPaths(conf, s"$dir/t")
+    val byName = m.files.toSeq.groupBy(_._2.name)
+    assert(paths.map(p => new org.apache.hadoop.fs.Path(p).getName).sorted == byName.keys.toSeq.sorted)
+    assert(paths.size < m.buckets.size && paths.forall(StateManifest.bucketOf(_).isEmpty))
+    assert(paths.forall { p =>
+      val f = new java.io.File(new org.apache.hadoop.fs.Path(p).toUri.getPath)
+      f.isFile && f.length == byName(f.getName).map(_._2.bytes).sum
+    })
+    assert(t.read().get.inputFiles.map(p => new org.apache.hadoop.fs.Path(p).getName).toSet ==
+      byName.keySet)
   }
 
   // ── the JVM-wide parsed-manifest cache ───────────────────────────────

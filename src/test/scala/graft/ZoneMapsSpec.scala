@@ -206,7 +206,8 @@ class ZoneMapsSpec extends SparkSpec {
   // ── table integration ────────────────────────────────────────────────
 
   /** 16 groups bucketed by grp (bucketCols narrowing), score clustered
-    * per group so zone maps have something to prune on. */
+    * per group so zone maps have something to prune on; rows of ~2 KB,
+    * past the bound, so every bucket is its own file. */
   private def seededTable(dir: String): BucketedStateTable = {
     val t = new BucketedStateTable(spark, s"$dir/state",
       keyCols = Seq("grp", "id"), numBuckets = 16,
@@ -217,7 +218,7 @@ class ZoneMapsSpec extends SparkSpec {
       col("id").as("id"),
       (col("id") % 16) * lit(100L) + col("id") % 7).toDF("grp", "id", "score")
       .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("score")))
-    t.merge(rows, keys = Seq("grp", "id"))
+    t.merge(StateLayouts.wide(rows, key = "id"), keys = Seq("grp", "id"))
     t
   }
 
@@ -327,7 +328,8 @@ class ZoneMapsSpec extends SparkSpec {
       concat(lit("g"), col("id") % 16).as("grp"),
       col("id").as("id"),
       (col("id") % 16) * lit(100L) + col("id") % 7).toDF("grp", "id", "score")
-    plain.merge(rows, keys = Seq("grp", "id"))
+    // past the bound (~2 KB a row): one file per bucket
+    plain.merge(StateLayouts.wide(rows, key = "id"), keys = Seq("grp", "id"))
     val before = plain.readWhere(Seq(GreaterThanOrEqual("score", 1400L))).get
     val nonEmpty = touchedBuckets(plain.read().get)
     assert(touchedBuckets(before) == nonEmpty,
@@ -356,7 +358,7 @@ class ZoneMapsSpec extends SparkSpec {
     val t2 = new BucketedStateTable(spark, t2root,
       keyCols = Seq("grp", "id"), numBuckets = 16,
       bucketCols = Seq("grp"), retentionFloorMillis = 0L)
-    t2.merge(rows, keys = Seq("grp", "id"))
+    t2.merge(StateLayouts.wide(rows, key = "id"), keys = Seq("grp", "id"))
     spark.conf.set("spark.sql.catalog.gzanalyze",
       classOf[graft.sources.GraftStateCatalog].getName)
     spark.conf.set("spark.sql.catalog.gzanalyze.root", dir)
@@ -389,7 +391,8 @@ class ZoneMapsSpec extends SparkSpec {
       concat(lit("g"), col("id") % 16).as("grp"),
       col("id").as("id"),
       (col("id") % 16) * lit(100L) + col("id") % 7).toDF("grp", "id", "score")
-    t.merge(rows, keys = Seq("grp", "id"))
+    // past the bound (~2 KB a row): one file per bucket
+    t.merge(StateLayouts.wide(rows, key = "id"), keys = Seq("grp", "id"))
 
     // a second process rewrites g5's bucket INSIDE the analyze's
     // publish window with a score far outside the analyzed bounds —
