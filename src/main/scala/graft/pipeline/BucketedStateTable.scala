@@ -13,8 +13,11 @@ import graft.operators.StateOps
   * record micro-batch merged into 100 TB of header state rewrites a few
   * buckets, not the table. This is the columnar answer to the
   * reference's row-level upsert, which touches only affected rows
-  * (`PostgrePersistenceService.java:218-280`); [[ParquetStateTable]]'s
-  * whole-snapshot rewrite is the small-table fallback.
+  * (`PostgrePersistenceService.java:218-280`). It is the one file-backed
+  * [[StateTable]]: a small table needs no other layout, since its
+  * commits pack it into one file per write task, and a one-bucket table
+  * (the harvest's checkpoint log, [[readLocal]] / [[updateLocal]])
+  * commits one file in one Spark job.
   *
   * Layout (a minimal transactional-table commit log, the same shape a
   * format like Delta provides): `_commits/` holds one manifest per
@@ -1053,8 +1056,11 @@ class BucketedStateTable(
     * no extra exchange). With `statsCols` set the writer also returns
     * each bucket's zone map, so a zone-mapped commit runs no stats job.
     * Hash-partitioning on the bucket column keeps each bucket in
-    * exactly one task however many tasks there are. [[planWrite]]
-    * chooses the tasks and the layout.
+    * exactly one task however many tasks there are; a one-task write
+    * coalesces instead, which reports a single partition and so needs
+    * no exchange at all (one job; under adaptive execution an exchange
+    * runs as a job of its own). [[planWrite]] chooses the tasks and the
+    * layout.
     *
     * `afterExchange` runs on the bucket-partitioned rows (which carry
     * `__bucket`) in the write's result stage, after its one exchange:
@@ -1063,8 +1069,10 @@ class BucketedStateTable(
     * written. */
   private def writeBuckets(rows: DataFrame, layout: Int, plan: WritePlan,
       next: Long, afterExchange: DataFrame => DataFrame = identity): BucketWriter.Result = {
-    val planned = afterExchange(rows.withColumn(BucketCol, bucketIn(layout))
-      .repartition(plan.tasks, col(BucketCol)))
+    val bucketed = rows.withColumn(BucketCol, bucketIn(layout))
+    val planned = afterExchange(
+      if (plan.tasks == 1) bucketed.coalesce(1)
+      else bucketed.repartition(plan.tasks, col(BucketCol)))
       .sortWithinPartitions(BucketCol, keyCols: _*)
     BucketWriter.write(spark, planned,
       fs.makeQualified(StateManifest.dataCommitDir(root, next)), statsCols,
@@ -1358,8 +1366,7 @@ class BucketedStateTable(
   /** Drop data dirs no surviving manifest references and manifests
     * beyond `keepCommits` — but nothing within the retention floor of
     * being CONDEMNED, so a concurrent reader's resolved snapshot
-    * outlives a burst of commits (same contract as
-    * [[ParquetStateTable]]).
+    * outlives a burst of commits.
     *
     * Condemnation is a marker file under `_condemned/`, written the
     * first time an item is observed delete-eligible; the item is only
@@ -1876,9 +1883,55 @@ class BucketedStateTable(
     * history stays time-travelable via [[readAt]]. */
   def replaceAll(rows: DataFrame): Unit =
     BucketedStateTable.lockFor(lockKey).synchronized { withLease {
-      commit(rows, (0 until numBuckets).toSeq,
-        planFull(numBuckets, estimatedBytes(rows)))
+      rewriteAll(rows)
       ()
+    } }
+
+  /** [[replaceAll]]'s commit; the caller holds the lock and lease. */
+  private def rewriteAll(rows: DataFrame): CommitStats =
+    commit(rows, (0 until numBuckets).toSeq,
+      planFull(numBuckets, estimatedBytes(rows)))._1
+
+  /** The rows of the commit this handle last read or wrote through
+    * [[readLocal]] / [[updateLocal]], keyed by that commit's id (a
+    * commit another handle or process publishes has another id). */
+  @volatile private var held: Option[(Long, DataFrame)] = None
+
+  /** The newest snapshot as a driver-local frame, for a table small
+    * enough to hold on the driver (the harvest's checkpoint log):
+    * collected in one Spark job the first time a commit is seen, then
+    * served from memory — no job — while it stays the newest commit.
+    * Filters, projections and `collect` on the frame run on the driver.
+    * None for a never-created table, like [[read]]. */
+  def readLocal(): Option[DataFrame] =
+    currentManifest().flatMap { m =>
+      held.collect { case (id, df) if id == m.commitId => df }.orElse {
+        val local = readFrom(m, m.buckets.keys.toSeq)
+          .map(df => spark.createDataFrame(df.collectAsList(), df.schema))
+          .orElse(emptyUnder(m))
+        local.foreach(df => held = Some(m.commitId -> df))
+        local
+      }
+    }
+
+  /** Read-transform-[[replaceAll]] over [[readLocal]]'s frame: `f` maps
+    * the driver-held current rows to the new contents, and the read,
+    * `f` and the commit run under the table's lock and writer lease, so
+    * no concurrent writer's commit is lost between them. When `f`
+    * returns a driver-local frame, that frame is what this handle holds
+    * for the commit it wrote, and the next [[readLocal]] or
+    * [[updateLocal]] reads no file: on a one-bucket table the commit is
+    * the only Spark job. Returns the commit id. */
+  def updateLocal(f: Option[DataFrame] => DataFrame): Long =
+    BucketedStateTable.lockFor(lockKey).synchronized { withLease {
+      val next = f(readLocal())
+      val id = rewriteAll(next).commitId
+      held = next.queryExecution.optimizedPlan match {
+        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          Some(id -> next)
+        case _ => None
+      }
+      id
     } }
 
   /** Publish the CREATING commit — an empty snapshot under `rowSchema`
@@ -2152,8 +2205,7 @@ class BucketedStateTable(
           "zone-map-supported type — the analyzeAfter pass would refuse " +
           "AFTER the creating commit; import with analyzeAfter = false " +
           "or export an eligible column")
-      commit(rows, (0 until numBuckets).toSeq,
-        planFull(numBuckets, estimatedBytes(rows)))
+      rewriteAll(rows)
       if (analyzeAfter) analyzeStats()
       read().map(_.count()).getOrElse(0L)
     } }

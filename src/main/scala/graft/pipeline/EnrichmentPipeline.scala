@@ -227,7 +227,7 @@ class EnrichmentPipeline(
   }
 
   /** The bounded batch is COLLECTED (≤ batchSize rows — the reference's
-    * in-memory `List<OaiHeader>`): the versioned snapshot is pinned only
+    * in-memory `List<OaiHeader>`): the committed snapshot is pinned only
     * for this brief read, so pruning can never delete files under the
     * minutes-long fetch job that follows. The read itself can still lose
     * a pruning race against a rapidly-committing harvester, so it

@@ -64,7 +64,7 @@ object PageFetcher {
 class HarvestPipeline(
     spark: SparkSession,
     headersTable: StateTable,
-    runsTable: ParquetStateTable,
+    runsTable: BucketedStateTable,
     oaiBaseUrl: String,
     metadataPrefix: String = "oai_dc",
     fc3CompatibilityMode: Boolean = true,
@@ -78,8 +78,8 @@ class HarvestPipeline(
 
   /** Newest checkpoint (A1 top-1-by-sequence over the runs state),
     * picked on the driver from the runs table's driver-held rows
-    * ([[ParquetStateTable.readLocal]]): no Spark job while the newest
-    * version is the one this pipeline last wrote. A committed-but-EMPTY
+    * ([[BucketedStateTable.readLocal]]): no Spark job while the newest
+    * commit is the one this pipeline last wrote. A committed-but-EMPTY
     * runs table (a legal StateTable state — ops truncation, spec setup)
     * falls back to the initial checkpoint like a never-written one,
     * instead of throwing on `.head` of nothing. */

@@ -259,10 +259,10 @@ class JdbcStateTable(
   }
 
   /** None means the table was never created (nothing initialized) —
-    * matching ParquetStateTable/BucketedStateTable, where None means no
-    * version was ever committed. A table that EXISTS but holds zero rows
-    * (a drained queue) reads as Some(empty), again matching the
-    * file-backed tables once a version is committed. */
+    * matching BucketedStateTable, where None means no commit was ever
+    * published. A table that EXISTS but holds zero rows (a drained
+    * queue) reads as Some(empty), again matching the file-backed table
+    * once a commit is published. */
   override def read(): Option[DataFrame] = {
     val rowsOpt = withConnection { conn =>
       val r = if (tableExists(conn)) Some(readRows(conn)) else None

@@ -30,7 +30,6 @@ case class ReportingConfig(
     metsUrl: String,
     metsPollSeconds: Long,
     metsInterRequestMillis: Long,
-    stateBucketed: Boolean,
     stateBuckets: Int)
 
 object ReportingConfig {
@@ -49,9 +48,8 @@ object ReportingConfig {
     // (ReportingManager.java:85); 0 disables pacing for bulk backfills
     "mets.interrequestmillis" -> "1000",
     // graft extension (no reference analogue — its state is PostgreSQL):
-    // bucket-partitioned headers/reporting tables so merges rewrite only
-    // dirty buckets; enable for big state, size buckets ≈ state/1–16 GB
-    "state.bucketed" -> "false",
+    // the bucket count of the headers/reporting tables, so merges
+    // rewrite only dirty buckets; size buckets ≈ state/1–16 GB
     "state.buckets" -> "1024")
 
   private val Prefixes = Seq("db.", "oai.", "mets.", "state.")
@@ -114,10 +112,14 @@ object ReportingConfig {
       metsUrl = get("mets.url"),
       metsPollSeconds = get("mets.pollseconds").trim.toLong,
       metsInterRequestMillis = get("mets.interrequestmillis").trim.toLong,
-      stateBucketed =
-        java.lang.Boolean.parseBoolean(get("state.bucketed").trim),
-      stateBuckets = get("state.buckets").trim.toInt)
+      stateBuckets = positiveInt("state.buckets", get("state.buckets")))
   }
+
+  /** `value` of `key` as a positive Int, or an error naming both. */
+  private def positiveInt(key: String, value: String): Int =
+    value.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"$key must be a positive integer, got '$value'"))
 
   def fromMap(entries: Map[String, String]): ReportingConfig = {
     val props = new Properties()

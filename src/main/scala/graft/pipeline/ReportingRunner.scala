@@ -3,6 +3,7 @@ package graft.pipeline
 import java.sql.Timestamp
 import java.util.concurrent.CountDownLatch
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model.OaiRunResult
@@ -35,18 +36,20 @@ class ReportingRunner(
     clock: () => Long = () => System.currentTimeMillis(),
     sleeper: Long => Unit = Thread.sleep) {
 
-  // headers/reporting are the tables that GROW — `state.bucketed=true`
-  // switches them to bucket-pruned rewrites; the runs table holds one
-  // checkpoint row per poll and stays a whole-snapshot table either way
-  private def growingTable(path: String): StateTable =
-    if (config.stateBucketed)
-      new BucketedStateTable(spark, path,
-        keyCols = Seq("record_identifier"), numBuckets = config.stateBuckets)
-    else new ParquetStateTable(spark, path)
+  // headers/reporting are the tables that GROW, bucketed by record so a
+  // merge rewrites only its dirty buckets; the runs table holds a few
+  // checkpoint rows, one bucket keyed by run id
+  private def growingTable(path: String): BucketedStateTable =
+    new BucketedStateTable(spark, path,
+      keyCols = Seq("record_identifier"), numBuckets = config.stateBuckets)
 
   val headersTable: StateTable = growingTable(s"$stateRoot/headers")
-  val runsTable = new ParquetStateTable(spark, s"$stateRoot/runs")
+  val runsTable = new BucketedStateTable(spark, s"$stateRoot/runs",
+    keyCols = Seq("id"), numBuckets = 1)
   val reportingTable: StateTable = growingTable(s"$stateRoot/reporting")
+
+  Seq(headersTable, runsTable, reportingTable).foreach(t =>
+    ReportingRunner.refuseRetiredLayout(t.fileSystem, t.tableRoot))
 
   val harvest = new HarvestPipeline(spark, headersTable, runsTable,
     config.oaiUrl, fc3CompatibilityMode = config.fc3CompatibilityMode,
@@ -187,4 +190,31 @@ class ReportingRunner(
     }
     !threads._1.isAlive && !threads._2.isAlive
   }
+}
+
+object ReportingRunner {
+
+  /** Throws if `root` is a state table in the retired versioned-snapshot
+    * layout: `v<N>` version directories and no `_commits/`. A
+    * [[BucketedStateTable]] reads such a root as never created, so the
+    * harvest would silently restart from the initial checkpoint and the
+    * queue would read empty. The message names the migration: import the
+    * newest committed version (the newest `v<N>` holding a `_SUCCESS`
+    * marker) with [[BucketedStateTable.importFrom]] into the table at the
+    * same root, then delete the `v<N>` directories. */
+  private[pipeline] def refuseRetiredLayout(fs: FileSystem, root: Path): Unit =
+    if (fs.exists(root) && !fs.exists(StateManifest.commitsDir(root))) {
+      val versions = fs.listStatus(root).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
+        .map(_.getPath).sortBy(_.getName.drop(1).toLong)
+      if (versions.nonEmpty) {
+        val newest = versions.reverse.find(v => fs.exists(new Path(v, "_SUCCESS")))
+        throw new IllegalStateException(
+          s"state table at $root is in the retired versioned-snapshot layout " +
+            "(v<N> directories, no _commits/) that this version no longer reads. " +
+            newest.fold("It holds no committed version; remove the v<N> directories.")(v =>
+              s"Migrate it: importFrom(\"$root/${v.getName}\") on the BucketedStateTable at $root " +
+                "(the runner's key and bucket count), then delete the v<N> directories."))
+      }
+    }
 }

@@ -3,13 +3,14 @@ package graft.pipeline
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 
-/** The state-mutation surface the pipelines need, abstracted over the
-  * physical layout: [[ParquetStateTable]] (whole-snapshot versions — fine
-  * for small tables like run checkpoints) and [[BucketedStateTable]]
-  * (key-bucketed commits that rewrite only dirty buckets — the 100 TB
-  * layout). Both honor the same commit discipline: a mutation is atomic
-  * under the table's write lock and readers only ever see committed
-  * state, which is what the reference gets from PostgreSQL transactions
+/** The state-mutation surface the pipelines need, abstracted over where
+  * the state lives: [[BucketedStateTable]] (the one file-backed layout:
+  * key-bucketed commits that rewrite only dirty buckets, from the
+  * one-bucket run checkpoints up to 100 TB of headers) and
+  * [[JdbcStateTable]] (an external SQL database). Both honor the same
+  * commit discipline: a mutation is atomic under the table's write lock
+  * and readers only ever see committed state, which is what the
+  * reference gets from PostgreSQL transactions
   * (`PostgrePersistenceService.java:218-280`).
   */
 trait StateTable {

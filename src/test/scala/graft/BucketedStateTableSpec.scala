@@ -1350,12 +1350,9 @@ class BucketedStateTableSpec extends SparkSpec {
 
   // ── the pipelines run unchanged over the bucketed layout ──────────────
 
-  test("e2e: harvest + enrichment over bucketed tables matches the whole-snapshot run") {
-    val s = spark
-    import s.implicits._
-
+  test("e2e: harvest + enrichment over bucketed tables matches the same run over JDBC tables") {
     def run(headers: StateTable, reporting: StateTable, dir: String): Unit = {
-      val runs = new ParquetStateTable(spark, s"$dir/runs")
+      val runs = StateLayouts.runs(spark, s"$dir/runs")
       val p = new HarvestPipeline(spark, headers, runs, "http://h/oai",
         headerFilter = _.filter(
           graft.functions.GraftFunctions.isQucosaId(col("record_identifier"))))
@@ -1376,9 +1373,28 @@ class BucketedStateTableSpec extends SparkSpec {
       })
     }
 
+    // the reference side: the same tables in an embedded SQL database
+    // (one held connection keeps one DuckDB instance alive for the test)
+    import org.apache.spark.sql.types._
     val dirA = tmp()
-    val headersA = new ParquetStateTable(spark, s"$dirA/headers")
-    val reportingA = new ParquetStateTable(spark, s"$dirA/reporting")
+    val url = s"jdbc:duckdb:$dirA/state.db"
+    val cf = new graft.sinks.ConnectionFactory {
+      @transient private lazy val anchor = java.sql.DriverManager.getConnection(url)
+      def apply(): java.sql.Connection = { anchor; java.sql.DriverManager.getConnection(url) }
+    }
+    def jdbc(name: String, fields: (String, DataType)*) = {
+      val t = new JdbcStateTable(spark, name,
+        StructType(StructField("record_identifier", StringType, nullable = false) +:
+          fields.map { case (n, d) => StructField(n, d) }),
+        Seq("record_identifier"), cf, s"$dirA/scratch/$name", graft.sinks.SqlDialect.DuckDb)
+      t.ensureTables()
+      t
+    }
+    val headersA = jdbc("OAIHeader", "datestamp" -> TimestampType,
+      "set_spec" -> ArrayType(StringType), "status_is_deleted" -> BooleanType)
+    val reportingA = jdbc("ReportingDoc", "mandator" -> StringType,
+      "document_type" -> StringType, "distribution_date" -> TimestampType,
+      "header_last_modified" -> TimestampType)
     run(headersA, reportingA, dirA)
 
     val dirB = tmp()
@@ -1388,12 +1404,12 @@ class BucketedStateTableSpec extends SparkSpec {
       keyCols = Seq("record_identifier"), numBuckets = 16, retentionFloorMillis = 0L)
     run(headersB, reportingB, dirB)
 
-    def snap(t: StateTable): Set[String] =
-      t.read().map(_.orderBy("record_identifier").collect()
-        .map(_.toString).toSet).getOrElse(Set.empty)
-    assert(snap(headersB) == snap(headersA))
-    assert(snap(reportingB) == snap(reportingA))
-    assert(snap(reportingB).nonEmpty)
+    def snap(t: StateTable, like: StateTable): Set[String] =
+      t.read().map(_.select(like.read().get.columns.toSeq.map(col): _*)
+        .collect().map(_.toString).toSet).getOrElse(Set.empty)
+    assert(snap(headersB, headersA) == snap(headersA, headersA))
+    assert(snap(reportingB, reportingA) == snap(reportingA, reportingA))
+    assert(snap(reportingB, reportingA).nonEmpty)
   }
 
   // ── condemn-then-reap retention: the floor runs from UNREFERENCE ─────

@@ -203,10 +203,8 @@ class CommitPathSpec extends SparkSpec {
     assert(rows(t) == seed(200).toMap ++ spread.map(_ -> -1L) + ("new" -> 9L))
   }
 
-  test("a zone-mapped merge of a driver-local batch runs two jobs: its map stage and the bucket write") {
-    val dir = tmp()
-    val t = table(s"$dir/t", statsCols = Seq("v"))
-    t.merge(kv(seed(200): _*), keys = Seq("k"))
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsOf[T](body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -215,15 +213,71 @@ class CommitPathSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      t.merge(kv(("k0001", -1L), ("k0099", -99L)), keys = Seq("k"))
+      val r = body
       BenchMetrics.drainListenerBus(spark.sparkContext)
+      (r, jobs.get)
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a zone-mapped merge of a driver-local batch runs two jobs: its map stage and the bucket write") {
+    val dir = tmp()
+    val t = table(s"$dir/t", statsCols = Seq("v"))
+    t.merge(kv(seed(200): _*), keys = Seq("k"))
+    val (_, jobs) = jobsOf(t.merge(kv(("k0001", -1L), ("k0099", -99L)), keys = Seq("k")))
     // the zone maps come from the write itself; the stats aggregation
     // over the written files that commits ran before added two jobs (a
     // map stage and its result), four in all
-    assert(jobs.get == 2, s"${jobs.get} jobs")
+    assert(jobs == 2, s"$jobs jobs")
     val m = StateManifest.snapshot(spark.sparkContext.hadoopConfiguration, s"$dir/t").get
     assert(m.zoneStats.keySet == m.buckets.keySet)
+  }
+
+  test("a one-bucket replaceAll of a driver-local frame runs one job: the bucket write, with no exchange") {
+    val dir = tmp()
+    val t = table(s"$dir/t", buckets = 1)
+    t.replaceAll(kv(seed(4): _*))
+    Seq(true, false).foreach { aqe =>
+      val prior = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      try {
+        val next = seed(34).map { case (k, v) => k -> (v + 1) }
+        val (_, jobs) = jobsOf(t.replaceAll(kv(next: _*)))
+        assert(jobs == 1, s"$jobs jobs with adaptive execution $aqe")
+        assert(rows(t) == next.toMap)
+        assert(t.lastCommit.get.filesWritten == 1, t.lastCommit)
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prior)
+    }
+  }
+
+  test("readLocal serves the rows it last read or wrote with no job, and re-reads after another handle's commit") {
+    val dir = tmp()
+    val t = table(s"$dir/t", buckets = 1)
+    val other = table(s"$dir/t", buckets = 1)
+    assert(t.readLocal().isEmpty, "a never-created table has no rows to hold")
+    other.replaceAll(kv(seed(3): _*))
+    def local(r: Option[DataFrame]): Map[String, Long] =
+      r.get.collect().map(r => r.getAs[String]("k") -> r.getAs[Long]("v")).toMap
+    // the first read collects the newest commit once; later reads and
+    // the frame's own collects run on the driver
+    val (first, firstJobs) = jobsOf(local(t.readLocal()))
+    assert(first == seed(3).toMap && firstJobs == 1, s"$firstJobs jobs")
+    val (again, againJobs) = jobsOf(local(t.readLocal()))
+    assert(again == first && againJobs == 0, s"$againJobs jobs")
+    // updateLocal: the driver-held rows in, the write the only job, and
+    // the frame it wrote held for the commit it made
+    val (id, updateJobs) = jobsOf(t.updateLocal(cur =>
+      spark.createDataFrame(java.util.List.of(
+        cur.get.collect() :+ org.apache.spark.sql.Row("k9", 9L): _*), cur.get.schema)))
+    assert(updateJobs == 1 && t.commits().lastOption.contains(id), s"$updateJobs jobs")
+    val (held, heldJobs) = jobsOf(local(t.readLocal()))
+    assert(held == first + ("k9" -> 9L) && heldJobs == 0, s"$heldJobs jobs")
+    // another handle's commit is a new newest commit: read again
+    other.merge(kv("k0" -> -1L), keys = Seq("k"))
+    val (reread, rereadJobs) = jobsOf(local(t.readLocal()))
+    assert(reread == held + ("k0" -> -1L) && rereadJobs == 1, s"$rereadJobs jobs")
+    // a drained table holds its empty snapshot
+    other.replaceAll(kv())
+    assert(t.readLocal().exists(_.isEmpty))
   }
 
   test("in-task zone maps equal analyzeStats over the same files: strings, timestamps, nulls, NaN, empty buckets") {

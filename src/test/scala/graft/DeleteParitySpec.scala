@@ -10,9 +10,9 @@ import graft.pipeline._
 import graft.sinks.{ConnectionFactory, SqlDialect}
 
 /** `deleteWhereUnmodified` means the same on every [[StateTable]]: the
-  * bucketed, versioned-parquet and JDBC tables return the same
-  * not-removed count and leave the same rows, for a driver-local and a
-  * file-backed `processed` frame, with adaptive execution on and off. */
+  * bucketed and JDBC tables return the same not-removed count and leave
+  * the same rows, for a driver-local and a file-backed `processed`
+  * frame, with adaptive execution on and off. */
 class DeleteParitySpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
@@ -46,7 +46,6 @@ class DeleteParitySpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-parity").toString
     val bucketed = new BucketedStateTable(spark, s"$dir/bucketed",
       Seq("record_identifier"), numBuckets = 8)
-    val parquet = new ParquetStateTable(spark, s"$dir/parquet")
     val url = s"jdbc:duckdb:$dir/state.db"
     // one held connection keeps one embedded DuckDB instance alive for
     // the test (see JdbcStateTableSpec)
@@ -57,7 +56,7 @@ class DeleteParitySpec extends SparkSpec {
     val jdbc = new JdbcStateTable(spark, "OAIHeader", schema,
       Seq("record_identifier"), cf, s"$dir/scratch", SqlDialect.DuckDb)
     jdbc.ensureTables()
-    val tables = Seq("bucketed" -> bucketed, "parquet" -> parquet, "jdbc" -> jdbc)
+    val tables = Seq("bucketed" -> bucketed, "jdbc" -> jdbc)
     tables.foreach(_._2.merge(local(state), Seq("record_identifier")))
     tables
   }

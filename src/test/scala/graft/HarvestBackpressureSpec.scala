@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.pipeline.{HarvestPipeline, PageFetcher, ParquetStateTable}
+import graft.pipeline.{HarvestPipeline, PageFetcher}
 
 /** Long-resumption-chain backpressure: the reference's harvester
   * accumulates every harvested header of a run in one driver-side list
@@ -52,8 +52,8 @@ class HarvestBackpressureSpec extends SparkSpec {
 
   test("harvest: a 70-page (~70 MB) resumption chain holds driver heap flat") {
     val dir = Files.createTempDirectory("graft-backpressure").toString
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val runs = new ParquetStateTable(spark, s"$dir/runs")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val runs = StateLayouts.runs(spark, s"$dir/runs")
     val p = new HarvestPipeline(spark, headers, runs, "http://h/oai")
 
     // bodies are GENERATED per request — the fetcher holds none of them

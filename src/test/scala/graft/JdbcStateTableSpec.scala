@@ -203,7 +203,7 @@ class JdbcStateTableSpec extends SparkSpec {
 
   test("jdbc state: harvest pipeline e2e — paged OAI run merges headers into the database") {
     val (headers, _, dir) = mkTables()
-    val runs = new graft.pipeline.ParquetStateTable(spark, s"$dir/runs")
+    val runs = StateLayouts.runs(spark, s"$dir/runs")
     val p = new graft.pipeline.HarvestPipeline(spark, headers, runs, "http://h/oai",
       headerFilter = _.filter(graft.functions.GraftFunctions.isQucosaId(
         org.apache.spark.sql.functions.col("record_identifier"))))

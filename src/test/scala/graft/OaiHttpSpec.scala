@@ -73,11 +73,11 @@ class OaiHttpSpec extends SparkSpec {
   }
 
   test("HarvestPipeline.runOnce completes a full harvest iteration over a real socket") {
-    import graft.pipeline.{HarvestPipeline, PageFetcher, ParquetStateTable}
+    import graft.pipeline.{HarvestPipeline, PageFetcher}
     serve(chainHandler) { url =>
       val dir = java.nio.file.Files.createTempDirectory("graft-http-harvest").toString
-      val headers = new ParquetStateTable(spark, s"$dir/headers")
-      val runs = new ParquetStateTable(spark, s"$dir/runs")
+      val headers = StateLayouts.records(spark, s"$dir/headers")
+      val runs = StateLayouts.runs(spark, s"$dir/runs")
       val p = new HarvestPipeline(spark, headers, runs, url)
       // iteration 1: first request -> fixture page with a pending token;
       // headers merged, checkpoint carries the token

@@ -73,8 +73,8 @@ class PipelineSpec extends SparkSpec {
 
   test("harvest: two-page pagination merges headers and advances the checkpoint") {
     val dir = tmp()
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val runs = new ParquetStateTable(spark, s"$dir/runs")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val runs = StateLayouts.runs(spark, s"$dir/runs")
     val p = new HarvestPipeline(spark, headers, runs, "http://h/oai",
       headerFilter = qucosaFilter)
 
@@ -109,8 +109,8 @@ class PipelineSpec extends SparkSpec {
 
   test("harvest: noRecordsMatch advances, badResumptionToken replays backup, transport failure persists nothing") {
     val dir = tmp()
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val runs = new ParquetStateTable(spark, s"$dir/runs")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val runs = StateLayouts.runs(spark, s"$dir/runs")
     val p = new HarvestPipeline(spark, headers, runs, "http://h/oai")
 
     // 1: noRecordsMatch — success semantics, offset advances to run start
@@ -128,17 +128,17 @@ class PipelineSpec extends SparkSpec {
     assert(p.lastRun().nextFromTimestamp.contains(ts("2024-03-01 10:00:00")))
 
     // 3: transport failure — nothing persisted at all
-    val before = runs.latestVersion
+    val before = runs.commits().lastOption
     val s3 = p.runOnce(fetcher(Map.empty), ts("2024-03-01 12:00:00"))
     assert(!s3.succeeded)
-    assert(runs.latestVersion == before)
+    assert(runs.commits().lastOption == before)
     assert(p.lastRun().id == 2L)
   }
 
   test("ST3: an HTTP-200 non-OAI body fails the run — the checkpoint must not advance over an outage") {
     val dir = tmp()
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val runs = new ParquetStateTable(spark, s"$dir/runs")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val runs = StateLayouts.runs(spark, s"$dir/runs")
     val p = new HarvestPipeline(spark, headers, runs, "http://h/oai")
 
     // establish a checkpoint, then serve a proxy's HTML maintenance page
@@ -149,34 +149,34 @@ class PipelineSpec extends SparkSpec {
     p.runOnce(fetcher(Map(
       "verb" -> fixture("/oai/errorNoRecordsMatch.xml"))), ts("2024-03-01 10:00:00"))
     val checkpointBefore = p.lastRun()
-    val before = runs.latestVersion
+    val before = runs.commits().lastOption
 
     val s = p.runOnce(fetcher(Map(
       "verb" -> "<html><body>503 upstream maintenance</body></html>")),
       ts("2024-03-01 11:00:00"))
     assert(!s.succeeded, "a non-OAI 200 body must be a FAILED run")
     assert(s.errors.contains("unparseable"), s.errors)
-    assert(runs.latestVersion == before, "nothing may persist")
+    assert(runs.commits().lastOption == before, "nothing may persist")
     assert(p.lastRun() == checkpointBefore, "the checkpoint must hold")
   }
 
   test("harvest: a committed-but-EMPTY runs table falls back to the initial checkpoint") {
     val dir = tmp()
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val runs = new ParquetStateTable(spark, s"$dir/runs")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val runs = StateLayouts.runs(spark, s"$dir/runs")
     val p = new HarvestPipeline(spark, headers, runs, "http://h/oai")
     p.runOnce(fetcher(Map(
       "verb" -> fixture("/oai/errorNoRecordsMatch.xml"))), ts("2024-03-01 10:00:00"))
     // drain the runs table to zero rows — a legal StateTable state that
     // must read like a never-written table, not throw on .head
-    runs.write(runs.read().get.limit(0))
+    runs.replaceAll(runs.read().get.limit(0))
     assert(p.lastRun() == graft.streaming.OffsetStateMachine.initial)
   }
 
   test("harvest: D2 retention drops expired checkpoints but keeps the newest") {
     val dir = tmp()
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val runs = new ParquetStateTable(spark, s"$dir/runs")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val runs = StateLayouts.runs(spark, s"$dir/runs")
     val p = new HarvestPipeline(spark, headers, runs, "http://h/oai",
       historyLengthHours = 1L)
     val fetch = fetcher(Map("verb" -> fixture("/oai/errorNoRecordsMatch.xml")))
@@ -201,8 +201,8 @@ class PipelineSpec extends SparkSpec {
 
   test("enrichment: projects METS fields, rejects incomplete docs, clears the queue") {
     val dir = tmp()
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val reporting = new ParquetStateTable(spark, s"$dir/reporting")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val reporting = StateLayouts.records(spark, s"$dir/reporting")
 
     // Queue: 4 records — 7455 (complete), 13 (date-only), 31789
     // (incomplete: no mets:agent), 31790 (no-colon zone offset)
@@ -214,7 +214,7 @@ class PipelineSpec extends SparkSpec {
       QueuedHeader("oai:example.org:qucosa:31789", ts("2024-01-01 03:00:00"), Nil, false),
       QueuedHeader("oai:example.org:qucosa:31790", ts("2024-01-01 04:00:00"), Nil, false)
     ).toDF()
-    headers.write(queue)
+    headers.replaceAll(queue)
 
     val mets = Map(
       "qucosa:7455" -> fixture("/mets/qucosa7455-mets.xml"),
@@ -262,15 +262,15 @@ class PipelineSpec extends SparkSpec {
     val fetch = new DocumentFetcher {
       def apply(localId: String): Option[String] = mets.get(localId)
     }
-    def queued(failures: Int): (FlakyReadTable, ParquetStateTable) = {
+    def queued(failures: Int): (FlakyReadTable, BucketedStateTable) = {
       val dir = tmp()
-      val headers = new ParquetStateTable(spark, s"$dir/headers")
-      headers.write(Seq(
+      val headers = StateLayouts.records(spark, s"$dir/headers")
+      headers.replaceAll(Seq(
         QueuedHeader("oai:example.org:qucosa:7455", ts("2024-01-01 01:00:00"), Nil, false),
         QueuedHeader("oai:example.org:qucosa:13", ts("2024-01-01 02:00:00"), Nil, false)
       ).toDF())
       (new FlakyReadTable(headers, failures),
-        new ParquetStateTable(spark, s"$dir/reporting"))
+        StateLayouts.records(spark, s"$dir/reporting"))
     }
 
     // one failed read: the batch drains on the second attempt
@@ -290,12 +290,12 @@ class PipelineSpec extends SparkSpec {
 
   test("enrichment: ST5 late-update guard — a mid-flight re-harvest survives the delete") {
     val dir = tmp()
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val reporting = new ParquetStateTable(spark, s"$dir/reporting")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val reporting = StateLayouts.records(spark, s"$dir/reporting")
     val s = spark
     import s.implicits._
 
-    headers.write(Seq(
+    headers.replaceAll(Seq(
       QueuedHeader("oai:example.org:qucosa:7455", ts("2024-01-01 01:00:00"), Nil, false),
       QueuedHeader("oai:example.org:qucosa:13", ts("2024-01-01 02:00:00"), Nil, false)
     ).toDF())
@@ -317,7 +317,7 @@ class PipelineSpec extends SparkSpec {
       Seq(QueuedHeader("oai:example.org:qucosa:7455",
         ts("2024-06-01 00:00:00"), Nil, false)).toDF(),
       keys = Seq("record_identifier"))
-    headers.write(reharvested)
+    headers.replaceAll(reharvested)
 
     val summary = e.commit(pb)
     // the stale 7455 tuple failed the full-tuple match: reported back and
@@ -332,69 +332,14 @@ class PipelineSpec extends SparkSpec {
     assert(reporting.read().get.count() == 2L)
   }
 
-  test("state table: writeOnceForBatch skips a replayed batch id") {
-    val dir = tmp()
-    val t = new ParquetStateTable(spark, s"$dir/state")
-    val s = spark
-    import s.implicits._
-    assert(t.writeOnceForBatch(0L, "ckptA")(_ => Seq((1L, "a")).toDF("id", "v")))
-    assert(!t.writeOnceForBatch(0L, "ckptA")(_ => Seq((1L, "DUP")).toDF("id", "v")))
-    assert(t.writeOnceForBatch(1L, "ckptA")(_ => Seq((2L, "b")).toDF("id", "v")))
-    assert(t.read().get.head.getString(1) == "b") // replay never landed
-    // a FRESH checkpoint restarts batch ids at 0 and must NOT be skipped
-    assert(t.writeOnceForBatch(0L, "ckptB")(_ => Seq((3L, "c")).toDF("id", "v")))
-    assert(t.read().get.head.getString(1) == "c")
-  }
-
-  test("state table: a crashed (uncommitted) write does not brick the table") {
-    val dir = tmp()
-    // floor 0 so the orphan is cleaned immediately (the floor's reader
-    // protection is covered by its own test below)
-    val t = new ParquetStateTable(spark, s"$dir/state", retentionFloorMillis = 0L)
-    val s = spark
-    import s.implicits._
-    t.write(Seq((1L, "a")).toDF("id", "v"))
-    // simulate a crash: an orphan version dir without _SUCCESS
-    val orphan = java.nio.file.Paths.get(s"$dir/state/v00000002")
-    Files.createDirectories(orphan)
-    Files.writeString(orphan.resolve("part-junk.parquet"), "partial")
-    // the next write must still commit (and clean the orphan up)
-    t.write(Seq((2L, "b")).toDF("id", "v"))
-    assert(t.read().get.count() == 1L)
-    assert(t.read().get.head.getLong(0) == 2L)
-    assert(!Files.exists(orphan))
-  }
-
-  test("state table: retention floor shields a lazy reader's snapshot from a commit burst") {
-    val dir = tmp()
-    val s = spark
-    import s.implicits._
-    // Without the floor (r1 behavior): a burst of commits prunes the
-    // files under a still-lazy plan and the late collect fails.
-    val eager = new ParquetStateTable(spark, s"$dir/eager",
-      keepVersions = 1, retentionFloorMillis = 0L)
-    eager.write(Seq((1L, "a")).toDF("id", "v"))
-    val staleEager = eager.read().get
-    (2 to 5).foreach(i => eager.write(Seq((i.toLong, "x")).toDF("id", "v")))
-    assertThrows[Exception](staleEager.collect())
-    // With a floor: same burst, the old snapshot stays readable.
-    val floored = new ParquetStateTable(spark, s"$dir/floored",
-      keepVersions = 1, retentionFloorMillis = 10 * 60 * 1000L)
-    floored.write(Seq((1L, "a")).toDF("id", "v"))
-    val stale = floored.read().get
-    (2 to 5).foreach(i => floored.write(Seq((i.toLong, "x")).toDF("id", "v")))
-    assert(stale.collect().map(_.getLong(0)).toSeq == Seq(1L))
-    assert(floored.read().get.head.getLong(0) == 5L) // newest still wins
-  }
-
   test("S2: inter-request pacing — injected sleeper observes the per-partition delay") {
     val dir = tmp()
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val reporting = new ParquetStateTable(spark, s"$dir/reporting")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val reporting = StateLayouts.records(spark, s"$dir/reporting")
     val s = spark
     import s.implicits._
     val n = 9
-    headers.write((1 to n).map(i =>
+    headers.replaceAll((1 to n).map(i =>
       QueuedHeader(s"oai:example.org:qucosa:$i",
         ts("2024-01-01 01:00:00"), Nil, false)).toDF())
     // fixture loaded OUTSIDE the fetcher: calling fixture() inside apply
@@ -422,8 +367,8 @@ class PipelineSpec extends SparkSpec {
 
   test("harvest: clock-skew warning fires beyond the 2-minute tolerance, not within") {
     val dir = tmp()
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val runs = new ParquetStateTable(spark, s"$dir/runs")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val runs = StateLayouts.runs(spark, s"$dir/runs")
     val warnings = scala.collection.mutable.ListBuffer[String]()
     val p = new HarvestPipeline(spark, headers, runs, "http://h/oai",
       onClockSkew = msg => warnings.synchronized { warnings += msg })
@@ -445,7 +390,7 @@ class PipelineSpec extends SparkSpec {
     Files.createDirectories(Paths.get(pages))
     Files.writeString(Paths.get(pages, "p1.xml"), fixture("/oai/resumptionToken.xml"))
 
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
     def harvest() = graft.streaming.ForeachBatch.start(
         graft.streaming.HarvestStream.pages(spark, pages), s"$dir/ckpt") {
       (b, id) => graft.streaming.HarvestStream.processBatch(b, id, headers, s"$dir/ckpt")
@@ -533,7 +478,7 @@ class PipelineSpec extends SparkSpec {
       Seq("record_identifier"), numBuckets = 64)
     val reporting = new BucketedStateTable(spark, s"$dir/reporting",
       Seq("record_identifier"), numBuckets = 64)
-    val runs = new ParquetStateTable(spark, s"$dir/runs")
+    val runs = StateLayouts.runs(spark, s"$dir/runs")
     val harvest = new HarvestPipeline(spark, headers, runs, "http://h/oai",
       headerFilter = qucosaFilter)
     val enrich = new EnrichmentPipeline(spark, headers, reporting, batchSize = 40)
@@ -590,8 +535,8 @@ class PipelineSpec extends SparkSpec {
   test("header filters: named registry resolves builtins, takes third-party filters, rejects typos") {
     // builtin 'qucosa' behaves as the reference's production filter
     val dir = tmp()
-    val headers = new ParquetStateTable(spark, s"$dir/headers")
-    val runs = new ParquetStateTable(spark, s"$dir/runs")
+    val headers = StateLayouts.records(spark, s"$dir/headers")
+    val runs = StateLayouts.runs(spark, s"$dir/runs")
     val p = new HarvestPipeline(spark, headers, runs, "http://h/oai",
       headerFilter = OaiHeaderFilters("qucosa"))
     val fetch = fetcher(Map(
@@ -607,9 +552,9 @@ class PipelineSpec extends SparkSpec {
       _.filter(col("record_identifier").endsWith(":1044")))
     assert(OaiHeaderFilters.names.contains("only-1044"))
     val dir2 = tmp()
-    val headers2 = new ParquetStateTable(spark, s"$dir2/headers")
+    val headers2 = StateLayouts.records(spark, s"$dir2/headers")
     val p2 = new HarvestPipeline(spark, headers2,
-      new ParquetStateTable(spark, s"$dir2/runs"), "http://h/oai",
+      StateLayouts.runs(spark, s"$dir2/runs"), "http://h/oai",
       headerFilter = OaiHeaderFilters("only-1044"))
     p2.runOnce(fetcher(Map(
       "metadataPrefix" -> fixture("/oai/listIdentifiers.xml"))),

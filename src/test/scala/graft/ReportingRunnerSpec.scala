@@ -25,12 +25,53 @@ class ReportingRunnerSpec extends SparkSpec {
     assert(cfg.fc3CompatibilityMode)
   }
 
-  test("runner: two loops drain OAI pages into reporting rows, then stop cleanly") {
-    driveRunner(bucketed = false)
+  test("config: state.buckets must be a positive integer, named in the error") {
+    assert(ReportingConfig.fromMap(Map("state.buckets" -> " 16 ")).stateBuckets == 16)
+    Seq("0", "-4", "many", "2.5", "").foreach { v =>
+      val e = intercept[IllegalArgumentException](
+        ReportingConfig.fromMap(Map("state.buckets" -> v)))
+      assert(e.getMessage.contains("state.buckets") && e.getMessage.contains(s"'$v'"),
+        e.getMessage)
+    }
   }
 
-  test("runner: state.bucketed=true swaps in bucket-pruned tables, same end state") {
-    driveRunner(bucketed = true)
+  test("runner: two loops drain OAI pages into reporting rows, then stop cleanly") {
+    driveRunner()
+  }
+
+  test("runner: a state root in the retired versioned-snapshot layout is refused with its migration") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-runner-retired").toString
+    // the retired layout, by hand: committed version directories
+    // (`v<N>` with a `_SUCCESS` marker), an uncommitted newer one from
+    // a crashed write, and no `_commits/`
+    val checkpoint = graft.model.OaiRunResult(7L,
+      java.sql.Timestamp.valueOf("2024-03-01 10:00:00"),
+      java.sql.Timestamp.valueOf("2024-03-01 10:00:00"), Some("tok"), None, None)
+    Seq(1, 2).foreach { v =>
+      val dir = java.nio.file.Paths.get(root, "runs", f"v$v%08d")
+      Seq(checkpoint.copy(id = v + 5L)).toDF().coalesce(1).write.parquet(dir.toString)
+      if (!Files.exists(dir.resolve("_SUCCESS"))) Files.createFile(dir.resolve("_SUCCESS"))
+    }
+    val orphan = Files.createDirectories(java.nio.file.Paths.get(root, "runs", "v00000003"))
+    Files.writeString(orphan.resolve("part-junk.parquet"), "partial")
+    val cfg = ReportingConfig.fromMap(Map("oai.url" -> "http://h/oai"))
+    val none = new PageFetcher { def apply(uri: String) = Left("unused") }
+    val noDocs = new DocumentFetcher { def apply(localId: String) = None }
+    val e = intercept[IllegalStateException](
+      new ReportingRunner(spark, cfg, root, none, noDocs))
+    assert(e.getMessage.contains(s"""importFrom("$root/runs/v00000002")"""), e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(root, "runs", "_commits")),
+      "the refusal must write nothing")
+
+    // the migration the message names: import the newest committed
+    // version into the table at the same root, drop the version dirs
+    StateLayouts.runs(spark, s"$root/runs").importFrom(s"$root/runs/v00000002")
+    Seq(1, 2, 3).foreach(v => org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$root/runs/v0000000$v")))
+    val runner = new ReportingRunner(spark, cfg, root, none, noDocs)
+    assert(runner.harvest.lastRun() == checkpoint)
   }
 
   test("ST6: stop() alone wakes loops parked in a full poll-interval sleep") {
@@ -78,15 +119,13 @@ class ReportingRunnerSpec extends SparkSpec {
     }
   }
 
-  private def driveRunner(bucketed: Boolean): Unit = {
+  private def driveRunner(): Unit = {
     val root = Files.createTempDirectory("graft-runner").toString
     val cfg = ReportingConfig.fromMap(Map(
       "oai.url" -> "http://h/oai",
       "oai.pollseconds" -> "1",
       "mets.pollseconds" -> "1",
-      "state.bucketed" -> bucketed.toString,
       "state.buckets" -> "8"))
-    if (bucketed) assert(cfg.stateBucketed && cfg.stateBuckets == 8)
 
     val pages = new PageFetcher {
       def apply(uri: String): Either[String, String] =
@@ -133,5 +172,11 @@ class ReportingRunnerSpec extends SparkSpec {
         r.getAs[String]("mandator")).toMap
     assert(byId("oai:example.org:qucosa:1044") == "slub")
     assert(byId("oai:example.org:qucosa:1234") == "SLUB")
+    // headers and reporting are laid out in `state.buckets` buckets, the
+    // checkpoints in one
+    def layout(t: String) = StateManifest.snapshot(
+      spark.sessionState.newHadoopConf(), s"$root/$t").flatMap(_.numBuckets)
+    assert(Seq("headers", "reporting", "runs").map(layout) ==
+      Seq(Some(8), Some(8), Some(1)))
   }
 }

@@ -319,38 +319,6 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(drained.filter(col("change_type") === "delete").count() == 20L)
   }
 
-  test("ParquetStateTable: a widened merge evolves the snapshot; old versions keep their shape; narrow writers preserve") {
-    val dir = tmp()
-    val t = new graft.pipeline.ParquetStateTable(spark, s"$dir/state",
-      retentionFloorMillis = 0L)
-    t.merge(seedFrame(30L), keys = Seq("k"))
-    val v1 = t.latestVersion.get
-
-    t.merge(Seq(("k3", 33L, "three")).toDF("k", "v", "w"), keys = Seq("k"))
-    val cur = t.read().get
-    assert(cur.schema.fieldNames.toSeq == Seq("k", "v", "w"))
-    assert(cur.count() == 30L)
-    assert(cur.filter(col("w").isNull).count() == 29L)
-    assert(cur.filter(col("k") === "k3").select("v", "w").collect().toSeq
-      .map(r => (r.getLong(0), r.getString(1))) == Seq((33L, "three")))
-    // each version dir is a COMPLETE snapshot: the old one keeps its shape
-    assert(spark.read.parquet(f"$dir/state/v$v1%08d").schema.fieldNames.toSeq ==
-      Seq("k", "v"))
-
-    // a pre-widen narrow writer: known columns update, w preserves
-    // (JDBC-twin contract; full contract spec'd on BucketedStateTable)
-    t.merge(Seq(("k3", 34L)).toDF("k", "v"), keys = Seq("k"))
-    val after = t.read().get
-    assert(after.schema.fieldNames.toSeq == Seq("k", "v", "w"))
-    assert(after.filter(col("k") === "k3").select("v", "w").collect().toSeq
-      .map(r => (r.getLong(0), r.getString(1))) == Seq((34L, "three")))
-    // a SIDEWAYS retype still refuses (int-into-long upcasts instead)
-    val retype = intercept[IllegalArgumentException] {
-      t.merge(Seq(("k1", 0.5)).toDF("k", "v"), keys = Seq("k"))
-    }
-    assert(retype.getMessage.contains("changes column `v`"), retype.getMessage)
-  }
-
   test("JdbcStateTable: widenTo issues ALTER ADD COLUMN and returns a widened handle; the old handle keeps working") {
     val dir = tmp()
     val url = s"jdbc:duckdb:$dir/state.db"

@@ -92,8 +92,8 @@ class StreamRecoverySpec extends SparkSpec {
 
     // convergence: state equals the BATCH pipeline over the same pages
     val batchDir = tmp()
-    val batchHeaders = new ParquetStateTable(spark, s"$batchDir/headers")
-    val runs = new ParquetStateTable(spark, s"$batchDir/runs")
+    val batchHeaders = StateLayouts.records(spark, s"$batchDir/headers")
+    val runs = StateLayouts.runs(spark, s"$batchDir/runs")
     val p = new HarvestPipeline(spark, batchHeaders, runs, "http://h/oai",
       headerFilter = qucosaFilter)
     val fetch = new PageFetcher {
