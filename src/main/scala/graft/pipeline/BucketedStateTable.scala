@@ -1723,11 +1723,24 @@ class BucketedStateTable(
     * into it (which the union would widen the stored column to) takes
     * the two-plan form instead. */
   override def deleteWhereUnmodified(processed: DataFrame): Long =
+    deleteImpl(processed, publishGate = None)
+
+  /** The probe, the read and the bucket write overlap the gate owner's
+    * foreground; only the manifest publish waits for it (see
+    * [[mergeAwaitingPublish]], whose lock and lease rules hold here). */
+  private[graft] override def deleteWhereUnmodifiedAfter(processed: DataFrame,
+      gate: PublishGate): Long =
+    deleteImpl(processed, Some(gate))
+
+  private def deleteImpl(processed: DataFrame,
+      publishGate: Option[PublishGate]): Long =
     BucketedStateTable.lockFor(lockKey).synchronized { withLease {
       withPinned(processed) { processed =>
       val dirty = dirtyBucketsOf(processed)
-      if (dirty.isEmpty) 0L
-      else {
+      if (dirty.isEmpty) {
+        publishGate.foreach(_.awaitPublish()) // an abort fails a no-op delete too
+        0L
+      } else {
         val (cur, base, plan) = readBucketsWithBase(dirty, like = processed)
         val cols = cur.columns.toSeq
         val proc = processed.select(cols.map(StateOps.qcol): _*)
@@ -1741,7 +1754,7 @@ class BucketedStateTable(
         if (aligned.contains(None)) {
           val res = StateOps.deleteIfUnmodified(cur, processed)
           val notRemoved = res.notRemoved.count()
-          commit(res.newState, dirty, plan, base)
+          commit(res.newState, dirty, plan, base, publishGate)
           notRemoved
         } else {
           val Tag = "__graft_tag"
@@ -1750,7 +1763,7 @@ class BucketedStateTable(
           commit(
             cur.withColumn(Tag, lit(0))
               .unionByName(proc.select(aligned.flatten: _*).withColumn(Tag, lit(1))),
-            dirty, plan, base,
+            dirty, plan, base, publishGate,
             afterExchange = _
               .withColumn("__graft_min", min(Tag).over(seen))
               .withColumn("__graft_max", max(Tag).over(seen))
@@ -1888,9 +1901,10 @@ class BucketedStateTable(
     } }
 
   /** [[replaceAll]]'s commit; the caller holds the lock and lease. */
-  private def rewriteAll(rows: DataFrame): CommitStats =
+  private def rewriteAll(rows: DataFrame,
+      publishGate: Option[PublishGate] = None): CommitStats =
     commit(rows, (0 until numBuckets).toSeq,
-      planFull(numBuckets, estimatedBytes(rows)))._1
+      planFull(numBuckets, estimatedBytes(rows)), publishGate = publishGate)._1
 
   /** The rows of the commit this handle last read or wrote through
     * [[readLocal]] / [[updateLocal]], keyed by that commit's id (a
@@ -1923,9 +1937,21 @@ class BucketedStateTable(
     * [[updateLocal]] reads no file: on a one-bucket table the commit is
     * the only Spark job. Returns the commit id. */
   def updateLocal(f: Option[DataFrame] => DataFrame): Long =
+    updateLocalImpl(f, publishGate = None)
+
+  /** [[updateLocal]] whose publish waits on `gate`, under
+    * [[mergeAwaitingPublish]]'s rules: the read, `f` and the bucket
+    * write overlap the gate owner's foreground, and an abort publishes
+    * nothing and leaves the held rows as they were. */
+  private[graft] def updateLocalAfter(gate: PublishGate)(
+      f: Option[DataFrame] => DataFrame): Long =
+    updateLocalImpl(f, Some(gate))
+
+  private def updateLocalImpl(f: Option[DataFrame] => DataFrame,
+      publishGate: Option[PublishGate]): Long =
     BucketedStateTable.lockFor(lockKey).synchronized { withLease {
       val next = f(readLocal())
-      val id = rewriteAll(next).commitId
+      val id = rewriteAll(next, publishGate).commitId
       held = next.queryExecution.optimizedPlan match {
         case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
           Some(id -> next)
@@ -2224,6 +2250,19 @@ object BucketedStateTable {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def lockFor(path: String): Object =
     locks.computeIfAbsent(path, _ => new Object)
+
+  /** The rows of a driver-local frame ([[BucketedStateTable.readLocal]]'s,
+    * or one built by `createDataFrame` over driver rows), read off its
+    * plan: no Spark job and no Catalyst action, where `collect` plans
+    * and runs one. Any other frame is collected. */
+  private[graft] def localRows(df: DataFrame): Seq[org.apache.spark.sql.Row] =
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(l.schema)
+        l.data.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row])
+      case _ => df.collect().toSeq
+    }
 
   /** One location of a read — a data file or a legacy bucket
     * directory at `root` — with its files as the manifest names them or

@@ -2,8 +2,9 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.operators.StateOps
@@ -128,13 +129,15 @@ class EnrichmentPipeline(
 
   Tables.configure(spark)
 
-  /** A drained-and-fetched batch awaiting commit, materialized to disk
-    * under the queue table (`_inflight/`) so the remote fetches ran
-    * exactly once no matter how long the caller holds the batch or what
-    * state pruning happens meanwhile (a cache would recompute — and
-    * silently re-fetch — on block loss once the source snapshot is
-    * pruned). */
-  case class ProcessedBatch private[EnrichmentPipeline] (inflightPath: String)
+  /** A drained, fetched and projected batch awaiting commit: the P4
+    * projection's rows (the METS fields, not the METS XML) and their
+    * schema, held on the driver. The remote fetches ran exactly once,
+    * in [[processBatch]]'s job, however long the caller holds the
+    * batch and whatever state pruning happens meanwhile; at most
+    * `batchSize` rows, the bound under which the drained batch was
+    * already collected. */
+  case class ProcessedBatch private[EnrichmentPipeline] (
+      rows: Seq[Row], schema: StructType)
 
   def runOnce(fetch: DocumentFetcher): EnrichmentSummary =
     processBatch(fetch) match {
@@ -158,43 +161,15 @@ class EnrichmentPipeline(
     out.result()
   }
 
-  /** Phase 1 — drain a bounded batch (L1) and run the per-record fetch
-    * (S2). The batch is held (persisted) while fetches run, exactly like
-    * the reference holds its `List<OaiHeader>` during its minutes-long
-    * fetch loop — the window in which a concurrent harvest may re-upsert
-    * a drained record. */
-  /** A commit failure or crash between the fetch phase and the commit
-    * leaves its `_inflight/<uuid>` parquet behind (the retry drains a
-    * fresh batch under a new id); without a sweep those leftovers
-    * accumulate under the state root forever. Swept at every drain —
-    * but NEVER a batch THIS instance still holds (the live set below):
-    * ProcessedBatch's contract is "however long the caller holds it",
-    * and an operator pausing >1 h between processBatch and commit must
-    * not have the fetches discarded and re-run. A batch another
-    * process/instance holds is indistinguishable from a crash leftover;
-    * it is reclaimed after `InflightStaleMillis` (1 h) — size that
-    * window to the longest cross-process hold, or run one enrichment
-    * instance per queue (the reference's deployment shape). */
-  private val InflightStaleMillis = 60L * 60 * 1000
-
-  private val liveInflight =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def sweepStaleInflight(): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(headersTable.tableRoot, "_inflight")
-    val fs = headersTable.fileSystem
-    try if (fs.exists(dir)) {
-      val cutoff = System.currentTimeMillis() - InflightStaleMillis
-      fs.listStatus(dir).foreach { st =>
-        if (st.getModificationTime < cutoff &&
-            !liveInflight.contains(st.getPath.toString))
-          fs.delete(st.getPath, true)
-      }
-    } catch { case _: java.io.IOException => () } // sweep is best-effort
-  }
-
-  def processBatch(fetch: DocumentFetcher): Option[ProcessedBatch] = {
-    sweepStaleInflight()
+  /** Phase 1 — drain a bounded batch (L1), run the per-record fetch
+    * (S2) and the P4 projection, in one job whose projected rows are
+    * collected. The batch is held while fetches run, exactly like the
+    * reference holds its `List<OaiHeader>` during its minutes-long
+    * fetch loop — the window in which a concurrent harvest may
+    * re-upsert a drained record. A failed task re-fetches its
+    * partition; a failed commit abandons the batch, and the retry
+    * drains a fresh one. */
+  def processBatch(fetch: DocumentFetcher): Option[ProcessedBatch] =
     readBatchWithRetry().flatMap { batchRows =>
       if (batchRows.isEmpty) None
       else {
@@ -213,18 +188,16 @@ class EnrichmentPipeline(
               h.status_is_deleted, xml.orNull)
           }
         }.toDF()
-        val inflight = new org.apache.hadoop.fs.Path(headersTable.tableRoot,
-          s"_inflight/${java.util.UUID.randomUUID()}").toString
-        fetched.write.parquet(inflight) // every remote fetch runs exactly once
-        // QUALIFIED, because the sweep compares against listStatus's
-        // fully-qualified paths — an unqualified entry would never
-        // match and the live guard would be a no-op
-        liveInflight.add(headersTable.fileSystem
-          .makeQualified(new org.apache.hadoop.fs.Path(inflight)).toString)
-        Some(ProcessedBatch(inflight))
+        // P4 in the fetch's own job: the per-document namespace-aware
+        // METS DOM parse (the phase's dominant CPU cost) runs on the
+        // rows as they are fetched, and only the projected fields come
+        // back to the driver
+        val projected = XmlProjections.projectMets(fetched, col("mets_xml"))
+          .withColumn("header_last_modified", col("datestamp"))
+          .drop("mets_xml")
+        Some(ProcessedBatch(projected.collect().toSeq, projected.schema))
       }
     }
-  }
 
   /** The bounded batch is COLLECTED (≤ batchSize rows — the reference's
     * in-memory `List<OaiHeader>`): the committed snapshot is pinned only
@@ -265,61 +238,50 @@ class EnrichmentPipeline(
     * match, survives the delete, and is reported in `notRemoved`
     * (reference `PostgrePersistenceServiceTestIT.java:452-494` — the
     * reference's DELETE runs against current DB state for the same
-    * reason). */
+    * reason).
+    *
+    * The reference orders only the outcome: reporting rows, then the
+    * queue delete (`MetsProcessor.java:148-156`). So the delete runs
+    * beside the merge as a gated mutation ([[PublishGate]]): its probe,
+    * read and bucket write overlap the merge, and its manifest
+    * publishes after the merge's. A merge that throws aborts the gate
+    * and the delete publishes nothing; its data directory is an orphan
+    * the queue's next commit prunes. A delete that throws after the
+    * merge published leaves the records reported and still queued —
+    * the crash order of the sequential commit — and the next batch
+    * drains them again into an idempotent merge. */
   def commit(pb: ProcessedBatch): EnrichmentSummary = {
-    // read under the writer's own schema: no footer-inference job
-    val fetched = spark.read.schema(Encoders.product[FetchedHeader].schema)
-      .parquet(pb.inflightPath)
+    // everything below works on driver-local frames: the counts are the
+    // rows' own, and the merge and the delete find their dirty buckets
+    // on the driver instead of in probe jobs
+    val batch = spark.createDataFrame(
+      java.util.Arrays.asList(pb.rows: _*), pb.schema)
+    // F2 validation → reporting rows. Null XML (fetch miss) nulls
+    // every projected field, so F2 drops it.
+    val reportingRows = XmlProjections.validateReportingRow(batch)
+      .select("record_identifier", "mandator", "document_type",
+        "distribution_date", "header_last_modified")
+    val processed = pb.rows.size.toLong
+    val reported = reportingRows.collect().length.toLong
 
-    try {
-      // P4 projection, COLLECTED once: the per-document namespace-aware
-      // METS DOM parse (the phase's dominant CPU cost) runs in this one
-      // job, over at most `batchSize` rows — the bound under which
-      // readBatchWithRetry already collected the batch. Everything
-      // below works on driver-local frames: the counts are the rows'
-      // own, and the merge and the delete find their dirty buckets on
-      // the driver instead of in probe jobs.
-      val projected = XmlProjections.projectMets(fetched, col("mets_xml"))
-        .withColumn("header_last_modified", col("datestamp"))
-        .drop("mets_xml")
-      val rows = projected.collect()
-      val batch = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), projected.schema)
-      // F2 validation → reporting rows. Null XML (fetch miss) nulls
-      // every projected field, so F2 drops it.
-      val reportingRows = XmlProjections.validateReportingRow(batch)
-        .select("record_identifier", "mandator", "document_type",
-          "distribution_date", "header_last_modified")
-      val processed = rows.length.toLong
-      val reported = reportingRows.collect().length.toLong
-
+    // the queue tuple is QueuedHeader's FOUR fields, statically — the
+    // batch can never carry more (readBatchWithRetry fixed the shape
+    // at drain), and a live-column list captured from the queue would
+    // crash every commit the moment the headers table is widened (ADD
+    // COLUMN is supported) while the batch is in flight
+    val processedHeaders = batch.select(
+      col("record_identifier"), col("datestamp"), col("set_spec"),
+      col("status_is_deleted"))
+    // each table's read-modify-write is atomic under its own write
+    // lock, so a harvest merge cannot land between the delete's read
+    // and its write and be clobbered; a bucketed queue rewrites only
+    // the batch's buckets
+    var notRemoved = 0L
+    MutationOverlap.withGatedMutation { gate =>
+      notRemoved = headersTable.deleteWhereUnmodifiedAfter(processedHeaders, gate)
+    } {
       reportingTable.merge(reportingRows, keys = Seq("record_identifier"))
-
-      // the queue tuple is QueuedHeader's FOUR fields, statically — the
-      // inflight parquet can never carry more (readBatchWithRetry fixed
-      // the shape at drain), and a live-column list captured from the
-      // queue would crash every commit the moment the headers table is
-      // widened (ADD COLUMN is supported) while the batch is in flight
-      val processedHeaders = batch.select(
-        col("record_identifier"), col("datestamp"), col("set_spec"),
-        col("status_is_deleted"))
-      // atomic read-modify-write: the latest queue snapshot is read and
-      // rewritten under the table's write lock, so a harvest merge cannot
-      // land between them and be clobbered; a bucketed queue rewrites only
-      // the batch's buckets
-      val notRemoved = headersTable.deleteWhereUnmodified(processedHeaders)
-      headersTable.fileSystem.delete(
-        new org.apache.hadoop.fs.Path(pb.inflightPath), true)
-
-      EnrichmentSummary(processed, reported, processed - reported, notRemoved)
-    } finally {
-      // unpin in EVERY outcome: a commit that threw (e.g. a raced
-      // mutation) abandons the batch — the caller drains a fresh one —
-      // and a forever-pinned entry would shield the leftover parquet
-      // from the stale sweep for the instance's whole lifetime
-      liveInflight.remove(headersTable.fileSystem.makeQualified(
-        new org.apache.hadoop.fs.Path(pb.inflightPath)).toString)
-      ()
     }
+    EnrichmentSummary(processed, reported, processed - reported, notRemoved)
   }
 }

@@ -2,8 +2,9 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.model.{OaiRunResult, ParsedPage}
@@ -45,7 +46,10 @@ object PageFetcher {
   *
   * ST4 ordering is preserved exactly: the headers state commits BEFORE
   * the checkpoint row, so a crash in between replays the page into an
-  * idempotent merge. ST3 error policy: transport failures persist
+  * idempotent merge. The two commits' work overlaps — the checkpoint
+  * write runs behind a [[PublishGate]] beside the headers merge — but
+  * only the merge's success opens the gate for the checkpoint's
+  * publish. ST3 error policy: transport failures persist
   * nothing; OAI-level errors advance the checkpoint per the ST2 decision
   * table (`OffsetStateMachine`).
   *
@@ -78,18 +82,18 @@ class HarvestPipeline(
 
   /** Newest checkpoint (A1 top-1-by-sequence over the runs state),
     * picked on the driver from the runs table's driver-held rows
-    * ([[BucketedStateTable.readLocal]]): no Spark job while the newest
-    * commit is the one this pipeline last wrote. A committed-but-EMPTY
-    * runs table (a legal StateTable state — ops truncation, spec setup)
-    * falls back to the initial checkpoint like a never-written one,
-    * instead of throwing on `.head` of nothing. */
+    * ([[BucketedStateTable.readLocal]]) and decoded by field: no Spark
+    * job and no Catalyst action while the newest commit is the one this
+    * pipeline last wrote. A committed-but-EMPTY runs table (a legal
+    * StateTable state — ops truncation, spec setup) falls back to the
+    * initial checkpoint like a never-written one, instead of throwing
+    * on `.head` of nothing. */
   def lastRun(): OaiRunResult =
     runsTable.readLocal()
       .flatMap { df =>
         val id = df.schema.fieldIndex("id")
-        df.collect().filterNot(_.isNullAt(id)).maxByOption(_.getLong(id)).map(r =>
-          spark.createDataFrame(java.util.List.of(r), df.schema)
-            .as[OaiRunResult].collect().head)
+        BucketedStateTable.localRows(df).filterNot(_.isNullAt(id))
+          .maxByOption(_.getLong(id)).map(HarvestPipeline.runOf(_, df.schema))
       }
       .getOrElse(OffsetStateMachine.initial)
 
@@ -138,28 +142,6 @@ class HarvestPipeline(
                 "from-windows of subsequent requests may mis-align")
         }
 
-        val nHeaders =
-          if (page.errors.isEmpty) {
-            // the page's filtered headers, COLLECTED once: the page body
-            // is a driver string already and bounds them, so the header
-            // regex-explode projection runs in this one job, the count
-            // is the rows', and the merge gets a driver-local frame
-            // whose dirty buckets are found on the driver
-            val projected = headerFilter(
-              XmlProjections.projectOaiHeaders(pageDf, col("xml"))
-                .select("record_identifier", "datestamp", "set_spec",
-                  "status_is_deleted"))
-            val rows = projected.collect()
-            // ST4: headers commit BEFORE the checkpoint row; the merge is
-            // an atomic read-modify-write so a concurrent enrichment
-            // delete cannot be clobbered. Through the StateTable trait a
-            // bucketed headers table rewrites only the page's buckets.
-            headersTable.merge(
-              spark.createDataFrame(java.util.Arrays.asList(rows: _*), projected.schema),
-              keys = Seq("record_identifier"))
-            rows.length.toLong
-          } else 0L
-
         val next = OffsetStateMachine.advance(last, page, now, fc3CompatibilityMode)
         // D2 retention with keep-latest runs in the same commit; cutoff =
         // start of current run minus the configured history length.
@@ -170,17 +152,54 @@ class HarvestPipeline(
         // poll loop would then resume from the older checkpoint,
         // dropping a mid-pagination resumption token and the backlog
         // behind it. The union and the retention run on the driver-held
-        // rows, so the write is the cycle's only runs-table job.
+        // rows, and `next` goes straight into a row, so the write is the
+        // update's only Spark job and Catalyst action.
         val cutoff = new Timestamp(now.getTime - historyLengthHours * 3600_000L)
-        runsTable.updateLocal { cur =>
-          val nextRow = Seq(next).toDF()
-          val schema = cur.map(_.schema).getOrElse(nextRow.schema)
-          val runs = cur.toSeq.flatMap(_.collect()) ++
-            nextRow.select(schema.fieldNames.toSeq.map(col): _*).collect()
+        val appendRun: Option[DataFrame] => DataFrame = { cur =>
+          val schema = cur.map(_.schema).getOrElse(HarvestPipeline.RunSchema)
+          val runs = cur.toSeq.flatMap(BucketedStateTable.localRows) :+
+            HarvestPipeline.rowOf(next, schema)
           spark.createDataFrame(java.util.Arrays.asList(
             StateOps.retentionKeepLatestRows(runs, schema, seqCol = "id",
               tsCol = "timestampOfRun", cutoff = cutoff): _*), schema)
         }
+
+        val nHeaders =
+          if (page.errors.isEmpty)
+            // ST4: headers commit BEFORE the checkpoint row. The runs
+            // write is the gated mutation: its read, retention and bucket
+            // write overlap the headers merge, and its manifest publishes
+            // only after the merge's — or never, when the merge throws,
+            // so a crash or failure in between replays the page into an
+            // idempotent merge exactly as the sequential order did.
+            MutationOverlap.withGatedMutation { gate =>
+              runsTable.updateLocalAfter(gate)(appendRun); ()
+            } {
+              // the page's filtered headers, COLLECTED once: the page
+              // body is a driver string already and bounds them, so the
+              // header regex-explode projection runs in this one job,
+              // the count is the rows', and the merge gets a driver-local
+              // frame whose dirty buckets are found on the driver
+              val projected = headerFilter(
+                XmlProjections.projectOaiHeaders(pageDf, col("xml"))
+                  .select("record_identifier", "datestamp", "set_spec",
+                    "status_is_deleted"))
+              val rows = projected.collect()
+              // the merge is an atomic read-modify-write so a concurrent
+              // enrichment delete cannot be clobbered. Through the
+              // StateTable trait a bucketed headers table rewrites only
+              // the page's buckets.
+              headersTable.merge(
+                spark.createDataFrame(java.util.Arrays.asList(rows: _*), projected.schema),
+                keys = Seq("record_identifier"))
+              rows.length.toLong
+            }
+          else {
+            // an OAI-error page merges no headers: the checkpoint
+            // advances alone (ST2)
+            runsTable.updateLocal(appendRun)
+            0L
+          }
 
         HarvestRunSummary(succeeded = true, uri, nHeaders, page.errors, Some(next))
     }
@@ -247,6 +266,27 @@ object HarvestPipeline {
   /** Server-clock skew tolerance before warning — the reference's
     * hard-coded 2 minutes (`OaiHarvester.java:69`). */
   val MaxClockSkewMillis: Long = 2L * 60L * 1000L
+
+  /** The runs table's columns when it has never been written. */
+  private lazy val RunSchema: StructType = Encoders.product[OaiRunResult].schema
+
+  /** `run` as a row in `schema`'s column order. */
+  private def rowOf(run: OaiRunResult, schema: StructType): Row = {
+    val byName = run.productElementNames.zip(run.productIterator.map {
+      case o: Option[Any @unchecked] => o.orNull
+      case v => v
+    }).toMap
+    Row.fromSeq(schema.fieldNames.toSeq.map(byName))
+  }
+
+  /** The checkpoint a runs-table row in `schema` holds, by field name. */
+  private def runOf(r: Row, schema: StructType): OaiRunResult = {
+    def at[T](name: String): T = r.getAs[T](schema.fieldIndex(name))
+    OaiRunResult(at[Long]("id"), at[Timestamp]("timestampOfRun"),
+      at[Timestamp]("responseDate"), Option(at[String]("resumptionToken")),
+      Option(at[Timestamp]("resumptionTokenExpirationDate")),
+      Option(at[Timestamp]("nextFromTimestamp")))
+  }
 
   private lazy val log =
     org.slf4j.LoggerFactory.getLogger(classOf[HarvestPipeline])

@@ -38,9 +38,9 @@ import graft.sinks.{ConnectionFactory, JdbcUpsertSink, SqlDialect}
   * idempotent re-merge under read-committed isolation, same as the
   * file-backed tables.
   *
-  * `scratchPath` backs [[tableRoot]]/[[fileSystem]] — the staging area
-  * the enrichment pipeline uses for its `_inflight` fetch results; only
-  * scratch files live there, never state.
+  * `scratchPath` backs [[tableRoot]]/[[fileSystem]], which the
+  * [[StateTable]] trait requires; only scratch files live there, never
+  * state.
   *
   * Array columns and upsert statements go through `dialect`
   * ([[graft.sinks.SqlDialect]]): PostgreSQL binds arrays natively,

@@ -35,6 +35,18 @@ trait StateTable {
     * their state row changed since they were read (ST5). */
   def deleteWhereUnmodified(processed: DataFrame): Long
 
+  /** [[deleteWhereUnmodified]] whose publish waits on `gate`: run it as
+    * [[MutationOverlap.withGatedMutation]]'s mutation so it publishes
+    * after the foreground's commit, or not at all when the foreground
+    * throws. This default awaits the gate first and then deletes, the
+    * sequential order; [[BucketedStateTable]] overlaps its probe, read
+    * and bucket write with the foreground and waits only to publish. */
+  private[graft] def deleteWhereUnmodifiedAfter(processed: DataFrame,
+      gate: PublishGate): Long = {
+    gate.awaitPublish()
+    deleteWhereUnmodified(processed)
+  }
+
   /** [[merge]] guarded by a per-stream batch marker: exactly-once
     * upgrade for `foreachBatch` replay (ST4). Returns true when the
     * write happened, false when `batchId` was already committed by the

@@ -237,6 +237,10 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
 
   private val VersionName = raw"v(\d{19})".r
 
+  /** Version-less listings after which [[scan]] takes the slot as
+    * absent. */
+  private val ConfirmAbsent = 3
+
   private def fileFor(v: Long): Path = new Path(dir, f"v$v%019d")
 
   /** Pre-r19 layouts left the lease as a single FILE at `dir`; the
@@ -268,9 +272,22 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
     * slot directory is missing or holds no version file. A pre-r19
     * single-file slot reads as version 0. Retries when the top version
     * is GC'd between list and open (progress proof: each retry means a
-    * strictly newer version was published). */
+    * strictly newer version was published).
+    *
+    * A listing that names no version is re-listed before it is
+    * believed. Once created, a slot always holds its top version (GC
+    * deletes strictly below it, a delete publishes a tombstone), but a
+    * listing is not atomic: `RawLocalFileSystem.listStatus` reads the
+    * directory's names, then stats each one and silently drops a name
+    * deleted in between. A listing taken just before a refresh
+    * published v(n+1) and GC'd v(n) therefore names neither, and a
+    * polling waiter read a beating holder's slot as EMPTY. Only
+    * [[ConfirmAbsent]] version-less listings in one scan answer None: a
+    * slot whose first version is not yet published, or a crash
+    * leftover. */
   private def scan(): Option[(Long, Array[Byte])] = {
     var attempts = 0
+    var versionless = 0
     while (attempts < 64) {
       attempts += 1
       val listed =
@@ -304,8 +321,10 @@ final class VersionedSlotStore(fs: FileSystem, dir: Path) extends LeaseStore {
             case _ => ()
           }
         }
-        if (top < 0L) return None
-        try return Some((top, readFully(fileFor(top))))
+        if (top < 0L) {
+          versionless += 1
+          if (versionless >= ConfirmAbsent) return None
+        } else try return Some((top, readFully(fileFor(top))))
         catch {
           // GC'd under us — a newer version exists; rescan
           case _: java.io.FileNotFoundException => ()

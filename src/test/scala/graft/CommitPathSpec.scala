@@ -12,7 +12,7 @@ import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.pipeline.{BucketedStateTable, StateManifest, ZoneMaps}
+import graft.pipeline.{BucketedStateTable, MutationOverlap, PublishGate, StateManifest, ZoneMaps}
 
 /** The local file system under the scheme `countfs:`, so a table at
   * `countfs:///some/dir` runs every driver and task file call through
@@ -375,9 +375,12 @@ class CommitPathSpec extends SparkSpec {
     * that the table recovers from each. The seed is `rows` narrow rows,
     * which pack; `wide`, a second commit gives every row a ~2 KB
     * payload, which leaves a packed table past the bound. `packs` is
-    * whether `op`'s commit packs. */
+    * whether `op`'s commit packs. `aborted` is an `op` that fails on
+    * its own and publishes nothing: its pre-state is its post-state,
+    * and the data it wrote is an orphan the next commit reaps. */
   private def crashEveryCall(op: BucketedStateTable => Unit, rows: Int = 60,
-      wide: Boolean = false, packs: Option[Boolean] = None) = {
+      wide: Boolean = false, packs: Option[Boolean] = None,
+      aborted: Boolean = false) = {
     def seeded(): (String, BucketedStateTable) = {
       val dir = tmp()
       val t = table(s"${CountingFs.Scheme}://$dir/t", buckets = 8)
@@ -391,12 +394,22 @@ class CommitPathSpec extends SparkSpec {
     val pre = seed(rows).toMap
     val (cleanDir, clean) = seeded()
     val (ok, log) = CountingFs.watch(cleanDir)(op(clean))
-    ok.get
-    packs.foreach(p => assert(clean.lastCommit.get.packed == p, clean.lastCommit))
     val post = this.rows(clean)
     val n = CountingFs.mutatingOps(log)
-    assert(n >= 4 && post != pre && log.exists(_._1 == "rename"), log)
     val next = Map("k0000" -> 1000L, "zz" -> 1L)
+    if (aborted) {
+      assert(ok.isFailure && post == pre && !log.exists(_._1 == "rename"), log)
+      assert(unreferenced(cleanDir).nonEmpty, "the aborted op wrote no data")
+      clean.merge(kv(next.toSeq: _*), keys = Seq("k"))
+      assert(unreferenced(cleanDir).isEmpty,
+        s"the next commit left ${unreferenced(cleanDir)}")
+    } else {
+      ok.get
+      packs.foreach(p => assert(clean.lastCommit.get.packed == p, clean.lastCommit))
+      assert(post != pre && log.exists(_._1 == "rename"), log)
+    }
+    // an aborted op makes only its data directory and files
+    assert(n >= (if (aborted) 2 else 4), log)
     (1 to n).foreach { at =>
       val (dir, t) = seeded()
       val preId = t.commits().last
@@ -466,5 +479,47 @@ class CommitPathSpec extends SparkSpec {
         .unionByName(held.filter(col("k") === keys.head).withColumn("v", col("v") - 1))
       assert(t.deleteWhereUnmodified(processed) == 1L)
     }, rows = 200, wide = true, packs = Some(false))
+  }
+
+  // ---- gated publishes ----------------------------------------------
+  // The same crash enumeration over the gated forms of the queue delete
+  // and the checkpoint write, run as the gated mutation beside a
+  // foreground that succeeds (the gate opens) or throws (it aborts).
+
+  private def gated(foregroundFails: Boolean)(mutation: PublishGate => Unit): Unit =
+    MutationOverlap.withGatedMutation(mutation) {
+      if (foregroundFails) throw new IllegalStateException("foreground failed")
+    }
+
+  private val gatedProcessed = Seq(("k0003", 3L), ("k0040", 40L), ("k0041", -1L), ("k0050", 50L))
+
+  test("a crash at any mutating call of a gated deleteWhereUnmodifiedAfter whose gate opens leaves the pre- or post-state, and the table recovers") {
+    crashEveryCall(t => gated(foregroundFails = false) { g =>
+      assert(t.deleteWhereUnmodifiedAfter(kv(gatedProcessed: _*), g) == 1L)
+    })
+  }
+
+  test("a crash at any mutating call of a gated deleteWhereUnmodifiedAfter whose gate aborts leaves the pre-state, and the table recovers") {
+    crashEveryCall(t => gated(foregroundFails = true) { g =>
+      t.deleteWhereUnmodifiedAfter(kv(gatedProcessed: _*), g); ()
+    }, aborted = true)
+  }
+
+  /** The checkpoint write's shape: the held rows plus one new row. */
+  private def appendOne(cur: Option[DataFrame]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(
+      BucketedStateTable.localRows(cur.get) :+ org.apache.spark.sql.Row("n1", 1L): _*),
+      cur.get.schema)
+
+  test("a crash at any mutating call of a gated updateLocalAfter whose gate opens leaves the pre- or post-state, and the table recovers") {
+    crashEveryCall(t => gated(foregroundFails = false) { g =>
+      t.updateLocalAfter(g)(appendOne); ()
+    })
+  }
+
+  test("a crash at any mutating call of a gated updateLocalAfter whose gate aborts leaves the pre-state, and the table recovers") {
+    crashEveryCall(t => gated(foregroundFails = true) { g =>
+      t.updateLocalAfter(g)(appendOne); ()
+    }, aborted = true)
   }
 }

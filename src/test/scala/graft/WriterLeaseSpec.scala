@@ -495,6 +495,61 @@ class WriterLeaseSpec extends SparkSpec {
     lease.acquire("after-release").release()
   }
 
+  /** HDFS semantics plus a local listing's non-atomicity, on demand:
+    * once armed, the listing `skip` listings later takes its names,
+    * runs `between` (a concurrent refresh), then drops every name
+    * deleted meanwhile — as `RawLocalFileSystem.listStatus` drops a
+    * name it can no longer stat. */
+  private class ListRaceFs(inner: org.apache.hadoop.fs.FileSystem)
+      extends HdfsSemanticsFs(inner) {
+    @volatile var between: Option[() => Unit] = None
+    @volatile var skip = 0
+    override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+      val listed = super.listStatus(f)
+      between match {
+        case Some(run) if skip == 0 =>
+          between = None
+          run()
+          listed.filter(st => exists(st.getPath))
+        case Some(_) => skip -= 1; listed
+        case None => listed
+      }
+    }
+  }
+
+  test("VersionedSlotStore: a listing that races a refresh's publish and GC reads the beating holder, never an EMPTY slot") {
+    val dir = Files.createTempDirectory("graft-lease-list-race").toString
+    val p = new Path(s"$dir/_lease")
+    val fs = new ListRaceFs(p.getFileSystem(spark.sparkContext.hadoopConfiguration))
+    val store = new HadoopLeaseStore(fs, p)
+    // every clock reading is a second later: any waiter's deadline has
+    // passed by its first check, while the holder's stamps stay fresh
+    val now = new java.util.concurrent.atomic.AtomicLong
+    val lease = new WriterLease(store, "list-race", staleMillis = 60_000L,
+      acquireTimeoutMillis = 0L, pollMillis = 1L, clock = () => now.addAndGet(1000L))
+    val h = lease.acquire("holder")
+    def holderOf(b: Array[Byte]) = new String(b, "UTF-8").linesIterator.next()
+
+    // the read lists v(n); the holder's beat publishes v(n+1) and GCs
+    // v(n) before the listing stats it
+    fs.between = Some(() => assert(h.beat()))
+    val seen = store.read()
+    assert(fs.between.isEmpty, "the race was not injected")
+    assert(seen.map(holderOf).contains("holder"),
+      "a beating holder's slot read as EMPTY")
+
+    // the hammer's interleaving: a waiter's create-if-absent sees the
+    // slot held, then its read races the holder's refresh
+    fs.between = Some(() => assert(h.beat()))
+    fs.skip = 1
+    val e = intercept[IllegalStateException](lease.acquire("waiter"))
+    assert(fs.between.isEmpty, "the race was not injected")
+    assert(e.getMessage.contains("held by a concurrent writer"), e.getMessage)
+    assert(h.beat())
+    h.release()
+    assert(store.read().isEmpty)
+  }
+
   test("end-to-end: a BucketedStateTable over the CAS store commits and releases cleanly") {
     val s = spark
     import s.implicits._

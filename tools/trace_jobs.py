@@ -10,6 +10,12 @@ the span it ran under (as a path from the op down), its wall time, task
 count and executor CPU, then the same totals per span path and for the
 whole trace. A job no span claimed is listed under "-".
 
+Jobs can run at once (a commit whose work overlaps another's). A job
+whose interval overlaps another job's is marked `*`, and next to the
+summed `wall_s` each total prints `covered_s`, the wall the union of
+its jobs' intervals covers: overlapped jobs add to `wall_s` but not to
+`covered_s`.
+
 Given two traces (say, before and after a change), it prints jobs,
 tasks and CPU per span path for A, for B and the difference B - A,
 plus the totals.
@@ -48,6 +54,27 @@ def span_path(spans, span_id):
 
 def wall_s(job):
     return max(0.0, (job["end_ms"] - job["start_ms"]) / 1000.0)
+
+
+def covered_s(jobs):
+    """Seconds covered by the union of the jobs' [start, end] intervals."""
+    total, cur = 0.0, None
+    for start, end in sorted((j["start_ms"], max(j["start_ms"], j["end_ms"])) for j in jobs):
+        if cur and start <= cur[1]:
+            cur[1] = max(cur[1], end)
+        else:
+            if cur:
+                total += cur[1] - cur[0]
+            cur = [start, end]
+    if cur:
+        total += cur[1] - cur[0]
+    return total / 1000.0
+
+
+def overlapping(jobs):
+    """Ids of the jobs whose interval overlaps another job's."""
+    return {int(a["job"]) for a in jobs for b in jobs
+            if a is not b and a["start_ms"] < b["end_ms"] and b["start_ms"] < a["end_ms"]}
 
 
 def span_totals(spans, jobs):
@@ -90,22 +117,27 @@ def main(argv):
     origin = min((s["start_ms"] for s in spans.values()),
                  default=jobs[0]["start_ms"] if jobs else 0.0)
 
-    print(f"{'job':>5} {'start_s':>8} {'wall_s':>7} {'tasks':>6} {'cpu_s':>7}  span")
+    over = overlapping(jobs)
+    print(f"{'job':>5} {'start_s':>8} {'wall_s':>7} {'tasks':>6} {'cpu_s':>7} ovl  span")
     for j in jobs:
         path = span_path(spans, int(j["span"]))
+        mark = "*" if int(j["job"]) in over else " "
         print(f"{int(j['job']):>5} {(j['start_ms'] - origin) / 1000.0:>8.3f} "
-              f"{wall_s(j):>7.3f} {int(j['tasks']):>6} {float(j['cpu_s']):>7.3f}  {path}")
+              f"{wall_s(j):>7.3f} {int(j['tasks']):>6} {float(j['cpu_s']):>7.3f}  {mark}   {path}")
     totals = span_totals(spans, jobs)
+    by_path = defaultdict(list)
+    for j in jobs:
+        by_path[span_path(spans, int(j["span"]))].append(j)
 
     print()
-    print(f"{'jobs':>5} {'wall_s':>8} {'tasks':>6} {'cpu_s':>7}  span")
+    print(f"{'jobs':>5} {'wall_s':>8} {'covered_s':>9} {'tasks':>6} {'cpu_s':>7}  span")
     for path in sorted(totals, key=lambda p: -totals[p][1]):
         n, wall, tasks, cpu = totals[path]
-        print(f"{n:>5} {wall:>8.3f} {tasks:>6} {cpu:>7.3f}  {path}")
+        print(f"{n:>5} {wall:>8.3f} {covered_s(by_path[path]):>9.3f} {tasks:>6} {cpu:>7.3f}  {path}")
     all_wall = sum(t[1] for t in totals.values())
     all_tasks = sum(t[2] for t in totals.values())
     all_cpu = sum(t[3] for t in totals.values())
-    print(f"{len(jobs):>5} {all_wall:>8.3f} {all_tasks:>6} {all_cpu:>7.3f}  (all)")
+    print(f"{len(jobs):>5} {all_wall:>8.3f} {covered_s(jobs):>9.3f} {all_tasks:>6} {all_cpu:>7.3f}  (all)")
     return 0
 
 
