@@ -112,16 +112,18 @@ object Bench {
     catch { case _: Throwable => () }
 
     // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run (iterating on one
-    // query / re-measuring outliers in isolation); BENCH_LOCAL.json is
-    // NOT overwritten for partial runs so the committed record always
-    // covers the full suite.
+    // query, re-measuring outliers in isolation, one leg of a scale
+    // curve over a ScaleProbe corpus). A partial run writes its record
+    // to BENCH_ONLY.json, never BENCH_LOCAL.json, so the committed
+    // record always covers the full suite.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
     // Host calibration, leg 1 (see calibrationKernel): the first
     // calibrate() call doubles as kernel warmup via min-of-trials.
-    // FULL runs only — a partial (BENCH_ONLY) iteration loop never
-    // commits its record, so the fixed kernel cost would be pure tax.
+    // FULL runs only — a partial run's keys are compared leg against
+    // leg, so the fixed kernel cost would be pure tax; its record marks
+    // calibration as not run (null).
     val calPre = if (only.isEmpty) calibrate(spark, trials) else 0.0
     if (only.isEmpty)
       println(s"""{"metric":"calibration","phase":"pre","value":$calPre,"unit":"sec"}""")
@@ -252,13 +254,15 @@ object Bench {
     val calPost = if (only.isEmpty) calibrate(spark, trials) else 0.0
     if (only.isEmpty)
       println(s"""{"metric":"calibration","phase":"post","value":$calPost,"unit":"sec"}""")
-    val cal = math.min(calPre, calPost)
+    // a partial run never calibrates: null, not a 0-second measurement
+    def calOf(v: Double): String = if (only.isEmpty) s"$v" else "null"
+    val cal = calOf(math.min(calPre, calPost))
     // interior segment legs ride in the durable record: pre, seg1..segN
     // (one per SegmentEvery queries, in sweep order), post — a drift is
     // localizable to the window between two adjacent legs
     val segJson = calSegments.map(v => s"$v").mkString("[", ",", "]")
     val calJson =
-      s"""{"pre_s":$calPre,"post_s":$calPost,"value":$cal,"segment_every":$SegmentEvery,"segments":$segJson,"unit":"sec"}"""
+      s"""{"pre_s":${calOf(calPre)},"post_s":${calOf(calPost)},"value":$cal,"segment_every":$SegmentEvery,"segments":$segJson,"unit":"sec"}"""
 
     val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
     val totalLine =
@@ -270,7 +274,8 @@ object Bench {
     // full per-query map + total is therefore ALSO written to
     // BENCH_LOCAL.json in the working directory (the repo root under
     // sbt), committed per round, so regressions can be diffed without
-    // tail archaeology.
+    // tail archaeology. A partial run writes the same record to
+    // BENCH_ONLY.json.
     // Per-query objects: min/median/max over the (sweep-major) trials,
     // plus the raw per-trial seconds (`trial_s`, in pass order) and each
     // trial's start offset from run start (`at_s`) — together they
@@ -306,13 +311,12 @@ object Bench {
     // diffing committed totals across rounds.
     val localJson =
       s"""{"metric":"total","value":$total,"unit":"sec","nqueries":${results.size},"trials":$trials,"failed":${failed.size},"failed_names":$failedJson,"calibration":$calJson,"sf":"$sfDir","queries":$queriesJson,"resources":$metricsJson,"phases":$phasesJson}"""
-    if (only.isEmpty) {
-      try {
-        val out = java.nio.file.Paths.get("BENCH_LOCAL.json")
-        java.nio.file.Files.write(out, (localJson + "\n").getBytes("UTF-8"))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] BENCH_LOCAL.json write failed: ${e.getMessage}")
-      }
+    val outName = if (only.isEmpty) "BENCH_LOCAL.json" else "BENCH_ONLY.json"
+    try {
+      val out = java.nio.file.Paths.get(outName)
+      java.nio.file.Files.write(out, (localJson + "\n").getBytes("UTF-8"))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $outName write failed: ${e.getMessage}")
     }
     // The total line prints LAST — after spark.stop(), whose shutdown
     // used to be the stdout noise between the headline JSON and EOF that

@@ -5,9 +5,10 @@ import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
-/** Per-query resource accounting for the bench/probe mains: a
-  * [[SparkListener]] summing executor task metrics — shuffle read/write
-  * bytes and memory/disk spill — between `reset()` and `snapshot()`.
+/** Per-query resource accounting for [[Bench]] and the perfbench
+  * harness: a [[SparkListener]] summing executor task metrics — shuffle
+  * read/write bytes and memory/disk spill — between `reset()` and
+  * `snapshot()`.
   *
   * These are the four numbers that separate a PLAN regression from host
   * noise inside one round: elapsed time moves with CPU contention, but

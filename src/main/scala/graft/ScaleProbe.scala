@@ -1,19 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Measured scaling probe: runs the costliest bench queries at 1× and
-  * N× (default 10×) the base scale factor and writes `SCALE_PROBE.json`
-  * with wall seconds + shuffle/spill bytes for both legs — the artifact
-  * that turns the plan-level 100 TB reasoning (SCALE.md, PlanSpec,
-  * ScaleSpec) into an observed curve.
-  *
-  * The N× corpus is the base `documents`/`embeddings` union-ed N times
-  * with per-copy divergence, materialized ONCE per leg so both legs
-  * read the same physical layout:
+/** N× corpus builder for scale curves: `copies` divergent copies of the
+  * base `documents`/`embeddings` tables, written once so every leg of a
+  * curve reads the same physical layout.
   *  - doc_id / vec_id remap by a 10 M stride per copy (clear of every
-  *    planted-twin offset the queries use);
+  *    planted-twin offset the queries use); a base id at or past the
+  *    stride fails the build, since its copies would collide;
   *  - document text gets a per-copy token salt (every token suffixed
   *    `_c<i>`), so shingle/gram/minhash keys are copy-disjoint — without
   *    it every doc has N-1 exact twins and candidate PAIRS grow N²
@@ -21,117 +16,37 @@ import org.apache.spark.sql.functions._
   *  - embeddings circular-shift by the copy index (norm-preserving,
   *    near-orthogonal for these synthetic vectors), copy-localizing
   *    near-dup matches the same way.
-  * The 1× leg is copy 0 of the SAME transformation (not the raw base
-  * table), so the two legs differ only in cardinality.
+  * The 1× leg is `copies = 1`: copy 0 of the SAME transformation (not
+  * the raw base table), so two legs differ only in cardinality.
   *
-  * Run: `SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain graft.ScaleProbe"`
-  * (env knobs: SPARK_GRAFT_PROBE_COPIES=10, SPARK_GRAFT_PROBE_TRIALS=2,
-  * SPARK_GRAFT_CPUS=32).
+  * A curve is two [[Bench]] partial runs, one per leg:
+  * `sbt "runMain graft.ScaleProbe <srcDir> <outDir> <copies>"`, then
+  * `SPARK_GRAFT_SF_DIR=<outDir> SPARK_GRAFT_BENCH_ONLY=<keys>
+  * sbt "runMain graft.Bench"`, which writes `BENCH_ONLY.json`; the
+  * per-key `min` and `resources` of the two records divide into the
+  * curve (`tools/scale_curve.py`, recipe in SCALE.md).
   */
 object ScaleProbe {
 
-  /** The costliest queries per BENCH_LOCAL.json, each with the
-    * scaling shape the engine design predicts — the probe prints the
-    * measured ratio next to this expectation. */
-  val probeQueries: Seq[(String, String)] = Seq(
-    "corpus_decontaminate_semantic" -> ("linear: the benchmark (every 40th vector) grows " +
-      "with the corpus but stays broadcast-small; the corpus side is a narrow bucket map + " +
-      "broadcast candidate join + broadcast anti join — zero corpus shuffles either leg"),
-    "ann_pq_topk" -> ("N-SQUARED BY PROBE CONSTRUCTION, linear per query: this key's " +
-      "query set is every 50th vector, so BOTH sides grow N-fold and the ADC stage " +
-      "is (corpus x queries) slim rows - the salted top-k absorbs the pair blowup " +
-      "with bounded memory (spills, never OOM; wall grew 4.7x at 30x against a 900x " +
-      "pair count). Codebooks train on a BOUNDED sample (constant work); with a " +
-      "production FIXED query set the same plan is corpus-linear - see ann_ivf_topk " +
-      "(fixed 8-id queries) for the fixed-query measurement"),
-    "ann_pq_refined" -> ("linear: same bounded-train + linear ADC scan as ann_pq_topk; " +
-      "the exact-rerank leg re-scores a FIXED candidate count per query (broadcast " +
-      "fetch), so refinement adds O(queries x candidates) constant work"),
-    "dedup_incr_near" -> ("~linear: batch grows with the corpus but probes are " +
-      "bucket-pruned and band keys are copy-disjoint, so per-probe candidates stay O(1)"),
-    "dedup_incremental" -> ("~linear: index build+commit grows with the corpus; the " +
-      "batch anti-join probe reads ONLY the buckets the batch hashes into (file-count-" +
-      "asserted in IncrementalDedupSpec), so probe cost is batch-proportional"),
-    "dedup_winnow" -> "linear: winnow gram groups are copy-disjoint under the token salt",
-    "ann_ivf_incremental" -> ("linear: the query set is fixed (8 ids); index build and " +
-      "the 6 probed lists grow with the corpus"),
-    "text_dedup_spans" -> ("~linear: one (doc,gram) shuffle; the planted boilerplate " +
-      "span's group grows with the corpus but owner election is a map-side min"),
-    "ann_ivf_refined" -> "linear: fixed query set; Lloyd iterations scan the corpus twice",
-    "text_bpe_encode" -> "linear: train pair-counts and the encode projection are per-token maps",
-    // ASCII only in these strings: the container JVM defaults to an
-    // ASCII file.encoding and mangles multibyte chars in written JSON
-    "embed_incr_near" -> ("~linear SINCE THE HOT-BUCKET GUARD: the workload construction " +
-      "(batch and fixed-geometry bucket occupancy both grow N-fold) used to go ~N^2 in " +
-      "candidate cosines; the blocked bipartite decomposition caps per-task pair counts, " +
-      "and the measured ratio collapsed from superlinear to ~1.2x at 10x"),
-    "dedup_cluster" -> "linear: verified pairs are copy-local; union-find is edge-proportional",
-    "text_bm25_incr" -> ("~linear, ingest-dominated: the two-batch postings build " +
-      "(tokenize + map-side-combined (term, doc_id) aggregate + term-bucketed merges) " +
-      "grows with the corpus; the per-copy token salt makes the fixed query terms miss " +
-      "at N-times scale, so the probe leg measures the bucket-pruned empty lookup floor " +
-      "(single-bucket probes are file-count-asserted in PostingsIndexSpec)"),
-    "search_rrf_incr" -> ("~linear, embedding-leg dominated: the lexical leg is the " +
-      "bucket-pruned postings probe (per-copy token salt makes fixed query terms miss " +
-      "at N-times scale - the empty-lookup floor) plus the ingest; the semantic leg is " +
-      "an exact cosine top-k scan of the keyed embedding store, linear in rows; RRF " +
-      "fuses two already-top-k lists - constant work after the legs"),
-    "multimodal_pair_incr" -> ("~linear: the stride-relative base filter gives each copy " +
-      "its own 64-pair catalog and 16-pair batch, so index rows, probe band keys and " +
-      "candidates all grow with copies; dHash band values spread across copies (the id " +
-      "stride perturbs every 16-bit band), probes stay bucket-pruned, and the cosine " +
-      "verify only sees image-banded candidates - never embedding-space search"),
-    "corpus_snapshot_diff" -> ("linear: each side prunes to (key, md5) before its one " +
-      "hash exchange, so shuffle bytes grow with ROW COUNT only (never document size); " +
-      "the full-outer join is key-unique on both sides - no skew, no window"),
-    "dedup_containment" -> ("linear: winnow fingerprints are copy-disjoint under the " +
-      "token salt, so candidate pairs stay per-copy (df-capped at 8); the verify is one " +
-      "fused kernel call per candidate - no per-pair array materialization"),
-    "dedup_minhash_lsh" -> ("linear: banded minhash signatures are one narrow kernel " +
-      "map per document; candidate pairs form ONLY inside equal (band, band_hash) " +
-      "buckets, which are copy-disjoint under the token salt, so candidates stay " +
-      "per-copy (never all-pairs); verify is one fused jaccard kernel per candidate"),
-    "ann_ivf_topk" -> ("linear: centroids train on a BOUNDED sample (constant work); " +
-      "list assignment is a narrow per-row map; the fixed query set probes nprobe " +
-      "lists whose sizes grow with the corpus - per-query scan cost is corpus-linear " +
-      "with no all-pairs term"),
-    "corpus_global_shuffle" -> ("linear: ONE full-corpus exchange on a uniform " +
-      "per-row hash - shuffle bytes grow with row count; the key is uniform by " +
-      "construction so no reducer skews, and nothing collects to the driver"),
-    "corpus_pack_bins" -> ("linear: one narrow token-count map + one shard exchange + " +
-      "an O(1)-memory sequential pass per shard; rows carry (id, shard, n_tokens) only, " +
-      "never text, and parallelism is the shard count (a free parameter)"),
-    "text_unigram_lm" -> ("sublinear: the corpus enters ONLY through the distinct-word " +
-      "frequency count (one map-side-combined aggregate); candidates, EM rounds and the " +
-      "vocab are functions of the distinct vocabulary, which grows Heaps-law slowly " +
-      "(here: the per-copy token salt multiplies it by N, the worst case)"),
-    "text_unigram_encode" -> ("linear: train as above, then ONE narrow kernel projection " +
-      "over every document; the piece table rides as a single reference object, so plan " +
-      "size is O(1) in vocab and the encode composes with scan pushdown"),
-    "u5_change_feed" -> ("~flat: the id stride keeps the doc_id<600 working set copy-0 " +
-      "only, so state size, commits and the diff are FIXED while the corpus grows N-fold " +
-      "- the probe measures that corpus growth does not leak into change-feed cost " +
-      "(parquet min/max prunes the seed scan; the diff reads only rewritten buckets)"),
-    "u6_ivm_aggregate" -> ("~flat, same construction: the maintained view's feed, touched " +
-      "groups and delta commit are all copy-0-sized; a 100x corpus must not change what " +
-      "an incremental view refresh costs"),
-    "u7_schema_evolution" -> ("~flat, same construction as u5/u6: the state (doc_id<600 " +
-      "= copy 0 only), the widen (a metadata-only manifest rename - zero data I/O at ANY " +
-      "table size) and the backfill merge are all copy-0-sized; corpus growth touches " +
-      "only the min/max-pruned seed scans"))
+  val Stride = 10000000L
 
   /** Materialize `copies` divergent copies of documents + embeddings
-    * from `srcDir` into `outDir` (see class doc for the divergence
+    * from `srcDir` into `outDir` (see the object doc for the divergence
     * rules). */
   def materialize(spark: SparkSession, srcDir: String, outDir: String,
       copies: Int): Unit = {
-    val stride = 10000000L
     val docs = Tables.documents(spark, srcDir)
     val embs = Tables.embeddings(spark, srcDir)
+    Seq(docs -> "doc_id", embs -> "vec_id").foreach { case (df, id) =>
+      val r = df.agg(min(col(id)).cast("long"), max(col(id)).cast("long")).head()
+      require(r.isNullAt(0) || (r.getLong(0) >= 0L && r.getLong(1) < Stride),
+        s"$id maximum ${r.get(1)} (minimum ${r.get(0)}) is outside [0, $Stride): " +
+          "copies offset by the id stride would collide")
+    }
     val dims = embs.selectExpr("size(embedding) d").limit(1).collect()(0).getInt(0)
     val docCopies = (0 until copies).map { i =>
       docs.select(
-        (col("doc_id") + lit(i * stride)).as("doc_id"),
+        (col("doc_id") + lit(i * Stride)).as("doc_id"),
         regexp_replace(col("text"), "(\\S+)", "$1_c" + i).as("text"),
         col("lang"), col("source"))
         .withColumn("n_chars", length(col("text")).cast("long"))
@@ -144,124 +59,27 @@ object ScaleProbe {
           slice(col("embedding"), s + 1, dims - s),
           slice(col("embedding"), 1, s))
       embs.select(
-        (col("vec_id") + lit(i * stride)).as("vec_id"),
+        (col("vec_id") + lit(i * Stride)).as("vec_id"),
         shifted.as("embedding"), col("label"))
     }.reduce(_.unionByName(_))
     docCopies.write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     embCopies.write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
   }
 
-  private def runLeg(spark: SparkSession, metrics: BenchMetrics, dir: String,
-      trials: Int, selected: Seq[(String, String)]): Map[String, (Double, BenchMetrics.Snapshot)] =
-    selected.map { case (name, _) =>
-      val fn = SparkEntry.queries(name)
-      // per-query hardening (the Bench.scala discipline): ONE failing
-      // query at the expensive Nx leg must not abort the probe and lose
-      // every already-measured leg — record a -1 sentinel and move on
-      val best =
-        try {
-          val runs = (0 until trials).map { _ =>
-            Tables.dropCachedLeftovers(spark)
-            metrics.reset()
-            val t0 = System.nanoTime()
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            (sec, metrics.snapshot(spark.sparkContext))
-          }
-          runs.minBy(_._1)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[probe] $name FAILED at $dir: ${e.getMessage}")
-            (-1.0, metrics.snapshot(spark.sparkContext))
-        }
-      System.err.println(f"[probe] $name%-22s $dir%s ${best._1}%8.2f s")
-      name -> best
-    }.toMap
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // one octave ("10") or several ("10,30"): multi-octave runs measure
-    // the TREND (1x -> 10x -> 30x) in one artifact, so a superlinear
-    // term shows as a growing ratio-per-copy instead of hiding inside a
-    // single pairwise ratio
-    val octaves = sys.env.getOrElse("SPARK_GRAFT_PROBE_COPIES", "10")
-      .split(",").map(_.trim.toInt).distinct.sorted.toSeq
-    // fail loudly on ANY invalid entry — silently dropping a typo'd
-    // octave would ship an artifact that LOOKS complete but is missing
-    // a requested leg
-    require(octaves.nonEmpty && octaves.forall(_ >= 2),
-      s"SPARK_GRAFT_PROBE_COPIES entries must all be >= 2, got $octaves")
-    val trials = sys.env.getOrElse("SPARK_GRAFT_PROBE_TRIALS", "2").toInt.max(1)
-    // SPARK_GRAFT_PROBE_ONLY=a,b restricts to named queries (deeper-
-    // octave runs on a tail subset); SPARK_GRAFT_PROBE_OUT renames the
-    // artifact so a 30x tail probe does not clobber the 10x record.
-    val selected = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .fold(probeQueries) { names =>
-        val unknown = names.diff(probeQueries.map(_._1).toSet)
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_PROBE_ONLY names not in probeQueries: ${unknown.toSeq.sorted.mkString(", ")}")
-        probeQueries.filter(q => names(q._1))
-      }
-    val outName = sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "SCALE_PROBE.json")
+    require(args.length == 3, "usage: ScaleProbe <srcDir> <outDir> <copies>")
+    val copies = args(2).toInt
+    require(copies >= 1, s"copies must be >= 1, got $copies")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     Tables.configure(spark)
     spark.sparkContext.setLogLevel("ERROR")
-    val metrics = BenchMetrics.install(spark.sparkContext)
-
-    val root = java.nio.file.Files.createTempDirectory("graft-probe-").toString
-    val dir1 = s"$root/x1"
-    materialize(spark, sfDir, dir1, 1)
-    val dirsN = octaves.map { n =>
-      val d = s"$root/x$n"
-      materialize(spark, sfDir, d, n)
-      n -> d
-    }
-
-    // warmup so leg-1 queries do not pay first-use classloading
-    SparkEntry.queries("dedup_exact")(spark, dir1)
-      .write.format("noop").mode("overwrite").save()
-
-    val leg1 = runLeg(spark, metrics, dir1, trials, selected)
-    val legsN = dirsN.map { case (n, d) =>
-      n -> runLeg(spark, metrics, d, trials, selected)
-    }
-
-    // Locale.ROOT: the f-interpolator uses the JVM default locale and
-    // a comma decimal separator would corrupt the JSON artifact
-    def num(v: Double, digits: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
-    val rows = selected.map { case (name, expected) =>
-      val (s1, m1) = leg1(name)
-      val perOctave = legsN.map { case (n, leg) =>
-        val (sN, mN) = leg(name)
-        val ratio = if (s1 > 0 && sN >= 0) sN / s1 else -1.0
-        s""""sec_${n}x":${num(sN, 3)},"ratio_${n}x":${num(ratio, 2)},""" +
-          s""""resources_${n}x":${mN.json}"""
-      }.mkString(",")
-      s""""$name":{"sec_1x":${num(s1, 3)},"resources_1x":${m1.json},""" +
-        s"""$perOctave,"expected":"${expected.replace("\"", "'")}"}"""
-    }
-    val octJson = octaves.mkString("[", ",", "]")
-    val json =
-      s"""{"base_sf_dir":"$sfDir","copies":$octJson,"trials":$trials,""" +
-        s""""note":"N-times corpus = per-copy token-salted documents / circular-shifted embeddings with id stride 10000000; 1x leg is copy 0 of the same transformation","queries":{${rows.mkString(",")}}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(outName),
-      (json + "\n").getBytes("UTF-8"))
-    println(json)
-    // the materialized corpora are (copies+1) x the base tables —
-    // repeated octave runs would otherwise fill the host's /tmp
-    try {
-      val rp = new org.apache.hadoop.fs.Path(root)
-      rp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(rp, true)
-    } catch { case _: Throwable => () }
-    spark.stop()
+    try materialize(spark, args(0), args(1), copies)
+    finally spark.stop()
   }
 }

@@ -1319,20 +1319,37 @@ class BucketedStateTableSpec extends SparkSpec {
   test("concurrent writers serialize: interleaved merges lose no update") {
     val s = spark
     import s.implicits._
-    val dir = tmp()
-    def table() = new BucketedStateTable(spark, s"$dir/state",
-      keyCols = Seq("k"), numBuckets = 8, retentionFloorMillis = 0L)
-    val threads = (0 until 4).map { t =>
-      new Thread(() => {
-        val mine = table() // distinct instances share the per-path lock
-        (0 until 5).foreach { i =>
-          mine.merge(Seq((s"k$t-$i", t.toLong)).toDF("k", "v"), keys = Seq("k"))
-        }
-      })
+    /** 4 writer threads, 5 merges each, every thread through its own
+      * `open(t)` handle; no thread fails and every key lands. */
+    def hammer(open: Int => BucketedStateTable): Unit = {
+      val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val threads = (0 until 4).map { t =>
+        new Thread(() => try {
+          val mine = open(t)
+          (0 until 5).foreach { i =>
+            mine.merge(Seq((s"k$t-$i", t.toLong)).toDF("k", "v"), keys = Seq("k"))
+          }
+        } catch { case e: Throwable => failures.add(e); () })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      assert(failures.isEmpty, s"a writer thread failed: ${failures.peek()}")
+      val keys = open(0).read().get.select("k").collect().map(_.getString(0)).toSet
+      assert(keys == (for (t <- 0 until 4; i <- 0 until 5) yield s"k$t-$i").toSet)
     }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    val keys = table().read().get.select("k").collect().map(_.getString(0)).toSet
-    assert(keys == (for (t <- 0 until 4; i <- 0 until 5) yield s"k$t-$i").toSet)
+    // distinct instances on one path share the per-path lock
+    val dir = tmp()
+    hammer(_ => new BucketedStateTable(spark, s"$dir/state",
+      keyCols = Seq("k"), numBuckets = 8, retentionFloorMillis = 0L))
+    // each writer opens the table through its own symlink, so the
+    // per-path locks differ and only the shared writer lease serializes
+    val leased = tmp()
+    Files.createDirectories(java.nio.file.Paths.get(s"$leased/real"))
+    (0 until 4).foreach(t => Files.createSymbolicLink(
+      java.nio.file.Paths.get(s"$leased/alias$t"), java.nio.file.Paths.get(s"$leased/real")))
+    val lease = new InMemoryCasStore
+    hammer(t => new BucketedStateTable(spark, s"$leased/alias$t/state",
+      keyCols = Seq("k"), numBuckets = 8, retentionFloorMillis = 60_000L,
+      leaseStore = Some(lease)))
   }
 
   test("mergeOnceForBatch skips a replayed batch id per stream scope") {

@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileStatus, FSDataOutputStream, Path, RawLocalFileS
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.pipeline.{BucketedStateTable, MutationOverlap, PublishGate, StateManifest, ZoneMaps}
 
@@ -102,7 +102,8 @@ object CountingFs {
 
 /** The flat commit path end to end: what one commit does to the file
   * system, its zone maps against `analyzeStats`, and a crash at every
-  * mutating call of `merge` and `deleteWhereUnmodified`. */
+  * mutating call of `merge`, `deleteWhereUnmodified`, `applyDelta` and
+  * `retentionKeepLatest`. */
 class CommitPathSpec extends SparkSpec {
 
   CountingFs.install(spark)
@@ -447,6 +448,16 @@ class CommitPathSpec extends SparkSpec {
       val processed = kv(("k0003", 3L), ("k0040", 40L), ("k0041", -1L), ("k0050", 50L))
       assert(t.deleteWhereUnmodified(processed) == 1L)
     }
+  }
+
+  test("a crash at any mutating call of an applyDelta with upserts and deletes leaves the pre- or post-state, and the table recovers") {
+    crashEveryCall(_.applyDelta(upserts = kv(("k0003", -3L), ("n1", 1L)),
+      deleteKeys = kv(("k0040", 0L), ("k0051", 0L)).select("k"), keys = Seq("k")))
+  }
+
+  test("a crash at any mutating call of retentionKeepLatest leaves the pre- or post-state, and the table recovers") {
+    // `v` is both the sequence and the timestamp: rows at v <= 10 expire
+    crashEveryCall(_.retentionKeepLatest("v", "v", lit(10L)))
   }
 
   test("a crash at any mutating call of a packed merge leaves the pre- or post-state, and the table recovers") {

@@ -44,5 +44,19 @@ class ScaleProbeSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
     assert(pair(0) != pair(1), "copy 1 must be shifted")
     assert(pair(0).toSet == pair(1).toSet, "shift permutes, never alters values")
+
+    // a base id at the stride would collide with copy 1: refused, naming
+    // the column and its maximum
+    val wide = java.nio.file.Files.createTempDirectory("graft-probespec-").toString
+    val baseMax = Tables.documents(spark, sf0001).agg(max("doc_id")).head().getLong(0)
+    spark.read.parquet(s"$sf0001/documents.parquet")
+      .withColumn("doc_id", col("doc_id") + ScaleProbe.Stride)
+      .write.parquet(s"$wide/documents.parquet")
+    spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .write.parquet(s"$wide/embeddings.parquet")
+    val err = intercept[IllegalArgumentException] {
+      ScaleProbe.materialize(spark, wide, s"$wide/out", copies = 2)
+    }
+    assert(err.getMessage.contains(s"doc_id maximum ${baseMax + ScaleProbe.Stride}"), err.getMessage)
   }
 }

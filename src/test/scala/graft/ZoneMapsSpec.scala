@@ -262,6 +262,10 @@ class ZoneMapsSpec extends SparkSpec {
     val pruned = t.readWhere(Seq(EqualTo("grp", "g5"))).get
     assert(touchedBuckets(pruned).size == 1)
     assert(pruned.filter(col("grp") === "g5").count() == 100)
+    // a full-key lookup finds its one row
+    val one = t.readWhere(Seq(EqualTo("grp", "g5"), EqualTo("id", 5L))).get
+    assert(touchedBuckets(one).size == 1)
+    assert(one.filter(col("grp") === "g5" && col("id") === 5L).count() == 1)
     // provably-empty survivor set: typed empty frame, not an error
     val none = t.readWhere(Seq(And(EqualTo("grp", "g5"),
       GreaterThan("score", 100000L)))).get
